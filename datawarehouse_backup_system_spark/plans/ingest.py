@@ -1,31 +1,47 @@
-"""The ingest pipeline: the reference's daily cycle as ONE lazy plan.
+"""The ingest pipeline: the reference's daily cycle as ONE lazy plan per table.
 
 Reference lifecycle E1 (``main.py:335-410``, SURVEY §3) rewrites a CSV on
 disk up to four times between stages. Here stages e-h and j collapse into
-a single DataFrame plan per file batch:
+a single DataFrame plan per table and cycle:
 
-    scan (all-string) → rename/backfill (P1-P3) → row_hash (F1)
-    → self-dedup J1 → history anti-join J2 → typed casts (F2-F7)
-    → dense ids (F8) → snapshot append (S9, partitioned by ingest_date)
+    scan (all-string, one per sniffed file profile) → rename/backfill
+    (P1-P3) → union by name → row_hash (F1) → self-dedup J1 → history
+    anti-join J2 → typed casts (F2-F7) → dense ids (F8) → snapshot append
+    (S9, partitioned by ingest_date)
 
-Catalyst pipelines the projections and the anti-join; nothing
-materializes until the final write. The ledger (S12/S13) provides
-file-level idempotency exactly like the reference's processed_files table.
+A cycle (:meth:`IngestJob.run`) first triages every listed file on the
+driver, with no Spark job: zip extraction, CSV suffix, filename routing,
+and the (encoding, delimiter, header) sniff. Each table then costs one
+history read, one watermark, one append and one ledger status write,
+whatever its number of files; per-file ``rows_in`` and ``rows_loaded``
+ride the append as Observations. Catalyst pipelines the projections and
+the anti-join; nothing materializes until the final write. The ledger
+(S12/S13) provides file-level idempotency exactly like the reference's
+processed_files table.
 
-**Ingest order** (first-occurrence dedup + id order) is exact file order,
-reconstructed distributively as the composite
+**Ingest order** (first-occurrence dedup + id order) is exact listing
+order, reconstructed distributively as the composite
 ``(_file_rank, _metadata.file_block_start, monotonically_increasing_id)``:
-file rank follows listing order, block start orders a file's splits (the
-scheduler packs blocks by size, so mono-id alone does NOT follow file
-order on multi-block files), and mono-id orders rows within a block.
+file rank is the file's position in the cycle's listing, block start
+orders a file's splits (the scheduler packs blocks by size, so mono-id
+alone does NOT follow file order on multi-block files), and mono-id
+orders rows within a block. Because the rank is global, one J1 over the
+union keeps exactly the rows a file-by-file cycle keeps (J1 per file,
+then J2 against the files before it), and numbers them identically.
 """
 
 from __future__ import annotations
 
+import logging
+import shutil
+import uuid
+import zipfile
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from datawarehouse_backup_system_spark import ledger as ledger_mod
@@ -42,6 +58,7 @@ from datawarehouse_backup_system_spark.operators.ids import (
 )
 from datawarehouse_backup_system_spark.operators.normalize import normalize
 from datawarehouse_backup_system_spark.registry import SchemaRegistry, TableSchema
+from datawarehouse_backup_system_spark.sources import csv_source
 from datawarehouse_backup_system_spark.sources.catalog import (
     Router,
     default_router,
@@ -51,6 +68,8 @@ from datawarehouse_backup_system_spark.sources.csv_source import (
     extract_zip_first_member,
     read_raw_csv,
 )
+
+log = logging.getLogger(__name__)
 
 #: composite ingest-order columns carried through the plan
 SEQ_COLS = ("_file_rank", "_blk", "_row")
@@ -66,13 +85,73 @@ class FileResult:
 
 
 @dataclass
+class _Routed:
+    """A listed file the driver routed to a table."""
+
+    rank: int                # position in the listing: the ingest order
+    path: Path               # landing path; its name is the ledger key
+    scan_path: Path          # what Spark scans (a zip's extracted member)
+
+
+def _sniff(path: Path) -> tuple:
+    """(encoding, delimiter, header): what files must share to be read by
+    one multi-path scan — Spark applies one delimiter and encoding to every
+    path, so a ``;`` file next to ``,`` siblings would be silently misparsed
+    (review r7). Driver-side; reads only each file's first bytes."""
+    enc = csv_source.detect_encoding(path) or "utf-8"
+    delim = csv_source.detect_delimiter(path, enc)
+    return enc, delim, tuple(csv_source.read_header(path, enc, delim))
+
+
+def _unexpected(exc: Exception) -> str:
+    return f"{ledger_mod.STATUS_UNEXPECTED}: {type(exc).__name__}"
+
+
+def _rank_counts(ranks: list[int]) -> list:
+    """One ``count_if(_file_rank = r)`` per file, for an Observation on a
+    frame that still carries SEQ_COLS: per-file counts on the write job,
+    with no job of their own."""
+    return [F.count_if(F.col("_file_rank") == r).alias(f"r{r}") for r in ranks]
+
+
+def _per_file_rows(
+    obs: Observation, ranks: list[int], recount: DataFrame | None = None
+) -> dict[int, int] | None:
+    """Per-file counts read back from ``obs`` (see :func:`_rank_counts`).
+
+    The metric can miss: when no row survives dedup, AQE replaces the
+    plan above the empty stage and drops the observed subtree from the
+    final plan. Then one aggregate job over ``recount`` (the observed
+    frame, when re-reading it is still correct) counts instead. A metric
+    must never sink an upload: if that fails too, warn and return None.
+    """
+    try:
+        got = obs.get
+        return {r: int(got[f"r{r}"]) for r in ranks}
+    except Exception:  # noqa: BLE001
+        if recount is None:
+            log.warning("ingest Observation unavailable", exc_info=True)
+            return None
+    try:
+        counts = dict(recount.groupBy("_file_rank").count().collect())
+        return {r: int(counts.get(r, 0)) for r in ranks}
+    except Exception:  # noqa: BLE001
+        log.warning("ingest Observation unavailable and recount failed",
+                    exc_info=True)
+        return None
+
+
+@dataclass
 class IngestJob:
     spark: SparkSession
     registry: SchemaRegistry
     warehouse_dir: str | Path
     router: Router = field(default_factory=default_router)
     staging_dir: str | Path | None = None
-    id_strategy: str = "distributed"
+    #: "global" (one-window row_number, exact) or "distributed" (range
+    #: prefix sum, which can duplicate ids on multi-partition input —
+    #: not fit for the default)
+    id_strategy: str = "global"
     #: partition column value for this run (ISO date); None → today.
     #: Snapshots are partitioned by ingest_date so retention (C2) becomes
     #: a metadata-only partition drop and incremental readers can prune.
@@ -105,8 +184,19 @@ class IngestJob:
         )
 
     # -- plan pieces -------------------------------------------------------
-    def _scan_with_seq(self, paths: list[Path]) -> DataFrame:
+    def _scan_with_seq(
+        self,
+        paths: list[Path],
+        ranks: list[int] | None = None,
+        encoding: str | None = None,
+        delimiter: str | None = None,
+    ) -> DataFrame:
         """Multi-path all-string scan + the exact-ingest-order columns.
+
+        ``ranks``: each path's ``_file_rank`` (default: its position in
+        ``paths``); the batched cycle passes listing positions so scans
+        of different profiles union into one total order. ``encoding``
+        and ``delimiter`` default to the first path's sniff.
 
         File rank comes from a broadcast join against a tiny (name, rank)
         frame keyed on the scan URI's basename — O(1) per row (a
@@ -123,7 +213,11 @@ class IngestJob:
                 "duplicate basenames in one scan batch (file rank joins on "
                 f"basename): {sorted(p.name for p in paths)} — split the batch"
             )
-        raw = read_raw_csv(self.spark, [str(p) for p in paths])
+        if ranks is None:
+            ranks = list(range(len(paths)))
+        raw = read_raw_csv(
+            self.spark, [str(p) for p in paths], encoding, delimiter
+        )
         # loud reserved-name guard (review r10, the r7/r8 basename/_rn
         # pattern): a raw column named like a seq/rank column would be
         # silently OVERWRITTEN by withColumn below — and, because
@@ -138,7 +232,7 @@ class IngestJob:
                 f"{clash}: rename the source columns"
             )
         keys = []
-        for i, p in enumerate(paths):
+        for p, i in zip(paths, ranks):
             keys.append((p.name, i))
             enc = quote(p.name, safe="")
             if enc != p.name:
@@ -153,7 +247,9 @@ class IngestJob:
                 f"percent-encoded basename): {sorted(k for k, _ in keys)} "
                 "— split the batch"
             )
-        ranks = self.spark.createDataFrame(keys, "_fname string, _file_rank int")
+        rank_frame = self.spark.createDataFrame(
+            keys, "_fname string, _file_rank int"
+        )
         basename = F.element_at(F.split(F.input_file_name(), "/"), -1)
         # capture metadata/order columns BEFORE the join: hidden _metadata
         # (and input_file_name) resolve only on the scan lineage, not
@@ -163,7 +259,7 @@ class IngestJob:
             .withColumn("_blk", F.col("_metadata.file_block_start"))
             .withColumn("_row", F.monotonically_increasing_id())
         )
-        out = base.join(F.broadcast(ranks), "_fname", "left")
+        out = base.join(F.broadcast(rank_frame), "_fname", "left")
         guarded_rank = F.when(
             F.col("_file_rank").isNull(),
             F.raise_error(
@@ -175,101 +271,176 @@ class IngestJob:
 
     def build_plan(
         self,
-        raw: DataFrame,
+        normalized: DataFrame,
         schema: TableSchema,
-        rename_map: dict[str, str],
         last_id: int,
-    ) -> tuple[DataFrame | None, str | None]:
-        """Everything between scan and write, as one lazy DataFrame.
-        ``raw`` must carry SEQ_COLS (see _scan_with_seq)."""
-        normalized, report = normalize(
-            raw, (*schema.data_columns, *SEQ_COLS), rename_map
-        )
-        if not report.ok:
-            return None, report.error
+        history: DataFrame | None = None,
+        loaded: tuple[Observation, list[int]] | None = None,
+    ) -> DataFrame:
+        """Everything between the normalized scan and the write, as one
+        lazy DataFrame: hash → J1 → J2 → casts → ids. ``normalized`` must
+        carry SEQ_COLS (see _scan_with_seq). ``history``: the snapshot as
+        already read for the watermark (default: read it). ``loaded``:
+        (Observation, file ranks) that counts each file's surviving rows
+        on the id'd frame, before SEQ_COLS go."""
         hashed = with_row_hash(normalized, list(schema.data_columns))
         deduped = self_dedup_first(hashed, order_col=list(SEQ_COLS))
-        novel = self._dedup_against_history(deduped, schema)
+        novel = self._dedup_against_history(deduped, schema, history)
         casted = apply_typed_casts(
             novel, schema, passthrough=("row_hash", *SEQ_COLS)
         )
         with_ids = assign_dense_ids(
             casted, order_cols=list(SEQ_COLS), start=last_id,
             strategy=self.id_strategy,
-        ).drop(*SEQ_COLS)
+        )
+        if loaded is not None:
+            obs, ranks = loaded
+            with_ids = with_ids.observe(obs, *_rank_counts(ranks))
         ingest_date = (
             F.lit(self.ingest_date).cast("date")
             if self.ingest_date
             else F.current_date()
         )
-        final = with_ids.select(*schema.column_names).withColumn(
-            "ingest_date", ingest_date
+        return (
+            with_ids.drop(*SEQ_COLS)
+            .select(*schema.column_names)
+            .withColumn("ingest_date", ingest_date)
         )
-        return final, None
 
-    def _ingest(
-        self,
-        paths: list[Path],
-        table_key: str,
-        label: str,
-        ledger_names: list[str] | None = None,
-    ) -> FileResult:
-        """Shared core: scan → plan → write → ledger, for 1..N files.
-
-        ``ledger_names`` are the names recorded for idempotency — the
-        ORIGINAL landing names (e.g. the .zip, not its extracted member),
-        since run()'s skip check compares against the listing.
-        """
-        from pyspark.sql import Observation
-
-        names = ledger_names or [p.name for p in paths]
+    def _ingest(self, path: Path, table_key: str, name: str) -> FileResult:
+        """The per-file path: scan → plan → write → ledger for one file,
+        ledgered under its landing ``name`` (the .zip, not its extracted
+        member, since run()'s skip check compares against the listing)."""
         schema = self.registry.get(table_key)
         rename_map = self.registry.rename_map(table_key)
-        raw = self._scan_with_seq(paths)
+        raw = self._scan_with_seq([path])
         if raw.drop(*SEQ_COLS).isEmpty():
             # reference records empty inputs distinctly
             # (util/data_processing.py:467-470)
-            self.ledger.append_many(
-                [(n, ledger_mod.STATUS_EMPTY) for n in names]
-            )
-            return FileResult(label, ledger_mod.STATUS_EMPTY)
+            self.ledger.append(name, ledger_mod.STATUS_EMPTY)
+            return FileResult(name, ledger_mod.STATUS_EMPTY)
         target = self.read_table(schema)
         last_id = next_id_watermark(target)
         # rows_in rides the write job as an Observation on the pre-dedup
-        # scan (review r10: the field was never populated — process_batch
-        # summed a dressed-up constant 0). Attached AFTER the isEmpty
-        # probe above: isEmpty short-circuits with a limit and would
-        # otherwise satisfy the Observation with a partial count.
+        # scan (review r10: the field was never populated). Attached
+        # AFTER the isEmpty probe above: isEmpty short-circuits with a
+        # limit and would otherwise satisfy the Observation with a
+        # partial count.
         obs_in = Observation()
-        raw = raw.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
-        plan, error = self.build_plan(raw, schema, rename_map, last_id)
-        if error is not None:
-            self.ledger.append_many(
-                [(n, ledger_mod.STATUS_COLUMN_MISMATCH) for n in names]
+        normalized, report = normalize(
+            raw.observe(obs_in, *_rank_counts([0])),
+            (*schema.data_columns, *SEQ_COLS), rename_map,
+        )
+        if not report.ok:
+            self.ledger.append(name, ledger_mod.STATUS_COLUMN_MISMATCH)
+            return FileResult(
+                name, ledger_mod.STATUS_COLUMN_MISMATCH, error=report.error
             )
-            return FileResult(label, ledger_mod.STATUS_COLUMN_MISMATCH, error=error)
+        plan = self.build_plan(normalized, schema, last_id, target)
         try:
             loaded = self._atomic_append(plan, schema)
         except Exception as exc:  # noqa: BLE001 — reference 'insert error'
-            self.ledger.append_many(
-                [(n, ledger_mod.STATUS_INSERT_ERROR) for n in names]
-            )
-            return FileResult(
-                label, ledger_mod.STATUS_INSERT_ERROR, error=str(exc)
-            )
-        # one ledger job + one file for the whole batch (0.35 s and a
-        # ledger part-file PER NAME otherwise — review r7)
-        self.ledger.append_many(
-            [(n, ledger_mod.STATUS_UPLOADED) for n in names]
-        )
-        try:
-            rows_in = int(obs_in.get["rows_in"])
-        except Exception:  # noqa: BLE001 — metric must never sink an upload
-            rows_in = 0
+            self.ledger.append(name, ledger_mod.STATUS_INSERT_ERROR)
+            return FileResult(name, ledger_mod.STATUS_INSERT_ERROR, error=str(exc))
+        self.ledger.append(name, ledger_mod.STATUS_UPLOADED)
+        rows_in = _per_file_rows(obs_in, [0], recount=raw) or {0: 0}
         return FileResult(
-            label, ledger_mod.STATUS_UPLOADED,
-            rows_in=rows_in, rows_loaded=loaded,
+            name, ledger_mod.STATUS_UPLOADED,
+            rows_in=rows_in[0], rows_loaded=loaded,
         )
+
+    def _ingest_table(
+        self, files: list[_Routed], table_key: str
+    ) -> dict[int, FileResult]:
+        """One table's routed files of a cycle as ONE plan, keyed by rank.
+
+        One scan per sniffed (:func:`_sniff`) profile carries each file's
+        listing rank; each profile's header passes the width check (P3)
+        or its files are judged one by one — EMPTY before
+        COLUMN_MISMATCH, the per-file order. The passing frames union by
+        name into one :meth:`build_plan`: one history read, one watermark,
+        one append. A file with no data rows is EMPTY; an all-empty table
+        commits no write. Everything ends in one ledger status write,
+        after the commit.
+
+        If anything fails before the commit, the table's files take the
+        per-file :meth:`process_file` path in listing order instead, so
+        one bad file cannot sink its siblings and the outcome still
+        matches a file-by-file cycle.
+        """
+        schema = self.registry.get(table_key)
+        rename_map = self.registry.rename_map(table_key)
+        expected = (*schema.data_columns, *SEQ_COLS)
+        out: dict[int, FileResult] = {}
+        frames: list[DataFrame] = []
+        batched: list[_Routed] = []
+        appended = False
+        try:
+            profiles: dict[tuple, list[_Routed]] = {}
+            for f in files:
+                profiles.setdefault(_sniff(f.scan_path), []).append(f)
+            for (enc, delim, _), group in profiles.items():
+                raw = self._scan_with_seq(
+                    [f.scan_path for f in group], [f.rank for f in group],
+                    enc, delim,
+                )
+                normalized, report = normalize(raw, expected, rename_map)
+                if report.ok:
+                    frames.append(normalized)
+                    batched += group
+                    continue
+                for f in group:
+                    mine = raw.where(F.col("_file_rank") == f.rank)
+                    out[f.rank] = (
+                        FileResult(f.path.name, ledger_mod.STATUS_EMPTY)
+                        if mine.drop(*SEQ_COLS).isEmpty()
+                        else FileResult(
+                            f.path.name, ledger_mod.STATUS_COLUMN_MISMATCH,
+                            error=report.error,
+                        )
+                    )
+            ranks = sorted(f.rank for f in batched)
+            union = reduce(DataFrame.unionByName, frames) if frames else None
+            # the probe runs before the Observations are attached: its
+            # limit would otherwise satisfy them with a partial count
+            if union is not None and not union.drop(*SEQ_COLS).isEmpty():
+                obs_in, obs_out = Observation(), Observation()
+                target = self.read_table(schema)
+                plan = self.build_plan(
+                    union.observe(obs_in, *_rank_counts(ranks)), schema,
+                    next_id_watermark(target), target, (obs_out, ranks),
+                )
+                self._atomic_append(plan, schema)
+                appended = True
+        except Exception:  # noqa: BLE001 — the per-file path is total
+            log.warning(
+                "batched ingest of %d file(s) for %s failed before commit; "
+                "ingesting them one by one", len(files), table_key,
+                exc_info=True,
+            )
+            return {
+                f.rank: self.process_file(f.path, table_key=table_key)
+                for f in files
+            }
+        rows_in: dict[int, int] | None = dict.fromkeys(ranks, 0)
+        rows_loaded: dict[int, int] = {}
+        if appended:
+            rows_in = _per_file_rows(obs_in, ranks, recount=union)
+            rows_loaded = _per_file_rows(obs_out, ranks) or {}
+        for f in batched:
+            n_in = None if rows_in is None else rows_in[f.rank]
+            out[f.rank] = (
+                FileResult(f.path.name, ledger_mod.STATUS_EMPTY)
+                if n_in == 0
+                else FileResult(
+                    f.path.name, ledger_mod.STATUS_UPLOADED,
+                    rows_in=n_in or 0, rows_loaded=rows_loaded.get(f.rank, 0),
+                )
+            )
+        self.ledger.append_many(
+            [(f.path.name, out[f.rank].status) for f in files]
+        )
+        return out
 
     # -- exports (S10/S11 parity + watermark write-back) -------------------
     def export_table_csv(
@@ -308,7 +479,10 @@ class IngestJob:
 
     # -- atomic snapshot append -------------------------------------------
     def _dedup_against_history(
-        self, deduped: DataFrame, schema: TableSchema
+        self,
+        deduped: DataFrame,
+        schema: TableSchema,
+        history: DataFrame | None = None,
     ) -> DataFrame:
         """J2 with the scale auto-switch (VERDICT r10 item 6, the same
         footprint-threshold pattern as graph._stage_static_side): below
@@ -321,7 +495,8 @@ class IngestJob:
         per file: ONE Exchange, batch side only (plan contract pinned in
         tests/test_hash_index.py). The index validates itself against
         the live file listing and falls back to the plain path whenever
-        it cannot account for the table — fallback is always correct."""
+        it cannot account for the table — fallback is always correct.
+        ``history``: the snapshot as already read (default: read it)."""
         from datawarehouse_backup_system_spark.plans import hash_index
 
         tp = self.table_path(schema)
@@ -339,7 +514,9 @@ class IngestJob:
             )
             if idx is not None:
                 return deduped.join(idx, "row_hash", "left_anti")
-        return anti_join_history(deduped, self.read_table(schema))
+        if history is None:
+            history = self.read_table(schema)
+        return anti_join_history(deduped, history)
 
     def _atomic_append(self, plan: DataFrame, schema: TableSchema) -> int:
         """Append ``plan`` to the snapshot through the table format
@@ -385,18 +562,55 @@ class IngestJob:
         )
 
     # -- file drivers ------------------------------------------------------
+    def _triage(
+        self, path: Path, extract_dir: Path, table_key: str | None
+    ) -> tuple[Path, str] | FileResult:
+        """The driver-side steps of one landing file, in the reference's
+        order and with no Spark job: extract a zip's first member into
+        ``extract_dir``, check the CSV suffix, route by name (unless
+        ``table_key`` is given). Returns ``(scan_path, table_key)`` for a
+        routed CSV, else the file's terminal result for the caller to
+        ledger."""
+        name = path.name
+        if path.suffix.lower() == ".zip":
+            try:
+                path = extract_zip_first_member(path, extract_dir)
+            except (zipfile.BadZipFile, ValueError):
+                # corrupt or empty archive (reference main.py:97)
+                return FileResult(name, ledger_mod.STATUS_EXTRACTION_FAILED)
+            except OSError as exc:
+                return FileResult(
+                    name, ledger_mod.STATUS_EXTRACTION_CRITICAL, error=str(exc)
+                )
+        # reference main.py:107 checks the (extracted) name's suffix;
+        # beyond-reference: .csv.gz passes — the driver-side sniffers
+        # gunzip transparently and Spark's csv reader has the codec
+        suffixes = [s.lower() for s in path.suffixes]
+        if not (suffixes[-1:] == [".csv"] or suffixes[-2:] == [".csv", ".gz"]):
+            return FileResult(name, ledger_mod.STATUS_NOT_CSV)
+        if table_key is None:
+            table_key = self.router.route(name)
+        if table_key is None or table_key not in self.registry.tables:
+            return FileResult(name, ledger_mod.STATUS_NO_SCHEMA)
+        return path, table_key
+
+    def _staging(self) -> Path:
+        """A fresh scratch dir for extracted zip members (created on first
+        use; the caller removes it)."""
+        root = Path(self.staging_dir or self.warehouse_dir / "_staging")
+        return root / uuid.uuid4().hex[:16]
+
     def process_file(
         self, path: str | Path, table_key: str | None = None
     ) -> FileResult:
         """One file through the full pipeline, every failure ledgered
-        (D4 total function).
+        (D4 total function). This is the batched core's fallback.
 
         ``table_key``: optional routing override — when the caller
-        already knows the table (process_batch's divergent fallback),
-        filename routing is skipped, so a valid file whose NAME the
-        router cannot map is still ingested instead of being ledgered
-        NO_SCHEMA forever (review r9: the batch fallback re-routed by
-        filename and could permanently drop a divergent file's rows).
+        already knows the table (the batched core's fallback), filename
+        routing is skipped, so a valid file whose NAME the router cannot
+        map is still ingested instead of being ledgered NO_SCHEMA forever
+        (review r9).
 
         CONCURRENCY: building block — takes no :class:`WriterLease` and
         runs no recovery; :meth:`run` provides both. A caller invoking
@@ -404,93 +618,86 @@ class IngestJob:
         write-id format is single-writer) and recover first, or an
         uncommitted crashed write's files leak into read_table's history
         view and anti-join freshly re-ingested rows away."""
-        import zipfile
-
         path = Path(path)
         name = path.name
-        extracted: Path | None = None
+        # the extracted member is fully consumed once _ingest returns (the
+        # append is materialized) and its ledger entry is the ZIP's name:
+        # leaving it leaked one plaintext copy per zip per cycle (review
+        # r10), so the scratch dir goes in the finally below
+        staging = self._staging()
         try:
-            if path.suffix.lower() == ".zip":
-                staging = Path(self.staging_dir or self.warehouse_dir / "_staging")
-                try:
-                    path = extracted = extract_zip_first_member(path, staging)
-                except (zipfile.BadZipFile, ValueError):
-                    # corrupt or empty archive (reference main.py:97)
-                    self.ledger.append(name, ledger_mod.STATUS_EXTRACTION_FAILED)
-                    return FileResult(name, ledger_mod.STATUS_EXTRACTION_FAILED)
-                except OSError as exc:
-                    self.ledger.append(name, ledger_mod.STATUS_EXTRACTION_CRITICAL)
-                    return FileResult(
-                        name, ledger_mod.STATUS_EXTRACTION_CRITICAL, error=str(exc)
-                    )
-            # reference main.py:107 checks the (extracted) name's suffix;
-            # beyond-reference: .csv.gz passes — the driver-side sniffers
-            # gunzip transparently and Spark's csv reader has the codec
-            suffixes = [s.lower() for s in path.suffixes]
-            is_csv = suffixes[-1:] == [".csv"] or suffixes[-2:] == [".csv", ".gz"]
-            if not is_csv:
-                self.ledger.append(name, ledger_mod.STATUS_NOT_CSV)
-                return FileResult(name, ledger_mod.STATUS_NOT_CSV)
-            if table_key is None:
-                table_key = self.router.route(name)
-            if table_key is None or table_key not in self.registry.tables:
-                self.ledger.append(name, ledger_mod.STATUS_NO_SCHEMA)
-                return FileResult(name, ledger_mod.STATUS_NO_SCHEMA)
-            return self._ingest([path], table_key, name, ledger_names=[name])
+            routed = self._triage(path, staging, table_key)
+            if isinstance(routed, FileResult):
+                self.ledger.append(name, routed.status)
+                return routed
+            scan_path, table_key = routed
+            return self._ingest(scan_path, table_key, name)
         except Exception as exc:  # noqa: BLE001 — total function, D4
-            status = f"{ledger_mod.STATUS_UNEXPECTED}: {type(exc).__name__}"
-            self.ledger.append(name, status)
-            return FileResult(name, status, error=str(exc))
+            self.ledger.append(name, _unexpected(exc))
+            return FileResult(name, _unexpected(exc), error=str(exc))
         finally:
-            # the extracted member is fully consumed by the time
-            # _ingest returns (the append is materialized) and its
-            # ledger entry is the ZIP's name — leaving it leaked one
-            # plaintext copy per zip per cycle into _staging forever,
-            # and a later zip with the same member name silently
-            # overwrote it (review r10)
-            if extracted is not None:
-                extracted.unlink(missing_ok=True)
+            shutil.rmtree(staging, ignore_errors=True)
+
+    def _ingest_files(
+        self,
+        paths: list[Path],
+        table_key: str | None = None,
+        heartbeat: Callable[[], None] = lambda: None,
+    ) -> list[FileResult]:
+        """The batched core of :meth:`run` and :meth:`process_batch`: one
+        result per path, in ``paths`` order.
+
+        The driver triages every file first (no Spark job) and ledgers
+        what it decides — EXTRACTION_FAILED, NOT_CSV, NO_SCHEMA — in one
+        write. Routed files are grouped by table (``table_key`` overrides
+        routing) and each table is ingested as one plan
+        (:meth:`_ingest_table`), with ``heartbeat`` called after each."""
+        staging = self._staging()
+        results: dict[int, FileResult] = {}
+        tables: dict[str, list[_Routed]] = {}
+        try:
+            for rank, path in enumerate(paths):
+                try:
+                    routed = self._triage(path, staging / str(rank), table_key)
+                except Exception as exc:  # noqa: BLE001 — total function, D4
+                    routed = FileResult(path.name, _unexpected(exc), error=str(exc))
+                if isinstance(routed, FileResult):
+                    results[rank] = routed
+                    continue
+                scan_path, key = routed
+                tables.setdefault(key, []).append(
+                    _Routed(rank, path, scan_path)
+                )
+            self.ledger.append_many(
+                [(r.file_name, r.status) for _, r in sorted(results.items())]
+            )
+            for key, files in tables.items():
+                results.update(self._ingest_table(files, key))
+                heartbeat()
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        return [results[i] for i in range(len(paths))]
 
     def process_batch(self, paths: list[str | Path], table_key: str) -> FileResult:
-        """Scale path: ingest MANY same-table files as ONE distributed plan.
+        """Ingest many same-table files as one distributed plan: the
+        batched core of :meth:`run`, with filename routing replaced by
+        ``table_key``.
 
-        A production cycle sees thousands of files; per-file plans
-        serialize scheduling overhead. This runs one multi-path scan with
-        reference-exact dedup order (first occurrence in file order,
-        SEQ_COLS composite). The multi-path scan requires one header
-        layout / encoding / delimiter — the pre-check below compares the
-        full (encoding, delimiter, header) triple per file, not just the
-        parsed header: a semicolon file parses to the same header list
-        as its comma siblings under its OWN sniffed delimiter, yet the
-        single multi-path scan reads it with the FIRST file's settings
-        and silently misparses every row (review r7). Files whose
-        profile differs from the batch's are NOT failed — they fall
-        back to per-file ingestion under their own sniffed settings
-        (review r8: ledgering them COLUMN_MISMATCH marked perfectly
-        valid files processed-forever, permanently losing their rows).
-        Ingestion preserves the ORIGINAL ``paths`` order: the list is
-        split into contiguous runs (conforming runs batched as one
-        plan, divergent files per-file, in place), so id assignment
-        (ids follow ingest order) and first-occurrence dedup
-        attribution are identical to sequential process_file calls even
-        when a divergent file sits mid-batch and shares row content
-        with later files (review r9: ingesting divergent files FIRST
-        reordered both). Asserted in tests against the sequential
-        twin. Returned ``rows_loaded`` sums over all runs; ``status``
-        is UPLOADED only if every non-empty run uploaded (else the
-        first non-uploaded, non-empty status).
+        Files are grouped by sniffed (encoding, delimiter, header)
+        profile; each profile is one multi-path scan, and each file
+        carries its position in ``paths`` as its rank, so dedup winners
+        and ids follow ``paths`` order exactly as sequential
+        :meth:`process_file` calls would, even when profiles interleave.
+        Each file's own status goes to the ledger. The returned summary
+        sums ``rows_in``/``rows_loaded``; its ``status`` is the first
+        status that is neither UPLOADED nor EMPTY, else EMPTY when every
+        file was empty, else UPLOADED.
 
         CONCURRENCY: like :meth:`process_file`, this is a building block
         — it does not take the :class:`WriterLease` or run recovery.
         Callers outside :meth:`run` must hold the lease themselves (the
         write-id format is single-writer) and recover first.
         """
-        from datawarehouse_backup_system_spark.sources.csv_source import (
-            detect_delimiter,
-            detect_encoding,
-            read_header,
-        )
-
         paths = [Path(p) for p in paths]
         if not paths:
             # total-function discipline: an empty listing is a no-op
@@ -498,112 +705,34 @@ class IngestJob:
             return FileResult("batch:[]", ledger_mod.STATUS_EMPTY,
                               error="empty batch")
         label = f"batch:{paths[0].name}..{paths[-1].name}[{len(paths)}]"
-        handled: set = set()
-
-        def _fold(results: list) -> tuple:
-            """Shared status fold: bad → first bad, all EMPTY → EMPTY,
-            else UPLOADED. One definition so the exception fallback
-            cannot drift from the success path (ADVICE r10→r11: the
-            fallback mapped all-EMPTY to UPLOADED)."""
-            bad = [
-                r for r in results
-                if r.status not in (
-                    ledger_mod.STATUS_UPLOADED, ledger_mod.STATUS_EMPTY
-                )
-            ]
-            if bad:
-                status = bad[0].status
-            elif results and all(
-                r.status == ledger_mod.STATUS_EMPTY for r in results
-            ):
-                status = ledger_mod.STATUS_EMPTY
-            else:
-                status = ledger_mod.STATUS_UPLOADED
-            return status, bad
-
-        results: list[FileResult] = []
         try:
-            def _profile(p: Path) -> tuple:
-                enc = detect_encoding(p) or "utf-8"
-                delim = detect_delimiter(p, enc)
-                return (enc, delim, tuple(read_header(p, enc, delim)))
-
-            profiles = [_profile(p) for p in paths]
-            golden = profiles[0]
-            # contiguous runs in ORIGINAL order: (conforming?, paths)
-            runs: list[tuple[bool, list[Path]]] = []
-            for p, prof in zip(paths, profiles):
-                ok = prof == golden
-                if runs and runs[-1][0] == ok:
-                    runs[-1][1].append(p)
-                else:
-                    runs.append((ok, [p]))
-            for ok, run in runs:
-                if ok:
-                    run_label = (
-                        f"batch:{run[0].name}..{run[-1].name}[{len(run)}]"
-                    )
-                    results.append(self._ingest(run, table_key, run_label))
-                    handled.update(run)
-                else:
-                    # divergent profiles are ingested CORRECTLY one at a
-                    # time under their own sniffed settings, in place;
-                    # each ledgers its own outcome (they are valid
-                    # files, just un-batchable). The caller's table_key
-                    # overrides filename routing (review r9 — see
-                    # process_file docstring).
-                    for p in run:
-                        results.append(
-                            self.process_file(p, table_key=table_key)
-                        )
-                        handled.add(p)
-            status, bad = _fold(results)
-            return FileResult(
-                label,
-                status,
-                rows_in=sum(r.rows_in for r in results),
-                rows_loaded=sum(r.rows_loaded for r in results),
-                error=bad[0].error if bad else None,
-            )
-        except Exception as exc:  # noqa: BLE001
-            # batch-SCOPED failure (a profile read crashing, a
-            # duplicate-basename/reserved-header ValueError from one
-            # run): fall back to PER-FILE processing of everything not
-            # yet handled — process_file is a total function that
-            # ledgers each file's true outcome. The old mass-ledger of
-            # STATUS_UNEXPECTED marked perfectly valid files
-            # processed-forever (review r10: one bad sibling
-            # permanently dropped the whole batch's rows). Re-ingesting
-            # a file a partially-failed run already wrote is safe: the
-            # cross-file history anti-join drops its rows as seen.
-            # `results` still holds the pre-exception FileResults, so
-            # their rows_in/rows_loaded are NOT dropped from the batch
-            # accounting (ADVICE r10→r11).
-            results = results + [
-                self.process_file(p, table_key=table_key)
-                for p in paths
-                if p not in handled
-            ]
-            if not results:
-                return FileResult(
-                    label,
-                    f"{ledger_mod.STATUS_UNEXPECTED}: {type(exc).__name__}",
-                    error=str(exc),
-                )
-            status, bad = _fold(results)
-            return FileResult(
-                label,
-                status,
-                rows_in=sum(r.rows_in for r in results),
-                rows_loaded=sum(r.rows_loaded for r in results),
-                error=bad[0].error if bad else str(exc),
-            )
+            results = self._ingest_files(paths, table_key)
+        except Exception as exc:  # noqa: BLE001 — total function, D4
+            return FileResult(label, _unexpected(exc), error=str(exc))
+        bad = [
+            r for r in results
+            if r.status not in (ledger_mod.STATUS_UPLOADED, ledger_mod.STATUS_EMPTY)
+        ]
+        if bad:
+            status = bad[0].status
+        elif all(r.status == ledger_mod.STATUS_EMPTY for r in results):
+            status = ledger_mod.STATUS_EMPTY
+        else:
+            status = ledger_mod.STATUS_UPLOADED
+        return FileResult(
+            label,
+            status,
+            rows_in=sum(r.rows_in for r in results),
+            rows_loaded=sum(r.rows_loaded for r in results),
+            error=bad[0].error if bad else None,
+        )
 
     def run(self, input_dir: str | Path) -> list[FileResult]:
         """One cycle (reference main(), minus the daemon sleep — cadence is
-        the scheduler's job, C4). Sequential per file, parity with the
-        reference; :meth:`process_batch` is the many-files-one-scan scale
-        path.
+        the scheduler's job, C4): every unledgered landing file, one
+        :class:`FileResult` each in listing order. Each table's files are
+        ingested as one plan and one append (:meth:`_ingest_table`), with
+        the same rows, ids and statuses as a file-by-file cycle.
 
         The cycle holds the warehouse :class:`~.table_format.WriterLease`
         throughout: the write-id format is single-writer (module
@@ -617,10 +746,8 @@ class IngestJob:
         with WriterLease(self.warehouse_dir) as lease:
             self.recover_writes()  # roll back any crashed append first
             processed = self.ledger.processed_set()
-            results = []
-            for f in discover_files(input_dir, processed):
-                results.append(self.process_file(f))
-                # heartbeat: a cycle longer than ttl_s would otherwise
-                # look crashed to a waiting writer and get stolen
-                lease.touch()
-            return results
+            # heartbeat: a cycle longer than ttl_s would otherwise look
+            # crashed to a waiting writer and get stolen
+            return self._ingest_files(
+                discover_files(input_dir, processed), heartbeat=lease.touch
+            )

@@ -159,3 +159,74 @@ def generate_f1(tmp: Path, n: int = 800) -> dict:
         "uniq_file3": len({tuple(r) for r in rows3}),
         "overlap_rows": [tuple(r) for r in overlap],
     }
+
+
+def generate_dirty_day(tmp: Path, n: int = 300) -> dict:
+    """One dirty landing day for the batched-vs-sequential ingest checks.
+
+    ``tmp`` receives the registry JSONs and the day's files, in this
+    listing (name) order: two ``;`` exports with cross-file duplicates
+    (the second also repeats a history row), a ``,`` latin-1 export that
+    repeats rows of both, a header-only file, a BOM'd utf-16 export that
+    repeats latin-1 rows, a header-only WIDE file, a file made only of
+    earlier rows, a wide file with data, a zipped narrow export, a
+    corrupt zip, and an unroutable name. ``history`` is one earlier export
+    kept outside the landing listing, to ingest first. ``expected`` maps
+    each landing name to its ledger status."""
+    import zipfile
+
+    rng = random.Random(SEED + 7)
+    tmp.mkdir(parents=True, exist_ok=True)
+    hist_rows = make_rows(n, rng, with_smtp=True)
+    rows1 = make_rows(n, rng, with_smtp=True)
+    rows1 += [list(r) for r in rows1[: n // 10]]            # J1 in-file dups
+    rows2 = (make_rows(n, rng, with_smtp=True)
+             + [list(r) for r in rows1[: n // 5]]           # J2 cross-file
+             + [list(hist_rows[0])])                        # J2 vs history
+    rows3 = make_rows(n // 2, rng, with_smtp=True) + [list(r) for r in rows2[:20]]
+    rows5 = make_rows(n // 2, rng, with_smtp=True) + [list(r) for r in rows3[:15]]
+    rows9 = make_rows(n // 3, rng, with_smtp=False)
+    (tmp / "history").mkdir(exist_ok=True)
+    history = write_csv(tmp / "history" / "last24h__20240229.csv", hist_rows,
+                        with_smtp=True)
+
+    def name(i: int, tail: str = "csv") -> str:
+        return f"last24h__20240301_{i:02d}.{tail}"
+
+    write_csv(tmp / name(1), rows1, with_smtp=True)
+    write_csv(tmp / name(2), rows2, with_smtp=True)
+    write_csv(tmp / name(3), rows3, with_smtp=True, delimiter=",",
+              encoding="iso-8859-1")
+    write_csv(tmp / name(4), [], with_smtp=True)
+    write_csv(tmp / name(5), rows5, with_smtp=True, encoding="utf-16")
+    for i, rows in ((6, []), (8, make_rows(5, rng, with_smtp=True))):
+        with open(tmp / name(i), "w", newline="", encoding="utf-8") as f:
+            w = csv.writer(f, delimiter=";")
+            w.writerow(RAW_HEADERS + ["Extra Column"])
+            w.writerows(r + ["x"] for r in rows)
+    write_csv(tmp / name(7), [list(r) for r in rows1[5:25]], with_smtp=True)
+    narrow = write_csv(tmp / "staged_narrow.csv", rows9, with_smtp=False)
+    with zipfile.ZipFile(tmp / name(9, "zip"), "w") as zf:
+        zf.write(narrow, arcname=name(9))
+    narrow.unlink()
+    (tmp / name(10, "zip")).write_bytes(b"PK\x03\x04 truncated archive")
+    (tmp / "zz_unroutable.csv").write_text("a;b\n1;2\n", encoding="utf-8")
+    uploaded = "uploaded to ClickHouse"
+    expected = {
+        name(1): uploaded, name(2): uploaded, name(3): uploaded,
+        name(4): "empty file", name(5): uploaded, name(6): "empty file",
+        name(7): uploaded, name(8): "column count mismatch",
+        name(9, "zip"): uploaded, name(10, "zip"): "extraction failed",
+        "zz_unroutable.csv": "no schema found",
+    }
+    schema_path = tmp / "table_schema.json"
+    schema_path.write_text(json.dumps(REGISTRY))
+    rename_path = tmp / "rename_mapping.json"
+    rename_path.write_text(json.dumps({"mini_campaign_events": RENAME_MAP}))
+    return {
+        "dir": tmp,
+        "history": history,
+        "expected": expected,
+        "schema_path": schema_path,
+        "rename_path": rename_path,
+    }

@@ -124,9 +124,9 @@ def test_batch_ingest_equals_sequential(spark, tmp_path):
 def test_batch_divergent_profile_falls_back_per_file(spark, tmp_path):
     """Review r8: a valid file whose (encoding, delimiter, header)
     profile differs from the batch's first file must still be INGESTED
-    (per-file fallback under its own sniffed settings) — the old
-    behavior ledgered it COLUMN_MISMATCH, which processed_set() treats
-    as done, permanently losing its rows."""
+    (its own profile's scan, read under its own sniffed settings) — the
+    old behavior ledgered it COLUMN_MISMATCH, which processed_set()
+    treats as done, permanently losing its rows."""
     from datawarehouse_backup_system_spark import ledger as ledger_mod
 
     fx = generate_f1(tmp_path)
@@ -311,3 +311,119 @@ def test_gzip_csv_ingests_like_plain(spark, tmp_path):
     schema = job.registry.get("mini_campaign_events")
     assert job.read_table(schema).count() > 0
     assert job.run(tmp_path) == []  # idempotent
+
+
+def test_run_default_ids_dense_from_watermark(spark, tmp_path):
+    """``IngestJob.run`` with default arguments numbers every new row
+    densely from the stored watermark, with no duplicate ids, even when
+    each landing file spans several scan partitions. Two daily cycles:
+    the second continues from the first one's MAX(id)."""
+    import shutil
+
+    (tmp_path / "fx").mkdir()
+    fx = generate_f1(tmp_path / "fx", n=2400)
+    assert fx["n_file1"] >= 2000 and fx["n_file2"] >= 2000
+    day1, day2 = tmp_path / "day1", tmp_path / "day2"
+    day1.mkdir()
+    day2.mkdir()
+    shutil.copy(fx["files"][0], day1)
+    for f in fx["files"][1:]:
+        shutil.copy(f, day2)
+    job = make_job(spark, tmp_path, fx)
+    schema = job.registry.get("mini_campaign_events")
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    # ~60 KB splits: every 2 000-row export becomes several scan partitions
+    spark.conf.set(conf, str(60 * 1024))
+    try:
+        watermark = 0
+        for day in (day1, day2):
+            results = job.run(day)
+            assert all(r.status == "uploaded to ClickHouse" for r in results)
+            loaded = sum(r.rows_loaded for r in results)
+            assert loaded > 0
+            s = job.read_table(schema).agg(
+                F.count(F.lit(1)).alias("n"),
+                F.countDistinct("id").alias("ids"),
+                F.min("id").alias("lo"),
+                F.max("id").alias("hi"),
+            ).collect()[0]
+            assert (s["n"], s["ids"], s["lo"], s["hi"]) == (
+                watermark + loaded, watermark + loaded, 1, watermark + loaded
+            )
+            watermark += loaded
+    finally:
+        spark.conf.set(conf, old)
+
+
+def _table_rows(job):
+    schema = job.registry.get("mini_campaign_events")
+    return sorted(map(tuple, job.read_table(schema).collect()), key=repr)
+
+
+def _landing_statuses(job):
+    from datawarehouse_backup_system_spark import ledger as ledger_mod
+
+    return sorted(
+        (r["file_name"], r["status"]) for r in job.ledger.read().collect()
+        if not r["file_name"].startswith(ledger_mod.WRITE_MARKER_PREFIX)
+    )
+
+
+def test_batched_run_equals_sequential_process_file(spark, tmp_path):
+    """One dirty day: ``run`` (each table one plan over every profile)
+    leaves the same table — every column, ``id`` and ``row_hash``
+    included — the same per-file (status, rows_in, rows_loaded) and the
+    same ledger as sequential ``process_file`` calls in listing order,
+    against the same history."""
+    from fixtures import generate_dirty_day
+
+    from datawarehouse_backup_system_spark.sources.catalog import discover_files
+
+    day = generate_dirty_day(tmp_path / "day")
+    seq = make_job(spark, tmp_path / "seq", day)
+    bat = make_job(spark, tmp_path / "bat", day)
+    for job in (seq, bat):
+        assert job.process_file(day["history"]).rows_loaded > 0
+
+    seq_res = [seq.process_file(p) for p in discover_files(day["dir"])]
+    bat_res = bat.run(day["dir"])
+
+    def outcome(results):
+        return [(r.file_name, r.status, r.rows_in, r.rows_loaded)
+                for r in results]
+
+    assert outcome(bat_res) == outcome(seq_res)
+    assert {r.file_name: r.status for r in bat_res} == day["expected"]
+    by_name = {r.file_name: r for r in bat_res}
+    # the file made only of earlier rows uploads and loads nothing
+    assert (by_name["last24h__20240301_07.csv"].rows_in,
+            by_name["last24h__20240301_07.csv"].rows_loaded) == (20, 0)
+    assert _table_rows(bat) == _table_rows(seq)
+    assert _landing_statuses(bat) == _landing_statuses(seq)
+
+
+def test_batched_run_all_empty_table_commits_nothing(spark, tmp_path):
+    """Header-only files only — one of them wide, which stays EMPTY rather
+    than COLUMN_MISMATCH, as the per-file path's empty-first order gives:
+    the table batch writes no data and commits no write-id."""
+    from fixtures import generate_dirty_day
+
+    from datawarehouse_backup_system_spark import ledger as ledger_mod
+
+    day = generate_dirty_day(tmp_path / "day")
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for n in ("last24h__20240301_04.csv", "last24h__20240301_06.csv"):
+        (day["dir"] / n).rename(landing / n)
+    job = make_job(spark, tmp_path, day)
+    res = job.run(landing)
+    assert [(r.status, r.rows_in, r.rows_loaded) for r in res] == [
+        (ledger_mod.STATUS_EMPTY, 0, 0)] * 2
+    markers = [r for r in job.ledger.read().collect()
+               if r["file_name"].startswith(ledger_mod.WRITE_MARKER_PREFIX)]
+    assert markers == []
+    assert _landing_statuses(job) == [
+        ("last24h__20240301_04.csv", ledger_mod.STATUS_EMPTY),
+        ("last24h__20240301_06.csv", ledger_mod.STATUS_EMPTY),
+    ]

@@ -61,9 +61,9 @@ def test_process_batch_fallback_keeps_pre_exception_rows(spark, tmp_path):
     job = ti.make_job(spark, tmp_path, fx)
 
     # file B is a UTF-16 transcode of fixture file 2: same table, but a
-    # divergent (encoding) profile, so the batch splits into a
-    # conforming run [A] (handled by _ingest) and a divergent run [B]
-    # (handled per-file inside the try block).
+    # divergent (encoding) profile. Both profiles are scans of ONE
+    # batched plan, so the per-file path (made to fail once below) is
+    # never needed and both files count.
     a = fx["files"][0]
     b = tmp_path / "divergent" / "last24h__b.csv"
     b.parent.mkdir()
@@ -85,7 +85,7 @@ def test_process_batch_fallback_keeps_pre_exception_rows(spark, tmp_path):
     job.process_file = real_pf
 
     assert res.status == ledger_mod.STATUS_UPLOADED
-    # rows from the PRE-exception run A must be in the batch accounting
+    assert calls["n"] == 0
     a_alone_rows = len(ti.fx_rows(fx, 0))
     assert res.rows_in > a_alone_rows  # A's rows + B's rows, not B only
     table = job.read_table(job.registry.get("mini_campaign_events"))
@@ -104,8 +104,8 @@ def test_process_batch_fallback_all_empty_maps_to_empty(spark, tmp_path):
 
     fx = generate_f1(tmp_path)
     job = ti.make_job(spark, tmp_path, fx)
-    # nonexistent paths make _profile raise inside the try block, so
-    # the whole batch lands in the fallback's per-file retry
+    # nonexistent paths make the sniff raise inside the table's batched
+    # plan, so the whole batch lands in the per-file fallback
     job.process_file = lambda p, table_key=None: FileResult(
         p.name, ledger_mod.STATUS_EMPTY
     )
