@@ -69,15 +69,6 @@ def self_dedup_first(
     return out.drop("_seq") if drop_seq else out
 
 
-def dedup_counts(df: DataFrame, hash_col: str = "row_hash") -> DataFrame:
-    """A5-style report: total / unique / duplicate tallies in one agg."""
-    return df.agg(
-        F.count("*").alias("total_rows"),
-        F.countDistinct(hash_col).alias("unique_rows"),
-        (F.count("*") - F.countDistinct(hash_col)).alias("duplicate_rows"),
-    )
-
-
 def anti_join_history(
     new_rows: DataFrame,
     history: DataFrame,

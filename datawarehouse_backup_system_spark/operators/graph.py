@@ -484,6 +484,24 @@ def _stage_du(path: str, spark=None) -> int:
 #: ~10–30 rounds real graphs take.
 _BUCKET_MIN_BYTES = 4 << 30
 
+#: lazy-rounds cutover for core_numbers' chunked staging and
+#: neighborhood_function's unrolled tier: both compose several rounds
+#: into one job, which re-scans the edge source per composed round, so
+#: they run only while the edge frame's optimizer-stats size is at most
+#: this (see each function's in-body comment).
+_LAZY_MAX_BYTES = 1 << 30
+
+
+def _plan_fits(df: DataFrame, max_bytes: int) -> bool:
+    """True when the optimizer's size estimate of ``df`` is at most
+    ``max_bytes`` (no job runs). A failed probe — no stats — counts as
+    over the threshold, so the caller takes its scale-safe tier."""
+    try:
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        return int(size) <= max_bytes
+    except Exception:  # noqa: BLE001
+        return False
+
 
 def _stage_static_side(
     df: DataFrame,
@@ -511,10 +529,9 @@ def _stage_static_side(
     ``bucketed=None`` (default — auto, the e02/h04 exact-vs-scale
     switch pattern): stage plain parquet first (shuffle-free write),
     stat the staged footprint, and REBUCKET from the staged file only
-    when it reaches ``SPARK_GRAFT_GRAPH_BUCKET_MIN_BYTES`` (default
-    `_BUCKET_MIN_BYTES`) — the regime where the per-round label frame
-    stops being broadcastable and the join would otherwise re-shuffle
-    the edge list every round. Below the threshold broadcast already
+    when it reaches `_BUCKET_MIN_BYTES` — the regime where the
+    per-round label frame stops being broadcastable and the join would
+    otherwise re-shuffle the edge list every round. Below the threshold broadcast already
     elides the edge-side Exchange, so bucketing is pure overhead
     (measured numbers at `_BUCKET_MIN_BYTES`).
 
@@ -529,7 +546,6 @@ def _stage_static_side(
     big side — a per-round bucketed write would pay the exact shuffle
     it elides (plus the in-bucket sort) and win nothing.
     """
-    import os as _os
     import warnings as _warnings
 
     spark = df.sparkSession
@@ -539,12 +555,7 @@ def _stage_static_side(
     if bucketed is None:
         df.write.mode("overwrite").parquet(path)
         fallback = spark.read.parquet(path)
-        min_bytes = int(
-            _os.environ.get(
-                "SPARK_GRAFT_GRAPH_BUCKET_MIN_BYTES", _BUCKET_MIN_BYTES
-            )
-        )
-        if _stage_du(path, spark) < min_bytes:
+        if _stage_du(path, spark) < _BUCKET_MIN_BYTES:
             return fallback, (lambda: None)
         # rebucket from the staged file; the plain copy is deleted once
         # the bucketed write lands (review r10: it doubled the staged
@@ -856,9 +867,8 @@ def core_numbers(
     round instead of every round — the r11 chunked-staging tier; see
     the in-body comment for the equivalence argument and the byte
     gate. ``None`` (default) auto-selects: 6 when the edge source's
-    optimizer-stats footprint is ≤ ``SPARK_GRAFT_KC_CHUNK_MAX_BYTES``
-    (default 1 GiB), else 1 (the scale-safe per-round fixpoint stop);
-    ``SPARK_GRAFT_KC_STAGE_EVERY`` overrides outright.
+    optimizer-stats footprint is ≤ `_LAZY_MAX_BYTES` (1 GiB), else 1
+    (the scale-safe per-round fixpoint stop).
 
     Algorithm: iterated neighborhood H-index refinement (Lü et al.,
     "The H-index of a network node and its relation to degree and
@@ -915,8 +925,6 @@ def core_numbers(
     composes with g03/g04 as a link-quality prior for corpus curation
     (core number ranks pages by embeddedness; low-core = periphery).
     """
-    import os as _os
-
     from pyspark.sql import Observation
 
     if iterations < 1:
@@ -944,31 +952,7 @@ def core_numbers(
     # (parity-pinned in tests/test_opt_r11.py); the `iterations` cap
     # counts real rounds exactly in both modes.
     if stage_every is None:
-        env = _os.environ.get("SPARK_GRAFT_KC_STAGE_EVERY")
-        if env is not None:
-            # malformed value (empty string, '4x') falls through to the
-            # byte-gated auto tier instead of sinking the whole call
-            # (ADVICE r11)
-            try:
-                stage_every = int(env)
-            except ValueError:
-                stage_every = None
-        if stage_every is None:
-            max_b = int(
-                _os.environ.get(
-                    "SPARK_GRAFT_KC_CHUNK_MAX_BYTES", str(1 << 30)
-                )
-            )
-            try:
-                e_bytes = int(
-                    e._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            except Exception:  # noqa: BLE001 — no stats ⟹ scale-safe tier
-                e_bytes = max_b + 1
-            stage_every = 6 if e_bytes <= max_b else 1
+        stage_every = 6 if _plan_fits(e, _LAZY_MAX_BYTES) else 1
     stage_every = max(1, int(stage_every))
     # directed (both orientations) edge list, staged ONCE — every
     # round joins against it; bucketed on the join key by default so
@@ -1090,22 +1074,11 @@ def neighborhood_function(
     # threshold pattern) the staged tier with early stop runs
     # unchanged — as it does for real HyperBall radii (8+) and for any
     # forced staging demand.
-    import os as _os
-
-    unroll_max_bytes = int(
-        _os.environ.get("SPARK_GRAFT_NF_UNROLL_MAX_BYTES", str(1 << 30))
-    )
-    try:
-        e_bytes = int(
-            e._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — no stats ⟹ take the scale-safe tier
-        e_bytes = unroll_max_bytes + 1
     if (
         stage_path is None
         and stage_bucketed is not True
         and max_radius <= stage_rounds_above
-        and e_bytes <= unroll_max_bytes
+        and _plan_fits(e, _LAZY_MAX_BYTES)
     ):
         d = _directed(e)
         sk = d.groupBy(F.col("a").alias("node")).agg(

@@ -31,35 +31,6 @@ from pyspark.sql import functions as F
 
 from datawarehouse_backup_system_spark.operators import text
 
-#: staged token frames from prior dsir_weights(stage=True) calls —
-#: evicted on the next call or by release_staged() (same single-slot
-#: policy as lm.py). Guarded by _STAGED_LOCK: without it, two
-#: concurrent stage=True calls could unpersist a frame the other
-#: thread's consumers are still reading (review r9). The lock makes
-#: the evict+stage step atomic; it does NOT make concurrent staged
-#: calls share work — concurrent callers should pass stage=False.
-_LIVE_STAGED: list[DataFrame] = []
-
-import threading as _threading  # noqa: E402 — lock for the slot above
-
-_STAGED_LOCK = _threading.Lock()
-
-
-def release_staged() -> None:
-    """Unpersist the staged token frame from the last
-    ``dsir_weights(stage=True)`` call. Call after the returned
-    weights frame's consumers have run: the single-slot policy
-    otherwise retains the last call's corpus-sized persisted frame in
-    executor storage until the NEXT call or process exit (review r9)."""
-    with _STAGED_LOCK:
-        while _LIVE_STAGED:
-            old = _LIVE_STAGED.pop()
-            try:
-                old.unpersist()
-            except Exception:  # noqa: BLE001 — owning session may be gone
-                pass
-
-
 def hash_bucket(col: Column, n_buckets: int) -> Column:
     """Portable token → bucket in [0, n_buckets): md5-prefix mod B
     (the repo-wide recipe, single-sourced in operators.hashing)."""
@@ -96,9 +67,9 @@ def _logratio_tail(counts: DataFrame, n_buckets: int, alpha: float) -> DataFrame
     Totals ride a single-partition WINDOW over the B-row counts frame
     instead of a separate ``.agg`` + crossJoin (r12, guide §2.4): the
     old shape consumed the counts subtree TWICE (once for the 1-row
-    totals broadcast, once for the per-bucket select), and with a lazy
-    upstream (``stage=False``) each consumption re-ran the corpus
-    tokenize+hash aggregation. One partition of B ≤ ~10⁴ rows is
+    totals broadcast, once for the per-bucket select), and with the
+    lazy upstream each consumption re-ran the corpus tokenize+hash
+    aggregation. One partition of B ≤ ~10⁴ rows is
     scale-free; the arithmetic is unchanged (same sums, same doubles).
     """
     from pyspark.sql import Window
@@ -134,10 +105,9 @@ def _bucket_logratio_from_buckets(
     n_buckets: int,
     alpha: float = 1.0,
 ) -> DataFrame:
-    """bucket_logratio over PRE-BUCKETED (bucket) frames — the
-    hash-once path dsir_weights stages (review r10: staging raw token
-    strings recomputed md5+conv+pmod three times per action and cached
-    strings instead of one BIGINT per token)."""
+    """bucket_logratio over PRE-BUCKETED (bucket) frames (review r10:
+    carrying raw token strings recomputed md5+conv+pmod three times per
+    action instead of one BIGINT per token)."""
 
     def counts(b: DataFrame, out: str) -> DataFrame:
         return b.groupBy("bucket").agg(F.count(F.lit(1)).alias(out))
@@ -171,7 +141,6 @@ def dsir_weights(
     n_buckets: int = 64,
     alpha: float = 1.0,
     quantize_decimals: int | None = None,
-    stage: bool = True,
 ) -> DataFrame:
     """Importance weight per document of ``df``.
 
@@ -188,23 +157,12 @@ def dsir_weights(
     orders and engines (double summation order varies run-to-run) — use
     it when the weights feed a reproducibility-checked pipeline.
 
-    The token frame feeds THREE consumers (source counts, target
-    counts, the scoring join); with ``stage=True`` (default) it is
-    persisted so the corpus is tokenized once per action instead of
-    ~4 raw scans (review r8 — the lm.py bigram stage pattern), and the
-    target side is a FILTER over the same frame (``target_pred`` is
-    evaluated per document before the explode) rather than a second
-    tokenize. ``stage=False`` keeps the plan fully lazy.
-
-    RETENTION (review r9): the staged frame lives in executor storage
-    until the NEXT ``stage=True`` call evicts it, or until
-    :func:`release_staged` — call that once the returned frame's
-    consumers have run, or the LAST call's corpus-sized frame stays
-    pinned for the life of the process. The slot is lock-guarded, but
-    eviction-on-next-call means a concurrent ``stage=True`` call can
-    still unpersist a frame another caller's actions are consuming
-    (recompute, not corruption) — concurrent callers should pass
-    ``stage=False``.
+    The token frame feeds the fused count aggregation and the scoring
+    join; the target side is a FILTER over the same frame
+    (``target_pred`` is evaluated per document before the explode)
+    rather than a second tokenize. Nothing is persisted: the plan stays
+    fully lazy, so no corpus-sized frame is pinned in executor storage
+    past the caller's action.
     """
     if quantize_decimals is not None and not 0 <= quantize_decimals <= 15:
         raise ValueError(
@@ -218,27 +176,17 @@ def dsir_weights(
         target_pred.alias("_is_tgt"),
         F.explode(text.tokens(F.col(text_col))).alias("token"),
     ).where(F.col("token") != "").select(
-        # hash ONCE before any persist/reuse (review r10): the staged
-        # frame carries one BIGINT bucket per token, not the string
+        # hash ONCE before any reuse (review r10): each consumer reads
+        # one BIGINT bucket per token, not the string
         F.col(id_col),
         "_is_tgt",
         hash_bucket(F.col("token"), n_buckets).alias("bucket"),
     )
-    if stage:
-        with _STAGED_LOCK:
-            while _LIVE_STAGED:
-                old = _LIVE_STAGED.pop()
-                try:
-                    old.unpersist()
-                except Exception:  # noqa: BLE001 — owning session may be gone
-                    pass
-            tok = tok.persist()
-            _LIVE_STAGED.append(tok)
     # fused single-pass counts (r12): the target side is a filter of
     # the same frame, so one groupBy(bucket) with a conditional count
-    # replaces the two per-side aggregations — with stage=False this
-    # cuts the ratio build from four lazy corpus scans (2 count aggs ×
-    # the totals/select double-consumption) to ONE
+    # replaces the two per-side aggregations — it cuts the ratio build
+    # from four lazy corpus scans (2 count aggs × the totals/select
+    # double-consumption) to ONE
     ratio = _bucket_logratio_from_flagged(
         tok.select("bucket", "_is_tgt"), n_buckets, alpha
     )

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datawarehouse_backup_system_spark.scratch import persist_slot
+
 #: separator inside the hashed bigram key; tokens are whitespace-split so
 #: a single space is unambiguous and replays identically in SQL.
 PAIR_SEP = " "
@@ -191,42 +193,6 @@ def score_with_model(
     return _score_rows(rows, base, model, id_col, pair_buckets, k)
 
 
-#: staged bigram rows of the PRIOR bigram_lm_scores invocation — evicted
-#: on the next call or by release_staged() (q42 tier-cache pattern: new
-#: DataFrame objects each call would otherwise pin executor memory until
-#: session end). Guarded by _STAGED_LOCK (review r10: importance.py got
-#: the lock + release fix in r9 and cites lm.py as the pattern source,
-#: but lm.py itself was never hardened — two concurrent stage=True
-#: calls could double-pop the slot or unpersist each other's live
-#: frame). The lock makes evict+stage atomic. r12: the slot also holds
-#: the BOUNDED fused model-count frame (≤ pair+ctx buckets rows), which
-#: is persisted regardless of ``stage`` — so concurrent calls can evict
-#: each other's count frame too; the consequence is recompute, never
-#: corruption, and the corpus-sized rows frame still only persists
-#: under stage=True.
-_LIVE_STAGED: list[DataFrame] = []
-
-import threading as _threading  # noqa: E402 — lock for the slot above
-
-_STAGED_LOCK = _threading.Lock()
-
-
-def release_staged() -> None:
-    """Unpersist the staged bigram frame from the last
-    ``bigram_lm_scores(stage=True)`` call. Call after the returned
-    scores' consumers have run: the single-slot policy otherwise
-    retains a corpus-sized persisted (id, bp, bc) frame in executor
-    storage until the NEXT call or process exit (review r10 — the
-    exact retention bug importance.release_staged fixed in r9)."""
-    with _STAGED_LOCK:
-        while _LIVE_STAGED:
-            old = _LIVE_STAGED.pop()
-            try:
-                old.unpersist()
-            except Exception:  # noqa: BLE001 — owning session may be gone
-                pass
-
-
 def bigram_lm_scores(
     df: DataFrame,
     id_col: str,
@@ -234,7 +200,6 @@ def bigram_lm_scores(
     pair_buckets: int = 4096,
     ctx_buckets: int = 1024,
     k: float = 0.5,
-    stage: bool = True,
 ) -> DataFrame:
     """Per-document hashed-bigram LM score (in-corpus model).
 
@@ -247,32 +212,25 @@ def bigram_lm_scores(
       (compose with text.quality / curation.domain_cap).
 
     In-corpus composition means the bigram-rows subtree feeds the fused
-    model agg AND the scoring join; with ``stage=True`` (default) the
-    rows are persisted so the corpus is tokenized/hashed ONCE per action
-    — the prior call's stage is evicted on the next call (or by
-    :func:`release_staged`). ``stage=False`` leaves the corpus-sized
-    rows lazy (no corpus-sized executor-memory pinning) at the cost of
-    two bigram passes (model + scoring — the fundamental minimum) plus
-    the id universe; the fused model-count frame (bounded by
-    pair_buckets + ctx_buckets rows at any corpus size) is persisted in
-    the same slot either way.
+    model agg AND the scoring join. The corpus-sized rows stay lazy (no
+    corpus-sized executor-memory pinning) at the cost of two bigram
+    passes (model + scoring — the fundamental minimum) plus the id
+    universe. The fused model-count frame, bounded by pair_buckets +
+    ctx_buckets rows at any corpus size, is persisted and held in
+    :data:`~datawarehouse_backup_system_spark.scratch.persist_slot`
+    until the next holder evicts it or ``persist_slot.release()``.
     For train-on-A/score-B or incremental-merge setups use
     :func:`bigram_model` + :func:`score_with_model` directly.
     """
     rows = bigram_rows(df, id_col, text_col, pair_buckets, ctx_buckets)
-    staged: list[DataFrame] = []
-    if stage:
-        rows = rows.persist()
-        staged.append(rows)
     # Fused model build (r12, guide §2.3 "aggregate before you shuffle"
     # / §2.4): each bigram row feeds BOTH count tables, so explode a
     # 2-element (kind, bucket) array and count in ONE aggregation —
     # one corpus pass where the two per-table groupBys re-ran the
-    # tokenize+hash lineage each (the dominant cost with stage=False).
-    # The result is bounded by pair_buckets + ctx_buckets rows at ANY
-    # corpus size, so persisting it is scale-free and stops the two
-    # broadcast builds in _score_rows from re-running the pass; it
-    # rides the same single-slot eviction as the staged rows.
+    # tokenize+hash lineage each. The result is bounded by
+    # pair_buckets + ctx_buckets rows at ANY corpus size, so persisting
+    # it is scale-free and stops the two broadcast builds in
+    # _score_rows from re-running the pass.
     both = (
         rows.select(
             F.explode(
@@ -292,17 +250,7 @@ def bigram_lm_scores(
         .agg(F.count(F.lit(1)).alias("c"))
         .persist()
     )
-    staged.append(both)
-    with _STAGED_LOCK:
-        while _LIVE_STAGED:
-            old = _LIVE_STAGED.pop()
-            try:
-                old.unpersist()
-            except Exception:  # noqa: BLE001
-                # the owning session may be stopped (bench rounds)
-                # — the cache died with it; drop the stale handle
-                pass
-        _LIVE_STAGED.extend(staged)
+    persist_slot.hold(both)
     pair_cnt = both.where(F.col("kind") == 0).select(
         F.col("bucket").alias("bp"), F.col("c").alias("c_pair")
     )

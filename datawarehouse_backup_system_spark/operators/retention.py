@@ -26,21 +26,6 @@ DEFAULT_MAX_BYTES = 20 * 1024**3  # util/cleanup.py:12
 DEFAULT_TARGET_RATIO = 0.9        # util/cleanup.py:117
 
 
-def cleanup_files(*paths: str | Path) -> int:
-    """C1: best-effort unlink; returns how many were removed."""
-    n = 0
-    for p in map(Path, paths):
-        try:
-            if p.is_dir():
-                shutil.rmtree(p)
-            else:
-                p.unlink()
-            n += 1
-        except FileNotFoundError:
-            continue
-    return n
-
-
 def _files_by_mtime(folder: str | Path) -> list[tuple[Path, float, int]]:
     out = []
     for p in Path(folder).rglob("*"):

@@ -72,14 +72,12 @@ from pyspark.sql import functions as F
 #: re-shuffle dominates every cycle.
 _INDEX_MIN_BYTES = 4 << 30
 
+#: bucket count of a newly created index (an existing index keeps the
+#: count its manifest records)
+_INDEX_BUCKETS = 64
+
 _FILE_RE = re.compile(r"^w([0-9a-f]{8,32})-.*\.parquet$")
 _PART_RE = re.compile(r"^ingest_date=(.+)$")
-
-
-def index_min_bytes() -> int:
-    return int(
-        os.environ.get("SPARK_GRAFT_J2_INDEX_MIN_BYTES", _INDEX_MIN_BYTES)
-    )
 
 
 def _index_root(warehouse_dir: Path, table_name: str) -> Path:
@@ -223,10 +221,7 @@ def history_hash_frame(
         return None  # empty history: the plain anti-join is free
     root = _index_root(Path(warehouse_dir), table_name)
     man = _read_manifest(root) or {
-        "n_buckets": int(
-            n_buckets
-            or os.environ.get("SPARK_GRAFT_J2_INDEX_BUCKETS", "64")
-        ),
+        "n_buckets": int(n_buckets or _INDEX_BUCKETS),
         "entries": {},
     }
     have = {

@@ -486,8 +486,8 @@ class IngestJob:
     ) -> DataFrame:
         """J2 with the scale auto-switch (VERDICT r10 item 6, the same
         footprint-threshold pattern as graph._stage_static_side): below
-        ``SPARK_GRAFT_J2_INDEX_MIN_BYTES`` (default 4 GiB) of on-disk
-        table footprint, the plain column-pruned history anti-join runs —
+        ``hash_index._INDEX_MIN_BYTES`` (4 GiB) of on-disk table
+        footprint, the plain column-pruned history anti-join runs —
         at local scale its per-file shuffle is a broadcast under AQE and
         the index would only add write overhead. Above it, the batch
         anti-joins the persisted row_hash index bucketed on the join key
@@ -506,7 +506,7 @@ class IngestJob:
         listed = hash_index.live_write_pairs(tp)
         if (
             listed is not None
-            and listed[2] >= hash_index.index_min_bytes()
+            and listed[2] >= hash_index._INDEX_MIN_BYTES
         ):
             idx = hash_index.history_hash_frame(
                 self.spark, Path(self.warehouse_dir), tp,

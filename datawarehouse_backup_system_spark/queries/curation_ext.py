@@ -810,27 +810,20 @@ def e02_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     stat, no extra job — VERDICT r9 item 4, the h04 sketch-vs-exact
     pattern): under `_E02_APPROX_MIN_BYTES` (every driver fixture) the
     exact global-rank window runs and the spec is EXACT vs the oracle;
-    above it (or with SPARK_GRAFT_E02_APPROX_MIN_BYTES lowered) the
+    at or above it (tests lower the constant to force this tier) the
     two-sided percentile_approx band filter runs instead, because a
     global row_number window single-partitions the corpus. The
     approx-vs-exact divergence is pinned tie-only in pytest."""
-    import os as _os
-
     from ..operators.graph import _stage_du
 
     staged = _e02_staged(spark, sf_dir)
-    min_bytes = int(
-        _os.environ.get(
-            "SPARK_GRAFT_E02_APPROX_MIN_BYTES", _E02_APPROX_MIN_BYTES
-        )
-    )
     # _stage_du is cluster-storage-aware (Hadoop getContentSummary on
     # scheme'd paths) — a plain pathlib stat here silently read 0 on
     # hdfs://… and pinned the exact single-partition tier at any scale
     # (ADVICE r10→r11, the same defect class _stage_du fixed in graph).
     sep = "" if sf_dir.endswith("/") else "/"
     size = _stage_du(f"{sf_dir}{sep}embeddings.parquet", spark)
-    if size >= min_bytes:
+    if size >= _E02_APPROX_MIN_BYTES:
         return _e02_trim_approx(staged)
     return _e02_trim_exact(staged)
 

@@ -92,11 +92,6 @@ def t22_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_buckets=_T22_BUCKETS,
         alpha=1.0,
         quantize_decimals=9,
-        # stage=False in the SPEC layer (review r11 pass F): the
-        # operator's persisted token frame stays pinned in executor
-        # storage until a NEXT call that a one-shot driver/bench
-        # session never makes; the stage exists for production reuse
-        stage=False,
     )
 
 
@@ -304,7 +299,6 @@ def t26_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lm.bigram_lm_scores(
         docs, "doc_id", "text",
         pair_buckets=_T26_PAIR_B, ctx_buckets=_T26_CTX_B, k=_T26_K,
-        stage=False,  # same storage-pinning rationale as t22 (r11)
     )
 
 

@@ -670,9 +670,6 @@ GROUP BY p.purchase_id, p.user_id
 # --------------------------------------------------------------------------
 # q42 — hypertable rollup cascade (minute→hour→day re-aggregation)
 # --------------------------------------------------------------------------
-_Q42_LIVE_TIERS: list[DataFrame] = []
-
-
 def q42_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """operators.rollup.rollup_cascade over events: per event_type
     count/sum/min/max of integer cents at minute, hour, and day
@@ -680,26 +677,18 @@ def q42_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle aggregates each tier DIRECTLY from raw rows, so an exact
     match proves partial re-aggregation loses nothing."""
     from datawarehouse_backup_system_spark.operators.rollup import rollup_cascade
+    from datawarehouse_backup_system_spark.scratch import persist_slot
 
-    # repeated runs (bench best-of-2, gate loops) would otherwise
-    # accumulate this query's tier caches — new DataFrame objects each
-    # call, so never reused, never evicted until memory pressure. Evict
-    # exactly the PRIOR invocation's tiers (not clearCache(), which
-    # would nuke unrelated caches a harness holds in the same session).
-    while _Q42_LIVE_TIERS:
-        stale = _Q42_LIVE_TIERS.pop()
-        try:
-            stale.unpersist()
-        except Exception:
-            # the session that cached this tier may have been stopped and
-            # recreated between invocations (bench rounds); the cache died
-            # with it — just drop the stale handle.
-            pass
     ev = load(spark, sf_dir, "events")
     tiers = rollup_cascade(
         ev, "ts", cents(F.col("value")), key_cols=["event_type"], persist=True
     )
-    _Q42_LIVE_TIERS.extend(tiers.values())
+    # repeated runs (bench best-of-2, gate loops) would otherwise
+    # accumulate this query's tier caches — new DataFrame objects each
+    # call, never reused. The shared slot evicts exactly the PRIOR
+    # holder's frames (not clearCache(), which would nuke unrelated
+    # caches a harness holds in the same session).
+    persist_slot.hold(*tiers.values())
     out = None
     for name, df in tiers.items():
         tagged = df.select(F.lit(name).alias("resolution"), "*")

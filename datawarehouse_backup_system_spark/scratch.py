@@ -1,6 +1,7 @@
-"""Process-scoped scratch-root lifecycle, shared by every operator
-that stages data whose LAZY consumers outlive the staging call (u05's
-scratch warehouses, WCC round files, bench staging).
+"""Process-scoped staging lifecycles, shared by every operator that
+stages data whose LAZY consumers outlive the staging call: scratch
+roots on disk (u05's scratch warehouses, WCC round files, bench
+staging) and the persist slot in executor storage (:data:`persist_slot`).
 
 One convention, one implementation (review r8 — it previously lived as
 three line-for-line copies whose sweep prefixes had to be kept in sync
@@ -24,6 +25,7 @@ import os
 import re
 import shutil
 import tempfile
+import threading
 import time
 from pathlib import Path
 
@@ -102,3 +104,45 @@ def sweep_stale_scratch(
             except OSError:
                 pass
     return removed
+
+
+class PersistSlot:
+    """Lock-guarded single slot of persisted DataFrames.
+
+    An operator that persists a frame its lazy result reads cannot
+    unpersist it on return, and a fresh DataFrame per call would pin
+    executor storage until memory pressure. :meth:`hold` therefore
+    unpersists whatever the slot held before and keeps the new frames;
+    :meth:`release` empties it. The lock makes evict+hold atomic. A
+    concurrent caller can still evict frames another caller's actions
+    are reading — the consequence is recompute, never wrong rows."""
+
+    def __init__(self) -> None:
+        self._held: list = []
+        self._lock = threading.Lock()
+
+    @property
+    def held(self) -> tuple:
+        return tuple(self._held)
+
+    def _drop_all(self) -> None:
+        while self._held:
+            try:
+                self._held.pop().unpersist()
+            except Exception:  # noqa: BLE001 — owning session may be gone
+                pass
+
+    def hold(self, *frames) -> None:
+        with self._lock:
+            self._drop_all()
+            self._held.extend(frames)
+
+    def release(self) -> None:
+        with self._lock:
+            self._drop_all()
+
+
+#: the one slot shared by every persisting operator (lm's fused model
+#: counts, q42's rollup tiers): holding one caller's frames evicts the
+#: previous caller's
+persist_slot = PersistSlot()

@@ -629,7 +629,10 @@ def test_e02_approx_swap_tracks_exact_tie_only(
         (r["vec_id"], r["l2_norm"])
         for r in e02_embedding_outliers(spark, sf_dir).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_E02_APPROX_MIN_BYTES", "0")
+    monkeypatch.setattr(
+        "datawarehouse_backup_system_spark.queries.curation_ext."
+        "_E02_APPROX_MIN_BYTES", 0,
+    )
     approx_df = e02_embedding_outliers(spark, sf_dir)
     plan = approx_df._jdf.queryExecution().analyzed().toString()
     assert "row_number" not in plan

@@ -558,7 +558,10 @@ def test_stage_static_side_auto_threshold(spark, tmp_path, monkeypatch):
         if t.name.startswith("dwbss_stage_")
     ]
     drop1()
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_BUCKET_MIN_BYTES", "0")
+    monkeypatch.setattr(
+        "datawarehouse_backup_system_spark.operators.graph."
+        "_BUCKET_MIN_BYTES", 0,
+    )
     big, drop2 = _stage_static_side(
         df, str(tmp_path / "f"), "edges", "b", bucketed=None
     )

@@ -10,13 +10,14 @@ import pytest
 from fixtures import generate_f1
 
 import test_ingest as ti
+from datawarehouse_backup_system_spark.plans import hash_index
 
 
 @pytest.fixture()
 def indexed_env(monkeypatch):
     """Force the index regime at test scale."""
-    monkeypatch.setenv("SPARK_GRAFT_J2_INDEX_MIN_BYTES", "1")
-    monkeypatch.setenv("SPARK_GRAFT_J2_INDEX_BUCKETS", "4")
+    monkeypatch.setattr(hash_index, "_INDEX_MIN_BYTES", 1)
+    monkeypatch.setattr(hash_index, "_INDEX_BUCKETS", 4)
 
 
 def test_indexed_j2_plan_one_exchange_batch_side_only(
@@ -56,11 +57,11 @@ def test_indexed_cycles_match_plain_path_exactly(
     job_a = ti.make_job(spark, tmp_path / "a", fx_a)
     res_a = job_a.run(tmp_path / "a")
 
-    monkeypatch.setenv("SPARK_GRAFT_J2_INDEX_MIN_BYTES", str(1 << 60))
+    monkeypatch.setattr(hash_index, "_INDEX_MIN_BYTES", 1 << 60)
     fx_b = generate_f1(tmp_path / "b")
     job_b = ti.make_job(spark, tmp_path / "b", fx_b)
     res_b = job_b.run(tmp_path / "b")
-    monkeypatch.setenv("SPARK_GRAFT_J2_INDEX_MIN_BYTES", "1")
+    monkeypatch.setattr(hash_index, "_INDEX_MIN_BYTES", 1)
 
     assert [r.status for r in res_a] == [r.status for r in res_b]
     assert [r.rows_loaded for r in res_a] == [r.rows_loaded for r in res_b]

@@ -128,7 +128,10 @@ def test_neighborhood_function_size_gate_forces_staged(
         neighborhood_function,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_NF_UNROLL_MAX_BYTES", "0")
+    monkeypatch.setattr(
+        "datawarehouse_backup_system_spark.operators.graph."
+        "_LAZY_MAX_BYTES", 0,
+    )
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], "src bigint, dst bigint"
     )
@@ -325,7 +328,10 @@ def test_core_numbers_byte_gate_forces_per_round(
         core_numbers,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_KC_CHUNK_MAX_BYTES", "0")
+    monkeypatch.setattr(
+        "datawarehouse_backup_system_spark.operators.graph."
+        "_LAZY_MAX_BYTES", 0,
+    )
     out = core_numbers(
         _kc_edges(spark), stage_path=str(tmp_path / "g")
     )

@@ -13,6 +13,7 @@ from contextlib import redirect_stdout
 from pyspark.sql import functions as F
 
 from datawarehouse_backup_system_spark.operators import importance, lm
+from datawarehouse_backup_system_spark.scratch import PersistSlot, persist_slot
 
 
 def _plan_simple(df) -> str:
@@ -60,13 +61,13 @@ def test_logratio_flagged_empty_target(spark):
 
 
 def test_dsir_plan_scans_corpus_at_most_three_times(spark, sf_dir):
-    """The r12 fusion: stage=False dsir plans ≤3 corpus scans (counts,
+    """The r12 fusion: dsir plans ≤3 corpus scans (counts,
     scoring, id universe) — the pre-fix shape planned 6 (two per-side
     count aggs, each consumed twice by the totals/select split)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = importance.dsir_weights(
         docs, "doc_id", "text", target_pred=F.col("lang") == "en",
-        n_buckets=8, stage=False,
+        n_buckets=8,
     )
     plan = _plan_simple(out)
     assert plan.count("Scan parquet") <= 3, plan
@@ -81,7 +82,7 @@ def test_bigram_fused_counts_match_per_table(spark):
     )
     pb, cb = 16, 8
     out = lm.bigram_lm_scores(df, "id", "text", pair_buckets=pb,
-                              ctx_buckets=cb, stage=False)
+                              ctx_buckets=cb)
     got = {r["id"]: r for r in out.collect()}
     # reference: the public two-agg model + shared scoring tail
     model = lm.bigram_model(df, "id", "text", pair_buckets=pb,
@@ -97,16 +98,36 @@ def test_bigram_fused_counts_match_per_table(spark):
         assert got[i]["n_bigrams"] == ref[i]["n_bigrams"]
         assert got[i]["sum_logp"] == ref[i]["sum_logp"]
         assert got[i]["avg_logp"] == ref[i]["avg_logp"]
-    lm.release_staged()
+    persist_slot.release()
+
+
+def test_persist_slot_hold_release_and_dead_frames(spark):
+    """The shared single slot: holding new frames un-caches the
+    previous ones, release() empties it, and a held frame whose
+    unpersist raises (its session is gone) is dropped silently."""
+    slot = PersistSlot()
+    a = spark.range(3).persist()
+    b = spark.range(4).persist()
+    slot.hold(a)
+    slot.hold(b)
+    assert not a.is_cached and b.is_cached
+    slot.release()
+    assert slot.held == () and not b.is_cached
+
+    class Dead:
+        def unpersist(self):
+            raise RuntimeError("session stopped")
+
+    slot.hold(Dead())
+    slot.release()
+    assert slot.held == ()
 
 
 def test_bigram_staged_slot_counts(spark):
-    """stage=False slots ONLY the bounded fused-count frame;
-    stage=True additionally slots the corpus-sized rows."""
+    """t26's bigram call slots ONLY its bounded fused-count frame, and
+    release() empties the shared slot."""
     df = spark.createDataFrame([(1, "a b c")], "id int, text string")
-    lm.bigram_lm_scores(df, "id", "text", stage=False).count()
-    assert len(lm._LIVE_STAGED) == 1
-    lm.bigram_lm_scores(df, "id", "text", stage=True).count()
-    assert len(lm._LIVE_STAGED) == 2
-    lm.release_staged()
-    assert lm._LIVE_STAGED == []
+    lm.bigram_lm_scores(df, "id", "text").count()
+    assert len(persist_slot.held) == 1
+    persist_slot.release()
+    assert persist_slot.held == ()

@@ -302,7 +302,10 @@ def test_neighborhood_function_uses_bucketed_auto_switch(
             edges, max_radius=2, stage_rounds_above=0
         ).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_BUCKET_MIN_BYTES", "0")
+    monkeypatch.setattr(
+        "datawarehouse_backup_system_spark.operators.graph."
+        "_BUCKET_MIN_BYTES", 0,
+    )
     bucketed = {
         (r["node"], r["radius"]): r["n_reachable_est"]
         for r in neighborhood_function(
@@ -326,7 +329,10 @@ def test_stage_static_side_auto_rebucket_drops_plain_copy(
         _stage_static_side,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_BUCKET_MIN_BYTES", "0")
+    monkeypatch.setattr(
+        "datawarehouse_backup_system_spark.operators.graph."
+        "_BUCKET_MIN_BYTES", 0,
+    )
     df = spark.range(0, 300).selectExpr("id as b", "id % 5 as a")
     frame, drop = _stage_static_side(
         df, str(tmp_path), "edges", "b", bucketed=None
@@ -361,7 +367,10 @@ def test_stage_static_side_forced_bucketed_raises_on_failure(
         g._stage_static_side(
             df, str(tmp_path / "f"), "edges", "b", bucketed=True
         )
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_BUCKET_MIN_BYTES", "0")
+    monkeypatch.setattr(
+        "datawarehouse_backup_system_spark.operators.graph."
+        "_BUCKET_MIN_BYTES", 0,
+    )
     with _warnings.catch_warnings(record=True) as caught:
         _warnings.simplefilter("always")
         frame, _ = g._stage_static_side(
@@ -661,19 +670,19 @@ def test_bigram_rows_no_empty_edge_tokens(spark):
 
 
 def test_lm_release_staged_and_lock_exist(spark):
-    """Review r10: lm.py never got the r9 lock+release hardening its
-    own pattern-copy in importance.py received."""
+    """Review r10: lm.py's persisted frame must sit behind the same
+    lock+release hardening as every other slot user; it now uses the
+    shared lock-guarded slot in scratch.py."""
     from datawarehouse_backup_system_spark.operators import lm
+    from datawarehouse_backup_system_spark.scratch import persist_slot
 
     df = spark.createDataFrame([(1, "a b c")], "id int, text string")
-    out = lm.bigram_lm_scores(df, "id", "text", stage=True)
+    out = lm.bigram_lm_scores(df, "id", "text")
     assert out.count() == 1
-    # r12: the slot holds the staged rows AND the bounded fused
-    # model-count frame (stage=False holds only the latter)
-    assert len(lm._LIVE_STAGED) == 2
-    lm.release_staged()
-    assert lm._LIVE_STAGED == []
-    assert lm._STAGED_LOCK is not None
+    assert len(persist_slot.held) == 1
+    persist_slot.release()
+    assert persist_slot.held == ()
+    assert persist_slot._lock is not None
 
 
 def test_train_lr_rejects_out_of_range_labels(spark):
@@ -711,9 +720,9 @@ def test_dsir_validates_quantize_decimals(spark):
 
 
 def test_dsir_stages_buckets_not_tokens(spark):
-    """Review r10: the staged frame carried raw token strings and
-    recomputed md5 three times per action; it now carries one BIGINT
-    bucket per token (schema-asserted), and weights are unchanged."""
+    """Review r10: the token frame carried raw token strings and
+    recomputed md5 three times per action; hashing once before reuse
+    leaves the weights unchanged."""
     from datawarehouse_backup_system_spark.operators import importance
 
     df = spark.createDataFrame(
@@ -723,10 +732,7 @@ def test_dsir_stages_buckets_not_tokens(spark):
     from pyspark.sql import functions as F
 
     out = importance.dsir_weights(
-        df, "id", "t", target_pred=F.col("is_tgt"), stage=True
+        df, "id", "t", target_pred=F.col("is_tgt")
     )
     rows = {r["id"]: r["n_tokens"] for r in out.collect()}
     assert rows == {1: 3, 2: 2}
-    staged = importance._LIVE_STAGED[-1]
-    assert "bucket" in staged.columns and "token" not in staged.columns
-    importance.release_staged()

@@ -767,11 +767,10 @@ def test_hash_index_catalog_name_disambiguates_raw_names(tmp_path):
     )
 
 
-def test_hash_index_refuses_manifest_overclaim(spark, tmp_path, indexed_env=None):
+def test_hash_index_refuses_manifest_overclaim(spark, tmp_path, monkeypatch):
     """Review r11: a manifest claiming coverage over a lost/partially-
     restored index data dir served an EMPTY hash frame and silently
     re-admitted every previously-seen row. Now it warns and falls back."""
-    import os
     import warnings as _warnings
 
     from fixtures import generate_f1
@@ -779,38 +778,34 @@ def test_hash_index_refuses_manifest_overclaim(spark, tmp_path, indexed_env=None
     import test_ingest as ti
     from datawarehouse_backup_system_spark.plans import hash_index
 
-    os.environ["SPARK_GRAFT_J2_INDEX_MIN_BYTES"] = "1"
-    os.environ["SPARK_GRAFT_J2_INDEX_BUCKETS"] = "4"
-    try:
-        fx = generate_f1(tmp_path)
-        job = ti.make_job(spark, tmp_path, fx)
-        r0 = job.process_file(fx["files"][0])
-        schema = job.registry.get("mini_campaign_events")
-        probe = job.read_table(schema).select("row_hash").limit(1)
-        job._dedup_against_history(probe, schema).count()  # build index
+    monkeypatch.setattr(hash_index, "_INDEX_MIN_BYTES", 1)
+    monkeypatch.setattr(hash_index, "_INDEX_BUCKETS", 4)
+    fx = generate_f1(tmp_path)
+    job = ti.make_job(spark, tmp_path, fx)
+    r0 = job.process_file(fx["files"][0])
+    schema = job.registry.get("mini_campaign_events")
+    probe = job.read_table(schema).select("row_hash").limit(1)
+    job._dedup_against_history(probe, schema).count()  # build index
 
-        data_dir = (
-            tmp_path / "warehouse" / "_hashidx" / schema.table_name / "data"
+    data_dir = (
+        tmp_path / "warehouse" / "_hashidx" / schema.table_name / "data"
+    )
+    for f in data_dir.glob("*.parquet"):
+        f.unlink()  # simulate the lost-index restore
+
+    with _warnings.catch_warnings(record=True) as w:
+        _warnings.simplefilter("always")
+        out = hash_index.history_hash_frame(
+            spark, tmp_path / "warehouse",
+            job.table_path(schema), schema.table_name,
         )
-        for f in data_dir.glob("*.parquet"):
-            f.unlink()  # simulate the lost-index restore
-
-        with _warnings.catch_warnings(record=True) as w:
-            _warnings.simplefilter("always")
-            out = hash_index.history_hash_frame(
-                spark, tmp_path / "warehouse",
-                job.table_path(schema), schema.table_name,
-            )
-        assert out is None
-        assert any("unavailable" in str(x.message) for x in w)
-        # and the ingest path still dedups correctly via the fallback
-        dup = tmp_path / "last24h__re0.csv"
-        dup.write_bytes(fx["files"][0].read_bytes())
-        assert job.process_file(dup).rows_loaded == 0
-        assert r0.rows_loaded > 0
-    finally:
-        os.environ.pop("SPARK_GRAFT_J2_INDEX_MIN_BYTES", None)
-        os.environ.pop("SPARK_GRAFT_J2_INDEX_BUCKETS", None)
+    assert out is None
+    assert any("unavailable" in str(x.message) for x in w)
+    # and the ingest path still dedups correctly via the fallback
+    dup = tmp_path / "last24h__re0.csv"
+    dup.write_bytes(fx["files"][0].read_bytes())
+    assert job.process_file(dup).rows_loaded == 0
+    assert r0.rows_loaded > 0
 
 
 def test_langid_ngram_empty_model_means_und(spark):
@@ -925,9 +920,7 @@ def test_pass_f_source_contracts():
     """Review r11 pass F, source-contract pins: r06's oracle carries the
     absolute probe cap; d12's population is absolutely bounded on both
     engines (its n_clusters is a pinned oracle constant, so the within-
-    cluster join is N²/8); t22/t26 pass stage=False in the spec layer
-    (the persisted slot outlived every one-shot session); the t23
-    oracle-splice guard raises instead of assert (stripped under -O);
+    cluster join is N²/8); the t23 oracle-splice guard raises instead of assert (stripped under -O);
     the \\x0B Java-vs-RE2 tokenizer divergence is documented on
     tokens() with the migration plan."""
     import inspect
@@ -942,8 +935,6 @@ def test_pass_f_source_contracts():
     assert "vec_id < 200000" in analytics_ext._R06_APPROX_SQL
     assert "vec_id < 20000" in corpus_ext.D12_SQL
     assert "20_000" in inspect.getsource(corpus_ext.d12_semantic_dedup)
-    assert "stage=False" in inspect.getsource(pipeline_ext.t22_dsir_weights)
-    assert "stage=False" in inspect.getsource(pipeline_ext.t26_bigram_lm)
     src = inspect.getsource(pipeline_ext)
     assert 'raise ValueError("d09 oracle changed shape' in src
     # the \x0B Java-vs-RE2 note moved from tokens.__doc__ to WS_CLASS

@@ -1,14 +1,14 @@
 #!/usr/bin/env python
 """Interleaved A/B of g05 core_numbers staging cadence (VERDICT r11 #3).
 
-Alternates SPARK_GRAFT_KC_STAGE_EVERY=1 (per-round staging) vs 6 (the
-chunked auto tier) inside ONE Spark session, so host drift hits both
-arms equally. Usage: python tools/ab_kcore.py <sf_dir> <reps>
+Alternates core_numbers(stage_every=1) (per-round staging) vs
+stage_every=6 (the chunked auto tier) on g05's own edges and round cap
+inside ONE Spark session, so host drift hits both arms equally.
+Usage: python tools/ab_kcore.py <sf_dir> <reps>
 """
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 from pathlib import Path
@@ -24,23 +24,23 @@ def _stat():
 
 def main() -> int:
     sf_dir, reps = sys.argv[1], int(sys.argv[2])
+    from datawarehouse_backup_system_spark.operators.graph import core_numbers
     from datawarehouse_backup_system_spark.queries import round9_ext
 
-    spec = {s.name: s for s in round9_ext.SPECS}["g05_kcore"]
     spark = get_spark(app_name="ab-kcore")
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    res = {"1": [], "6": []}
+    res = {1: [], 6: []}
     s0 = _stat()
     for rep in range(reps):
-        for v in ("1", "6"):
-            os.environ["SPARK_GRAFT_KC_STAGE_EVERY"] = v
+        for v in res:
             spark.catalog.clearCache()
             t0 = time.time()
-            spec.spark_fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            core_numbers(
+                round9_ext._session_edges_pow3(spark, sf_dir),
+                iterations=round9_ext._G05_ROUNDS,
+                stage_every=v,
+            ).write.format("noop").mode("overwrite").save()
             res[v].append(round(time.time() - t0, 3))
-    os.environ.pop("SPARK_GRAFT_KC_STAGE_EVERY", None)
     s1 = _stat()
     d = [b - a for a, b in zip(s0, s1)]
     print("steal_pct %.2f" % (100.0 * d[7] / sum(d[:8])))
