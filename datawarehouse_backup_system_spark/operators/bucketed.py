@@ -30,7 +30,7 @@ Operational rules encoded here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -53,19 +53,6 @@ def write_bucketed(
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: list[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Join two catalog tables; when both are bucketed on ``on`` with the
-    same bucket count this plans with ZERO Exchange nodes (verify with
-    ``assert_no_exchange``)."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
 
 
 def assert_no_exchange(df: DataFrame) -> str:

@@ -116,55 +116,3 @@ def fk_exists(child: DataFrame, child_col: str, parent: DataFrame, parent_col: s
         F.lit(None).cast("bigint").alias("n_rows"),
         (F.col("violations") == 0).alias("passed"),
     )
-
-
-def schema_drift_report(df: DataFrame, expected) -> list[dict]:
-    """Detect drift between a DataFrame's schema and the registry
-    expectation: added / missing / type-changed / nullability-changed
-    columns (BOTH directions — review r11: only the loosened direction
-    was reported, and the docstring promised the tightened one).
-    Returns a row-per-finding list (driver-side — schemas are metadata,
-    never data-sized), each ``{"column", "kind", "observed",
-    "expected"}``.
-
-    The reference only validates WIDTH (SURVEY Q4/P3: extra columns
-    reject, missing columns backfill); this is the complete ops-plane
-    form — the report feeds the same ledger a rejected file's status
-    does, so producers see WHAT changed, not just that a width differed.
-    """
-    obs = {f.name: f for f in df.schema.fields}
-    exp = {f.name: f for f in expected.fields}
-    findings: list[dict] = []
-    for name in obs:
-        if name not in exp:
-            findings.append({
-                "column": name, "kind": "added",
-                "observed": obs[name].dataType.simpleString(), "expected": None,
-            })
-    for name, f in exp.items():
-        if name not in obs:
-            findings.append({
-                "column": name, "kind": "missing",
-                "observed": None, "expected": f.dataType.simpleString(),
-            })
-            continue
-        o = obs[name]
-        if o.dataType != f.dataType:
-            findings.append({
-                "column": name, "kind": "type_changed",
-                "observed": o.dataType.simpleString(),
-                "expected": f.dataType.simpleString(),
-            })
-        if o.nullable and not f.nullable:
-            findings.append({
-                "column": name, "kind": "nullability_loosened",
-                "observed": "nullable", "expected": "not null",
-            })
-        elif f.nullable and not o.nullable:
-            # tightening breaks downstream writers unioning in NULLs —
-            # drift the producer must see too (review r11)
-            findings.append({
-                "column": name, "kind": "nullability_tightened",
-                "observed": "not null", "expected": "nullable",
-            })
-    return findings

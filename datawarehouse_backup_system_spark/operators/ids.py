@@ -2,22 +2,12 @@
 
 The reference assigns ``range(last_id+1, ...)`` per 10k-row chunk on a
 single thread (``util/data_pushing.py:325-331``). Dense global ids are
-inherently a global-order problem; two strategies, same interface:
-
-- ``strategy="global"`` — exact + simple: ``row_number()`` over a
-  one-partition window. Correct at any size but serializes one stage;
-  fine for small parity loads.
-- ``strategy="distributed"`` (default) — the scalable prefix-sum pattern:
-  range-partition by the order key, count rows per partition, convert the
-  per-partition counts into exclusive prefix-sum offsets with a window
-  over the (tiny, one-row-per-partition) counts frame, broadcast-join the
-  offsets back, then ``row_number()`` *within* each partition + offset.
-  Everything stays one lazy plan — the range-exchange is computed once and
-  reused (ReusedExchange) by both the counts and the numbering subtree, so
-  no driver collect and no recomputation-determinism hazard.
-
-Both produce ids ``start+1 .. start+N`` dense, following the total order
-of ``order_cols`` (which must be a unique key — e.g. the ingest ``_seq``).
+inherently a global-order problem: ``row_number()`` over a window
+ordered by ``order_cols`` (which must be a unique key — e.g. the ingest
+``_seq``) gives ids ``start+1 .. start+N``, dense and in that order,
+under any input partitioning. The window has no partition key, so its
+one stage runs in a single task; that bounds the rows one cycle can
+number, not their correctness.
 """
 
 from __future__ import annotations
@@ -31,34 +21,9 @@ def assign_dense_ids(
     order_cols: list[str],
     start: int = 0,
     id_col: str = "id",
-    strategy: str = "distributed",
-    num_partitions: int | None = None,
 ) -> DataFrame:
-    if strategy == "global":
-        w = Window.orderBy(*[F.col(c).asc() for c in order_cols])
-        return df.withColumn(id_col, (F.row_number().over(w) + F.lit(start)).cast("long"))
-    if strategy != "distributed":
-        raise ValueError(f"unknown id strategy: {strategy!r}")
-
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(n, *order_cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    counts = parted.groupBy("_pid").agg(F.count("*").alias("_cnt"))
-    # exclusive prefix sum over partition ids — #partitions rows, trivial
-    w_cum = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "_offset", F.coalesce(F.sum("_cnt").over(w_cum), F.lit(0))
-    ).select("_pid", "_offset")
-    w_in = Window.partitionBy("_pid").orderBy(*[F.col(c).asc() for c in order_cols])
-    return (
-        parted.join(F.broadcast(offsets), "_pid")
-        .withColumn(
-            id_col,
-            (F.row_number().over(w_in) + F.col("_offset") + F.lit(start)).cast("long"),
-        )
-        .drop("_pid", "_offset")
-    )
+    w = Window.orderBy(*[F.col(c).asc() for c in order_cols])
+    return df.withColumn(id_col, (F.row_number().over(w) + F.lit(start)).cast("long"))
 
 
 def next_id_watermark(target: DataFrame, id_col: str = "id") -> int:

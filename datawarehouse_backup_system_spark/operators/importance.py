@@ -39,27 +39,6 @@ def hash_bucket(col: Column, n_buckets: int) -> Column:
     return md5_bucket(col, n_buckets)
 
 
-def bucket_logratio(
-    source_tokens: DataFrame,
-    target_tokens: DataFrame,
-    n_buckets: int,
-    alpha: float = 1.0,
-) -> DataFrame:
-    """Per-bucket smoothed log-likelihood ratio table (exactly B rows).
-
-    Buckets absent from one side still get a ratio via add-``alpha``
-    smoothing over the full bucket range, so unseen-token documents score
-    finite weights. Columns: ``bucket``, ``logratio`` (double).
-    """
-    src_b = source_tokens.select(
-        hash_bucket(F.col("token"), n_buckets).alias("bucket")
-    )
-    tgt_b = target_tokens.select(
-        hash_bucket(F.col("token"), n_buckets).alias("bucket")
-    )
-    return _bucket_logratio_from_buckets(src_b, tgt_b, n_buckets, alpha)
-
-
 def _logratio_tail(counts: DataFrame, n_buckets: int, alpha: float) -> DataFrame:
     """(bucket, src_cnt, tgt_cnt) — possibly missing absent buckets —
     → the B-row smoothed logratio table.
@@ -105,9 +84,15 @@ def _bucket_logratio_from_buckets(
     n_buckets: int,
     alpha: float = 1.0,
 ) -> DataFrame:
-    """bucket_logratio over PRE-BUCKETED (bucket) frames (review r10:
-    carrying raw token strings recomputed md5+conv+pmod three times per
-    action instead of one BIGINT per token)."""
+    """Per-bucket smoothed log-likelihood ratio table (exactly B rows)
+    over PRE-BUCKETED (bucket) frames (review r10: carrying raw token
+    strings recomputed md5+conv+pmod three times per action instead of
+    one BIGINT per token).
+
+    Buckets absent from one side still get a ratio via add-``alpha``
+    smoothing over the full bucket range, so unseen-token documents
+    score finite weights. Columns: ``bucket``, ``logratio`` (double).
+    """
 
     def counts(b: DataFrame, out: str) -> DataFrame:
         return b.groupBy("bucket").agg(F.count(F.lit(1)).alias(out))

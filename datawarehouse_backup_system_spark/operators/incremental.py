@@ -55,10 +55,10 @@ def partial_aggs(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
 
 def merge_many(partials: DataFrame, keys: list[str]) -> DataFrame:
     """Monoid merge of ANY number of stacked partials in one groupBy —
-    THE single definition of the merge algebra. Readers (the streaming
-    ``read_agg_view``) and folds (:func:`merge_partials`) must route
-    through here: a re-implemented column list would silently fork from
-    the writer when ``_PARTIAL_COLS`` changes."""
+    THE single definition of the merge algebra. Readers and folds
+    (:func:`merge_partials`) must route through here: a re-implemented
+    column list would silently fork from the writer when
+    ``_PARTIAL_COLS`` changes."""
     return partials.groupBy(*keys).agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_vals").alias("n_vals"),

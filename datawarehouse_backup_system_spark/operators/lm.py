@@ -90,36 +90,19 @@ def bigram_model(
 ) -> tuple[DataFrame, DataFrame]:
     """Build the hashed-bigram count tables ``(pair_counts, ctx_counts)``.
 
-    Counts are MERGEABLE BY SUMMATION (:func:`merge_models`): bucket
-    counts over A ∪ B equal the bucket-wise sums of the counts over A
-    and B, so the model updates incrementally as corpus shards arrive
-    (a streaming foreachBatch can fold each micro-batch in) — the same
+    Counts are MERGEABLE BY SUMMATION: bucket counts over A ∪ B equal
+    the bucket-wise sums of the counts over A and B — the same
     mergeability contract as the CMS/HLL sketches in this repo.
 
     COST (review r10): the two aggregations each scan the corpus (two
     passes + two rounds of hashing) — on a large trusted corpus, either
-    persist the input's bigram rows yourself or build once and reuse
-    via :func:`merge_models`; the in-corpus path with staging is
-    :func:`bigram_lm_scores`. Micro-batch folds (the streaming caller)
-    are small enough that the double pass is noise.
+    persist the input's bigram rows yourself or build once and reuse;
+    the in-corpus path with staging is :func:`bigram_lm_scores`.
     """
     rows = bigram_rows(df, id_col, text_col, pair_buckets, ctx_buckets)
     pair_cnt = rows.groupBy("bp").agg(F.count(F.lit(1)).alias("c_pair"))
     ctx_cnt = rows.groupBy("bc").agg(F.count(F.lit(1)).alias("c_ctx"))
     return pair_cnt, ctx_cnt
-
-
-def merge_models(
-    a: tuple[DataFrame, DataFrame], b: tuple[DataFrame, DataFrame]
-) -> tuple[DataFrame, DataFrame]:
-    """Bucket-wise sum of two bigram models — model(A∪B) exactly."""
-    pa, ca = a
-    pb, cb = b
-    pair = (
-        pa.unionByName(pb).groupBy("bp").agg(F.sum("c_pair").alias("c_pair"))
-    )
-    ctx = ca.unionByName(cb).groupBy("bc").agg(F.sum("c_ctx").alias("c_ctx"))
-    return pair, ctx
 
 
 def _score_rows(
@@ -219,7 +202,7 @@ def bigram_lm_scores(
     ctx_buckets rows at any corpus size, is persisted and held in
     :data:`~datawarehouse_backup_system_spark.scratch.persist_slot`
     until the next holder evicts it or ``persist_slot.release()``.
-    For train-on-A/score-B or incremental-merge setups use
+    For train-on-A/score-B setups use
     :func:`bigram_model` + :func:`score_with_model` directly.
     """
     rows = bigram_rows(df, id_col, text_col, pair_buckets, ctx_buckets)

@@ -225,20 +225,6 @@ def png_dims(data_col: F.Column) -> F.Column:
     return F.when(is_png, F.struct(w.alias("width"), h.alias("height")))
 
 
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes blobs through mapInPandas with the target
-    dims recorded in meta (real resampling would replace `data`)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            meta = pdf["meta"].apply(
-                lambda m: {**(m or {}), "resized_to": f"{width}x{height}"}
-            )
-            yield pdf.assign(meta=meta)
-
-    return df.mapInPandas(op, schema=ASSET_SCHEMA)
-
-
 def frame_sample_stub(
     df: DataFrame, every_ms: int = 1000, decode_stub: str = "fake"
 ) -> DataFrame:
@@ -574,8 +560,7 @@ def resize_png(df: DataFrame, width: int, height: int) -> DataFrame:
     """REAL image resize for PNG assets: decode (pure stdlib) →
     nearest-neighbor resample (one numpy fancy-index, vectorized per
     Arrow batch) → re-encode — ``data`` is REPLACED with the resized
-    PNG, superseding ``resize_stub``'s metadata-only pass for this
-    format. Nearest-neighbor is the standard thumbnail/tiling choice
+    PNG. Nearest-neighbor is the standard thumbnail/tiling choice
     for training-data pipelines where exact reproducibility matters
     (no resampling-kernel float variance across BLAS builds — the
     output bytes are a pure function of the input). Non-PNG assets

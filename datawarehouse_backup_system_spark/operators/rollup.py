@@ -100,29 +100,3 @@ def rollup_cascade(
             prev = prev.persist()
         out[name] = prev
     return out
-
-
-def merge_tiers(
-    old: DataFrame, delta: DataFrame, key_cols: list[str] | None = None
-) -> DataFrame:
-    """Combine a stored tier with a delta tier (same resolution):
-    count/sum add, min/max combine — valid because the partials are
-    re-aggregable under insert-only appends. This is the incremental
-    maintenance step: cascade ONLY the new events (tiny), merge each
-    tier, and the result equals a full recompute over old ∪ new rows.
-
-    At scale, store tiers partitioned by bucket range and rewrite only
-    the partitions the delta touches (dynamic partition overwrite) —
-    the merge itself only ever groups buckets present in either frame.
-    """
-    keys = list(key_cols or [])
-    return (
-        old.unionByName(delta)
-        .groupBy("bucket_s", *keys)
-        .agg(
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("sum_v").cast("bigint").alias("sum_v"),
-            F.min("min_v").cast("bigint").alias("min_v"),
-            F.max("max_v").cast("bigint").alias("max_v"),
-        )
-    )

@@ -31,9 +31,10 @@ from datawarehouse_backup_system_spark.operators.hashing import md5_bucket
 
 def shard_id_expr(key_col: str, n_shards: int, salt: str = "shard"):
     """THE shard-assignment expression — single-sourced so a consumer
-    replicating the layout (e.g. plans.corpus_build's packing plan) can
-    never fork from what export_shards actually writes (review r8: the
-    hand-copied expression did exactly that when the recipe changed)."""
+    replicating the layout (e.g. a pack_sequences plan over the exported
+    shards) can never fork from what export_shards actually writes
+    (review r8: the hand-copied expression did exactly that when the
+    recipe changed)."""
     return md5_bucket(
         F.concat(F.lit(salt), F.col(key_col).cast("string")), n_shards
     )
@@ -41,11 +42,11 @@ def shard_id_expr(key_col: str, n_shards: int, salt: str = "shard"):
 
 def shard_order_exprs(key_col: str, salt: str = "shard") -> list:
     """THE within-shard order — (md5(salt||key), key) — single-sourced
-    like :func:`shard_id_expr` (review r11: plans.corpus_build
-    hand-copied this half of the layout contract, the exact fork class
-    the r8 fix banned for the shard expression; a salt/recipe change
-    here would have silently made its packing-plan offsets coordinates
-    into a layout no file has)."""
+    like :func:`shard_id_expr` (review r11: a hand-copied copy of this
+    half of the layout contract is the exact fork class the r8 fix
+    banned for the shard expression; a salt/recipe change here would
+    silently make packing-plan offsets coordinates into a layout no
+    file has)."""
     return [
         F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string"))),
         F.col(key_col),

@@ -878,75 +878,3 @@ def semantic_dedup(
             id_col, "list_id", F.col("_dropped_id").isNull().alias("keep")
         )
     )
-
-
-def kmeans_fit_distributed(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 8,
-    n_iter: int = 5,
-    centroids: list[list[float]] | None = None,
-    round_digits: int = 6,
-) -> list[list[float]]:
-    """Full-corpus spherical Lloyd iterations — the distributed
-    complement to :func:`train_centroids` (which samples to the driver,
-    the FAISS recipe). Use this form when centroids must reflect the
-    WHOLE corpus (e.g. final-pass SemDeDup clustering) rather than a
-    bounded sample.
-
-    Per iteration, two bounded steps:
-
-    1. **Assign** — the broadcast argmax of :func:`_assign_lists`
-       (N·K candidate rows map-side combine back to N before any
-       exchange).
-    2. **Update** — members normalize to unit length, ``posexplode`` to
-       (list, dim, value), ONE aggregation to (list, dim) means. The
-       shuffle carries at most partitions × K × dim partial rows; only
-       K × dim result rows reach the driver, which renormalizes them
-       (spherical k-means, cosine geometry matching ivf_topk).
-
-    Empty clusters keep their previous centroid. Seeds default to the
-    ``n_centroids`` smallest-id vectors (deterministic); iteration
-    count is fixed, so the result is reproducible across runs and
-    partitionings. Returns centroid vectors for :func:`ivf_topk` /
-    :func:`semantic_dedup`.
-    """
-    if centroids is not None:
-        cents = [[float(x) for x in c] for c in centroids]
-    else:
-        seed_rows = (
-            corpus.where(F.col(vec_col).isNotNull())
-            .orderBy(F.col(id_col)).limit(n_centroids)
-            .select(_as_double(vec_col).alias("_v"))
-            .collect()
-        )
-        if len(seed_rows) < n_centroids:
-            raise ValueError("corpus smaller than n_centroids")
-        cents = []
-        for r in seed_rows:
-            n = sum(x * x for x in r["_v"]) ** 0.5
-            cents.append([x / n if n > 0 else 0.0 for x in r["_v"]])
-    dim = len(cents[0])
-    for _ in range(n_iter):
-        cf = _centroid_frame(corpus, id_col, vec_col, n_centroids, cents)
-        asg = _assign_lists(corpus, cf, id_col, vec_col, round_digits)
-        unit = F.transform(
-            F.col("cv"),
-            lambda x: F.when(F.col("cv_norm") > 0, x / F.col("cv_norm"))
-            .otherwise(F.lit(0.0)),
-        )
-        stats = (
-            asg.select("list_id", F.posexplode(unit).alias("d", "x"))
-            .groupBy("list_id", "d")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        by_list: dict[int, list[float]] = {}
-        for r in stats:
-            by_list.setdefault(r["list_id"], [0.0] * dim)[r["d"]] = r["m"]
-        for lid, m in by_list.items():
-            n = sum(x * x for x in m) ** 0.5
-            if n > 0:
-                cents[lid] = [x / n for x in m]
-    return cents

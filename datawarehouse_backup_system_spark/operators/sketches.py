@@ -173,43 +173,6 @@ def cms_estimate(
     )
 
 
-def merge_summaries(
-    summaries: DataFrame, capacity: int, item_col: str = "item",
-    count_col: str = "est_count",
-) -> DataFrame:
-    """Merge/prune MG summaries back to ``capacity`` rows: sum counts
-    per item, subtract the (capacity+1)-th largest total from everyone,
-    drop non-positives. The result is again a valid MG summary of the
-    concatenated streams (counts stay lower bounds, retention guarantee
-    degrades by the subtracted offset only) — this is what makes the
-    sketch usable INCREMENTALLY: yesterday's summary + today's batch
-    summary merge in O(capacity) rows, no corpus re-read.
-    """
-    summed = summaries.groupBy(item_col).agg(
-        F.sum(count_col).alias(count_col)
-    )
-    w = Window.orderBy(F.desc(count_col), F.asc(item_col))
-    ranked = summed.withColumn("_rk", F.row_number().over(w))
-    # the prune offset as a broadcast 1-row frame, NOT a collect(): a
-    # driver-side collect was a second action that re-evaluated the
-    # whole upstream (per micro-batch that doubled the mapInPandas MG
-    # pass); in one plan the shared shuffle is a ReusedExchange, and
-    # there is no persisted frame to leak across batches
-    cut = ranked.agg(
-        F.coalesce(
-            F.max(F.when(F.col("_rk") == capacity + 1, F.col(count_col))),
-            F.lit(0),
-        ).alias("_cut")
-    )
-    return (
-        ranked.where(F.col("_rk") <= capacity)
-        .crossJoin(F.broadcast(cut))
-        .withColumn(count_col, F.col(count_col) - F.col("_cut"))
-        .where(F.col(count_col) > 0)
-        .drop("_rk", "_cut")
-    )
-
-
 def hll_rollup(
     df: DataFrame,
     key_cols: list[str],

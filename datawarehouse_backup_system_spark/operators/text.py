@@ -646,10 +646,11 @@ def pack_sequences(
 
     ``shard_expr`` / ``order_exprs`` override the default assignment
     and layout order so the PLAN can describe a physical layout chosen
-    elsewhere — corpus_build passes the md5 shard assignment and
-    (md5, id) order that export_shards writes, making (shard,
-    local_bin, offset) valid coordinates INTO the written files
-    (review r8: the defaults described a layout no exporter produced).
+    elsewhere — passing :func:`shards.shard_id_expr` and
+    :func:`shards.shard_order_exprs` (the md5 assignment and (md5, id)
+    order that export_shards writes) makes (shard, local_bin, offset)
+    valid coordinates INTO the written files (review r8: the defaults
+    described a layout no exporter produced).
 
     Output: (id, shard, local_bin, offset, n_tokens).
     """

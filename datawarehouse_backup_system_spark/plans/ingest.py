@@ -148,9 +148,7 @@ class IngestJob:
     warehouse_dir: str | Path
     router: Router = field(default_factory=default_router)
     staging_dir: str | Path | None = None
-    #: "global" (one-window row_number, exact) or "distributed" (range
-    #: prefix sum, which can duplicate ids on multi-partition input —
-    #: not fit for the default)
+    #: dense-id path; "global" (one-window row_number) is the only one
     id_strategy: str = "global"
     #: partition column value for this run (ISO date); None → today.
     #: Snapshots are partitioned by ingest_date so retention (C2) becomes
@@ -162,6 +160,8 @@ class IngestJob:
             WriteIdParquetFormat,
         )
 
+        if self.id_strategy != "global":
+            raise ValueError(f"unknown id strategy: {self.id_strategy!r}")
         self.warehouse_dir = Path(self.warehouse_dir)
         self.warehouse_dir.mkdir(parents=True, exist_ok=True)
         self.ledger = Ledger(self.spark, self.warehouse_dir / "_ledger")
@@ -290,8 +290,7 @@ class IngestJob:
             novel, schema, passthrough=("row_hash", *SEQ_COLS)
         )
         with_ids = assign_dense_ids(
-            casted, order_cols=list(SEQ_COLS), start=last_id,
-            strategy=self.id_strategy,
+            casted, order_cols=list(SEQ_COLS), start=last_id
         )
         if loaded is not None:
             obs, ranks = loaded

@@ -550,7 +550,7 @@ _S01_GAP_MIN = 30
 
 def s01_watermark_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch query pinning the SEMANTICS of ``streaming_dedup``
-    (``streaming/ingest_stream.py:91``) via the production batch replay
+    (``streaming/ingest_stream.py``) via the production batch replay
     ``watermark_dedup_batch`` — FIRST-OCCURRENCE-ANCHORED (review r11):
     the streaming state stores the first occurrence's expiry and
     duplicates do NOT extend it, so a sub-horizon chain 10:00/10:20/

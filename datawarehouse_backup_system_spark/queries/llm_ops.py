@@ -782,7 +782,7 @@ def t06_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture scale is the cheapest plan — but 8 partitions over a real
     corpus is a straggler by construction (N/8 rows sorted per task).
     Production callers size ``n_shards`` to the cluster, as the
-    operator docstring and ``plans/corpus_build.py`` already do; the
+    operator docstring says; the
     operator's behavior at any shard count is partition-count-
     independent (pytest-pinned in test_llm_ops)."""
     docs = load(spark, sf_dir, "documents")

@@ -210,8 +210,7 @@ SELECT doc_id, source, n_chars FROM (
 # --------------------------------------------------------------------------
 # t25 — linear quality-classifier gate (fixed literal weights)
 # --------------------------------------------------------------------------
-# Literal weights in the style of a trained linear quality filter; the
-# trainer (operators.classifier.train_lr) is pytest-verified separately.
+# Literal weights in the style of a trained linear quality filter.
 _T25_W_CHARS = 0.002
 _T25_W_TOK = 0.03
 _T25_W_PUNCT = -0.5

@@ -19,8 +19,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "datawarehouse_backup_system_spark",
@@ -33,12 +31,14 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so the same code
     runs unchanged under the driver harness and on a real cluster (where
     ``master`` is supplied by spark-submit and this argument stays None —
-    getOrCreate() then respects the externally-provided master).
+    getOrCreate() then respects the externally-provided master). Unset,
+    ``SPARK_GRAFT_CPUS`` falls back to the cores this process may run
+    on, which also sizes the default shuffle partitions.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -37,10 +37,9 @@ def _nonblank(value):
 
 def jsonl_projection(lines: DataFrame, schema: T.StructType) -> DataFrame:
     """The parse/quarantine projection over a frame of raw lines
-    (column ``value``) — shared verbatim by the batch reader and
-    ``streaming.ingest_stream.stream_jsonl``, so quarantine semantics
-    can never fork between backfill and live ingest. Stateless and
-    codegen'd: safe under any partitioning and in a streaming plan.
+    (column ``value``) behind :func:`read_jsonl`. Stateless and
+    codegen'd: safe under any partitioning and in a streaming plan
+    (``spark.readStream.text`` yields the same one-column frame).
 
     PERMISSIVE from_json marks malformed lines via the corrupt-record
     field (a TRUNCATED json like '{"k": ' yields a non-null struct, so

@@ -1,23 +1,20 @@
 """Structured Streaming operators: the streaming analog of the batch
-pipeline (SURVEY §7 step 6 — no reference counterpart; the reference's
+dedup (SURVEY §7 step 6 — no reference counterpart; the reference's
 daily daemon loop, main.py:417-424, is the degenerate batch case).
 
 - **stream_source** — file-based streaming scan (the landing-zone
   directory IS the stream; at scale this is Kafka/queue, same plan).
-- **windowed_counts** — tumbling/sliding event-time windows with a
-  watermark for late data.
-- **sessionized_counts** — native session windows (gap-based).
 - **streaming_dedup** — `dropDuplicatesWithinWatermark` on the content
   hash: the streaming J1/J2 (state is bounded by the watermark horizon,
   which is what makes dedup feasible on an unbounded stream).
-- **ingest_stream** — normalize→hash→dedup→append, with `foreachBatch`
-  so each micro-batch can run the batch replay-guard before committing
-  (exactly-once-ish file sink).
+- **watermark_dedup_batch** — the deterministic batch replay of
+  streaming_dedup's state semantics (the ``s01`` contract query), pinned
+  against the live stream in tests.
+- **exactly_once_table_sink** — a ``foreachBatch`` sink whose appends go
+  through the write-id protocol, so a replayed micro-batch is a no-op.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,51 +38,6 @@ def stream_source(
     spark: SparkSession, path: str, schema: T.StructType = EVENT_SCHEMA, fmt: str = "parquet"
 ) -> DataFrame:
     return spark.readStream.format(fmt).schema(schema).load(path)
-
-
-def windowed_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str | None = None,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Tumbling (slide=None) or sliding event-time window aggregation.
-    The watermark bounds state: windows older than it are finalized and
-    evicted — required for append-mode sinks and unbounded streams."""
-    w = (
-        F.window("ts", window)
-        if slide is None
-        else F.window("ts", window, slide)
-    )
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(w.alias("w"), F.col("event_type"))
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-def sessionized_counts(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
-    """Native session windows (dynamic gap-based), per user."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("s"), F.col("user_id"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
 
 
 def streaming_dedup(
@@ -195,530 +147,6 @@ def watermark_dedup_batch(
     )
 
 
-def user_activity_state(
-    events: DataFrame,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    a per-user running profile (event count, value sum, last seen) that
-    EMITS a row per user per micro-batch and EXPIRES idle users via an
-    event-time timeout — the arbitrary-state API the built-in windowed
-    aggregations can't express (e.g. cross-window lifetime counters).
-
-    State is one small tuple per active user; the watermark + timeout
-    bound it exactly like dropDuplicatesWithinWatermark bounds dedup
-    state.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("lifetime_events", T.LongType()),
-            T.StructField("lifetime_value", T.DoubleType()),
-            T.StructField("last_seen_ms", T.LongType()),
-            T.StructField("expired", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-            T.StructField("last_ms", T.LongType()),
-        ]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            n, total, last_ms = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [[user_id, n, total, last_ms, True]], columns=out_schema.names
-            )
-            return
-        n, total, last_ms = state.get if state.exists else (0, 0.0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            last_ms = max(last_ms, int(pdf["ts"].max().value // 1_000_000))
-        state.update((n, total, last_ms))
-        # expire after 1h of event-time inactivity — clamped above the
-        # current watermark: Spark rejects a timeout that is not beyond
-        # the watermark, which a straggler group (max event time far
-        # behind) would otherwise trigger at runtime
-        wm_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(last_ms + 3_600_000, wm_ms + 60_000))
-        yield pd.DataFrame(
-            [[user_id, n, total, last_ms, False]], columns=out_schema.names
-        )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def ingest_stream(
-    events: DataFrame,
-    target_dir: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-    post_batch: Callable[[DataFrame, int], DataFrame] | None = None,
-):
-    """Streaming ingest: dedup within watermark, then per-micro-batch
-    append via foreachBatch (where the batch replay guard can run against
-    the existing snapshot before committing).
-
-    Returns the started StreamingQuery; caller owns lifecycle.
-    """
-    deduped = streaming_dedup(events, key_cols)
-
-    def sink(batch: DataFrame, epoch_id: int) -> None:
-        out = post_batch(batch, epoch_id) if post_batch is not None else batch
-        out.write.mode("append").parquet(target_dir)
-
-    return (
-        deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-    )
-
-
-def stream_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    max_files_per_trigger: int = 16,
-) -> DataFrame:
-    """Streaming JSONL ingestion with the SAME corrupt-line quarantine
-    semantics as the batch source (``sources.jsonl_source.read_jsonl``):
-    the text reader streams files from the landing directory and
-    ``from_json`` parses in the projection — a stateless, codegen'd map,
-    so the parse adds no streaming state and the quarantine column
-    (`_raw_line`) flows to whatever sink routes bad lines to the ledger.
-
-    Batch/stream parity is structural, not re-implemented: both paths
-    call the same projection builder, so a quarantine rule change can
-    never fork semantics between backfill and live ingest.
-    """
-    from datawarehouse_backup_system_spark.sources.jsonl_source import (
-        jsonl_projection,
-    )
-
-    raw = (
-        spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
-        .text(path)
-    )
-    return jsonl_projection(raw, schema)
-
-
-def stream_neardup_filter(
-    stream_docs: DataFrame,
-    history: DataFrame,
-    out_dir: str,
-    audit_dir: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    max_bucket_size: int | None = 20,
-):
-    """LIVE near-duplicate filtering of an ingest stream against the
-    existing corpus: each micro-batch runs the batch-proven
-    ``incremental_neardup_pairs`` (query i01) via ``foreachBatch`` —
-    novel documents append to ``out_dir``; matched (new, history) pairs
-    land in ``audit_dir`` with their exact Jaccard, so every drop is
-    explainable.
-
-    foreachBatch is the right tool (not a stream-stream join): the
-    history side is a STATIC corpus index — at scale the persisted LSH
-    bands, appended as batches commit — and the per-batch work is
-    batch × index, exactly i01's cost shape. Intra-batch duplicates are
-    out of scope here by design (run ``minhash_lsh_dedup`` inside the
-    batch first if the stream itself carries near-dups).
-    """
-    from datawarehouse_backup_system_spark.operators.dedup_approx import (
-        incremental_neardup_pairs,
-    )
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        _guard_epoch_reset(batch_id, audit_dir, out_dir)
-        pairs = incremental_neardup_pairs(
-            batch, history, id_col, text_col,
-            threshold=threshold, max_bucket_size=max_bucket_size,
-        ).persist()
-        try:
-            # per-batch-id OVERWRITE directories make the at-least-once
-            # foreachBatch replay idempotent: a re-run batch rewrites
-            # its own partition instead of appending duplicates
-            pairs.write.mode("overwrite").parquet(
-                f"{audit_dir}/batch_id={batch_id}"
-            )
-            dup_ids = pairs.select(
-                F.col("id_new").alias(id_col)
-            ).distinct()
-            batch.join(dup_ids, id_col, "left_anti").write.mode(
-                "overwrite"
-            ).parquet(f"{out_dir}/batch_id={batch_id}")
-        finally:
-            pairs.unpersist()
-
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
-def stream_heavy_hitters(
-    stream_df: DataFrame,
-    item_col: str,
-    state_dir: str,
-    checkpoint: str,
-    capacity: int = 1024,
-):
-    """Trending items over an unbounded stream with BOUNDED state: each
-    micro-batch's Misra-Gries summary (``operators.sketches``) merges
-    with the persisted summary and is pruned back to ``capacity`` rows
-    — O(capacity) state on disk regardless of stream length, readable
-    at any time as the current frequent-items table.
-
-    The merge is the sketch's associativity property doing the work a
-    stateful aggregation would otherwise hold in executor memory for
-    EVERY distinct key; here unbounded-cardinality streams (URLs,
-    n-grams) stay at ``capacity`` rows. Summary counts remain lower
-    bounds; the window that matters for trending (the prune offset) is
-    recorded per merge in the summary itself.
-    """
-    from pathlib import Path
-
-    from datawarehouse_backup_system_spark.operators.sketches import (
-        heavy_hitters,
-        merge_summaries,
-    )
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        parts = [
-            heavy_hitters(batch, item_col, capacity=capacity).select(
-                "item", "est_count"
-            )
-        ]
-        state = Path(state_dir)
-        aside = Path(f"{state_dir}__old")
-        if not state.exists() and aside.exists():
-            # crashed between the swap's two renames: the prior summary
-            # is intact in the aside dir — recover it, losing nothing
-            aside.rename(state)
-        if state.exists() and any(state.glob("*.parquet")):
-            prior = spark.read.parquet(state_dir)
-            # foreachBatch is at-least-once: after a restart the last
-            # batch REPLAYS, and a non-idempotent merge would double-
-            # count it. The state records the last merged batch id —
-            # a replayed (<=) batch is skipped, making the merge
-            # effectively exactly-once.
-            last = prior.agg(F.max("_upto_batch")).collect()[0][0]
-            if last is not None and batch_id < last:
-                # epochs only move forward within one checkpoint
-                # lineage; a SMALLER id means the checkpoint was reset
-                # while this state dir survived — silently skipping
-                # would discard every batch until the new epoch counter
-                # overtakes the old one (review r8). state_dir and the
-                # checkpoint must be created/destroyed together.
-                raise RuntimeError(
-                    f"stream state {state_dir!r} has _upto_batch={last} "
-                    f"but the stream replayed batch {batch_id}: the "
-                    "checkpoint was reset without resetting state_dir; "
-                    "delete both together and restart"
-                )
-            if last is not None and batch_id == last:
-                # at-least-once replay of the last micro-batch after a
-                # restart: already merged, skip (exactly-once merge)
-                return
-            parts.append(prior.select("item", "est_count"))
-        merged = merge_summaries(
-            parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1]),
-            capacity,
-        ).withColumn("_upto_batch", F.lit(batch_id))
-        # small (<= capacity rows): stage, rename ASIDE, swap, sweep —
-        # the accumulated summary is recoverable at every step (a
-        # rmtree-then-rename swap had a crash window that silently
-        # restarted the stream's history from one micro-batch)
-        tmp = f"{state_dir}__next"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        shutil.rmtree(aside, ignore_errors=True)
-        if state.exists():
-            state.rename(aside)
-        Path(tmp).rename(state_dir)
-        shutil.rmtree(aside, ignore_errors=True)
-
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    lag: str = "1 hour",
-    left_watermark: str = "2 hours",
-    right_watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream inner join with an event-time interval condition:
-    right rows join left rows with the same ``key`` whose timestamp falls
-    in ``[right_ts − lag, right_ts]`` — the attribution pattern (views
-    joined to the purchase they preceded; the streaming form of the q41
-    batch range join).
-
-    Both sides REQUIRE watermarks: Spark buffers each side's rows in
-    state until the other side's watermark passes the interval bound,
-    then evicts — without them state grows unboundedly and append mode
-    can never finalize. The left watermark must cover its own lateness
-    PLUS the join lag (a left row stays joinable until right's clock
-    passes ``left_ts + lag``). Output: one row per matched pair; the
-    timestamps become ``_l_<ts>``/``_r_<ts>``, and EVERY other right
-    column whose name collides with a left column is prefixed ``_r_``
-    (both sides usually share the event schema — without the prefix the
-    output would carry duplicate names unusable by reference).
-    """
-    l_ts, r_ts = f"_l_{left_ts}", f"_r_{right_ts}"
-    lw = left.withColumnRenamed(left_ts, l_ts).withWatermark(l_ts, left_watermark)
-    rw = right.withColumnRenamed(right_ts, r_ts)
-    for c in rw.columns:
-        if c != key and c != r_ts and c in lw.columns:
-            rw = rw.withColumnRenamed(c, f"_r_{c}")
-    rw = rw.withWatermark(r_ts, right_watermark)
-    cond = (
-        (lw[key] == rw[key])
-        & (F.col(l_ts) <= F.col(r_ts))
-        & (F.col(l_ts) >= F.col(r_ts) - F.expr(f"INTERVAL {lag}"))
-    )
-    return lw.join(rw, cond, "inner").drop(rw[key])
-
-
-def stream_quality_gate(
-    stream_docs: DataFrame,
-    model: tuple[DataFrame, DataFrame],
-    out_dir: str,
-    reject_dir: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_avg_logp: float = -8.0,
-    pair_buckets: int = 4096,
-    ctx_buckets: int = 1024,
-    k: float = 0.5,
-):
-    """LIVE LM-based quality gating of a document stream: each micro-batch
-    is scored against a PREBUILT hashed-bigram model
-    (operators.lm.bigram_model — typically trained on trusted text and
-    possibly grown incrementally via merge_models) and routed to
-    ``out_dir`` (avg_logp ≥ threshold) or ``reject_dir`` (below, or no
-    bigrams at all) WITH its scores, so every gate decision is auditable.
-
-    Same deploy shape as stream_neardup_filter: foreachBatch against
-    static broadcastable state (the model is ≤ pair+ctx buckets rows),
-    per-batch-id overwrite directories for at-least-once replay
-    idempotence. The scoring join is batch × broadcast — no stream-side
-    shuffle beyond the per-doc aggregation of its own bigrams.
-
-    ``pair_buckets``/``ctx_buckets``/``k`` MUST match the values the
-    model was built with — mismatched bucket counts silently hash stream
-    bigrams onto the wrong model rows. ``min_avg_logp`` must sit ABOVE
-    the fully-unseen smoothing floor ln(k / (k·pair_buckets)) =
-    -ln(pair_buckets) (≈ -8.318 at the defaults) or out-of-model garbage
-    passes the gate; the -8.0 default clears that floor.
-    """
-    from datawarehouse_backup_system_spark.operators import lm
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        _guard_epoch_reset(batch_id, out_dir, reject_dir)  # review r9
-        scored = lm.score_with_model(
-            batch, id_col, text_col, model,
-            pair_buckets=pair_buckets, ctx_buckets=ctx_buckets, k=k,
-        )
-        # persist the JOINED frame, not just the scores: the pass and
-        # reject writes are two actions — an unpersisted join re-scans
-        # the micro-batch source and re-runs the join for each
-        enriched = batch.join(scored, id_col).persist()
-        try:
-            passed = enriched.where(
-                F.col("avg_logp").isNotNull()
-                & (F.col("avg_logp") >= min_avg_logp)
-            )
-            rejected = enriched.where(
-                F.col("avg_logp").isNull()
-                | (F.col("avg_logp") < min_avg_logp)
-            )
-            passed.write.mode("overwrite").parquet(
-                f"{out_dir}/batch_id={batch_id}"
-            )
-            rejected.write.mode("overwrite").parquet(
-                f"{reject_dir}/batch_id={batch_id}"
-            )
-        finally:
-            enriched.unpersist()
-
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
-def stream_lm_model_partials(
-    stream_docs: DataFrame,
-    state_dir: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    pair_buckets: int = 4096,
-    ctx_buckets: int = 1024,
-):
-    """Incrementally grow a hashed-bigram LM from a document stream.
-
-    Each micro-batch writes its OWN bounded count partials (≤ pair+ctx
-    bucket rows) under ``state_dir/{pair,ctx}/batch_id=N`` with
-    overwrite — so at-least-once foreachBatch replay rewrites a batch's
-    partial instead of double-counting it (the heavy-hitters replay
-    pattern). :func:`read_lm_model` merges all partials by summation
-    (the lm.merge_models contract), giving the exact model of every
-    document seen so far; compaction is just rewriting merged partials.
-    """
-    from datawarehouse_backup_system_spark.operators import lm
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        _guard_epoch_reset(
-            batch_id, f"{state_dir}/pair", f"{state_dir}/ctx"
-        )
-        pair_cnt, ctx_cnt = lm.bigram_model(
-            batch, id_col, text_col, pair_buckets, ctx_buckets
-        )
-        pair_cnt.write.mode("overwrite").parquet(
-            f"{state_dir}/pair/batch_id={batch_id}"
-        )
-        ctx_cnt.write.mode("overwrite").parquet(
-            f"{state_dir}/ctx/batch_id={batch_id}"
-        )
-
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
-def read_lm_model(spark, state_dir: str):
-    """Merge all streamed LM partials into the current model
-    ``(pair_counts, ctx_counts)`` — routed through ``lm.merge_models``
-    (the writer's merge algebra; review r8), so the result is EXACTLY
-    the model a batch build over all streamed documents yields."""
-    from ..operators.lm import merge_models
-
-    model = (
-        spark.read.parquet(f"{state_dir}/pair"),
-        spark.read.parquet(f"{state_dir}/ctx"),
-    )
-    # self-merge normalizes the partials to one row per bucket
-    return merge_models(model, (model[0].limit(0), model[1].limit(0)))
-
-
-def stream_histogram_partials(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint: str,
-    value_col: str,
-    lo: int,
-    hi: int,
-    n_bins: int = 64,
-):
-    """Incrementally maintain the mergeable binned-quantile sketch
-    (operators.quantiles) from a stream: each micro-batch overwrites its
-    OWN ≤ n_bins-row partial under ``state_dir/batch_id=N``, so
-    at-least-once foreachBatch replay rewrites instead of
-    double-counting (the LM-partials pattern). :func:`read_histogram`
-    merges by per-bin summation — EXACTLY the histogram a batch build
-    over every streamed row yields, because the sketch's merge is
-    associative and commutative. The streaming answer to "p99 so far"
-    without any stateful operator: state is a parquet directory of
-    tiny partials, and the domain [lo, hi] is fixed up front (the
-    sketch's usual contract)."""
-    from datawarehouse_backup_system_spark.operators import quantiles as qsk
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        _guard_epoch_reset(batch_id, state_dir)
-        qsk.binned_histogram(batch, value_col, lo, hi, n_bins).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/batch_id={batch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
-def _guard_epoch_reset(batch_id: int, *roots: str) -> None:
-    """Per-batch-dir overwrite idempotency holds only within ONE
-    checkpoint lineage: if the checkpoint is reset while the partials
-    survive, the fresh epoch counter restarts at 0 and new batch 0
-    overwrites old batch 0 while old 1..N remain — two stream histories
-    silently mixed (review r8). state/output dirs and the checkpoint
-    must be created and destroyed TOGETHER; this raises at the first
-    batch of a fresh lineage when stale higher-numbered partials exist,
-    costing one directory listing on batch 0 only."""
-    if batch_id != 0:
-        return
-    from pathlib import Path
-
-    for root in roots:
-        stale = sorted(
-            p.name
-            for p in Path(root).glob("batch_id=*")
-            if p.name != "batch_id=0"
-        )
-        if stale:
-            raise RuntimeError(
-                f"{root!r} holds partials from a previous checkpoint "
-                f"lineage ({stale[:3]}{'...' if len(stale) > 3 else ''}) "
-                "but the stream restarted at batch 0: delete the "
-                "partials directory and the checkpoint together"
-            )
-
-
-def read_histogram(spark, state_dir: str) -> DataFrame:
-    """Merge all streamed histogram partials into the current sketch
-    (bin, cnt) — routed through the writer's own merge algebra
-    (``quantiles.merge_histograms``), never a hand-coded column list
-    that could silently fork from the sketch schema (review r8; the
-    incremental.merge_many discipline)."""
-    from ..operators.quantiles import merge_histograms
-
-    return merge_histograms([spark.read.parquet(state_dir)])
-
-
 def exactly_once_table_sink(
     fmt,
     table_path,
@@ -736,8 +164,7 @@ def exactly_once_table_sink(
     This closes the duplication window a bare ``mode("append")`` sink
     has between 'files written' and 'checkpoint offset committed' —
     the same contract Delta's ``txnAppId``/``txnVersion`` provides.
-    Use through :func:`ingest_stream_txn` or directly with
-    ``writeStream.foreachBatch``.
+    Use with ``writeStream.foreachBatch``.
     """
     import hashlib
 
@@ -772,168 +199,3 @@ def exactly_once_table_sink(
         committed.add(wid)
 
     return sink
-
-
-def ingest_stream_txn(
-    events: DataFrame,
-    fmt,
-    table_path,
-    table_name: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-    stream_id: str = "ingest",
-):
-    """:func:`ingest_stream` upgraded to transactional appends: dedup
-    within watermark, then exactly-once per-micro-batch commits through
-    the write-id protocol (replay-idempotent, crash-recoverable)."""
-    deduped = streaming_dedup(events, key_cols)
-    return (
-        deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(exactly_once_table_sink(fmt, table_path, table_name,
-                                              stream_id))
-        .start()
-    )
-
-
-def stream_agg_view_partials(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint: str,
-    keys: list[str],
-    value_col: str,
-):
-    """Streaming materialized-view maintenance: each micro-batch
-    overwrites its OWN monoid partials (operators/incremental.py —
-    count/sum/min/max per key) under ``state_dir/batch_id=N``, so
-    at-least-once foreachBatch replay rewrites a batch's contribution
-    instead of double-counting it (the LM/histogram-partials pattern).
-    :func:`read_agg_view` merges by the same monoid — EXACTLY the view
-    a batch build over every streamed row yields, at per-batch cost
-    O(batch groups), never O(history)."""
-    from datawarehouse_backup_system_spark.operators import incremental
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        _guard_epoch_reset(batch_id, state_dir)
-        incremental.partial_aggs(batch, keys, value_col).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/batch_id={batch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
-def read_agg_view(spark, state_dir: str, keys: list[str]) -> DataFrame:
-    """Fold all streamed partials into the current view (monoid merge
-    per key) and finalize the derived aggregates. The merge is
-    ``incremental.merge_many`` — the same algebra the writer's partials
-    were built for, never a re-implemented column list."""
-    from datawarehouse_backup_system_spark.operators import incremental
-
-    parts = incremental.merge_many(
-        spark.read.parquet(state_dir).drop("batch_id"), keys
-    )
-    return incremental.finalize(parts)
-
-
-def stream_bottomk_partials(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint: str,
-    group_cols: list[str],
-    key_col: str,
-    k: int,
-    salt: str = "",
-):
-    """Maintain the bottom-k deterministic sample from a stream: each
-    micro-batch overwrites its OWN per-group bottom-k partial (≤ k·
-    groups rows) under ``state_dir/batch_id=N`` — replay-safe like the
-    LM/histogram partials. Because bottom-k is a MERGEABLE sketch
-    (bottomk(A ∪ B) = bottomk(bottomk(A) ∪ bottomk(B)),
-    operators/sampling.py), :func:`read_bottomk` re-ranks the union of
-    partials and yields EXACTLY the sample a batch pass over every
-    streamed row would — the streaming answer to "a uniform sample so
-    far" with state bounded by k·groups·batches rows (compaction =
-    rewriting merged partials)."""
-    from datawarehouse_backup_system_spark.operators.sampling import (
-        bottomk_sample,
-    )
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        _guard_epoch_reset(batch_id, state_dir)  # review r9
-        bottomk_sample(batch, group_cols, key_col, k, salt).drop(
-            "rank_in_group"
-        ).write.mode("overwrite").parquet(f"{state_dir}/batch_id={batch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
-def read_bottomk(
-    spark, state_dir: str, group_cols: list[str], key_col: str, k: int,
-    salt: str = "",
-) -> DataFrame:
-    """Merge all streamed bottom-k partials into the current sample —
-    one re-rank over ≤ k·groups·batches rows.
-
-    PRECONDITION (inherited from ``bottomk_sample``'s deterministic
-    ordering): ``key_col`` must uniquely identify a row within its
-    group. Under it, the dropDuplicates below removes only the SAME
-    logical row re-delivered by an at-least-once source across batch
-    ids — the cross-batch replay guard — and never collapses distinct
-    rows; with duplicate keys the base operator's tiebreak is already
-    arbitrary, so the merged sample could not be deterministic anyway."""
-    from datawarehouse_backup_system_spark.operators.sampling import (
-        bottomk_sample,
-    )
-
-    parts = spark.read.parquet(state_dir).drop("batch_id")
-    return bottomk_sample(
-        parts.dropDuplicates([*group_cols, key_col]),
-        group_cols, key_col, k, salt,
-    )
-
-
-def stream_join_view(
-    stream_df: DataFrame,
-    dim_df: DataFrame,
-    state_dir: str,
-    checkpoint: str,
-    on: list[str],
-):
-    """Streaming materialized JOIN view: each micro-batch materializes
-    its OWN delta join ΔA ⋈ B under ``state_dir/batch_id=N``
-    (overwrite → at-least-once replay rewrites, never duplicates — the
-    agg-view/LM-partials pattern), which is the streaming deployment of
-    the delta rule behind ``operators/incremental.merge_join_view``:
-    the accumulated view is exactly (Σ ΔA) ⋈ B with history never
-    rejoined. ``dim_df`` is the batch-side relation resolved at batch
-    time — a broadcastable dim, or a committed-only read of an SCD2 /
-    write-id table for slowly-changing sides. Per-batch cost is
-    |Δ|-proportional."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        _guard_epoch_reset(batch_id, state_dir)  # review r9
-        batch.join(dim_df, on).write.mode("overwrite").parquet(
-            f"{state_dir}/batch_id={batch_id}"
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
-def read_join_view(spark, state_dir: str) -> DataFrame:
-    """The maintained join view: union of every batch's delta join."""
-    return spark.read.parquet(state_dir).drop("batch_id")

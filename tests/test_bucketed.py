@@ -43,7 +43,7 @@ def test_bucketed_join_has_no_exchange_and_matches_plain_join(
             cust, rt, ["cust_id"], 8, sort_cols=["cust_id"],
             path=str(tmp_path / "cust"),
         )
-        joined = bucketed.bucketed_join(spark, lt, rt, ["cust_id"])
+        joined = spark.table(lt).join(spark.table(rt), ["cust_id"])
         plan = bucketed.assert_no_exchange(joined)
         assert "SortMergeJoin" in plan
         # value parity with the plain shuffle join
@@ -68,7 +68,7 @@ def test_mismatched_bucket_counts_still_correct(spark, tmp_path, no_broadcast):
     try:
         bucketed.write_bucketed(a, lt, ["k"], 8, path=str(tmp_path / "a"))
         bucketed.write_bucketed(b, rt, ["k"], 4, path=str(tmp_path / "b"))
-        joined = bucketed.bucketed_join(spark, lt, rt, ["k"])
+        joined = spark.table(lt).join(spark.table(rt), ["k"])
         assert joined.count() == 200
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {lt}")

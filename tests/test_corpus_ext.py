@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import math
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -292,37 +290,6 @@ def test_neardup_pairs_broadcast_empty_population(spark):
         .where(F.col("vec_id") < 0)
     )
     assert neardup_pairs_broadcast(emb).count() == 0
-
-
-# --------------------------------------------------- distributed k-means
-def test_kmeans_fit_distributed_separates_planted_clusters(spark):
-    from datawarehouse_backup_system_spark.operators.similarity import (
-        kmeans_fit_distributed,
-    )
-
-    # 3 well-separated directions with deterministic jitter
-    base = {0: [10.0, 0.0, 0.0], 1: [0.0, 10.0, 0.0], 2: [0.0, 0.0, 10.0]}
-    rows = []
-    for i in range(60):
-        fam = i % 3
-        v = [x + ((i * 7 + j) % 5 - 2) * 0.1 for j, x in enumerate(base[fam])]
-        rows.append((i, v))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = kmeans_fit_distributed(df, n_centroids=3, n_iter=4)
-    assert len(cents) == 3 and all(len(c) == 3 for c in cents)
-    # each trained centroid points dominantly along exactly one axis,
-    # and all three axes are covered (cluster purity)
-    axes = sorted(max(range(3), key=lambda d: abs(c[d])) for c in cents)
-    assert axes == [0, 1, 2]
-    # unit-normalized (spherical k-means)
-    for c in cents:
-        assert sum(x * x for x in c) == pytest.approx(1.0, abs=1e-9)
-    # partition-layout independent up to FP summation drift (avg of ~20
-    # doubles; drift ~1e-15 per iteration, bounded well below 1e-9)
-    again = kmeans_fit_distributed(df.repartition(7), n_centroids=3, n_iter=4)
-    for c1, c2 in zip(cents, again):
-        for a, b in zip(c1, c2):
-            assert a == pytest.approx(b, abs=1e-9)
 
 
 def test_url_host_hostile_urls(spark):

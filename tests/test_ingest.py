@@ -6,6 +6,7 @@ dedup, dense id assignment, dirty-value coercions, ledger idempotency.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from datawarehouse_backup_system_spark.plans.ingest import IngestJob
@@ -354,6 +355,16 @@ def test_run_default_ids_dense_from_watermark(spark, tmp_path):
             watermark += loaded
     finally:
         spark.conf.set(conf, old)
+
+
+def test_ingest_job_rejects_other_id_strategies(spark, tmp_path):
+    """Dense ids have one path; any other ``id_strategy`` is an error
+    rather than a silent switch to another numbering."""
+    IngestJob(spark=spark, registry=SchemaRegistry(),
+              warehouse_dir=tmp_path / "ok", id_strategy="global")
+    with pytest.raises(ValueError, match="unknown id strategy"):
+        IngestJob(spark=spark, registry=SchemaRegistry(),
+                  warehouse_dir=tmp_path / "bad", id_strategy="distributed")
 
 
 def _table_rows(job):

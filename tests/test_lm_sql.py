@@ -1,11 +1,10 @@
-"""Hashed bigram-LM scoring + SQL temp-view facade."""
+"""Hashed bigram-LM scoring."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from datawarehouse_backup_system_spark.operators import lm
-from datawarehouse_backup_system_spark.sql import register_tables
 
 
 def test_bigram_lm_ranks_typical_above_garbled(spark):
@@ -30,55 +29,6 @@ def test_bigram_lm_partition_order_independent(spark):
     b = {r["doc_id"]: r["sum_logp"]
          for r in lm.bigram_lm_scores(df.repartition(7, "doc_id"), "doc_id", "text").collect()}
     assert a == b  # decimal-summed: bit-identical under any partitioning
-
-
-def test_register_tables_sql_matches_dataframe(spark, sf_dir):
-    names = register_tables(spark, sf_dir)
-    assert set(names) >= {"documents", "events", "orders"}
-    via_sql = spark.sql(
-        "SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang"
-    ).collect()
-    via_df = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
-    )
-    assert sorted(map(tuple, via_sql)) == sorted(map(tuple, via_df))
-    # events view carries the normalized ts (timestamp, not raw int64)
-    t = spark.sql("SELECT ts FROM events").schema["ts"].dataType.typeName()
-    assert t == "timestamp"
-
-
-def test_register_tables_prefix(spark, sf_dir):
-    names = register_tables(spark, sf_dir, prefix="x_")
-    assert "x_documents" in names
-    assert spark.sql("SELECT COUNT(*) AS n FROM x_region").collect()[0]["n"] > 0
-
-
-def test_bigram_model_merge_equals_union(spark):
-    a = spark.createDataFrame(
-        [(i, f"alpha beta tok{i % 3} gamma") for i in range(15)],
-        "doc_id long, text string",
-    )
-    b = spark.createDataFrame(
-        [(100 + i, f"beta gamma tok{i % 4} delta") for i in range(15)],
-        "doc_id long, text string",
-    )
-    union = a.unionByName(b)
-    probe = spark.createDataFrame(
-        [(999, "alpha beta gamma delta zzz")], "doc_id long, text string"
-    )
-    direct = lm.score_with_model(
-        probe, "doc_id", "text", lm.bigram_model(union, "doc_id", "text")
-    ).collect()[0]
-    merged = lm.score_with_model(
-        probe, "doc_id", "text",
-        lm.merge_models(
-            lm.bigram_model(a, "doc_id", "text"),
-            lm.bigram_model(b, "doc_id", "text"),
-        ),
-    ).collect()[0]
-    assert direct["sum_logp"] == merged["sum_logp"]  # bit-identical
-    assert direct["n_bigrams"] == merged["n_bigrams"]
 
 
 def test_score_disjoint_corpus_unseen_bigrams_floor(spark):

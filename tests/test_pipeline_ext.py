@@ -1,14 +1,12 @@
 """Round-4 pipeline extensions: dup spans, DSIR weights, leakage-safe
-split, domain cap, linear quality classifier (train + score)."""
+split, domain cap."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 from pyspark.sql import functions as F
 
-from datawarehouse_backup_system_spark.operators import classifier, curation, importance, text
+from datawarehouse_backup_system_spark.operators import curation, importance, text
 
 
 # ------------------------------------------------------------ dup_spans
@@ -133,44 +131,6 @@ def test_domain_cap_keeps_best_n(spark):
         df, "source", [F.col("quality").desc()], 2, id_col="doc_id"
     ).collect()
     assert sorted(r["doc_id"] for r in again if r["source"] == "dom2") == [100, 101]
-
-
-# --------------------------------------------------- linear classifier
-def test_train_lr_learns_separable_data(spark):
-    # y = 1 iff f1 > f2; linearly separable
-    rows = [(float(i % 10), float((i * 3) % 10), 1.0 if (i % 10) > (i * 3) % 10 else 0.0)
-            for i in range(200)]
-    df = spark.createDataFrame(rows, "f1 double, f2 double, y double")
-    w, b = classifier.train_lr(df, ["f1", "f2"], "y", lr=0.5, iters=120)
-    assert w["f1"] > 0 > w["f2"]
-    scored = df.withColumn("p", classifier.lr_score(w, b))
-    acc = scored.where(
-        ((F.col("p") > 0.5) & (F.col("y") == 1.0))
-        | ((F.col("p") <= 0.5) & (F.col("y") == 0.0))
-    ).count() / 200
-    assert acc >= 0.9
-
-
-def test_lr_score_matches_python_math(spark):
-    w = {"f1": 0.7, "f2": -0.2}
-    df = spark.createDataFrame([(2.0, 3.0)], "f1 double, f2 double")
-    got = df.select(classifier.lr_score(w, bias=0.1).alias("p")).collect()[0]["p"]
-    z = 0.1 + 0.7 * 2.0 + (-0.2) * 3.0
-    assert got == pytest.approx(1.0 / (1.0 + math.exp(-z)), abs=1e-12)
-
-
-def test_train_lr_empty_raises(spark):
-    df = spark.createDataFrame([], "f1 double, y double")
-    with pytest.raises(ValueError):
-        classifier.train_lr(df, ["f1"], "y", iters=1)
-
-
-def test_train_lr_rejects_null_labels(spark):
-    df = spark.createDataFrame(
-        [(1.0, "yes"), (0.0, "no")], "f1 double, y string"
-    )
-    with pytest.raises(ValueError, match="NULL or not castable"):
-        classifier.train_lr(df, ["f1"], "y", iters=1)
 
 
 def test_dup_spans_invariants_random_corpora(spark):

@@ -70,7 +70,7 @@ def test_anti_join_disjoint_and_complete(spark, rows, hist):
 )
 def test_dense_ids_any_partitioning(spark, n, start, parts):
     df = spark.range(n).withColumnRenamed("id", "k").repartition(parts)
-    out = assign_dense_ids(df, ["k"], start=start, num_partitions=parts)
+    out = assign_dense_ids(df, ["k"], start=start)
     rows = out.orderBy("k").select("id").collect()
     assert [r["id"] for r in rows] == list(range(start + 1, start + n + 1))
 

@@ -646,7 +646,7 @@ def test_rows_in_is_populated(spark, tmp_path):
     assert 0 < res.rows_loaded <= res.rows_in
 
 
-# ---- round-10 review pass 5: importance / lm / classifier ------------------
+# ---- round-10 review pass 5: importance / lm ------------------
 
 
 def test_bigram_rows_no_empty_edge_tokens(spark):
@@ -683,22 +683,6 @@ def test_lm_release_staged_and_lock_exist(spark):
     persist_slot.release()
     assert persist_slot.held == ()
     assert persist_slot._lock is not None
-
-
-def test_train_lr_rejects_out_of_range_labels(spark):
-    """Review r10: {-1,+1}/{1,2} label codings trained a garbage model
-    silently (the y=-1 residual never vanishes)."""
-    import pytest as _pytest
-
-    from datawarehouse_backup_system_spark.operators.classifier import (
-        train_lr,
-    )
-
-    df = spark.createDataFrame(
-        [(1.0, -1.0), (2.0, 1.0)], "x double, y double"
-    )
-    with _pytest.raises(ValueError, match=r"labels must lie in \[0, 1\]"):
-        train_lr(df, ["x"], "y", iters=1)
 
 
 def test_dsir_validates_quantize_decimals(spark):

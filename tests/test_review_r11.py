@@ -283,95 +283,8 @@ def test_bench_ref_regression_picks_min_total_reference(tmp_path, monkeypatch):
 
 
 # --------------------------------------------------------------------------
-# Review pass A (r11): setjoin / corpus_build / jsonl_source
+# Review pass A (r11): setjoin / jsonl_source
 # --------------------------------------------------------------------------
-def test_corpus_build_seq_id_survives_int32_ids(spark, tmp_path):
-    """Review r11: seq_id = id*stride+copy wrapped in 32-bit arithmetic
-    for IntegerType ids above ~2^31/stride — negative/colliding seq_ids,
-    silently. Now computed in bigint."""
-    from pyspark.sql import functions as F
-
-    from datawarehouse_backup_system_spark.plans.corpus_build import (
-        build_training_corpus,
-    )
-
-    sentences = [
-        "the quick brown fox jumps over the lazy dog near the river "
-        "and it is a bright morning with plenty of light in the sky",
-        "a small group of children walked to the old market in town "
-        "and it was the kind of day that everyone seemed to enjoy",
-        "the engineers reviewed a draft of the new plan to improve "
-        "the harbor and it is likely that work begins in the spring",
-    ]
-    docs = spark.createDataFrame(
-        [(2_000_000_000 + i, s, "en") for i, s in enumerate(sentences)],
-        "doc_id int, text string, lang string",
-    )
-    res = build_training_corpus(
-        spark, docs, tmp_path / "c", max_epochs=3, n_shards=2,
-        capacity=128,
-    )
-    assert res.n_exported >= 3
-    shards = spark.read.parquet(str(tmp_path / "c" / "shards"))
-    assert shards.where(F.col("seq_id") < 0).count() == 0
-    n = shards.count()
-    assert shards.select("seq_id").distinct().count() == n
-
-
-def test_corpus_build_fully_filtered_corpus_returns_empty(spark, tmp_path):
-    """Review r11: an all-gated-away corpus crashed at the step-6
-    fingerprint re-read ('Unable to infer schema') AFTER all the
-    expensive work; explicit schemas make it return an empty result."""
-    from datawarehouse_backup_system_spark.plans.corpus_build import (
-        build_training_corpus,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog", "en")],
-        "doc_id int, text string, lang string",
-    )
-    # an English doc under a German-only gate: lang_keep filters it
-    res = build_training_corpus(
-        spark, docs, tmp_path / "c", keep_langs=("de",), n_shards=2,
-    )
-    assert res.n_input == 1
-    assert res.n_kept == 0
-    assert res.n_exported == 0
-
-
-def test_corpus_build_rejects_null_ids(spark, tmp_path):
-    """Review r11: NULL-id docs silently vanished at the gate equi-join
-    (curation_report deliberately keeps them); now a loud ValueError."""
-    import pytest as _pytest
-
-    from datawarehouse_backup_system_spark.plans.corpus_build import (
-        build_training_corpus,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "good text here", "en"), (None, "orphan", "en")],
-        "doc_id int, text string, lang string",
-    )
-    with _pytest.raises(ValueError, match="NULL"):
-        build_training_corpus(spark, docs, tmp_path / "c")
-
-
-def test_corpus_build_stages_kept_and_single_sources_order(tmp_path):
-    """Review r11: the kept lineage re-executed MinHash+components for
-    every downstream action (now parquet-staged), and the within-shard
-    order expression was a hand-copied twin of export_shards' (now
-    imported from shards.shard_order_exprs). Source-contract pins."""
-    from pathlib import Path as _P
-
-    src = (
-        _P(__file__).resolve().parents[1]
-        / "datawarehouse_backup_system_spark/plans/corpus_build.py"
-    ).read_text()
-    assert "shard_order_exprs(" in src
-    assert 'parquet(str(out_dir / "kept"))' in src
-    assert "token_count_strict" in src  # manifest-consistent accounting
-
-
 def test_setjoin_stage_path_empty_corpus_yields_zero_pairs(
     spark, tmp_path
 ):
@@ -567,30 +480,6 @@ def test_satisfies_counts_null_predicate_as_violation(spark):
     }
     assert rows["v_positive"]["violations"] == 2
     assert rows["v_positive"]["passed"] is False
-
-
-def test_schema_drift_reports_both_nullability_directions(spark):
-    from pyspark.sql import types as T
-
-    from datawarehouse_backup_system_spark.operators.expectations import (
-        schema_drift_report,
-    )
-
-    expected = T.StructType([
-        T.StructField("a", T.StringType(), nullable=True),
-        T.StructField("b", T.StringType(), nullable=False),
-    ])
-    observed = T.StructType([
-        T.StructField("a", T.StringType(), nullable=False),  # tightened
-        T.StructField("b", T.StringType(), nullable=True),   # loosened
-    ])
-    df = spark.createDataFrame([], observed)
-    kinds = {
-        f["column"]: f["kind"] for f in schema_drift_report(df, expected)
-    }
-    assert kinds == {
-        "a": "nullability_tightened", "b": "nullability_loosened",
-    }
 
 
 # --------------------------------------------------------------------------

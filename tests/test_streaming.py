@@ -48,24 +48,6 @@ def _run_to_memory(df, name):
     return q
 
 
-def test_windowed_counts_stream(spark, tmp_path, t0):
-    src = str(tmp_path / "events")
-    _write_batch(spark, src, _rows(0, 12, t0))  # 1 event / 5 min for 1 h
-    stream = st.stream_source(spark, src)
-    name = f"win_{uuid.uuid4().hex[:8]}"
-    q = _run_to_memory(st.windowed_counts(stream, "10 minutes"), name)
-    try:
-        # append mode only emits windows sealed by the watermark; advance it
-        _write_batch(spark, src, _rows(100, 1, t0 + dt.timedelta(hours=3)))
-        q.processAllAvailable()
-        out = spark.sql(f"SELECT * FROM {name}").collect()
-        assert len(out) >= 5  # hour of 10-min windows finalized
-        assert all(r["n"] == 2 for r in out if r["window_start"] >= t0
-                   and r["window_start"] < t0 + dt.timedelta(hours=1))
-    finally:
-        q.stop()
-
-
 def test_streaming_dedup_within_watermark(spark, tmp_path, t0):
     src = str(tmp_path / "events")
     rows = _rows(0, 4, t0)
@@ -81,75 +63,6 @@ def test_streaming_dedup_within_watermark(spark, tmp_path, t0):
         out = spark.sql(f"SELECT event_id FROM {name}").collect()
         ids = sorted(r["event_id"] for r in out)
         assert ids == [0, 1, 2, 3]  # duplicate suppressed by hash state
-    finally:
-        q.stop()
-
-
-def test_ingest_stream_end_to_end(spark, tmp_path, t0):
-    src = str(tmp_path / "landing")
-    target = str(tmp_path / "snapshot")
-    ckpt = str(tmp_path / "ckpt")
-    _write_batch(spark, src, _rows(0, 5, t0))
-    stream = st.stream_source(spark, src)
-    q = st.ingest_stream(stream, target, ckpt, ["event_id", "user_id", "event_type"])
-    try:
-        q.processAllAvailable()
-        # second landing batch: 2 new rows + 1 duplicate of event 2
-        _write_batch(spark, src, _rows(10, 2, t0 + dt.timedelta(hours=1)))
-        _write_batch(spark, src, _rows(2, 1, t0 + dt.timedelta(minutes=10)))
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    snap = spark.read.parquet(target)
-    assert snap.where(F.col("event_id") == 2).count() == 1  # deduped
-    assert snap.count() == 7
-    assert "row_hash" in snap.columns
-
-
-def test_stateful_user_activity(spark, tmp_path, t0):
-    """applyInPandasWithState: lifetime counters accumulate across
-    micro-batches; idle users expire via event-time timeout."""
-    src = str(tmp_path / "events")
-    _write_batch(spark, src, _rows(0, 3, t0, user=1) + _rows(10, 1, t0, user=2))
-    stream = st.stream_source(spark, src)
-    name = f"state_{uuid.uuid4().hex[:8]}"
-    q = _run_to_memory(st.user_activity_state(stream), name)
-    try:
-        # user 1 stays active; user 2 goes idle -> must expire
-        _write_batch(spark, src, _rows(20, 2, t0 + dt.timedelta(hours=3), user=1))
-        q.processAllAvailable()
-        _write_batch(spark, src, _rows(30, 1, t0 + dt.timedelta(hours=9), user=1))
-        q.processAllAvailable()
-        rows = spark.sql(
-            f"SELECT * FROM {name} ORDER BY last_seen_ms, user_id"
-        ).collect()
-        by_user = {}
-        for r in rows:
-            by_user.setdefault(r["user_id"], []).append(r)
-        # user 1's lifetime counter accumulated across batches
-        assert [r["lifetime_events"] for r in by_user[1]] == [3, 5, 6]
-        assert not any(r["expired"] for r in by_user[1])
-        # user 2 emitted once live, then expired with final totals
-        assert [(r["lifetime_events"], r["expired"]) for r in by_user[2]] == [
-            (1, False), (1, True),
-        ]
-    finally:
-        q.stop()
-
-
-def test_sessionized_counts_stream(spark, tmp_path, t0):
-    src = str(tmp_path / "events")
-    burst1 = _rows(0, 3, t0, minutes_apart=5)            # one session
-    burst2 = _rows(10, 2, t0 + dt.timedelta(hours=2))    # second session
-    _write_batch(spark, src, burst1 + burst2)
-    stream = st.stream_source(spark, src)
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    q = _run_to_memory(st.sessionized_counts(stream, gap="30 minutes"), name)
-    try:
-        _write_batch(spark, src, _rows(99, 1, t0 + dt.timedelta(hours=6)))
-        q.processAllAvailable()
-        out = spark.sql(f"SELECT * FROM {name} ORDER BY session_start").collect()
-        assert [r["n_events"] for r in out[:2]] == [3, 2]
     finally:
         q.stop()
 
@@ -295,336 +208,6 @@ def test_streaming_signature_dedup_with_simhash_expr(spark, tmp_path):
         q.stop()
 
 
-def test_stream_jsonl_quarantine_parity_with_batch(spark, tmp_path):
-    """stream_jsonl shares the batch reader's projection: same rows,
-    same quarantine decisions, across micro-batches."""
-    from pyspark.sql import types as T
-
-    from datawarehouse_backup_system_spark.sources.jsonl_source import (
-        RAW_COL,
-        read_jsonl,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    src = tmp_path / "landing"
-    src.mkdir()
-    (src / "a.jsonl").write_text(
-        '{"doc_id": 1, "text": "one"}\nnot json\n{"doc_id": 2, "text": "two"}\n'
-    )
-    stream = st.stream_jsonl(spark, str(src), schema)
-    assert stream.isStreaming
-    name = f"jsonl_{uuid.uuid4().hex[:8]}"
-    q = _run_to_memory(stream, name)
-    try:
-        # second micro-batch: one good line, one truncated
-        (src / "b.jsonl").write_text('{"doc_id": 3, "text": "three"}\n{"bad": \n')
-        q.processAllAvailable()
-        got = spark.sql(f"SELECT * FROM {name}").collect()
-    finally:
-        q.stop()
-    good_ids = sorted(r["doc_id"] for r in got if r[RAW_COL] is None)
-    bad_raw = sorted(r[RAW_COL] for r in got if r[RAW_COL] is not None)
-    assert good_ids == [1, 2, 3]
-    assert bad_raw == sorted(["not json", '{"bad": '])
-    # parity: the batch reader over the same directory agrees row-for-row
-    batch = read_jsonl(spark, str(src), schema).collect()
-    assert sorted(r["doc_id"] for r in batch if r[RAW_COL] is None) == good_ids
-    assert sorted(r[RAW_COL] for r in batch if r[RAW_COL] is not None) == bad_raw
-
-
-def test_stream_neardup_filter_drops_known_keeps_novel(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    doc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    base = " ".join(f"tok{i}" for i in range(30))
-    novel = "entirely different fresh content " + " ".join(
-        f"new{i}" for i in range(26)
-    )
-    history = spark.createDataFrame([(1, base), (2, "other words " * 15)],
-                                    doc_schema)
-    src = str(tmp_path / "incoming")
-    spark.createDataFrame(
-        [(101, " ".join(base.split()[2:])), (102, novel)], doc_schema
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out, audit, ckpt = (str(tmp_path / d) for d in ("out", "audit", "ckpt"))
-    q = st.stream_neardup_filter(stream, history, out, audit, ckpt)
-    try:
-        q.processAllAvailable()
-        # second batch: another near-dup of history doc 1
-        spark.createDataFrame(
-            [(103, " ".join(base.split()[:27]))], doc_schema
-        ).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    kept = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
-    assert kept == [102]  # 101 and 103 are near-dups of history doc 1
-    audit_rows = spark.read.parquet(audit).collect()
-    assert {(r["id_new"], r["id_hist"]) for r in audit_rows} >= {(101, 1), (103, 1)}
-    assert all(r["jaccard"] >= 0.5 for r in audit_rows)
-
-
-def test_stream_heavy_hitters_bounded_state(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    schema = T.StructType([T.StructField("item", T.StringType())])
-    src = str(tmp_path / "items")
-    state = str(tmp_path / "hh_state")
-    ckpt = str(tmp_path / "hh_ckpt")
-
-    batch1 = [("hot",)] * 50 + [(f"a{i}",) for i in range(200)]
-    spark.createDataFrame(batch1, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = st.stream_heavy_hitters(stream, "item", state, ckpt, capacity=16)
-    try:
-        q.processAllAvailable()
-        batch2 = [("hot",)] * 40 + [("warm",)] * 60 + [(f"b{i}",) for i in range(200)]
-        spark.createDataFrame(batch2, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    summary = {
-        r["item"]: r["est_count"] for r in spark.read.parquet(state).collect()
-    }
-    assert len(summary) <= 16                    # state stays bounded
-    assert "hot" in summary and "warm" in summary  # heavies retained
-    assert summary["hot"] <= 90                  # counts are lower bounds
-    assert summary["warm"] <= 60
-    assert summary["hot"] > summary.get("warm", 0) - 60  # sane ordering
-
-
-def test_stream_heavy_hitters_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch replays the last batch after a restart; the state's
-    batch-id guard must make the re-merge a no-op (no double counts)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType([T.StructField("item", T.StringType())])
-    src = str(tmp_path / "items")
-    state = str(tmp_path / "state")
-    spark.createDataFrame([("hot",)] * 30, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    def run(ckpt):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 10)
-            .parquet(src)
-        )
-        q = st.stream_heavy_hitters(stream, "item", state, ckpt, capacity=8)
-        q.processAllAvailable()
-        q.stop()
-
-    run(str(tmp_path / "ck1"))
-    before = {
-        r["item"]: r["est_count"] for r in spark.read.parquet(state).collect()
-    }
-    # fresh checkpoint replays the SAME source batch (same batch_id 0)
-    run(str(tmp_path / "ck2"))
-    after = {
-        r["item"]: r["est_count"] for r in spark.read.parquet(state).collect()
-    }
-    assert before == {"hot": 30}
-    assert after == before  # replay merged nothing
-
-
-def test_stream_interval_join_attribution(spark, tmp_path, t0):
-    """views ⋈ purchases within a 1 h lookback, both sides streaming."""
-    vsrc, psrc = str(tmp_path / "views"), str(tmp_path / "purch")
-    # user 1: view at t0+10m, purchase at t0+30m -> joins (20 min gap)
-    # user 2: view at t0, purchase at t0+90m -> outside 1 h lag, no join
-    _write_batch(spark, vsrc, [
-        (1, t0 + dt.timedelta(minutes=10), 1, "view", 1.0, "{}"),
-        (2, t0, 2, "view", 1.0, "{}"),
-    ])
-    _write_batch(spark, psrc, [
-        (3, t0 + dt.timedelta(minutes=30), 1, "purchase", 9.0, "{}"),
-        (4, t0 + dt.timedelta(minutes=90), 2, "purchase", 9.0, "{}"),
-    ])
-    views = st.stream_source(spark, vsrc).select("ts", "user_id", "event_id")
-    purch = st.stream_source(spark, psrc).select(
-        "ts", "user_id", F.col("event_id").alias("purchase_id")
-    )
-    joined = st.stream_interval_join(
-        views, purch, "user_id", lag="1 hour",
-        left_watermark="2 hours", right_watermark="1 hour",
-    )
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    q = _run_to_memory(joined, name)
-    try:
-        # advance both watermarks far past the data so results finalize
-        far = t0 + dt.timedelta(hours=12)
-        _write_batch(spark, vsrc, [(90, far, 9, "view", 1.0, "{}")])
-        _write_batch(spark, psrc, [(91, far, 9, "purchase", 1.0, "{}")])
-        q.processAllAvailable()
-        out = spark.sql(f"SELECT * FROM {name}").collect()
-        pairs = {(r["event_id"], r["purchase_id"]) for r in out}
-        assert (1, 3) in pairs          # in-window attribution matched
-        assert all(p != (2, 4) for p in pairs)  # 90 min gap excluded
-    finally:
-        q.stop()
-
-
-def test_stream_quality_gate_routes_by_lm_score(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from datawarehouse_backup_system_spark.operators import lm
-
-    doc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    typical = "the quick brown fox jumps over the lazy dog again"
-    train = spark.createDataFrame(
-        [(i, typical) for i in range(10)], doc_schema
-    )
-    model = lm.bigram_model(train, "doc_id", "text")
-
-    src = str(tmp_path / "incoming")
-    spark.createDataFrame(
-        [(201, typical), (202, "zz qq vv kk ww xx yy jj"), (203, "one")],
-        doc_schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out, rej, ckpt = (str(tmp_path / d) for d in ("pass", "reject", "ck"))
-    q = st.stream_quality_gate(
-        stream, model, out, rej, ckpt, min_avg_logp=-7.0
-    )
-    try:
-        q.processAllAvailable()
-        # replay-shaped second batch: another typical + another garbled
-        spark.createDataFrame(
-            [(204, typical), (205, "mm nn oo pp rr ss tt uu")], doc_schema
-        ).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    kept = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
-    rejected = sorted(r["doc_id"] for r in spark.read.parquet(rej).collect())
-    assert kept == [201, 204]       # in-model text passes
-    assert rejected == [202, 203, 205]  # garbled + no-bigram docs audit out
-    scores = {r["doc_id"]: r["avg_logp"]
-              for r in spark.read.parquet(rej).collect()}
-    assert scores[203] is None      # sub-2-token doc: explicit null score
-
-
-def test_stream_lm_partials_equal_batch_model(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from datawarehouse_backup_system_spark.operators import lm
-
-    doc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    b1 = [(i, f"alpha beta tok{i % 3} gamma") for i in range(10)]
-    b2 = [(100 + i, f"beta gamma tok{i % 4} delta") for i in range(10)]
-    src = str(tmp_path / "in")
-    spark.createDataFrame(b1, doc_schema).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ck")
-    q = st.stream_lm_model_partials(stream, state, ckpt)
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(b2, doc_schema).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    streamed = st.read_lm_model(spark, state)
-    union = spark.createDataFrame(b1 + b2, doc_schema)
-    batch = lm.bigram_model(union, "doc_id", "text")
-    for got_df, want_df, key in ((streamed[0], batch[0], "bp"),
-                                 (streamed[1], batch[1], "bc")):
-        got = {r[0]: r[1] for r in got_df.collect()}
-        want = {r[0]: r[1] for r in want_df.collect()}
-        assert got == want, key  # exact: merge-by-sum == batch over union
-
-    # scoring through the streamed model matches the batch model exactly
-    probe = spark.createDataFrame([(999, "alpha beta gamma delta")], doc_schema)
-    s1 = lm.score_with_model(probe, "doc_id", "text", streamed).collect()[0]
-    s2 = lm.score_with_model(probe, "doc_id", "text", batch).collect()[0]
-    assert s1["sum_logp"] == s2["sum_logp"]
-
-
-def test_stream_histogram_partials_match_batch(spark, tmp_path):
-    """Streamed per-batch histogram partials merge to EXACTLY the batch
-    sketch over every row seen, and quantile reads through the streamed
-    sketch equal the batch reads (merge is associative + commutative)."""
-    from pyspark.sql import types as T
-
-    from datawarehouse_backup_system_spark.operators import quantiles as qsk
-    from datawarehouse_backup_system_spark.streaming import ingest_stream as st
-
-    schema = T.StructType([T.StructField("v", T.LongType())])
-    b1 = [((i * 37) % 500,) for i in range(200)]
-    b2 = [((i * 53) % 500,) for i in range(150)]
-    src = str(tmp_path / "in")
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ck")
-    q = st.stream_histogram_partials(stream, state, ckpt, "v", 0, 499, 16)
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    streamed = st.read_histogram(spark, state)
-    union = spark.createDataFrame(b1 + b2, schema)
-    batch = qsk.binned_histogram(union, "v", 0, 499, 16)
-    assert qsk.histograms_equal(streamed, batch).collect()[0].equal is True
-
-    w = qsk.bin_width(0, 499, 16)
-    got = {r.q: r.value for r in
-           qsk.histogram_quantiles(streamed, [0.5, 0.99], 0, w).collect()}
-    want = {r.q: r.value for r in
-            qsk.histogram_quantiles(batch, [0.5, 0.99], 0, w).collect()}
-    assert got == want
-
-
 def test_exactly_once_sink_dedupes_replayed_batches(spark, tmp_path):
     """An at-least-once replay of the SAME micro-batch (same stream_id,
     same epoch) must not duplicate rows: the deterministic write-id's
@@ -708,185 +291,6 @@ def test_exactly_once_sink_survives_rewrite_between_delivery_and_replay(
                     n_partitions=2)
     sink(batch, 0)   # replay AFTER the rewrite: must be a no-op
     assert fmt.read_as_of(spark, table, struct, "t").count() == 40
-
-
-def test_stream_agg_view_matches_batch_recompute(spark, tmp_path):
-    """Streamed monoid partials fold to EXACTLY the view a full batch
-    recompute over every streamed row yields — materialized-view
-    maintenance (u06) in its streaming deployment shape."""
-    from pyspark.sql import types as T
-
-    from datawarehouse_backup_system_spark.operators import incremental
-    from datawarehouse_backup_system_spark.streaming import ingest_stream as st
-
-    schema = T.StructType([
-        T.StructField("g", T.StringType()),
-        T.StructField("v", T.LongType()),
-    ])
-    b1 = [(f"g{i % 3}", (i * 37) % 500) for i in range(200)]
-    b2 = [(f"g{i % 4}", (i * 53) % 500) for i in range(150)]
-    src = str(tmp_path / "in")
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ck")
-    q = st.stream_agg_view_partials(stream, state, ckpt, ["g"], "v")
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    union = spark.createDataFrame(b1 + b2, schema)
-    want = sorted(
-        tuple(r) for r in incremental.finalize(
-            incremental.partial_aggs(union, ["g"], "v")
-        ).collect()
-    )
-    got = sorted(
-        tuple(r) for r in st.read_agg_view(spark, state, ["g"]).collect()
-    )
-    assert got == want and len(got) == 4
-
-
-def test_stream_bottomk_matches_batch_sample(spark, tmp_path):
-    """Streamed bottom-k partials merge to EXACTLY the batch sample
-    over every streamed row (mergeable-sketch property, replay-safe)."""
-    from pyspark.sql import types as T
-
-    from datawarehouse_backup_system_spark.operators.sampling import (
-        bottomk_sample,
-    )
-    from datawarehouse_backup_system_spark.streaming import ingest_stream as st
-
-    schema = T.StructType([
-        T.StructField("g", T.StringType()),
-        T.StructField("k", T.LongType()),
-    ])
-    b1 = [(f"g{i % 3}", i) for i in range(300)]
-    b2 = [(f"g{i % 3}", i) for i in range(300, 500)]
-    src = str(tmp_path / "in")
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ck")
-    q = st.stream_bottomk_partials(stream, state, ckpt, ["g"], "k", 5)
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    union = spark.createDataFrame(b1 + b2, schema)
-    want = sorted(
-        tuple(r) for r in bottomk_sample(union, ["g"], "k", 5).collect()
-    )
-    got = sorted(
-        tuple(r) for r in st.read_bottomk(spark, state, ["g"], "k", 5)
-        .collect()
-    )
-    assert got == want and len(got) == 15
-
-
-def test_stream_join_view_matches_batch_join_and_replay_safe(spark, tmp_path):
-    """Streaming join-view maintenance (u07's deployment shape): the
-    accumulated per-batch delta joins equal the full batch join over
-    every streamed row, and replaying a batch's foreachBatch write
-    (at-least-once delivery) rewrites instead of duplicating."""
-    from pyspark.sql import types as T
-
-    from datawarehouse_backup_system_spark.streaming import ingest_stream as st
-
-    schema = T.StructType([
-        T.StructField("k", T.LongType()),
-        T.StructField("v", T.LongType()),
-    ])
-    dim = spark.createDataFrame(
-        [(k, f"dim{k}") for k in range(5)], "k long, name string"
-    )
-    b1 = [(i % 5, i * 10) for i in range(80)]
-    b2 = [(i % 7, i * 11) for i in range(60)]   # keys 5,6 drop (inner)
-    src = str(tmp_path / "in")
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ck")
-    q = st.stream_join_view(stream, dim, state, ckpt, ["k"])
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = st.read_join_view(spark, state)
-    want = spark.createDataFrame(b1 + b2, schema).join(dim, ["k"])
-    cols = ["k", "v", "name"]
-    assert sorted(map(tuple, got.select(cols).collect())) == sorted(
-        map(tuple, want.select(cols).collect())
-    )
-    # at-least-once replay: rewrite batch 0's delta join by hand — the
-    # view must be unchanged (overwrite semantics, no duplication)
-    spark.createDataFrame(b1, schema).join(dim, ["k"]).write.mode(
-        "overwrite"
-    ).parquet(f"{state}/batch_id=0")
-    again = st.read_join_view(spark, state)
-    assert again.count() == want.count()
-
-
-def test_stream_heavy_hitters_recovers_mid_swap_crash(spark, tmp_path):
-    """Review r7: the state swap is now rename-aside (stage -> aside ->
-    swap -> sweep). A crash between the two renames leaves the whole
-    accumulated summary in the aside dir; the next batch must recover
-    it instead of silently restarting history from one micro-batch."""
-    import shutil as _sh
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType([T.StructField("item", T.StringType())])
-    src = str(tmp_path / "items")
-    state = tmp_path / "state"
-    ckpt = str(tmp_path / "ck")
-
-    spark.createDataFrame([("hot",)] * 30, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = st.stream_heavy_hitters(stream, "item", str(state), ckpt,
-                                    capacity=8)
-        q.processAllAvailable()
-        q.stop()
-
-    run()
-    # simulate the crash window: state renamed aside, swap never finished
-    _sh.rmtree(f"{state}__old", ignore_errors=True)
-    state.rename(f"{state}__old")
-    assert not state.exists()
-
-    spark.createDataFrame([("hot",)] * 20, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run()  # same checkpoint: only the NEW batch processes
-
-    summary = {
-        r["item"]: r["est_count"]
-        for r in spark.read.parquet(str(state)).collect()
-    }
-    assert summary == {"hot": 50}  # history recovered, nothing lost
 
 
 def test_watermark_dedup_batch_matches_live_stream_on_chain(
