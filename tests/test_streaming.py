@@ -18,16 +18,10 @@ def _write_batch(spark, path, rows):
     ).parquet(path)
 
 
-def _rows(start_id, n, t0, minutes_apart=5, user=1, etype="click"):
+def _rows(n, t0):
+    """``n`` click events of user 1, five minutes apart, ids from 0."""
     return [
-        (
-            start_id + i,
-            t0 + dt.timedelta(minutes=i * minutes_apart),
-            user,
-            etype,
-            1.0,
-            "{}",
-        )
+        (i, t0 + dt.timedelta(minutes=5 * i), 1, "click", 1.0, "{}")
         for i in range(n)
     ]
 
@@ -50,7 +44,7 @@ def _run_to_memory(df, name):
 
 def test_streaming_dedup_within_watermark(spark, tmp_path, t0):
     src = str(tmp_path / "events")
-    rows = _rows(0, 4, t0)
+    rows = _rows(4, t0)
     dup = [rows[1]]  # exact duplicate arrives again in a later batch
     _write_batch(spark, src, rows)
     stream = st.stream_source(spark, src)
