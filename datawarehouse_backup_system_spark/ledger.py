@@ -3,9 +3,15 @@
 The reference keeps ``processed_files(file_name, status, created_at)`` in
 Postgres (S12/S13, ``util/data_pushing.py:490-592``) and loads it into a
 Python set for membership tests (``main.py:349-350,364``). Here it is a
-tiny append-only parquet table; membership at scale is an anti-join, and
-the driver-side ``processed_set()`` remains for file routing (the listing
-is O(files), never O(rows)).
+tiny append-only parquet table, one file per batch of rows, and — like
+the reference — a metadata store, not a distributed job: batches are
+written and read on the driver with pyarrow, so no ledger write, routing
+lookup or write-id query launches a Spark job. A batch is written under a
+hidden name and made visible by one rename (or, for a put-if-absent
+commit, one hard link), so it appears whole or not at all.
+:meth:`Ledger.read` still serves the whole table as a Spark frame for
+outside readers, and files written by Spark's own parquet writer read
+back the same way.
 
 Status strings preserve the reference's vocabulary (21 distinct statuses,
 SURVEY §5) — e.g. ``'processed'``, ``'uploaded to ClickHouse'``,
@@ -14,10 +20,16 @@ SURVEY §5) — e.g. ``'processed'``, ``'uploaded to ClickHouse'``,
 
 from __future__ import annotations
 
+import os
+import time
+import uuid
+from datetime import datetime, timezone
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 LEDGER_SCHEMA = T.StructType(
@@ -27,6 +39,19 @@ LEDGER_SCHEMA = T.StructType(
         T.StructField("created_at", T.TimestampType(), False),
     ]
 )
+#: LEDGER_SCHEMA as the driver writes it; a tz-aware UTC timestamp is the
+#: parquet encoding Spark reads back as TimestampType
+_ARROW_SCHEMA = pa.schema(
+    [
+        pa.field("file_name", pa.string(), nullable=False),
+        pa.field("status", pa.string(), nullable=False),
+        pa.field("created_at", pa.timestamp("us", tz="UTC"), nullable=False),
+    ]
+)
+#: hidden name a batch is written under before it becomes visible
+_TMP_PREFIX = ".ledger-tmp-"
+#: age after which a stranded hidden batch file is swept
+_TMP_TTL_S = 86_400
 
 # The reference's full 20-string status vocabulary (every literal passed
 # to insert_processed_file across main.py + util/). Statuses whose stage
@@ -90,25 +115,21 @@ class Ledger:
         (e.g. OPTIMIZE's 'commit new write-id + tombstone the ids it
         replaces') can never be observed half-applied.
 
-        Via pandas/Arrow (a ``createDataFrame(list)`` local relation
-        spreads rows over defaultParallelism slices and walking 32
-        mostly-empty slices measured 4 s per marker write vs 0.35 s this
-        way) PLUS an explicit ``coalesce(1)``: the Arrow path still
-        splits a multi-row batch into up to one partition PER ROW, and
-        one file per row would void the whole-or-nothing visibility this
-        method exists for (review r7 — verified 3 rows → 3 files
-        without it; with it, 1 file, and faster). The coalesce only
-        walks the ≤ len(rows) non-empty Arrow slices, so the old
-        32-empty-slice objection does not apply.
+        The batch is written on the driver with pyarrow (a few rows need
+        no Spark job) to a hidden ``.ledger-tmp-*`` name in the ledger
+        dir, which both readers skip, and becomes visible in one step:
+        ``os.replace`` to a fresh ``part-*.parquet`` name. A kill between
+        the write and the rename strands only the hidden file; the next
+        append sweeps such files once they are a day old.
 
         ``cas_token``: put-if-absent commit (the Delta commit-log
-        shape, r8). The batch is staged next to the ledger and
-        HARD-LINKED in under ``cas-{token}.parquet`` — link is atomic
-        and fails EEXIST if a batch for the same token already landed,
-        so exactly ONE caller per token ever commits; the link IS the
-        commit, so a crash leaves either nothing (retryable) or the
-        whole batch. Returns True if this call committed, False if the
-        token was already taken (the caller rolls back its write).
+        shape, r8). The hidden file is HARD-LINKED in under
+        ``cas-{token}.parquet`` instead — link is atomic and fails
+        EEXIST if a batch for the same token already landed, so exactly
+        ONE caller per token ever commits; the link IS the commit, so a
+        crash leaves either nothing (retryable) or the whole batch.
+        Returns True if this call committed, False if the token was
+        already taken (the caller rolls back its write).
         """
         if not rows:
             if cas_token is not None:
@@ -119,60 +140,60 @@ class Ledger:
                     "append_many: cas_token requires a non-empty batch"
                 )
             return True
-        import pandas as pd
-
-        pdf = pd.DataFrame(rows, columns=["file_name", "status"])
-        df = self.spark.createDataFrame(pdf).withColumn(
-            "created_at", F.current_timestamp()
-        )
+        d = Path(self.path)
         if cas_token is None:
-            df.coalesce(1).write.mode("append").parquet(self.path)
-            return True
-        import os
-        import shutil
-        import uuid as _uuid
-
-        target = Path(self.path) / f"cas-{cas_token}.parquet"
-        if target.exists():
-            return False
-        # stage as a SIBLING of the ledger dir ("_"-prefixed: invisible
-        # to table readers) so os.link stays on one filesystem. A
-        # SIGKILL between the staging write and the link strands the
-        # stage dir (no finally runs), so sweep siblings old enough
-        # that no live commit could still own them (review r8 — the
-        # crashed-run-strands-scratch class, in a dir the /tmp sweep
-        # never visits).
-        import time as _time
-
-        now = _time.time()
-        for stray in Path(self.path).parent.glob("_ledger_stage-*"):
-            try:
-                if now - stray.stat().st_mtime > 86_400:
-                    shutil.rmtree(stray, ignore_errors=True)
-            except OSError:
-                pass
-        staging = (
-            Path(self.path).parent / f"_ledger_stage-{_uuid.uuid4().hex[:8]}"
+            target = d / f"part-{uuid.uuid4().hex}.parquet"
+        else:
+            target = d / f"cas-{cas_token}.parquet"
+            if target.exists():
+                return False
+        d.mkdir(parents=True, exist_ok=True)
+        self._sweep_stranded()
+        names, statuses = zip(*rows)
+        now = datetime.now(timezone.utc)
+        batch = pa.table(
+            [names, statuses, [now] * len(rows)], schema=_ARROW_SCHEMA
         )
+        tmp = d / f"{_TMP_PREFIX}{uuid.uuid4().hex}"
         try:
-            df.coalesce(1).write.mode("overwrite").parquet(str(staging))
-            part = next(staging.glob("part-*.parquet"))
-            Path(self.path).mkdir(parents=True, exist_ok=True)
+            pq.write_table(batch, tmp)
+            if cas_token is None:
+                os.replace(tmp, target)
+                return True
             try:
-                os.link(part, target)
+                os.link(tmp, target)
             except FileExistsError:
                 return False
             return True
         finally:
-            shutil.rmtree(staging, ignore_errors=True)
+            tmp.unlink(missing_ok=True)
 
-    def _exists(self) -> bool:
+    def _sweep_stranded(self) -> None:
+        """Delete hidden batch files a killed writer left between write
+        and rename, once old enough that no live append still owns one."""
+        now = time.time()
+        for stray in Path(self.path).glob(f"{_TMP_PREFIX}*"):
+            try:
+                if now - stray.stat().st_mtime > _TMP_TTL_S:
+                    stray.unlink(missing_ok=True)
+            except OSError:
+                pass
+
+    def _files(self) -> list[Path]:
+        """The committed batches. Like Spark's file index, names starting
+        with ``.`` or ``_`` are skipped: a stranded temp file, and the
+        ``_SUCCESS`` marker of a batch written by Spark."""
         p = Path(self.path)
-        return p.exists() and any(p.glob("*.parquet"))
+        if not p.is_dir():
+            return []
+        return sorted(
+            f for f in p.glob("*.parquet")
+            if not f.name.startswith((".", "_"))
+        )
 
     def read(self) -> DataFrame:
-        """S13: the full ledger."""
-        if not self._exists():
+        """S13: the full ledger, as a Spark frame for outside readers."""
+        if not self._files():
             return self.spark.createDataFrame([], LEDGER_SCHEMA)
         return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
 
@@ -181,59 +202,62 @@ class Ledger:
         main.py:350). Stays O(#files); write-id transaction markers are
         internal bookkeeping, not landing files."""
         return {
-            r["file_name"]
-            for r in self.read().select("file_name").distinct().collect()
-            if not r["file_name"].startswith(WRITE_MARKER_PREFIX)
+            name
+            for f in self._files()
+            for name in pq.read_table(f, columns=["file_name"])
+            .column("file_name").to_pylist()
+            if not name.startswith(WRITE_MARKER_PREFIX)
         }
+
+    def write_states(
+        self, table_name: str | None = None
+    ) -> dict[str, dict[str, datetime]]:
+        """Every write-id marker (of ``table_name``, default all tables)
+        → its statuses, each with the first time it was ledgered as a
+        naive-UTC datetime. The one fold behind the write-id queries
+        below, read on the driver with pyarrow."""
+        prefix = WRITE_MARKER_PREFIX + (
+            "" if table_name is None else f"{table_name}:"
+        )
+        out: dict[str, dict[str, datetime]] = {}
+        for f in self._files():
+            t = pq.read_table(f, columns=["file_name", "status", "created_at"])
+            t = t.filter(pc.starts_with(t.column("file_name"), prefix))
+            # a Spark-written batch stores INT96 (ns), a driver batch
+            # microseconds in UTC: both read back as naive-UTC
+            at = t.column("created_at").cast(pa.timestamp("us"))
+            for name, status, ts in zip(
+                t.column("file_name").to_pylist(),
+                t.column("status").to_pylist(),
+                at.to_pylist(),
+            ):
+                seen = out.setdefault(name, {})
+                if status not in seen or ts < seen[status]:
+                    seen[status] = ts
+        return out
 
     def incomplete_writes(self) -> list[tuple[str, str]]:
         """(table_name, write_id) pairs whose begin marker has no commit
         and no aborted marker — the rollback set for recover_writes."""
-        rows = (
-            self.read()
-            .where(F.col("file_name").startswith(WRITE_MARKER_PREFIX))
-            .groupBy("file_name")
-            .agg(F.collect_set("status").alias("states"))
-            .collect()
-        )
         out = []
-        for r in rows:
-            states = set(r["states"])
+        for name, states in self.write_states().items():
             if STATUS_WRITE_BEGIN in states and not (
-                {STATUS_WRITE_COMMIT, STATUS_WRITE_ABORTED} & states
+                {STATUS_WRITE_COMMIT, STATUS_WRITE_ABORTED} & states.keys()
             ):
-                _, table_name, write_id = r["file_name"].split(":", 2)
+                _, table_name, write_id = name.split(":", 2)
                 out.append((table_name, write_id))
         return out
 
-    def committed_writes(self, table_name: str) -> list[tuple[str, object]]:
+    def committed_writes(self, table_name: str) -> list[tuple[str, datetime]]:
         """(write_id, committed_at) for every COMMITTED snapshot append
         of ``table_name`` not tombstoned by a restore, ordered by commit
-        time (ties by id) — the version history time travel reads from."""
-        rows = (
-            self.read()
-            .where(
-                F.col("file_name").startswith(
-                    f"{WRITE_MARKER_PREFIX}{table_name}:"
-                )
-            )
-            .groupBy("file_name")
-            .agg(
-                F.collect_set("status").alias("states"),
-                F.min(
-                    F.when(
-                        F.col("status") == STATUS_WRITE_COMMIT,
-                        F.col("created_at"),
-                    )
-                ).alias("committed_at"),
-            )
-            .collect()
-        )
+        time (ties by id) — the version history time travel reads from.
+        ``committed_at`` is a naive-UTC datetime."""
         out = [
-            (r["file_name"].rsplit(":", 1)[-1], r["committed_at"])
-            for r in rows
-            if STATUS_WRITE_COMMIT in set(r["states"])
-            and STATUS_WRITE_RESTORED not in set(r["states"])
+            (name.rsplit(":", 1)[-1], states[STATUS_WRITE_COMMIT])
+            for name, states in self.write_states(table_name).items()
+            if STATUS_WRITE_COMMIT in states
+            and STATUS_WRITE_RESTORED not in states
         ]
         return sorted(out, key=lambda t: (t[1], t[0]))
 
@@ -244,21 +268,10 @@ class Ledger:
         the table's lineage (a rewrite carried its rows forward), so a
         replay must stay a no-op even though committed_writes() no
         longer lists the id."""
-        rows = (
-            self.read()
-            .where(
-                F.col("file_name").startswith(
-                    f"{WRITE_MARKER_PREFIX}{table_name}:"
-                )
-            )
-            .groupBy("file_name")
-            .agg(F.collect_set("status").alias("states"))
-            .collect()
-        )
         return {
-            r["file_name"].rsplit(":", 1)[-1]
-            for r in rows
-            if STATUS_WRITE_COMMIT in set(r["states"])
+            name.rsplit(":", 1)[-1]
+            for name, states in self.write_states(table_name).items()
+            if STATUS_WRITE_COMMIT in states
         }
 
     def tombstoned_writes(self, table_name: str) -> list[str]:
@@ -276,23 +289,12 @@ class Ledger:
         data loss, then PATH_NOT_FOUND on time travel). A later COMMIT
         supersedes an earlier abort; RESTORED always tombstones (it
         retires a commit by design)."""
-        rows = (
-            self.read()
-            .where(
-                F.col("file_name").startswith(
-                    f"{WRITE_MARKER_PREFIX}{table_name}:"
-                )
-            )
-            .groupBy("file_name")
-            .agg(F.collect_set("status").alias("states"))
-            .collect()
-        )
-        out = []
-        for r in rows:
-            states = set(r["states"])
-            if STATUS_WRITE_RESTORED in states or (
+        return [
+            name.rsplit(":", 1)[-1]
+            for name, states in self.write_states(table_name).items()
+            if STATUS_WRITE_RESTORED in states
+            or (
                 STATUS_WRITE_ABORTED in states
                 and STATUS_WRITE_COMMIT not in states
-            ):
-                out.append(r["file_name"].rsplit(":", 1)[-1])
-        return out
+            )
+        ]

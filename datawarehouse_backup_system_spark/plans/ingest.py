@@ -190,13 +190,18 @@ class IngestJob:
         ranks: list[int] | None = None,
         encoding: str | None = None,
         delimiter: str | None = None,
+        header: tuple[str, ...] = (),
     ) -> DataFrame:
         """Multi-path all-string scan + the exact-ingest-order columns.
 
         ``ranks``: each path's ``_file_rank`` (default: its position in
         ``paths``); the batched cycle passes listing positions so scans
         of different profiles union into one total order. ``encoding``
-        and ``delimiter`` default to the first path's sniff.
+        and ``delimiter`` default to the first path's sniff. ``header``:
+        the paths' sniffed header (:func:`_sniff`); the scan names its
+        columns from it as Spark would, so planning runs no job to read
+        the header. Empty (the default, or a file whose first line is
+        blank): Spark infers it.
 
         File rank comes from a broadcast join against a tiny (name, rank)
         frame keyed on the scan URI's basename — O(1) per row (a
@@ -215,8 +220,14 @@ class IngestJob:
             )
         if ranks is None:
             ranks = list(range(len(paths)))
+        schema = None
+        if header:
+            schema = csv_source.header_schema(
+                header,
+                self.spark.conf.get("spark.sql.caseSensitive") == "true",
+            )
         raw = read_raw_csv(
-            self.spark, [str(p) for p in paths], encoding, delimiter
+            self.spark, [str(p) for p in paths], encoding, delimiter, schema
         )
         # loud reserved-name guard (review r10, the r7/r8 basename/_rn
         # pattern): a raw column named like a seq/rank column would be
@@ -378,10 +389,10 @@ class IngestJob:
             profiles: dict[tuple, list[_Routed]] = {}
             for f in files:
                 profiles.setdefault(_sniff(f.scan_path), []).append(f)
-            for (enc, delim, _), group in profiles.items():
+            for (enc, delim, header), group in profiles.items():
                 raw = self._scan_with_seq(
                     [f.scan_path for f in group], [f.rank for f in group],
-                    enc, delim,
+                    enc, delim, header,
                 )
                 normalized, report = normalize(raw, expected, rename_map)
                 if report.ok:

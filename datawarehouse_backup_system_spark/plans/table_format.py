@@ -30,7 +30,10 @@ with pruned range reads, and — via
 ``streaming.exactly_once_table_sink`` — exactly-once streaming appends.
 Atomicity throughout comes from two primitives: prefix-named data files
 whose commit is a marker row, and ``Ledger.append_many`` writing a
-composite transition as one parquet file.
+composite transition as one parquet file, which a rename (or, for a
+put-if-absent commit, a hard link) makes visible whole. Both ledger
+reads and writes run on the driver, so a commit marker costs no Spark
+job.
 
 **Single-writer limit.** The write-id protocol gives snapshot isolation
 to any number of concurrent READERS (a mid-publish write-id has no
@@ -327,7 +330,8 @@ class SnapshotFormat(ABC):
     def read(
         self, spark: SparkSession, path: Path, fallback: T.StructType
     ) -> DataFrame:
-        """Read the table at ``path``; empty/absent → empty ``fallback``."""
+        """Read the table at ``path``; empty/absent → empty ``fallback``.
+        ``fallback`` is the table's declared schema."""
 
     @abstractmethod
     def append(self, plan: DataFrame, path: Path, table_name: str) -> int:
@@ -398,7 +402,16 @@ class WriteIdParquetFormat(SnapshotFormat):
 
         if not path.exists() or not _has_data():
             return spark.createDataFrame([], fallback)
-        return self._reader(spark).parquet(str(path))
+        if self.merge_schema:
+            # reconciling a column superset needs every file footer
+            return self._reader(spark).parquet(str(path))
+        # the declared schema plus the ingest_date partition: planning
+        # runs no job to infer the schema from file footers
+        if "ingest_date" not in fallback.fieldNames():
+            fallback = T.StructType(
+                [*fallback.fields, T.StructField("ingest_date", T.DateType())]
+            )
+        return spark.read.schema(fallback).parquet(str(path))
 
     def append(
         self,
@@ -582,10 +595,7 @@ class WriteIdParquetFormat(SnapshotFormat):
         inflight_root = self.warehouse_dir / "_inflight"
         if inflight_root.exists():
             marked = {
-                wid
-                for name in self.ledger.read().select("file_name").distinct().collect()
-                if name["file_name"].startswith(ledger_mod.WRITE_MARKER_PREFIX)
-                for wid in [name["file_name"].rsplit(":", 1)[-1]]
+                name.rsplit(":", 1)[-1] for name in self.ledger.write_states()
             }
             now = time.time()
             for d in inflight_root.iterdir():

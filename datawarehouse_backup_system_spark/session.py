@@ -10,7 +10,9 @@ entry point (tests, bench, driver contract) runs with the same semantics:
 - Arrow on (pandas UDF fast path);
 - shuffle partitions sized to the local core count rather than the 200
   default (on a real cluster this is instead set ~2-3× total cores, or
-  left to AQE coalescing).
+  left to AQE coalescing);
+- a driver heap sized to the host (:func:`default_driver_memory`), so a
+  long session cannot grow the JVM past what the machine has.
 """
 
 from __future__ import annotations
@@ -18,6 +20,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory() -> str:
+    """Half the host's physical memory in whole GiB, between 1g and 48g:
+    the heap left unset grows toward its cap, and a cap above the host's
+    memory gets the driver killed instead of collected."""
+    gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    return f"{min(max(gib // 2, 1), 48)}g"
 
 
 def get_spark(
@@ -34,6 +44,7 @@ def get_spark(
     getOrCreate() then respects the externally-provided master). Unset,
     ``SPARK_GRAFT_CPUS`` falls back to the cores this process may run
     on, which also sizes the default shuffle partitions.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides :func:`default_driver_memory`.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     builder = (
@@ -45,7 +56,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     env_master = os.environ.get("SPARK_MASTER")
     if master is not None:

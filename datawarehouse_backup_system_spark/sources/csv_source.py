@@ -198,6 +198,27 @@ def read_header(
     return next(_csv.reader(io.StringIO(line), delimiter=delimiter), [])
 
 
+def header_schema(
+    header: list[str] | tuple[str, ...], case_sensitive: bool = False
+) -> T.StructType:
+    """The all-string schema Spark's CSV reader infers from ``header``,
+    by its own naming rule: an empty cell becomes ``_c{i}``, and a name
+    that repeats (case-insensitively unless ``case_sensitive``) gets its
+    index appended — ``a,,A,b`` reads as ``a0, _c1, A2, b``. Handing it to
+    :func:`read_raw_csv` spares the scan the job that reads the header."""
+    key = (lambda n: n) if case_sensitive else str.lower
+    seen = Counter(key(n) for n in header if n)
+    return T.StructType(
+        [
+            T.StructField(
+                f"_c{i}" if not n else f"{n}{i}" if seen[key(n)] > 1 else n,
+                T.StringType(),
+            )
+            for i, n in enumerate(header)
+        ]
+    )
+
+
 def _spark_native_encoding(enc: str) -> bool:
     """True when Spark's CSV scan handles the codec correctly as-is.
 

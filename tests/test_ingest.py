@@ -438,3 +438,33 @@ def test_batched_run_all_empty_table_commits_nothing(spark, tmp_path):
         ("last24h__20240301_04.csv", ledger_mod.STATUS_EMPTY),
         ("last24h__20240301_06.csv", ledger_mod.STATUS_EMPTY),
     ]
+
+
+@pytest.mark.parametrize(
+    "content",
+    [
+        "a,,A,b, c \n1,2,3,4,5\n6,,8,9,10\n",        # empty cell, dup names
+        "id,Name,NAME,name\n1,x,y,z\n",               # case-insensitive dups
+        "\ufeffk;v\n1;one\n2;two\n",                   # UTF-8 BOM
+        '"a,b","c""d",e\n"1,5",2,3\n',                # ""-quoted cells
+        "p,q,r\n",                                    # no data rows
+    ],
+    ids=["empty_cell", "case_dups", "utf8_bom", "quoted", "header_only"],
+)
+def test_sniffed_header_scan_matches_spark_inference(spark, tmp_path, content):
+    """A profile's scan names its columns from the sniffed header, so no
+    job reads it; the columns and rows must be those Spark's own header
+    inference gives."""
+    from datawarehouse_backup_system_spark.plans.ingest import _sniff
+
+    path = tmp_path / "landing" / "export.csv"
+    path.parent.mkdir()
+    path.write_text(content, encoding="utf-8")
+    fx = generate_f1(tmp_path)
+    job = make_job(spark, tmp_path, fx)
+    enc, delim, header = _sniff(path)
+    sniffed = job._scan_with_seq([path], [0], enc, delim, header)
+    inferred = job._scan_with_seq([path], [0], enc, delim)
+    assert sniffed.columns == inferred.columns
+    assert sorted(map(tuple, sniffed.collect())) == sorted(
+        map(tuple, inferred.collect()))
