@@ -21,6 +21,7 @@ SURVEY §5) — e.g. ``'processed'``, ``'uploaded to ClickHouse'``,
 from __future__ import annotations
 
 import os
+import shutil
 import time
 import uuid
 from datetime import datetime, timezone
@@ -52,6 +53,8 @@ _ARROW_SCHEMA = pa.schema(
 _TMP_PREFIX = ".ledger-tmp-"
 #: age after which a stranded hidden batch file is swept
 _TMP_TTL_S = 86_400
+#: CAS staging dirs earlier versions made next to the ledger dir
+_LEGACY_STAGE_GLOB = "_ledger_stage-*"
 
 # The reference's full 20-string status vocabulary (every literal passed
 # to insert_processed_file across main.py + util/). Statuses whose stage
@@ -170,12 +173,19 @@ class Ledger:
 
     def _sweep_stranded(self) -> None:
         """Delete hidden batch files a killed writer left between write
-        and rename, once old enough that no live append still owns one."""
+        and rename, once old enough that no live append still owns one.
+        Also swept: ``_ledger_stage-*`` dirs next to the ledger dir, where
+        earlier versions staged a CAS batch with Spark; nothing reads them."""
         now = time.time()
-        for stray in Path(self.path).glob(f"{_TMP_PREFIX}*"):
+        d = Path(self.path)
+        strays = [*d.glob(f"{_TMP_PREFIX}*"), *d.parent.glob(_LEGACY_STAGE_GLOB)]
+        for stray in strays:
             try:
                 if now - stray.stat().st_mtime > _TMP_TTL_S:
-                    stray.unlink(missing_ok=True)
+                    if stray.is_dir():
+                        shutil.rmtree(stray, ignore_errors=True)
+                    else:
+                        stray.unlink(missing_ok=True)
             except OSError:
                 pass
 

@@ -11,10 +11,12 @@ a single DataFrame plan per table and cycle:
 
 A cycle (:meth:`IngestJob.run`) first triages every listed file on the
 driver, with no Spark job: zip extraction, CSV suffix, filename routing,
-and the (encoding, delimiter, header) sniff. Each table then costs one
-history read, one watermark, one append and one ledger status write,
-whatever its number of files; per-file ``rows_in`` and ``rows_loaded``
-ride the append as Observations. Catalyst pipelines the projections and
+the (encoding, delimiter, header) sniff, and EMPTY for a file whose scan
+would yield no row. Each table then costs one history read, one
+watermark (from parquet footers, no job), one append and one ledger
+status write, whatever its number of files; the append is the only
+Spark work, and per-file ``rows_in`` and ``rows_loaded`` ride it as
+Observations. Catalyst pipelines the projections and
 the anti-join; nothing materializes until the final write. The ledger
 (S12/S13) provides file-level idempotency exactly like the reference's
 processed_files table.
@@ -323,19 +325,16 @@ class IngestJob:
         member, since run()'s skip check compares against the listing)."""
         schema = self.registry.get(table_key)
         rename_map = self.registry.rename_map(table_key)
-        raw = self._scan_with_seq([path])
-        if raw.drop(*SEQ_COLS).isEmpty():
+        if not csv_source.has_rows(path):
             # reference records empty inputs distinctly
             # (util/data_processing.py:467-470)
             self.ledger.append(name, ledger_mod.STATUS_EMPTY)
             return FileResult(name, ledger_mod.STATUS_EMPTY)
+        raw = self._scan_with_seq([path])
         target = self.read_table(schema)
         last_id = next_id_watermark(target)
         # rows_in rides the write job as an Observation on the pre-dedup
-        # scan (review r10: the field was never populated). Attached
-        # AFTER the isEmpty probe above: isEmpty short-circuits with a
-        # limit and would otherwise satisfy the Observation with a
-        # partial count.
+        # scan (review r10: the field was never populated)
         obs_in = Observation()
         normalized, report = normalize(
             raw.observe(obs_in, *_rank_counts([0])),
@@ -364,14 +363,15 @@ class IngestJob:
     ) -> dict[int, FileResult]:
         """One table's routed files of a cycle as ONE plan, keyed by rank.
 
-        One scan per sniffed (:func:`_sniff`) profile carries each file's
-        listing rank; each profile's header passes the width check (P3)
-        or its files are judged one by one — EMPTY before
-        COLUMN_MISMATCH, the per-file order. The passing frames union by
-        name into one :meth:`build_plan`: one history read, one watermark,
-        one append. A file with no data rows is EMPTY; an all-empty table
-        commits no write. Everything ends in one ledger status write,
-        after the commit.
+        The driver first sniffs each file (:func:`_sniff`): a file whose
+        scan would yield no row (:func:`~.csv_source.has_rows`) is EMPTY
+        and is not scanned. The rest get one scan per sniffed profile,
+        carrying each file's listing rank; a profile whose header fails
+        the width check (P3) makes each of its files COLUMN_MISMATCH. The
+        passing frames union by name into one :meth:`build_plan`: one
+        history read, one watermark, one append. A table with no such
+        frame commits no write. Everything ends in one ledger status
+        write, after the commit.
 
         If anything fails before the commit, the table's files take the
         per-file :meth:`process_file` path in listing order instead, so
@@ -384,11 +384,14 @@ class IngestJob:
         out: dict[int, FileResult] = {}
         frames: list[DataFrame] = []
         batched: list[_Routed] = []
-        appended = False
         try:
             profiles: dict[tuple, list[_Routed]] = {}
             for f in files:
-                profiles.setdefault(_sniff(f.scan_path), []).append(f)
+                profile = _sniff(f.scan_path)
+                if csv_source.has_rows(f.scan_path, profile[0]):
+                    profiles.setdefault(profile, []).append(f)
+                else:
+                    out[f.rank] = FileResult(f.path.name, ledger_mod.STATUS_EMPTY)
             for (enc, delim, header), group in profiles.items():
                 raw = self._scan_with_seq(
                     [f.scan_path for f in group], [f.rank for f in group],
@@ -400,20 +403,13 @@ class IngestJob:
                     batched += group
                     continue
                 for f in group:
-                    mine = raw.where(F.col("_file_rank") == f.rank)
-                    out[f.rank] = (
-                        FileResult(f.path.name, ledger_mod.STATUS_EMPTY)
-                        if mine.drop(*SEQ_COLS).isEmpty()
-                        else FileResult(
-                            f.path.name, ledger_mod.STATUS_COLUMN_MISMATCH,
-                            error=report.error,
-                        )
+                    out[f.rank] = FileResult(
+                        f.path.name, ledger_mod.STATUS_COLUMN_MISMATCH,
+                        error=report.error,
                     )
-            ranks = sorted(f.rank for f in batched)
-            union = reduce(DataFrame.unionByName, frames) if frames else None
-            # the probe runs before the Observations are attached: its
-            # limit would otherwise satisfy them with a partial count
-            if union is not None and not union.drop(*SEQ_COLS).isEmpty():
+            if frames:
+                ranks = sorted(f.rank for f in batched)
+                union = reduce(DataFrame.unionByName, frames)
                 obs_in, obs_out = Observation(), Observation()
                 target = self.read_table(schema)
                 plan = self.build_plan(
@@ -421,7 +417,6 @@ class IngestJob:
                     next_id_watermark(target), target, (obs_out, ranks),
                 )
                 self._atomic_append(plan, schema)
-                appended = True
         except Exception:  # noqa: BLE001 — the per-file path is total
             log.warning(
                 "batched ingest of %d file(s) for %s failed before commit; "
@@ -432,21 +427,15 @@ class IngestJob:
                 f.rank: self.process_file(f.path, table_key=table_key)
                 for f in files
             }
-        rows_in: dict[int, int] | None = dict.fromkeys(ranks, 0)
-        rows_loaded: dict[int, int] = {}
-        if appended:
-            rows_in = _per_file_rows(obs_in, ranks, recount=union)
+        if frames:
+            rows_in = _per_file_rows(obs_in, ranks, recount=union) or {}
             rows_loaded = _per_file_rows(obs_out, ranks) or {}
-        for f in batched:
-            n_in = None if rows_in is None else rows_in[f.rank]
-            out[f.rank] = (
-                FileResult(f.path.name, ledger_mod.STATUS_EMPTY)
-                if n_in == 0
-                else FileResult(
+            for f in batched:
+                out[f.rank] = FileResult(
                     f.path.name, ledger_mod.STATUS_UPLOADED,
-                    rows_in=n_in or 0, rows_loaded=rows_loaded.get(f.rank, 0),
+                    rows_in=rows_in.get(f.rank, 0),
+                    rows_loaded=rows_loaded.get(f.rank, 0),
                 )
-            )
         self.ledger.append_many(
             [(f.path.name, out[f.rank].status) for f in files]
         )

@@ -198,6 +198,37 @@ def read_header(
     return next(_csv.reader(io.StringIO(line), delimiter=delimiter), [])
 
 
+#: what Java's ``String.trim`` strips: every char up to U+0020
+_JAVA_TRIM = "".join(map(chr, range(0x21)))
+
+
+def has_rows(file_path: str | Path, encoding: str | None = None) -> bool:
+    """Whether :func:`read_raw_csv`'s scan of the file yields any row,
+    decided on the driver (reference: pandas reads no rows \u2192
+    ``util/data_processing.py:467-470``).
+
+    With ``multiLine`` off, Spark splits the file at ``\\n``, ``\\r`` or
+    ``\\r\\n`` (as ``newline=""`` text reads do), skips every line that
+    is blank after Java's ``trim`` (all chars \u2264 U+0020) and takes the
+    first other line as the header. So the scan has rows iff the file
+    has two non-blank lines; reading stops at the second. A leading BOM
+    is not text: Hadoop's line reader drops one UTF-8 BOM, and the
+    UTF-16/32 transcode drops them all."""
+    if encoding is None:
+        encoding = detect_encoding(file_path) or "utf-8"
+    native = _spark_native_encoding(encoding)
+    seen = 0
+    with _open_text(file_path, encoding) as f:
+        for i, line in enumerate(f):
+            if i == 0:
+                line = line.removeprefix("\ufeff") if native else line.lstrip("\ufeff")
+            if line.strip(_JAVA_TRIM):
+                seen += 1
+                if seen == 2:
+                    return True
+    return False
+
+
 def header_schema(
     header: list[str] | tuple[str, ...], case_sensitive: bool = False
 ) -> T.StructType:

@@ -468,3 +468,49 @@ def test_sniffed_header_scan_matches_spark_inference(spark, tmp_path, content):
     assert sniffed.columns == inferred.columns
     assert sorted(map(tuple, sniffed.collect())) == sorted(
         map(tuple, inferred.collect()))
+
+
+_EMPTINESS_SHAPES = {
+    "header_only": b"a,b\n",
+    "header_no_newline": b"a,b",
+    "blank_after_header": b"a,b\n\n\n",
+    "whitespace_lines": b"a,b\n   \n",
+    "tab_line": b"a,b\n\t\t\n",
+    "vt_ff_line": b"a,b\n\x0b\x0c\n",
+    "crlf_blank_lines": b"a,b\r\n\r\n\r\n",
+    "cr_only_with_data": b"a,b\r1,2\r",
+    "leading_blanks_header": b"\n \na,b\n",
+    "leading_blanks_data": b"\n \na,b\n1,2\n",
+    "delimiters_only_row": b"a;b\n;\n",
+    "nul_line": b"a,b\n\x00\n",
+    "nbsp_line": "a,b\n \n".encode("utf-8"),
+    "utf8_bom_header": b"\xef\xbb\xbfa,b\n",
+    "utf16_header": "a,b\n".encode("utf-16"),
+    "utf16_row": "a,b\n1,2\n".encode("utf-16"),
+    "gz_header": b"a,b\n",
+    "gz_row": b"a,b\n1,2\n",
+    "quoted_newline_header": b'"a\nb",c\n',
+}
+
+
+@pytest.mark.parametrize("shape", list(_EMPTINESS_SHAPES))
+def test_has_rows_matches_spark_scan(spark, tmp_path, shape):
+    """The driver's emptiness sniff agrees with Spark's scan: blank means
+    all chars <= U+0020 (Java's trim, so NUL is blank and NBSP is not),
+    the first other line is the header, and multiLine is off, so a
+    quoted newline in the header leaves one row."""
+    import gzip
+
+    from datawarehouse_backup_system_spark.sources.csv_source import (
+        has_rows,
+        read_raw_csv,
+    )
+
+    data = _EMPTINESS_SHAPES[shape]
+    if shape.startswith("gz_"):
+        path = tmp_path / "export.csv.gz"
+        path.write_bytes(gzip.compress(data))
+    else:
+        path = tmp_path / "export.csv"
+        path.write_bytes(data)
+    assert has_rows(path) == (read_raw_csv(spark, str(path)).count() > 0)

@@ -4,11 +4,13 @@ Ledger batches are written and read with pyarrow; these tests pin that
 the driver-side folds give exactly what Spark folds over the same files
 (including a batch written by Spark's own parquet writer), that a
 stranded hidden batch file stays invisible until it is swept, and that
-no metadata step of a cycle launches a Spark job.
+no metadata step of a cycle launches a Spark job. The id watermark is
+folded from parquet footers the same way, and must equal MAX(id).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
@@ -25,9 +27,11 @@ from datawarehouse_backup_system_spark.ledger import (
     STATUS_WRITE_RESTORED as RESTORED,
     Ledger,
 )
+from datawarehouse_backup_system_spark.operators.ids import next_id_watermark
 from datawarehouse_backup_system_spark.plans.ingest import IngestJob, _sniff
 from datawarehouse_backup_system_spark.registry import SchemaRegistry
 from datawarehouse_backup_system_spark.sources.catalog import Router
+from datawarehouse_backup_system_spark.sources.csv_source import has_rows
 
 from fixtures import generate_f1
 
@@ -190,3 +194,106 @@ def test_cycle_metadata_launches_no_spark_job(spark, tmp_path):
     jobs = {name: _jobs_in(spark, f"no-job-{name}", fn)
             for name, fn in steps.items()}
     assert jobs == dict.fromkeys(steps, 0)
+
+
+def test_append_sweeps_legacy_ledger_stage_dirs(spark, tmp_path):
+    """CAS staging dirs that earlier versions stranded next to the ledger
+    dir go with the same sweep: an old one is removed, a young one kept."""
+    led = Ledger(spark, tmp_path / "_ledger")
+    old = tmp_path / "_ledger_stage-0ld00000"
+    young = tmp_path / "_ledger_stage-y0ung000"
+    for d in (old, young):
+        d.mkdir()
+        (d / "part-00000.parquet").write_bytes(b"stranded")
+    day_ago = time.time() - ledger_mod._TMP_TTL_S - 60
+    os.utime(old, (day_ago, day_ago))
+    led.append("a.csv", ledger_mod.STATUS_UPLOADED)
+    assert not old.exists() and young.exists()
+    assert led.processed_set() == {"a.csv"}
+
+
+def test_watermark_from_footers_matches_aggregate(spark, tmp_path):
+    """``next_id_watermark`` folds the parquet footers of a bare local
+    scan with no Spark job, and equals MAX(id) on every frame: files
+    written by pyarrow (with and without statistics) or by the append,
+    a ``_stats/`` manifest that must not count, and the frames that still
+    run the aggregate (filtered, in-memory, an absent table's)."""
+    fx = generate_f1(tmp_path)
+    job = _job(spark, tmp_path, fx)
+    schema = job.registry.get("mini_campaign_events")
+    assert next_id_watermark(job.read_table(schema)) == 0  # absent table
+    job.run(tmp_path)
+    written = job.read_table(schema)
+    assert all(u.rsplit("/", 1)[-1].startswith("w") for u in written.inputFiles())
+
+    ids = pa.table({"id": pa.array([3, None, 41, 7], pa.int64()),
+                    "v": ["a", "b", "c", "d"]})
+    boot, nostats, manifest = (tmp_path / n for n in ("boot", "nostats", "manifest"))
+    for d in (boot, nostats, manifest / "_stats"):
+        d.mkdir(parents=True)
+    pq.write_table(ids, boot / "part-0.parquet", row_group_size=2)
+    pq.write_table(ids, nostats / "part-0.parquet", row_group_size=2,
+                   write_statistics=False)
+    pq.write_table(ids, manifest / "part-0.parquet")
+    pq.write_table(pa.table({"id": pa.array([10**12], pa.int64())}),
+                   manifest / "_stats" / "part-0.parquet")
+
+    footers = {
+        "pyarrow_bootstrap": spark.read.parquet(str(boot)),
+        "append_files": written,
+        "no_statistics": spark.read.parquet(str(nostats)),
+        "stats_manifest": spark.read.parquet(str(manifest)),
+    }
+    aggregates = {
+        "filtered": written.where(F.col("id") < 100),
+        "in_memory": spark.createDataFrame([(4,), (11,), (None,)], "id long"),
+    }
+    for name, df in {**footers, **aggregates}.items():
+        want = df.agg(F.max("id")).collect()[0][0] or 0
+        assert next_id_watermark(df) == want, name
+    assert next_id_watermark(footers["stats_manifest"]) == 41
+    jobs = {name: _jobs_in(spark, f"wm-{name}", lambda df=df: next_id_watermark(df))
+            for name, df in footers.items()}
+    assert jobs == dict.fromkeys(footers, 0)
+
+
+def test_cycle_decisions_launch_no_spark_job(spark, tmp_path):
+    """Besides the append, a cycle decides on the driver: the watermark
+    (parquet footers), its export, and which files are EMPTY. So a
+    landing dir of header-only, over-wide and unroutable files costs no
+    Spark job at all."""
+    from fixtures import generate_dirty_day
+
+    fx = generate_f1(tmp_path)
+    job = _job(spark, tmp_path, fx)
+    schema = job.registry.get("mini_campaign_events")
+    job.run(tmp_path)
+    wm = next_id_watermark(job.read_table(schema))
+    assert wm > 0
+
+    day = generate_dirty_day(tmp_path / "day")
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    want = {
+        "last24h__20240301_04.csv": ledger_mod.STATUS_EMPTY,            # header only
+        "last24h__20240301_06.csv": ledger_mod.STATUS_EMPTY,            # wide, header only
+        "last24h__20240301_08.csv": ledger_mod.STATUS_COLUMN_MISMATCH,  # wide, with rows
+        "zz_unroutable.csv": ledger_mod.STATUS_NO_SCHEMA,
+    }
+    for n in want:
+        (day["dir"] / n).rename(landing / n)
+    quiet = _job(spark, tmp_path / "quiet", day)
+    results = []
+    wm_out = tmp_path / "watermarks.json"
+
+    steps = {
+        "watermark": lambda: next_id_watermark(job.read_table(schema)),
+        "export_watermarks": lambda: job.export_watermarks(fx["schema_path"], wm_out),
+        "has_rows": lambda: has_rows(landing / "last24h__20240301_08.csv"),
+        "run_without_data": lambda: results.extend(quiet.run(landing)),
+    }
+    jobs = {name: _jobs_in(spark, f"no-job-{name}", fn)
+            for name, fn in steps.items()}
+    assert jobs == dict.fromkeys(steps, 0)
+    assert {r.file_name: r.status for r in results} == want
+    assert json.loads(wm_out.read_text())["mini_campaign_events"]["last_id"] == wm
