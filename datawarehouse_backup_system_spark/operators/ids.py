@@ -41,9 +41,10 @@ def next_id_watermark(target: DataFrame, id_col: str = "id") -> int:
     no Spark job runs; a row group written without min/max reads just
     that column chunk. Files outside the table's listing — a ``_stats/``
     manifest, a staging dir — are not in ``inputFiles()`` and never
-    count. Any other frame (filtered, in-memory, the empty frame an
-    absent table reads as, or a scan whose files lack ``id_col``) runs
-    the aggregate."""
+    count. The empty frame an absent table reads as (an empty local
+    relation) is 0, also with no job. Any other frame (filtered,
+    in-memory rows, or a scan whose files lack ``id_col``) runs the
+    aggregate."""
     maxes = _footer_maxes(target, id_col)
     if maxes is None:
         m = target.agg(F.max(id_col).alias("m")).collect()[0]["m"]
@@ -54,11 +55,15 @@ def next_id_watermark(target: DataFrame, id_col: str = "id") -> int:
 
 def _footer_maxes(target: DataFrame, id_col: str) -> list[int | None] | None:
     """Each row group's MAX(``id_col``) (``None`` if all null) from the
-    parquet footers of a bare local scan; ``None`` when ``target`` is no
-    such scan or the footers cannot say."""
+    parquet footers of a bare local scan; ``[]`` for an empty local
+    relation; ``None`` when ``target`` is neither or the footers cannot
+    say."""
     plan = target._jdf.queryExecution().analyzed()
+    kind = plan.getClass().getSimpleName()
+    if kind == "LocalRelation" and plan.data().isEmpty():
+        return []
     if (
-        plan.getClass().getSimpleName() != "LogicalRelation"
+        kind != "LogicalRelation"
         or plan.relation().getClass().getSimpleName() != "HadoopFsRelation"
         or plan.relation().fileFormat().shortName() != "parquet"
     ):

@@ -19,7 +19,9 @@ Spark work, and per-file ``rows_in`` and ``rows_loaded`` ride it as
 Observations. Catalyst pipelines the projections and
 the anti-join; nothing materializes until the final write. The ledger
 (S12/S13) provides file-level idempotency exactly like the reference's
-processed_files table.
+processed_files table. :meth:`IngestJob.process_file` is the same core
+on a one-file listing, and a table whose plan fails before its commit
+is planned again one file at a time, so there is one planner.
 
 **Ingest order** (first-occurrence dedup + id order) is exact listing
 order, reconstructed distributively as the composite
@@ -287,15 +289,15 @@ class IngestJob:
         normalized: DataFrame,
         schema: TableSchema,
         last_id: int,
-        history: DataFrame | None = None,
-        loaded: tuple[Observation, list[int]] | None = None,
+        history: DataFrame,
+        loaded: tuple[Observation, list[int]],
     ) -> DataFrame:
         """Everything between the normalized scan and the write, as one
         lazy DataFrame: hash → J1 → J2 → casts → ids. ``normalized`` must
         carry SEQ_COLS (see _scan_with_seq). ``history``: the snapshot as
-        already read for the watermark (default: read it). ``loaded``:
-        (Observation, file ranks) that counts each file's surviving rows
-        on the id'd frame, before SEQ_COLS go."""
+        already read for the watermark. ``loaded``: (Observation, file
+        ranks) that counts each file's surviving rows on the id'd frame,
+        before SEQ_COLS go."""
         hashed = with_row_hash(normalized, list(schema.data_columns))
         deduped = self_dedup_first(hashed, order_col=list(SEQ_COLS))
         novel = self._dedup_against_history(deduped, schema, history)
@@ -305,9 +307,8 @@ class IngestJob:
         with_ids = assign_dense_ids(
             casted, order_cols=list(SEQ_COLS), start=last_id
         )
-        if loaded is not None:
-            obs, ranks = loaded
-            with_ids = with_ids.observe(obs, *_rank_counts(ranks))
+        obs, ranks = loaded
+        with_ids = with_ids.observe(obs, *_rank_counts(ranks))
         ingest_date = (
             F.lit(self.ingest_date).cast("date")
             if self.ingest_date
@@ -317,45 +318,6 @@ class IngestJob:
             with_ids.drop(*SEQ_COLS)
             .select(*schema.column_names)
             .withColumn("ingest_date", ingest_date)
-        )
-
-    def _ingest(self, path: Path, table_key: str, name: str) -> FileResult:
-        """The per-file path: scan → plan → write → ledger for one file,
-        ledgered under its landing ``name`` (the .zip, not its extracted
-        member, since run()'s skip check compares against the listing)."""
-        schema = self.registry.get(table_key)
-        rename_map = self.registry.rename_map(table_key)
-        if not csv_source.has_rows(path):
-            # reference records empty inputs distinctly
-            # (util/data_processing.py:467-470)
-            self.ledger.append(name, ledger_mod.STATUS_EMPTY)
-            return FileResult(name, ledger_mod.STATUS_EMPTY)
-        raw = self._scan_with_seq([path])
-        target = self.read_table(schema)
-        last_id = next_id_watermark(target)
-        # rows_in rides the write job as an Observation on the pre-dedup
-        # scan (review r10: the field was never populated)
-        obs_in = Observation()
-        normalized, report = normalize(
-            raw.observe(obs_in, *_rank_counts([0])),
-            (*schema.data_columns, *SEQ_COLS), rename_map,
-        )
-        if not report.ok:
-            self.ledger.append(name, ledger_mod.STATUS_COLUMN_MISMATCH)
-            return FileResult(
-                name, ledger_mod.STATUS_COLUMN_MISMATCH, error=report.error
-            )
-        plan = self.build_plan(normalized, schema, last_id, target)
-        try:
-            loaded = self._atomic_append(plan, schema)
-        except Exception as exc:  # noqa: BLE001 — reference 'insert error'
-            self.ledger.append(name, ledger_mod.STATUS_INSERT_ERROR)
-            return FileResult(name, ledger_mod.STATUS_INSERT_ERROR, error=str(exc))
-        self.ledger.append(name, ledger_mod.STATUS_UPLOADED)
-        rows_in = _per_file_rows(obs_in, [0], recount=raw) or {0: 0}
-        return FileResult(
-            name, ledger_mod.STATUS_UPLOADED,
-            rows_in=rows_in[0], rows_loaded=loaded,
         )
 
     def _ingest_table(
@@ -373,10 +335,12 @@ class IngestJob:
         frame commits no write. Everything ends in one ledger status
         write, after the commit.
 
-        If anything fails before the commit, the table's files take the
-        per-file :meth:`process_file` path in listing order instead, so
+        If anything fails before the commit, a table of several files
+        runs this method again on each file alone, in listing order, so
         one bad file cannot sink its siblings and the outcome still
-        matches a file-by-file cycle.
+        matches a file-by-file cycle. A single file is not retried: a
+        failed append makes it INSERT_ERROR, any other failure
+        :func:`_unexpected`, and that status is its ledger write.
         """
         schema = self.registry.get(table_key)
         rename_map = self.registry.rename_map(table_key)
@@ -384,6 +348,7 @@ class IngestJob:
         out: dict[int, FileResult] = {}
         frames: list[DataFrame] = []
         batched: list[_Routed] = []
+        appending = False
         try:
             profiles: dict[tuple, list[_Routed]] = {}
             for f in files:
@@ -416,26 +381,37 @@ class IngestJob:
                     union.observe(obs_in, *_rank_counts(ranks)), schema,
                     next_id_watermark(target), target, (obs_out, ranks),
                 )
+                appending = True
                 self._atomic_append(plan, schema)
-        except Exception:  # noqa: BLE001 — the per-file path is total
-            log.warning(
-                "batched ingest of %d file(s) for %s failed before commit; "
-                "ingesting them one by one", len(files), table_key,
-                exc_info=True,
-            )
-            return {
-                f.rank: self.process_file(f.path, table_key=table_key)
-                for f in files
-            }
-        if frames:
-            rows_in = _per_file_rows(obs_in, ranks, recount=union) or {}
-            rows_loaded = _per_file_rows(obs_out, ranks) or {}
-            for f in batched:
-                out[f.rank] = FileResult(
-                    f.path.name, ledger_mod.STATUS_UPLOADED,
-                    rows_in=rows_in.get(f.rank, 0),
-                    rows_loaded=rows_loaded.get(f.rank, 0),
+        except Exception as exc:  # noqa: BLE001 — total function, D4
+            if len(files) > 1:
+                log.warning(
+                    "batched ingest of %d file(s) for %s failed before "
+                    "commit; ingesting them one by one", len(files),
+                    table_key, exc_info=True,
                 )
+                out = {}
+                for f in files:
+                    out.update(self._ingest_table([f], table_key))
+                return out
+            log.warning("ingest of %s for %s failed", files[0].path.name,
+                        table_key, exc_info=True)
+            status = (
+                ledger_mod.STATUS_INSERT_ERROR if appending else _unexpected(exc)
+            )
+            out[files[0].rank] = FileResult(
+                files[0].path.name, status, error=str(exc)
+            )
+        else:
+            if frames:
+                rows_in = _per_file_rows(obs_in, ranks, recount=union) or {}
+                rows_loaded = _per_file_rows(obs_out, ranks) or {}
+                for f in batched:
+                    out[f.rank] = FileResult(
+                        f.path.name, ledger_mod.STATUS_UPLOADED,
+                        rows_in=rows_in.get(f.rank, 0),
+                        rows_loaded=rows_loaded.get(f.rank, 0),
+                    )
         self.ledger.append_many(
             [(f.path.name, out[f.rank].status) for f in files]
         )
@@ -487,7 +463,7 @@ class IngestJob:
         footprint-threshold pattern as graph._stage_static_side): below
         ``hash_index._INDEX_MIN_BYTES`` (4 GiB) of on-disk table
         footprint, the plain column-pruned history anti-join runs —
-        at local scale its per-file shuffle is a broadcast under AQE and
+        at local scale its shuffle is a broadcast under AQE and
         the index would only add write overhead. Above it, the batch
         anti-joins the persisted row_hash index bucketed on the join key
         (:mod:`~.hash_index`), so a 100 TB history is never re-shuffled
@@ -602,14 +578,15 @@ class IngestJob:
     def process_file(
         self, path: str | Path, table_key: str | None = None
     ) -> FileResult:
-        """One file through the full pipeline, every failure ledgered
-        (D4 total function). This is the batched core's fallback.
+        """One landing file through the cycle's core (:meth:`_ingest_files`
+        on a one-path listing): the result and the ledger status that
+        :meth:`run` would give it, keyed by the landing name (a zip's own
+        name, not its member's). Total (D4): whatever escapes the core is
+        still ledgered, as :func:`_unexpected`.
 
-        ``table_key``: optional routing override — when the caller
-        already knows the table (the batched core's fallback), filename
-        routing is skipped, so a valid file whose NAME the router cannot
-        map is still ingested instead of being ledgered NO_SCHEMA forever
-        (review r9).
+        ``table_key``: optional routing override; filename routing is
+        skipped, so a file whose name the router cannot map is ingested
+        into that table instead of being ledgered NO_SCHEMA.
 
         CONCURRENCY: building block — takes no :class:`WriterLease` and
         runs no recovery; :meth:`run` provides both. A caller invoking
@@ -618,24 +595,11 @@ class IngestJob:
         uncommitted crashed write's files leak into read_table's history
         view and anti-join freshly re-ingested rows away."""
         path = Path(path)
-        name = path.name
-        # the extracted member is fully consumed once _ingest returns (the
-        # append is materialized) and its ledger entry is the ZIP's name:
-        # leaving it leaked one plaintext copy per zip per cycle (review
-        # r10), so the scratch dir goes in the finally below
-        staging = self._staging()
         try:
-            routed = self._triage(path, staging, table_key)
-            if isinstance(routed, FileResult):
-                self.ledger.append(name, routed.status)
-                return routed
-            scan_path, table_key = routed
-            return self._ingest(scan_path, table_key, name)
+            return self._ingest_files([path], table_key)[0]
         except Exception as exc:  # noqa: BLE001 — total function, D4
-            self.ledger.append(name, _unexpected(exc))
-            return FileResult(name, _unexpected(exc), error=str(exc))
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+            self.ledger.append(path.name, _unexpected(exc))
+            return FileResult(path.name, _unexpected(exc), error=str(exc))
 
     def _ingest_files(
         self,
@@ -643,14 +607,16 @@ class IngestJob:
         table_key: str | None = None,
         heartbeat: Callable[[], None] = lambda: None,
     ) -> list[FileResult]:
-        """The batched core of :meth:`run` and :meth:`process_batch`: one
-        result per path, in ``paths`` order.
+        """The core of :meth:`run` and :meth:`process_file`: one result
+        per path, in ``paths`` order.
 
         The driver triages every file first (no Spark job) and ledgers
         what it decides — EXTRACTION_FAILED, NOT_CSV, NO_SCHEMA — in one
         write. Routed files are grouped by table (``table_key`` overrides
         routing) and each table is ingested as one plan
-        (:meth:`_ingest_table`), with ``heartbeat`` called after each."""
+        (:meth:`_ingest_table`), with ``heartbeat`` called after each.
+        Extracted zip members live in one scratch dir, removed on return
+        (left behind, it held a plaintext copy of every zip per cycle)."""
         staging = self._staging()
         results: dict[int, FileResult] = {}
         tables: dict[str, list[_Routed]] = {}
@@ -676,55 +642,6 @@ class IngestJob:
         finally:
             shutil.rmtree(staging, ignore_errors=True)
         return [results[i] for i in range(len(paths))]
-
-    def process_batch(self, paths: list[str | Path], table_key: str) -> FileResult:
-        """Ingest many same-table files as one distributed plan: the
-        batched core of :meth:`run`, with filename routing replaced by
-        ``table_key``.
-
-        Files are grouped by sniffed (encoding, delimiter, header)
-        profile; each profile is one multi-path scan, and each file
-        carries its position in ``paths`` as its rank, so dedup winners
-        and ids follow ``paths`` order exactly as sequential
-        :meth:`process_file` calls would, even when profiles interleave.
-        Each file's own status goes to the ledger. The returned summary
-        sums ``rows_in``/``rows_loaded``; its ``status`` is the first
-        status that is neither UPLOADED nor EMPTY, else EMPTY when every
-        file was empty, else UPLOADED.
-
-        CONCURRENCY: like :meth:`process_file`, this is a building block
-        — it does not take the :class:`WriterLease` or run recovery.
-        Callers outside :meth:`run` must hold the lease themselves (the
-        write-id format is single-writer) and recover first.
-        """
-        paths = [Path(p) for p in paths]
-        if not paths:
-            # total-function discipline: an empty listing is a no-op
-            # cycle, not an IndexError (review r8)
-            return FileResult("batch:[]", ledger_mod.STATUS_EMPTY,
-                              error="empty batch")
-        label = f"batch:{paths[0].name}..{paths[-1].name}[{len(paths)}]"
-        try:
-            results = self._ingest_files(paths, table_key)
-        except Exception as exc:  # noqa: BLE001 — total function, D4
-            return FileResult(label, _unexpected(exc), error=str(exc))
-        bad = [
-            r for r in results
-            if r.status not in (ledger_mod.STATUS_UPLOADED, ledger_mod.STATUS_EMPTY)
-        ]
-        if bad:
-            status = bad[0].status
-        elif all(r.status == ledger_mod.STATUS_EMPTY for r in results):
-            status = ledger_mod.STATUS_EMPTY
-        else:
-            status = ledger_mod.STATUS_UPLOADED
-        return FileResult(
-            label,
-            status,
-            rows_in=sum(r.rows_in for r in results),
-            rows_loaded=sum(r.rows_loaded for r in results),
-            error=bad[0].error if bad else None,
-        )
 
     def run(self, input_dir: str | Path) -> list[FileResult]:
         """One cycle (reference main(), minus the daemon sleep — cadence is

@@ -66,6 +66,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from datawarehouse_backup_system_spark import ledger as ledger_mod
 from datawarehouse_backup_system_spark.ledger import Ledger
@@ -401,7 +402,12 @@ class WriteIdParquetFormat(SnapshotFormat):
             return False
 
         if not path.exists() or not _has_data():
-            return spark.createDataFrame([], fallback)
+            # from an empty arrow table, the frame's plan is an empty
+            # LocalRelation: the driver can see it holds no row (an empty
+            # row list would plan as an RDD scan, whose MAX(id) is 2 jobs)
+            return spark.createDataFrame(
+                to_arrow_schema(fallback).empty_table(), fallback
+            )
         if self.merge_schema:
             # reconciling a column superset needs every file footer
             return self._reader(spark).parquet(str(path))

@@ -94,17 +94,17 @@ def fx_rows(fx, i):
     return rows[1:]
 
 
-def test_batch_ingest_equals_sequential(spark, tmp_path):
-    """process_batch (one plan over N files) must produce the same table
-    state as sequential process_file calls — same survivors, same dedup
-    winners, dense ids."""
+def test_ingest_files_equals_sequential(spark, tmp_path):
+    """``_ingest_files`` (one plan over N files) must produce the same
+    table state as sequential process_file calls — same survivors, same
+    dedup winners, dense ids."""
     fx = generate_f1(tmp_path)
     seq_job = make_job(spark, tmp_path / "seq", fx)
     for f in fx["files"][:2]:  # files 1+2 share the full header layout
         seq_job.process_file(f)
     batch_job = make_job(spark, tmp_path / "batch", fx)
-    res = batch_job.process_batch(fx["files"][:2], "mini_campaign_events")
-    assert res.status == "uploaded to ClickHouse"
+    res = batch_job._ingest_files(fx["files"][:2], "mini_campaign_events")
+    assert [r.status for r in res] == ["uploaded to ClickHouse"] * 2
 
     schema = seq_job.registry.get("mini_campaign_events")
     seq_tbl = seq_job.read_table(schema)
@@ -141,21 +141,22 @@ def test_batch_divergent_profile_falls_back_per_file(spark, tmp_path):
         encoding="utf-8",
     )
     job = make_job(spark, tmp_path, fx)
-    res = job.process_batch(
+    res = job._ingest_files(
         [fx["files"][0], fx["files"][1], comma], "mini_campaign_events"
     )
-    assert res.status == ledger_mod.STATUS_UPLOADED
+    assert [r.status for r in res] == [ledger_mod.STATUS_UPLOADED] * 3
     # the divergent file was ingested, not blacklisted
     rows = job.ledger.read().collect()
     mine = [r for r in rows if r["file_name"] == comma.name]
     assert [r["status"] for r in mine] == [ledger_mod.STATUS_UPLOADED]
 
-    # empty batch is a total-function no-op, not an IndexError
-    empty = job.process_batch([], "mini_campaign_events")
-    assert empty.status == ledger_mod.STATUS_EMPTY
+    # an empty listing is a total-function no-op, not an IndexError
+    assert job._ingest_files([], "mini_campaign_events") == []
 
 
-def test_batch_divergent_mid_batch_preserves_sequential_order(spark, tmp_path):
+def test_ingest_files_divergent_mid_batch_preserves_sequential_order(
+    spark, tmp_path
+):
     """Review r9 (ADVICE): a divergent file MID-batch whose rows also
     appear in a LATER conforming file must keep sequential semantics —
     ids follow the original path order and first-occurrence dedup
@@ -180,8 +181,8 @@ def test_batch_divergent_mid_batch_preserves_sequential_order(spark, tmp_path):
     for f in order:
         seq_job.process_file(f)
     batch_job = make_job(spark, tmp_path / "batch9", fx)
-    res = batch_job.process_batch(order, "mini_campaign_events")
-    assert res.status == ledger_mod.STATUS_UPLOADED
+    res = batch_job._ingest_files(order, "mini_campaign_events")
+    assert [r.status for r in res] == [ledger_mod.STATUS_UPLOADED] * 3
 
     schema = seq_job.registry.get("mini_campaign_events")
     seq_map = {
@@ -193,7 +194,7 @@ def test_batch_divergent_mid_batch_preserves_sequential_order(spark, tmp_path):
         for r in batch_job.read_table(schema).select("row_hash", "id").collect()
     }
     assert bat_map == seq_map
-    assert res.rows_loaded == len(seq_map)
+    assert sum(r.rows_loaded for r in res) == len(seq_map)
 
 
 def test_ingest_date_partitioning_and_retention(spark, tmp_path):
@@ -386,7 +387,8 @@ def test_batched_run_equals_sequential_process_file(spark, tmp_path):
     leaves the same table — every column, ``id`` and ``row_hash``
     included — the same per-file (status, rows_in, rows_loaded) and the
     same ledger as sequential ``process_file`` calls in listing order,
-    against the same history."""
+    against the same history. Each such call is a one-file listing, so
+    this pins one plan per table against one plan per file."""
     from fixtures import generate_dirty_day
 
     from datawarehouse_backup_system_spark.sources.catalog import discover_files
@@ -414,10 +416,93 @@ def test_batched_run_equals_sequential_process_file(spark, tmp_path):
     assert _landing_statuses(bat) == _landing_statuses(seq)
 
 
+def _outcome(results):
+    return [(r.file_name, r.status, r.rows_in, r.rows_loaded) for r in results]
+
+
+def test_run_shared_member_name_plans_each_file_alone(spark, tmp_path, caplog):
+    """Two zips whose first members share a basename cannot share one
+    scan (the file rank joins on basename), so ``run`` plans the table
+    again one file at a time: every file uploads, and the table, results
+    and ledger equal sequential ``process_file`` calls in listing order."""
+    import logging
+    import zipfile
+
+    from datawarehouse_backup_system_spark import ledger as ledger_mod
+    from datawarehouse_backup_system_spark.sources.catalog import discover_files
+
+    (tmp_path / "fx").mkdir()
+    fx = generate_f1(tmp_path / "fx", n=60)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for name, src in (("last24h__a.csv.zip", fx["files"][0]),
+                      ("last24h__b.csv.zip", fx["files"][1])):
+        with zipfile.ZipFile(landing / name, "w") as zf:
+            zf.write(src, "last24h__x.csv")
+    (landing / "last24h__c.csv").write_bytes(fx["files"][2].read_bytes())
+
+    seq = make_job(spark, tmp_path / "seq", fx)
+    seq_res = [seq.process_file(p) for p in discover_files(landing)]
+    bat = make_job(spark, tmp_path / "bat", fx)
+    with caplog.at_level(logging.WARNING):
+        bat_res = bat.run(landing)
+
+    assert "ingesting them one by one" in caplog.text
+    assert [(r.file_name, r.status) for r in bat_res] == [
+        (n, ledger_mod.STATUS_UPLOADED)
+        for n in ("last24h__a.csv.zip", "last24h__b.csv.zip", "last24h__c.csv")
+    ]
+    assert _outcome(bat_res) == _outcome(seq_res)
+    assert _table_rows(bat) == _table_rows(seq)
+    assert _landing_statuses(bat) == _landing_statuses(seq)
+
+
+def test_run_failed_sniff_sinks_only_its_file(spark, tmp_path, monkeypatch):
+    """A file whose sniff raises is ledgered ``unexpected: <ExcType>``
+    exactly once, and its table's other files upload with the rows and
+    ids that sequential ``process_file`` calls give."""
+    import shutil
+
+    from datawarehouse_backup_system_spark import ledger as ledger_mod
+    from datawarehouse_backup_system_spark.plans import ingest
+    from datawarehouse_backup_system_spark.sources.catalog import discover_files
+
+    (tmp_path / "fx").mkdir()
+    fx = generate_f1(tmp_path / "fx", n=60)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for f in fx["files"]:
+        shutil.copy(f, landing)
+    listing = discover_files(landing)
+    bad = listing[1].name
+    real_sniff = ingest._sniff
+
+    def sniff(path):
+        if path.name == bad:
+            raise RuntimeError("unreadable export")
+        return real_sniff(path)
+
+    monkeypatch.setattr(ingest, "_sniff", sniff)
+    seq = make_job(spark, tmp_path / "seq", fx)
+    seq_res = [seq.process_file(p) for p in listing]
+    bat = make_job(spark, tmp_path / "bat", fx)
+    bat_res = bat.run(landing)
+
+    failed = f"{ledger_mod.STATUS_UNEXPECTED}: RuntimeError"
+    assert [r.status for r in bat_res] == [
+        ledger_mod.STATUS_UPLOADED, failed, ledger_mod.STATUS_UPLOADED]
+    assert bat_res[1].error == "unreadable export"
+    assert _outcome(bat_res) == _outcome(seq_res)
+    assert [r["status"] for r in bat.ledger.read().collect()
+            if r["file_name"] == bad] == [failed]
+    assert _table_rows(bat) == _table_rows(seq)
+    assert _landing_statuses(bat) == _landing_statuses(seq)
+
+
 def test_batched_run_all_empty_table_commits_nothing(spark, tmp_path):
     """Header-only files only — one of them wide, which stays EMPTY rather
-    than COLUMN_MISMATCH, as the per-file path's empty-first order gives:
-    the table batch writes no data and commits no write-id."""
+    than COLUMN_MISMATCH, because emptiness is decided before the width
+    check: the table batch writes no data and commits no write-id."""
     from fixtures import generate_dirty_day
 
     from datawarehouse_backup_system_spark import ledger as ledger_mod

@@ -214,14 +214,15 @@ def test_append_sweeps_legacy_ledger_stage_dirs(spark, tmp_path):
 
 def test_watermark_from_footers_matches_aggregate(spark, tmp_path):
     """``next_id_watermark`` folds the parquet footers of a bare local
-    scan with no Spark job, and equals MAX(id) on every frame: files
-    written by pyarrow (with and without statistics) or by the append,
-    a ``_stats/`` manifest that must not count, and the frames that still
-    run the aggregate (filtered, in-memory, an absent table's)."""
+    scan, and an absent table's empty frame, with no Spark job, and
+    equals MAX(id) on every frame: files written by pyarrow (with and
+    without statistics) or by the append, a ``_stats/`` manifest that
+    must not count, and the frames that still run the aggregate
+    (filtered, in-memory)."""
     fx = generate_f1(tmp_path)
     job = _job(spark, tmp_path, fx)
     schema = job.registry.get("mini_campaign_events")
-    assert next_id_watermark(job.read_table(schema)) == 0  # absent table
+    absent = job.read_table(schema)
     job.run(tmp_path)
     written = job.read_table(schema)
     assert all(u.rsplit("/", 1)[-1].startswith("w") for u in written.inputFiles())
@@ -243,6 +244,7 @@ def test_watermark_from_footers_matches_aggregate(spark, tmp_path):
         "append_files": written,
         "no_statistics": spark.read.parquet(str(nostats)),
         "stats_manifest": spark.read.parquet(str(manifest)),
+        "absent_table": absent,
     }
     aggregates = {
         "filtered": written.where(F.col("id") < 100),
@@ -252,6 +254,7 @@ def test_watermark_from_footers_matches_aggregate(spark, tmp_path):
         want = df.agg(F.max("id")).collect()[0][0] or 0
         assert next_id_watermark(df) == want, name
     assert next_id_watermark(footers["stats_manifest"]) == 41
+    assert next_id_watermark(absent) == 0
     jobs = {name: _jobs_in(spark, f"wm-{name}", lambda df=df: next_id_watermark(df))
             for name, df in footers.items()}
     assert jobs == dict.fromkeys(footers, 0)
@@ -259,9 +262,9 @@ def test_watermark_from_footers_matches_aggregate(spark, tmp_path):
 
 def test_cycle_decisions_launch_no_spark_job(spark, tmp_path):
     """Besides the append, a cycle decides on the driver: the watermark
-    (parquet footers), its export, and which files are EMPTY. So a
-    landing dir of header-only, over-wide and unroutable files costs no
-    Spark job at all."""
+    (parquet footers), its export (also for a table never ingested),
+    and which files are EMPTY. So a landing dir of header-only,
+    over-wide and unroutable files costs no Spark job at all."""
     from fixtures import generate_dirty_day
 
     fx = generate_f1(tmp_path)
@@ -285,10 +288,14 @@ def test_cycle_decisions_launch_no_spark_job(spark, tmp_path):
     quiet = _job(spark, tmp_path / "quiet", day)
     results = []
     wm_out = tmp_path / "watermarks.json"
+    fresh = _job(spark, tmp_path / "fresh", fx)
+    fresh_out = tmp_path / "fresh_watermarks.json"
 
     steps = {
         "watermark": lambda: next_id_watermark(job.read_table(schema)),
         "export_watermarks": lambda: job.export_watermarks(fx["schema_path"], wm_out),
+        "export_never_ingested": lambda: fresh.export_watermarks(
+            fx["schema_path"], fresh_out),
         "has_rows": lambda: has_rows(landing / "last24h__20240301_08.csv"),
         "run_without_data": lambda: results.extend(quiet.run(landing)),
     }
@@ -297,3 +304,5 @@ def test_cycle_decisions_launch_no_spark_job(spark, tmp_path):
     assert jobs == dict.fromkeys(steps, 0)
     assert {r.file_name: r.status for r in results} == want
     assert json.loads(wm_out.read_text())["mini_campaign_events"]["last_id"] == wm
+    declared = json.loads(fx["schema_path"].read_text())
+    assert json.loads(fresh_out.read_text()) == declared

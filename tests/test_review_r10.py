@@ -544,11 +544,11 @@ def test_utf16_and_utf32_csvs_parse_correctly(spark, tmp_path):
         assert rows == [("1", "rene"), ("2", "anna")], (label, enc, rows)
 
 
-def test_process_batch_batch_error_falls_back_per_file(spark, tmp_path):
+def test_ingest_files_batch_error_falls_back_per_file(spark, tmp_path):
     """Review r10: a batch-SCOPED error (duplicate basenames share one
     scan) mass-ledgered every remaining file as unexpected, permanently
-    blacklisting valid files. The fallback now processes them
-    per-file — both files upload."""
+    blacklisting valid files. The fallback now plans each file alone —
+    both files upload."""
     from fixtures import generate_f1
 
     from datawarehouse_backup_system_spark import ledger as ledger_mod
@@ -562,11 +562,11 @@ def test_process_batch_batch_error_falls_back_per_file(spark, tmp_path):
     a_dir.mkdir(); b_dir.mkdir()
     (a_dir / "x.csv").write_bytes(fx["files"][0].read_bytes())
     (b_dir / "x.csv").write_bytes(fx["files"][1].read_bytes())
-    res = job.process_batch(
+    res = job._ingest_files(
         [a_dir / "x.csv", b_dir / "x.csv"], "mini_campaign_events"
     )
-    assert res.status == ledger_mod.STATUS_UPLOADED
-    assert res.rows_loaded > 0
+    assert [r.status for r in res] == [ledger_mod.STATUS_UPLOADED] * 2
+    assert res[0].rows_loaded > 0
     statuses = {
         r["file_name"]: r["status"] for r in job.ledger.read().collect()
     }

@@ -45,13 +45,17 @@ def test_e02_tier_probe_uses_stage_du(spark, monkeypatch):
 
 
 # --------------------------------------------------------------------------
-# ADVICE r10 item 2 — process_batch fallback accounting
+# ADVICE r10 item 2 — batched ingest accounting
 # --------------------------------------------------------------------------
-def test_process_batch_fallback_keeps_pre_exception_rows(spark, tmp_path):
+def test_ingest_files_divergent_profiles_take_one_plan(spark, tmp_path,
+                                                       caplog):
     """ADVICE r10 (ingest.py:555): the exception fallback summed
     rows_in/rows_loaded only over the per-file retries of UNHANDLED
     paths, dropping counts from runs that uploaded before the
-    exception. The pre-exception results now carry into the fold."""
+    exception. Two profiles of one table are now scans of ONE plan: the
+    table is planned once, no fallback runs, and both files count."""
+    import logging
+
     from fixtures import generate_f1
 
     import test_ingest as ti
@@ -61,9 +65,7 @@ def test_process_batch_fallback_keeps_pre_exception_rows(spark, tmp_path):
     job = ti.make_job(spark, tmp_path, fx)
 
     # file B is a UTF-16 transcode of fixture file 2: same table, but a
-    # divergent (encoding) profile. Both profiles are scans of ONE
-    # batched plan, so the per-file path (made to fail once below) is
-    # never needed and both files count.
+    # divergent (encoding) profile
     a = fx["files"][0]
     b = tmp_path / "divergent" / "last24h__b.csv"
     b.parent.mkdir()
@@ -71,49 +73,26 @@ def test_process_batch_fallback_keeps_pre_exception_rows(spark, tmp_path):
         fx["files"][1].read_text(encoding="utf-8").encode("utf-16")
     )
 
-    real_pf = job.process_file
-    calls = {"n": 0}
+    real_table = job._ingest_table
+    planned: list[list[str]] = []
 
-    def raise_once(path, table_key=None):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("mid-batch crash after run A uploaded")
-        return real_pf(path, table_key=table_key)
+    def counted(files, table_key):
+        planned.append([f.path.name for f in files])
+        return real_table(files, table_key)
 
-    job.process_file = raise_once
-    res = job.process_batch([a, b], "mini_campaign_events")
-    job.process_file = real_pf
+    job._ingest_table = counted
+    with caplog.at_level(logging.WARNING):
+        res = job._ingest_files([a, b], "mini_campaign_events")
 
-    assert res.status == ledger_mod.STATUS_UPLOADED
-    assert calls["n"] == 0
+    assert planned == [[a.name, b.name]]
+    assert "ingesting them one by one" not in caplog.text
+    assert [r.status for r in res] == [ledger_mod.STATUS_UPLOADED] * 2
     a_alone_rows = len(ti.fx_rows(fx, 0))
-    assert res.rows_in > a_alone_rows  # A's rows + B's rows, not B only
+    assert res[0].rows_in == a_alone_rows
+    # A's rows + B's rows, not B only
+    assert sum(r.rows_in for r in res) > a_alone_rows
     table = job.read_table(job.registry.get("mini_campaign_events"))
-    assert res.rows_loaded == table.count()
-
-
-def test_process_batch_fallback_all_empty_maps_to_empty(spark, tmp_path):
-    """ADVICE r10 (ingest.py:555): the fallback mapped an all-EMPTY
-    retry outcome to STATUS_UPLOADED where the success path reports
-    STATUS_EMPTY; both paths now share one status fold."""
-    from fixtures import generate_f1
-
-    import test_ingest as ti
-    from datawarehouse_backup_system_spark import ledger as ledger_mod
-    from datawarehouse_backup_system_spark.plans.ingest import FileResult
-
-    fx = generate_f1(tmp_path)
-    job = ti.make_job(spark, tmp_path, fx)
-    # nonexistent paths make the sniff raise inside the table's batched
-    # plan, so the whole batch lands in the per-file fallback
-    job.process_file = lambda p, table_key=None: FileResult(
-        p.name, ledger_mod.STATUS_EMPTY
-    )
-    res = job.process_batch(
-        [tmp_path / "ghost1.csv", tmp_path / "ghost2.csv"],
-        "mini_campaign_events",
-    )
-    assert res.status == ledger_mod.STATUS_EMPTY
+    assert sum(r.rows_loaded for r in res) == table.count()
 
 
 # --------------------------------------------------------------------------
