@@ -12,9 +12,11 @@ Scale notes (the whole point of the rewrite):
 
 - The reference builds an unbounded in-RAM ``set`` per comparison file and
   loops over history files one at a time — O(history) passes, OOM at
-  scale. J2 here is ONE anti-join against the union of history; Spark
-  hash-partitions both sides on ``row_hash`` and spills, and AQE picks
-  broadcast when the new batch is small.
+  scale. J2 here is ONE anti-join against the union of history's
+  ``row_hash`` column as it is, since a left-anti join keeps the same
+  rows whatever duplicates its build side holds: broadcast while history
+  is small, else both sides hash-partitioned on ``row_hash``, spilling
+  as needed.
 - J3 reproduces the reference's manual min/max range pruning, but in Spark
   the ``BETWEEN`` predicate is pushed to parquet row-group stats
   automatically — the "probe" reads only overlapping row groups.
@@ -41,7 +43,9 @@ def self_dedup_first(
     order needs a composite like (file_rank, _metadata.file_block_start,
     mono_id) as used by plans.ingest.
 
-    One shuffle on ``hash_col`` (window partition); no global sort.
+    The window needs rows clustered by ``hash_col``: a shuffle on it,
+    unless ``df`` is already one partition (as in plans.ingest, where the
+    dense ids need that partition too); no global sort.
     """
     reserved = {"_rn"} | ({"_seq"} if order_col is None else set())
     clash = reserved & set(df.columns)
@@ -80,9 +84,7 @@ def anti_join_history(
     selected, so Catalyst prunes the scan to one column (the reference had
     to re-read whole CSVs per file, data_processing.py:308-311).
     """
-    return new_rows.join(
-        history.select(hash_col).distinct(), on=hash_col, how="left_anti"
-    )
+    return new_rows.join(history.select(hash_col), on=hash_col, how="left_anti")
 
 
 def replay_guard(

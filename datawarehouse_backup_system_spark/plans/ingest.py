@@ -16,8 +16,10 @@ would yield no row. Each table then costs one history read, one
 watermark (from parquet footers, no job), one append and one ledger
 status write, whatever its number of files; the append is the only
 Spark work, and per-file ``rows_in`` and ``rows_loaded`` ride it as
-Observations. Catalyst pipelines the projections and
-the anti-join; nothing materializes until the final write. The ledger
+Observations. It runs at most 3 jobs: the broadcast of history's
+``row_hash`` column, one exchange into a single partition (J1, J2 and
+the ids all run after it), and the write. The file rank is a literal
+map lookup, so it adds none. The ledger
 (S12/S13) provides file-level idempotency exactly like the reference's
 processed_files table. :meth:`IngestJob.process_file` is the same core
 on a one-file listing, and a table whose plan fails before its commit
@@ -118,30 +120,15 @@ def _rank_counts(ranks: list[int]) -> list:
     return [F.count_if(F.col("_file_rank") == r).alias(f"r{r}") for r in ranks]
 
 
-def _per_file_rows(
-    obs: Observation, ranks: list[int], recount: DataFrame | None = None
-) -> dict[int, int] | None:
+def _per_file_rows(obs: Observation, ranks: list[int]) -> dict[int, int] | None:
     """Per-file counts read back from ``obs`` (see :func:`_rank_counts`).
-
-    The metric can miss: when no row survives dedup, AQE replaces the
-    plan above the empty stage and drops the observed subtree from the
-    final plan. Then one aggregate job over ``recount`` (the observed
-    frame, when re-reading it is still correct) counts instead. A metric
-    must never sink an upload: if that fails too, warn and return None.
-    """
+    A metric must never sink an upload: if it is unavailable, warn and
+    return None."""
     try:
         got = obs.get
         return {r: int(got[f"r{r}"]) for r in ranks}
     except Exception:  # noqa: BLE001
-        if recount is None:
-            log.warning("ingest Observation unavailable", exc_info=True)
-            return None
-    try:
-        counts = dict(recount.groupBy("_file_rank").count().collect())
-        return {r: int(counts.get(r, 0)) for r in ranks}
-    except Exception:  # noqa: BLE001
-        log.warning("ingest Observation unavailable and recount failed",
-                    exc_info=True)
+        log.warning("ingest Observation unavailable", exc_info=True)
         return None
 
 
@@ -207,82 +194,59 @@ class IngestJob:
         the header. Empty (the default, or a file whose first line is
         blank): Spark infers it.
 
-        File rank comes from a broadcast join against a tiny (name, rank)
-        frame keyed on the scan URI's basename — O(1) per row (a
-        create_map literal would be an O(#files) probe per row and blow
-        codegen at thousands of files). ``input_file_name()`` is
-        URL-encoded, so each file contributes both its raw and its
-        percent-encoded name as join keys; an unmatched file raises
-        loudly rather than silently corrupting the ingest order.
+        File rank is a lookup in one literal map from each file's scan
+        URI (:func:`~.csv_source.scan_uri`, which equals
+        ``input_file_name()``) to its rank: no join, so planning and the
+        lookup run no Spark job of their own, and files that share a
+        basename (two zips' same-named members) share the scan. The
+        probe is O(#files) per row, as is :func:`_rank_counts`. An
+        unmatched file raises loudly rather than silently corrupting the
+        ingest order.
         """
-        from urllib.parse import quote
-
-        if len({p.name for p in paths}) < len(paths):
-            raise ValueError(
-                "duplicate basenames in one scan batch (file rank joins on "
-                f"basename): {sorted(p.name for p in paths)} — split the batch"
-            )
         if ranks is None:
             ranks = list(range(len(paths)))
+        if encoding is None:
+            encoding = csv_source.detect_encoding(paths[0]) or "utf-8"
+        # key the rank on what Spark scans: a UTF-16 file's UTF-8 copy
+        scanned, encoding = csv_source.spark_scan_paths(
+            [str(p) for p in paths], encoding
+        )
         schema = None
         if header:
             schema = csv_source.header_schema(
                 header,
                 self.spark.conf.get("spark.sql.caseSensitive") == "true",
             )
-        raw = read_raw_csv(
-            self.spark, [str(p) for p in paths], encoding, delimiter, schema
-        )
+        raw = read_raw_csv(self.spark, scanned, encoding, delimiter, schema)
         # loud reserved-name guard (review r10, the r7/r8 basename/_rn
         # pattern): a raw column named like a seq/rank column would be
         # silently OVERWRITTEN by withColumn below — and, because
         # SEQ_COLS are appended to normalize's expected set, such a
         # header would also fool width validation instead of being
         # rejected as an unknown column.
-        reserved = set(SEQ_COLS) | {"_fname", "_blk"}
-        clash = sorted(reserved & set(raw.columns))
+        clash = sorted(set(SEQ_COLS) & set(raw.columns))
         if clash:
             raise ValueError(
                 f"raw CSV header uses reserved ingest column name(s) "
                 f"{clash}: rename the source columns"
             )
-        keys = []
-        for p, i in zip(paths, ranks):
-            keys.append((p.name, i))
-            enc = quote(p.name, safe="")
-            if enc != p.name:
-                keys.append((enc, i))
-        # collision check over the FULL key list, not just raw names: a
-        # literal 'a%20b.csv' next to 'a b.csv' (whose encoded key is
-        # also 'a%20b.csv') would double-join every row of the latter
-        # and corrupt the exact-ingest-order rank (review r7)
-        if len({k for k, _ in keys}) < len(keys):
-            raise ValueError(
-                "file-rank key collision (a basename equals a sibling's "
-                f"percent-encoded basename): {sorted(k for k, _ in keys)} "
-                "— split the batch"
-            )
-        rank_frame = self.spark.createDataFrame(
-            keys, "_fname string, _file_rank int"
+        rank_of = F.create_map(*[
+            F.lit(x)
+            for p, r in zip(scanned, ranks)
+            for x in (csv_source.scan_uri(self.spark, p), r)
+        ])
+        rank = F.coalesce(
+            F.element_at(rank_of, F.input_file_name()),
+            F.raise_error(
+                F.concat(F.lit("unmatchable scan uri for file-rank: "),
+                         F.input_file_name())
+            ).cast("int"),
         )
-        basename = F.element_at(F.split(F.input_file_name(), "/"), -1)
-        # capture metadata/order columns BEFORE the join: hidden _metadata
-        # (and input_file_name) resolve only on the scan lineage, not
-        # through join outputs
-        base = (
-            raw.withColumn("_fname", basename)
+        return (
+            raw.withColumn("_file_rank", rank)
             .withColumn("_blk", F.col("_metadata.file_block_start"))
             .withColumn("_row", F.monotonically_increasing_id())
         )
-        out = base.join(F.broadcast(rank_frame), "_fname", "left")
-        guarded_rank = F.when(
-            F.col("_file_rank").isNull(),
-            F.raise_error(
-                F.concat(F.lit("unmatchable scan uri for file-rank: "),
-                         F.col("_fname"))
-            ).cast("int"),
-        ).otherwise(F.col("_file_rank"))
-        return out.withColumn("_file_rank", guarded_rank).drop("_fname")
 
     def build_plan(
         self,
@@ -298,8 +262,11 @@ class IngestJob:
         already read for the watermark. ``loaded``: (Observation, file
         ranks) that counts each file's surviving rows on the id'd frame,
         before SEQ_COLS go."""
+        # one partition: J1's clustering and the id window's single
+        # task both hold after this one exchange, so J1, J2 and the ids
+        # need no other
         hashed = with_row_hash(normalized, list(schema.data_columns))
-        deduped = self_dedup_first(hashed, order_col=list(SEQ_COLS))
+        deduped = self_dedup_first(hashed.repartition(1), order_col=list(SEQ_COLS))
         novel = self._dedup_against_history(deduped, schema, history)
         casted = apply_typed_casts(
             novel, schema, passthrough=("row_hash", *SEQ_COLS)
@@ -404,7 +371,7 @@ class IngestJob:
             )
         else:
             if frames:
-                rows_in = _per_file_rows(obs_in, ranks, recount=union) or {}
+                rows_in = _per_file_rows(obs_in, ranks) or {}
                 rows_loaded = _per_file_rows(obs_out, ranks) or {}
                 for f in batched:
                     out[f.rank] = FileResult(

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import codecs
 import gzip
+import re
 import sys
 import zipfile
 from collections import Counter
@@ -268,8 +269,8 @@ def _spark_native_encoding(enc: str) -> bool:
 def _transcode_to_utf8(paths: list[str], encoding: str) -> list[str]:
     """Driver-side chunked transcode of non-Spark-native files into
     UTF-8 staged copies (process-exit-swept scratch; basenames are
-    PRESERVED under per-index subdirs — the ingest file-rank join keys
-    on basename). Mirrors the reference's single-node decode; at
+    preserved under per-index subdirs, so same-named files never
+    collide). Mirrors the reference's single-node decode; at
     cluster scale, landing-zone normalization is where this belongs —
     UTF-16 CSVs are a legacy-export format, not a data-lake one. A
     ``.csv.gz`` copy is re-gzipped so the name's codec stays truthful.
@@ -299,6 +300,34 @@ def _transcode_to_utf8(paths: list[str], encoding: str) -> list[str]:
     return out
 
 
+def spark_scan_paths(
+    paths: list[str], encoding: str
+) -> tuple[list[str], str]:
+    """The files, and their encoding, that Spark's scan of ``paths``
+    reads: UTF-16/32 files become UTF-8 staged copies (see
+    :func:`_spark_native_encoding`), any other list is read as given."""
+    if _spark_native_encoding(encoding):
+        return paths, encoding
+    return _transcode_to_utf8(paths, encoding), "utf-8"
+
+
+def scan_uri(spark: SparkSession, path: str) -> str:
+    """``input_file_name()`` of the rows Spark scans from ``path``: the
+    path qualified by its Hadoop filesystem, as a URI string. Spark
+    spells spaces, non-ASCII and reserved characters this way, so no
+    spelling of the bare name matches it."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs.makeQualified(hpath).toUri().toString()
+
+
+def _glob_literal(path: str) -> str:
+    """``path`` with Hadoop's glob metacharacters backslash-escaped:
+    Spark globs every path that holds one, so ``a[1].csv`` would match
+    ``a1.csv`` (or nothing) instead of naming itself."""
+    return re.sub(r"[\\\[\]{}*?]", lambda m: "\\" + m.group(), path)
+
+
 def read_raw_csv(
     spark: SparkSession,
     paths: str | list[str],
@@ -315,20 +344,16 @@ def read_raw_csv(
     chain falls from utf-8 to iso-8859-1 before Spark ever reads, so a
     non-UTF-8 file arrives with the right codec on the first read (Spark
     does not raise on decode errors the way pandas does, so a read-time
-    retry hook would never fire)."""
-    first = paths if isinstance(paths, str) else paths[0]
+    retry hook would never fire). Each path names one file literally,
+    glob metacharacters included."""
+    paths = [paths] if isinstance(paths, str) else list(paths)
     if encoding is None:
-        encoding = detect_encoding(first) or "utf-8"
+        encoding = detect_encoding(paths[0]) or "utf-8"
     if delimiter is None:
-        delimiter = detect_delimiter(first, encoding)
-    if not _spark_native_encoding(encoding):
-        # UTF-16/32: transcode to UTF-8 staged copies first (see
-        # _spark_native_encoding — Spark both misparses and rejects
-        # these; review r10, confirmed live)
-        paths = _transcode_to_utf8(
-            [paths] if isinstance(paths, str) else list(paths), encoding
-        )
-        encoding = "utf-8"
+        delimiter = detect_delimiter(paths[0], encoding)
+    # UTF-16/32: Spark both misparses and rejects these (review r10)
+    paths, encoding = spark_scan_paths(paths, encoding)
+    paths = [_glob_literal(p) for p in paths]
     reader = (
         spark.read.option("header", True)
         .option("sep", delimiter)

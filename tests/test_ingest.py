@@ -420,16 +420,52 @@ def _outcome(results):
     return [(r.file_name, r.status, r.rows_in, r.rows_loaded) for r in results]
 
 
-def test_run_shared_member_name_plans_each_file_alone(spark, tmp_path, caplog):
-    """Two zips whose first members share a basename cannot share one
-    scan (the file rank joins on basename), so ``run`` plans the table
-    again one file at a time: every file uploads, and the table, results
-    and ledger equal sequential ``process_file`` calls in listing order."""
+def _count_plans(job) -> list[list[str]]:
+    """The landing names of each plan ``job`` makes from here on (each
+    :meth:`IngestJob._ingest_table` call, fallback calls included)."""
+    planned: list[list[str]] = []
+    real = job._ingest_table
+
+    def counted(files, table_key):
+        planned.append([f.path.name for f in files])
+        return real(files, table_key)
+
+    job._ingest_table = counted
+    return planned
+
+
+def _run_in_one_plan(spark, tmp_path, fx, landing, caplog):
+    """``run`` over ``landing`` and sequential ``process_file`` calls in
+    listing order: ``run`` plans the table once, with no fallback, and
+    gives the same results, table and ledger. Returns ``run``'s results."""
     import logging
+
+    from datawarehouse_backup_system_spark.sources.catalog import discover_files
+
+    listing = discover_files(landing)
+    seq = make_job(spark, tmp_path / "seq", fx)
+    seq_res = [seq.process_file(p) for p in listing]
+    bat = make_job(spark, tmp_path / "bat", fx)
+    planned = _count_plans(bat)
+    with caplog.at_level(logging.WARNING):
+        bat_res = bat.run(landing)
+
+    assert planned == [[p.name for p in listing]]
+    assert "ingesting them one by one" not in caplog.text
+    assert _outcome(bat_res) == _outcome(seq_res)
+    assert _table_rows(bat) == _table_rows(seq)
+    assert _landing_statuses(bat) == _landing_statuses(seq)
+    return bat_res
+
+
+def test_run_shared_member_name_takes_one_plan(spark, tmp_path, caplog):
+    """Two zips whose first members share a name share one scan: the
+    file rank keys on each file's full scan URI, not its basename. So
+    ``run`` plans the table once, and the table, results and ledger
+    equal sequential ``process_file`` calls in listing order."""
     import zipfile
 
     from datawarehouse_backup_system_spark import ledger as ledger_mod
-    from datawarehouse_backup_system_spark.sources.catalog import discover_files
 
     (tmp_path / "fx").mkdir()
     fx = generate_f1(tmp_path / "fx", n=60)
@@ -441,20 +477,96 @@ def test_run_shared_member_name_plans_each_file_alone(spark, tmp_path, caplog):
             zf.write(src, "last24h__x.csv")
     (landing / "last24h__c.csv").write_bytes(fx["files"][2].read_bytes())
 
-    seq = make_job(spark, tmp_path / "seq", fx)
-    seq_res = [seq.process_file(p) for p in discover_files(landing)]
-    bat = make_job(spark, tmp_path / "bat", fx)
-    with caplog.at_level(logging.WARNING):
-        bat_res = bat.run(landing)
-
-    assert "ingesting them one by one" in caplog.text
-    assert [(r.file_name, r.status) for r in bat_res] == [
+    res = _run_in_one_plan(spark, tmp_path, fx, landing, caplog)
+    assert [(r.file_name, r.status) for r in res] == [
         (n, ledger_mod.STATUS_UPLOADED)
         for n in ("last24h__a.csv.zip", "last24h__b.csv.zip", "last24h__c.csv")
     ]
-    assert _outcome(bat_res) == _outcome(seq_res)
-    assert _table_rows(bat) == _table_rows(seq)
-    assert _landing_statuses(bat) == _landing_statuses(seq)
+    assert all(r.rows_loaded > 0 for r in res)
+
+
+def test_run_names_spark_spells_or_globs_take_one_plan(spark, tmp_path, caplog):
+    """Names that Spark spells percent-encoded in ``input_file_name()``
+    (a space, ``é``, a literal ``%20``) or would read as a glob
+    (``[ ] { } * ? \\``) upload in one plan, with the rows and ids of
+    sequential ``process_file`` calls. Each was once ledgered an error
+    and skipped forever: an unmatched file rank, or PATH_NOT_FOUND."""
+    from datawarehouse_backup_system_spark import ledger as ledger_mod
+
+    (tmp_path / "fx").mkdir()
+    fx = generate_f1(tmp_path / "fx", n=60)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    sources = {  # in listing (name) order
+        "last24h__a[1].csv": fx["files"][0],
+        "last24h__b{x}*?\\.csv": fx["files"][1],
+        "last24h__é 1.csv": fx["files"][2],
+        "last24h__é%201.csv": fx["files"][0],
+    }
+    for name, src in sources.items():
+        (landing / name).write_bytes(src.read_bytes())
+
+    res = _run_in_one_plan(spark, tmp_path, fx, landing, caplog)
+    assert {r.file_name: r.status for r in res} == dict.fromkeys(
+        sources, ledger_mod.STATUS_UPLOADED)
+    # the last file repeats the first: it counts its rows, loads none
+    copy = res[-1]
+    assert copy.rows_in > 0 and copy.rows_loaded == 0
+
+
+def test_run_dirty_day_appends_in_three_jobs(spark, tmp_path):
+    """A dirty day of four scan profiles (``;``, latin-1 ``,``, UTF-16
+    transcoded, a zip's narrow member) against existing history runs 3
+    Spark jobs: the history broadcast, one single-partition exchange
+    that J1, J2 and the ids all run after, and the write. The file rank
+    is a literal map, so no local rank frame is scanned or broadcast,
+    and history's hashes are anti-joined as they are, not aggregated."""
+    import re
+
+    from fixtures import generate_dirty_day
+    from test_ledger import _jobs_in
+
+    day = generate_dirty_day(tmp_path / "day")
+    job = make_job(spark, tmp_path, day)
+    assert job.process_file(day["history"]).rows_loaded > 0
+    plans: list[str] = []
+    real = job._atomic_append
+
+    def append(plan, schema):
+        plans.append(plan._jdf.queryExecution().executedPlan().toString())
+        return real(plan, schema)
+
+    job._atomic_append = append
+    results = []
+    jobs = _jobs_in(spark, "dirty-day-run",
+                    lambda: results.extend(job.run(day["dir"])))
+
+    assert {r.file_name: r.status for r in results} == day["expected"]
+    assert jobs <= 3
+    [plan] = plans
+    assert "Scan ExistingRDD" not in plan and "HashAggregate" not in plan, plan
+    assert re.findall(r"\bExchange (\w+)", plan) == ["SinglePartition"], plan
+    assert plan.count("BroadcastExchange") == 1, plan
+
+
+def test_all_duplicate_file_counts_within_the_append_jobs(spark, tmp_path):
+    """A file made only of rows already ingested loads none, yet its
+    ``rows_in`` still comes from the Observation on the append: no job
+    beyond the append's 3 recounts it."""
+    from fixtures import generate_dirty_day
+    from test_ledger import _jobs_in
+
+    from datawarehouse_backup_system_spark import ledger as ledger_mod
+
+    day = generate_dirty_day(tmp_path / "day")
+    job = make_job(spark, tmp_path, day)
+    assert job.process_file(day["dir"] / "last24h__20240301_01.csv").rows_loaded > 0
+    res = []
+    jobs = _jobs_in(spark, "all-duplicate", lambda: res.append(
+        job.process_file(day["dir"] / "last24h__20240301_07.csv")))
+    assert [(r.status, r.rows_in, r.rows_loaded) for r in res] == [
+        (ledger_mod.STATUS_UPLOADED, 20, 0)]
+    assert jobs <= 3
 
 
 def test_run_failed_sniff_sinks_only_its_file(spark, tmp_path, monkeypatch):

@@ -544,11 +544,12 @@ def test_utf16_and_utf32_csvs_parse_correctly(spark, tmp_path):
         assert rows == [("1", "rene"), ("2", "anna")], (label, enc, rows)
 
 
-def test_ingest_files_batch_error_falls_back_per_file(spark, tmp_path):
-    """Review r10: a batch-SCOPED error (duplicate basenames share one
-    scan) mass-ledgered every remaining file as unexpected, permanently
-    blacklisting valid files. The fallback now plans each file alone —
-    both files upload."""
+def test_ingest_files_shared_basename_takes_one_plan(spark, tmp_path):
+    """Review r10: a batch-SCOPED error (duplicate basenames in one scan,
+    when the file rank keyed on basename) mass-ledgered every remaining
+    file as unexpected, permanently blacklisting valid files. The rank
+    now keys on each file's full scan URI: both files share one plan
+    and upload."""
     from fixtures import generate_f1
 
     from datawarehouse_backup_system_spark import ledger as ledger_mod
@@ -557,7 +558,8 @@ def test_ingest_files_batch_error_falls_back_per_file(spark, tmp_path):
     import test_ingest as ti
 
     job = ti.make_job(spark, tmp_path, fx)
-    # same BASENAME in two dirs — the _scan_with_seq rank join key
+    planned = ti._count_plans(job)
+    # same BASENAME in two dirs
     a_dir, b_dir = tmp_path / "a", tmp_path / "b"
     a_dir.mkdir(); b_dir.mkdir()
     (a_dir / "x.csv").write_bytes(fx["files"][0].read_bytes())
@@ -565,6 +567,7 @@ def test_ingest_files_batch_error_falls_back_per_file(spark, tmp_path):
     res = job._ingest_files(
         [a_dir / "x.csv", b_dir / "x.csv"], "mini_campaign_events"
     )
+    assert planned == [["x.csv", "x.csv"]]
     assert [r.status for r in res] == [ledger_mod.STATUS_UPLOADED] * 2
     assert res[0].rows_loaded > 0
     statuses = {
