@@ -175,8 +175,7 @@ def pagerank(
         # cheap side first: the node frame stages before the expensive
         # norm_e, so the validations below fail BEFORE the edge-list
         # stage spends its write (review r10)
-        nodes.write.mode("overwrite").parquet(f"{root}/nodes")
-        nodes = spark.read.parquet(f"{root}/nodes")
+        nodes = _stage(nodes, f"{root}/nodes")
     # validate + count BEFORE staging the edge list (review r10: a
     # seed-set ValueError after the bucketed stage leaked the catalog
     # entry and wasted the full edge-list write)
@@ -220,11 +219,11 @@ def pagerank(
                     # no convergence stop requested: plain stage write,
                     # no per-row signature hashing (review r9 — the hash
                     # was computed every round and never consulted)
-                    ranks.write.mode("overwrite").parquet(nxt)
+                    ranks = _stage(ranks, nxt)
                 else:
                     # double xor-hash signature — see connected_components
                     obs = Observation()
-                    ranks.observe(
+                    ranks = _stage(ranks.observe(
                         obs,
                         F.count(F.lit(1)).alias("n"),
                         F.coalesce(
@@ -241,12 +240,11 @@ def pagerank(
                             ),
                             F.lit(0),
                         ).alias("h2"),
-                    ).write.mode("overwrite").parquet(nxt)
+                    ), nxt)
                     sig = (obs.get["n"], obs.get["h1"], obs.get["h2"])
                 if cur is not None:
                     _stage_rm(cur, spark)  # superseded round
                 cur = nxt
-                ranks = spark.read.parquet(nxt)
                 if tol_digits is not None:
                     if sig == prev_sig:
                         break
@@ -472,6 +470,16 @@ def _stage_du(path: str, spark=None) -> int:
         return 0
 
 
+def _stage(df: DataFrame, path: str) -> DataFrame:
+    """Write ``df`` to parquet at ``path`` and return the staged frame,
+    read back with ``df``'s own schema: a plain ``read.parquet`` runs a
+    one-task schema-inference job per read, which an iterative operator
+    would pay once per round. Every staged directory in this module
+    goes through here."""
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
 #: auto-mode cutover: bucket the staged big side only when its parquet
 #: footprint reaches this size. Below it the per-round label/rank frame
 #: is broadcastable, so the equi-join NEVER shuffles the edge side in
@@ -484,11 +492,10 @@ def _stage_du(path: str, spark=None) -> int:
 #: ~10–30 rounds real graphs take.
 _BUCKET_MIN_BYTES = 4 << 30
 
-#: lazy-rounds cutover for core_numbers' chunked staging and
-#: neighborhood_function's unrolled tier: both compose several rounds
-#: into one job, which re-scans the edge source per composed round, so
-#: they run only while the edge frame's optimizer-stats size is at most
-#: this (see each function's in-body comment).
+#: lazy-rounds cutover for neighborhood_function's unrolled tier: it
+#: composes every round into one job, which re-scans the edge source
+#: per composed round, so it runs only while the edge frame's
+#: optimizer-stats size is at most this (see its in-body comment).
 _LAZY_MAX_BYTES = 1 << 30
 
 
@@ -553,8 +560,7 @@ def _stage_static_side(
     fallback = None  # already-staged parquet frame, if any
     plain_path = None
     if bucketed is None:
-        df.write.mode("overwrite").parquet(path)
-        fallback = spark.read.parquet(path)
+        fallback = _stage(df, path)
         if _stage_du(path, spark) < _BUCKET_MIN_BYTES:
             return fallback, (lambda: None)
         # rebucket from the staged file; the plain copy is deleted once
@@ -562,8 +568,7 @@ def _stage_static_side(
         # edge-list footprint for the life of the scratch root)
         df, plain_path, path = fallback, path, f"{path}_bucketed"
     elif not bucketed:
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path), (lambda: None)
+        return _stage(df, path), (lambda: None)
     import uuid as _uuid
 
     from .bucketed import write_bucketed
@@ -691,13 +696,12 @@ def connected_components(
     e0 = _canon(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     r0 = f"{root}/r0"
     obs0 = Observation()
-    e0.observe(
+    e = _stage(e0.observe(
         obs0,
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.expr("bit_xor(xxhash64(lo, hi))"), F.lit(0)).alias("h1"),
         F.coalesce(F.expr("bit_xor(xxhash64(hi, lo))"), F.lit(0)).alias("h2"),
-    ).write.mode("overwrite").parquet(r0)
-    e = spark.read.parquet(r0)
+    ), r0)
     cur = r0
     prev_sig = (obs0.get["n"], obs0.get["h1"], obs0.get["h2"])
     for i in range(max_iter):
@@ -709,7 +713,7 @@ def connected_components(
         # instead of 2⁻⁶⁴ (VERDICT r8 nit), with zero extra rounds —
         # an `i > 1` guard instead would make max_iter=2 spuriously
         # raise on graphs already at fixpoint (review r9).
-        _small_star(_large_star(e)).observe(
+        e = _stage(_small_star(_large_star(e)).observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             F.coalesce(
@@ -718,12 +722,11 @@ def connected_components(
             F.coalesce(
                 F.expr("bit_xor(xxhash64(hi, lo))"), F.lit(0)
             ).alias("h2"),
-        ).write.mode("overwrite").parquet(nxt)
+        ), nxt)
         sig = (obs.get["n"], obs.get["h1"], obs.get["h2"])
         if cur is not None:
             _stage_rm(cur, spark)  # superseded round
         cur = nxt
-        e = spark.read.parquet(nxt)
         if sig == prev_sig:
             break
         prev_sig = sig
@@ -857,18 +860,10 @@ def core_numbers(
     iterations: int = 32,
     stage_path: str | None = None,
     stage_bucketed: bool | None = None,
-    stage_every: int | None = None,
 ) -> DataFrame:
     """k-core decomposition → ``(node, core)`` over the undirected
     simple graph: core = the largest k such that the node survives in
     the k-core (every member has ≥ k neighbors inside).
-
-    ``stage_every``: stage (parquet + signature check) every k-th
-    round instead of every round — the r11 chunked-staging tier; see
-    the in-body comment for the equivalence argument and the byte
-    gate. ``None`` (default) auto-selects: 6 when the edge source's
-    optimizer-stats footprint is ≤ `_LAZY_MAX_BYTES` (1 GiB), else 1
-    (the scale-safe per-round fixpoint stop).
 
     Algorithm: iterated neighborhood H-index refinement (Lü et al.,
     "The H-index of a network node and its relation to degree and
@@ -888,7 +883,13 @@ def core_numbers(
     signature equality is a genuine fixpoint test modulo a 2⁻⁶⁴ hash
     collision), previous rounds deleted; scratch lifecycle =
     `_staged_round_root` (per-call-site default root; a new call
-    invalidates the previous call's lazy result).
+    invalidates the previous call's lazy result). EVERY round is
+    staged and checked, so the loop stops one round after the
+    fixpoint (round k+1 for a fixpoint at round k). Composing several
+    rounds into one write saved only the parquet round trip — with
+    AQE each composed round still ran its own broadcast and shuffle
+    jobs — and ran every chunk past the fixpoint to its boundary
+    (measured on g05: 28 → 15 jobs per call once chunking went).
 
     BUCKETED STAGING (VERDICT r9 item 2): the directed edge list is
     round-invariant, so above the `_stage_static_side` auto size
@@ -932,28 +933,6 @@ def core_numbers(
     spark = edges.sparkSession
     root = _staged_round_root(stage_path, "dwbss-kc-", spark)
     e = _canon(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    # CHUNKED STAGING (r11 optimization): unlike the star rounds (whose
-    # round references its input ~4×, so lazy composition grows the
-    # plan 4^k — measured and rejected in connected_components'
-    # docstring), one H-index round references the labels frame exactly
-    # ONCE — composing k rounds lazily grows the plan LINEARLY. Staging
-    # every k-th round instead of every round replaces k sequential
-    # (job + parquet round-trip) barriers with one k-join job: at local
-    # / test scale the per-round cost is job latency, not bytes
-    # (measured on g05: 10 staged rounds ≈ 6.6 s at sf0.1). The byte
-    # gate keeps 100 TB honest: past a converged fixpoint a chunk runs
-    # up to k−1 full-graph joins the per-round signature stop would
-    # have skipped, so a big edge source keeps stage_every=1 (and the
-    # per-round restartable-progress property). Fixpoint equivalence:
-    # the H-index sequence is pointwise monotone non-increasing, so
-    # boundary-signature equality implies every intermediate round was
-    # already constant, and overshoot rounds past the fixpoint are
-    # no-ops — the returned VALUES are identical for any stage_every
-    # (parity-pinned in tests/test_opt_r11.py); the `iterations` cap
-    # counts real rounds exactly in both modes.
-    if stage_every is None:
-        stage_every = 6 if _plan_fits(e, _LAZY_MAX_BYTES) else 1
-    stage_every = max(1, int(stage_every))
     # directed (both orientations) edge list, staged ONCE — every
     # round joins against it; bucketed on the join key by default so
     # the per-round join never re-shuffles it (module helper docstring)
@@ -964,16 +943,11 @@ def core_numbers(
         labels = d.groupBy("a").agg(F.count(F.lit(1)).alias("val"))
         cur = None
         prev_sig = None
-        done = 0
-        while done < iterations:
-            k_this = min(stage_every, iterations - done)
-            nxt_lab = labels
-            for _ in range(k_this):
-                nxt_lab = _kcore_round(d, nxt_lab)
-            nxt = f"{root}/r{done + k_this}"
+        for i in range(iterations):
+            nxt = f"{root}/r{i + 1}"
             obs = Observation()
             # double xor-hash signature — see connected_components
-            nxt_lab.observe(
+            labels = _stage(_kcore_round(d, labels).observe(
                 obs,
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(
@@ -982,13 +956,11 @@ def core_numbers(
                 F.coalesce(
                     F.expr("bit_xor(xxhash64(val, a))"), F.lit(0)
                 ).alias("h2"),
-            ).write.mode("overwrite").parquet(nxt)
+            ), nxt)
             sig = (obs.get["n"], obs.get["h1"], obs.get["h2"])
             if cur is not None:
                 _stage_rm(cur, spark)  # superseded round
             cur = nxt
-            labels = spark.read.parquet(nxt)
-            done += k_this
             if sig == prev_sig:
                 break
             prev_sig = sig
@@ -1115,11 +1087,12 @@ def neighborhood_function(
     sk = d.groupBy(F.col("a").alias("node")).agg(
         F.hll_sketch_agg(F.col("a"), k).alias("sketch")
     )
-    est_dirs: list[str] = []
+    ests: list[DataFrame] = []
 
     def _write_round(frame: DataFrame, radius: int, path: str) -> tuple:
         """Stage one (node, sketch) round + its estimate frame; returns
-        the (count, h1, h2) signature of the per-node INTEGER estimates
+        the staged round and the (count, h1, h2) signature of the
+        per-node INTEGER estimates
         (the sketch BINARY is not a stable set fingerprint — its
         serialization varies with union order/mode transitions, so
         hashing it never detects saturation; the rounded estimates are
@@ -1130,11 +1103,10 @@ def neighborhood_function(
         approximate operator, documented)."""
         from pyspark.sql import Observation
 
-        frame.write.mode("overwrite").parquet(path)
-        staged = spark.read.parquet(path)
+        staged = _stage(frame, path)
         ep = f"{root}/est_r{radius}"
         obs = Observation()
-        staged.select(
+        est = _stage(staged.select(
             "node",
             F.lit(radius).alias("radius"),
             F.round(F.hll_sketch_estimate("sketch"))
@@ -1151,14 +1123,13 @@ def neighborhood_function(
                 F.expr("bit_xor(xxhash64(n_reachable_est, node))"),
                 F.lit(0),
             ).alias("h2"),
-        ).write.mode("overwrite").parquet(ep)
-        est_dirs.append(ep)
-        return (obs.get["n"], obs.get["h1"], obs.get["h2"])
+        ), ep)
+        ests.append(est)
+        return staged, (obs.get["n"], obs.get["h1"], obs.get["h2"])
 
     cur = f"{root}/r0"
     try:
-        prev_sig = _write_round(sk, 0, cur)
-        sk = spark.read.parquet(cur)
+        sk, prev_sig = _write_round(sk, 0, cur)
         for t in range(1, max_radius + 1):
             contrib = d.join(
                 sk.select(F.col("node").alias("b"), "sketch"), "b"
@@ -1169,10 +1140,9 @@ def neighborhood_function(
                 .agg(F.hll_union_agg("sketch").alias("sketch"))
             )
             nxt = f"{root}/r{t}"
-            sig = _write_round(nxt_sk, t, nxt)
+            sk, sig = _write_round(nxt_sk, t, nxt)
             _stage_rm(cur, spark)  # superseded sketches
             cur = nxt
-            sk = spark.read.parquet(nxt)
             if sig == prev_sig:
                 break
             prev_sig = sig
@@ -1180,9 +1150,9 @@ def neighborhood_function(
         # the output is backed by the est_r* parquet alone — the staged
         # edge table's catalog entry can go now
         drop_stage()
-    out = spark.read.parquet(est_dirs[0])
-    for p in est_dirs[1:]:
-        out = out.unionByName(spark.read.parquet(p))
+    out = ests[0]
+    for est in ests[1:]:
+        out = out.unionByName(est)
     return out
 
 

@@ -182,6 +182,7 @@ class IngestJob:
         encoding: str | None = None,
         delimiter: str | None = None,
         header: tuple[str, ...] = (),
+        scratch_dir: Path | None = None,
     ) -> DataFrame:
         """Multi-path all-string scan + the exact-ingest-order columns.
 
@@ -192,7 +193,9 @@ class IngestJob:
         the paths' sniffed header (:func:`_sniff`); the scan names its
         columns from it as Spark would, so planning runs no job to read
         the header. Empty (the default, or a file whose first line is
-        blank): Spark infers it.
+        blank): Spark infers it. ``scratch_dir``: where UTF-16/32 files'
+        UTF-8 copies go (:func:`~.csv_source.spark_scan_paths`); the
+        caller removes it once the scan has run.
 
         File rank is a lookup in one literal map from each file's scan
         URI (:func:`~.csv_source.scan_uri`, which equals
@@ -209,7 +212,7 @@ class IngestJob:
             encoding = csv_source.detect_encoding(paths[0]) or "utf-8"
         # key the rank on what Spark scans: a UTF-16 file's UTF-8 copy
         scanned, encoding = csv_source.spark_scan_paths(
-            [str(p) for p in paths], encoding
+            [str(p) for p in paths], encoding, scratch_dir
         )
         schema = None
         if header:
@@ -288,7 +291,7 @@ class IngestJob:
         )
 
     def _ingest_table(
-        self, files: list[_Routed], table_key: str
+        self, files: list[_Routed], table_key: str, staging: Path
     ) -> dict[int, FileResult]:
         """One table's routed files of a cycle as ONE plan, keyed by rank.
 
@@ -327,7 +330,7 @@ class IngestJob:
             for (enc, delim, header), group in profiles.items():
                 raw = self._scan_with_seq(
                     [f.scan_path for f in group], [f.rank for f in group],
-                    enc, delim, header,
+                    enc, delim, header, staging,
                 )
                 normalized, report = normalize(raw, expected, rename_map)
                 if report.ok:
@@ -359,7 +362,7 @@ class IngestJob:
                 )
                 out = {}
                 for f in files:
-                    out.update(self._ingest_table([f], table_key))
+                    out.update(self._ingest_table([f], table_key, staging))
                 return out
             log.warning("ingest of %s for %s failed", files[0].path.name,
                         table_key, exc_info=True)
@@ -537,8 +540,8 @@ class IngestJob:
         return path, table_key
 
     def _staging(self) -> Path:
-        """A fresh scratch dir for extracted zip members (created on first
-        use; the caller removes it)."""
+        """A fresh scratch dir for extracted zip members and transcoded
+        copies (created on first use; the caller removes it)."""
         root = Path(self.staging_dir or self.warehouse_dir / "_staging")
         return root / uuid.uuid4().hex[:16]
 
@@ -582,8 +585,9 @@ class IngestJob:
         write. Routed files are grouped by table (``table_key`` overrides
         routing) and each table is ingested as one plan
         (:meth:`_ingest_table`), with ``heartbeat`` called after each.
-        Extracted zip members live in one scratch dir, removed on return
-        (left behind, it held a plaintext copy of every zip per cycle)."""
+        Extracted zip members and the UTF-8 copies of UTF-16/32 files
+        live in one scratch dir, removed on return (left behind, it held
+        a copy of every such file per cycle)."""
         staging = self._staging()
         results: dict[int, FileResult] = {}
         tables: dict[str, list[_Routed]] = {}
@@ -604,7 +608,7 @@ class IngestJob:
                 [(r.file_name, r.status) for _, r in sorted(results.items())]
             )
             for key, files in tables.items():
-                results.update(self._ingest_table(files, key))
+                results.update(self._ingest_table(files, key, staging))
                 heartbeat()
         finally:
             shutil.rmtree(staging, ignore_errors=True)

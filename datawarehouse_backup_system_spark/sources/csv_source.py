@@ -27,6 +27,7 @@ import codecs
 import gzip
 import re
 import sys
+import tempfile
 import zipfile
 from collections import Counter
 from pathlib import Path
@@ -266,18 +267,25 @@ def _spark_native_encoding(enc: str) -> bool:
     return not (e.startswith("utf16") or e.startswith("utf32"))
 
 
-def _transcode_to_utf8(paths: list[str], encoding: str) -> list[str]:
+def _transcode_to_utf8(
+    paths: list[str], encoding: str, scratch_dir: Path | None = None
+) -> list[str]:
     """Driver-side chunked transcode of non-Spark-native files into
-    UTF-8 staged copies (process-exit-swept scratch; basenames are
-    preserved under per-index subdirs, so same-named files never
-    collide). Mirrors the reference's single-node decode; at
+    UTF-8 staged copies, in a fresh subdir of ``scratch_dir`` (a dir
+    the caller removes) or, without one, in process-exit-swept scratch.
+    Basenames are preserved under per-index subdirs, so same-named
+    files never collide. Mirrors the reference's single-node decode; at
     cluster scale, landing-zone normalization is where this belongs —
     UTF-16 CSVs are a legacy-export format, not a data-lake one. A
     ``.csv.gz`` copy is re-gzipped so the name's codec stays truthful.
     The leading BOM (kept by explicit-endian decodes) is stripped."""
-    from ..scratch import new_scratch_root
+    if scratch_dir is None:
+        from ..scratch import new_scratch_root
 
-    root = Path(new_scratch_root("dwbss-transcode-"))
+        root = Path(new_scratch_root("dwbss-transcode-"))
+    else:
+        scratch_dir.mkdir(parents=True, exist_ok=True)
+        root = Path(tempfile.mkdtemp(prefix="utf8-", dir=scratch_dir))
     out: list[str] = []
     for i, sp in enumerate(paths):
         p = Path(sp)
@@ -301,14 +309,15 @@ def _transcode_to_utf8(paths: list[str], encoding: str) -> list[str]:
 
 
 def spark_scan_paths(
-    paths: list[str], encoding: str
+    paths: list[str], encoding: str, scratch_dir: Path | None = None
 ) -> tuple[list[str], str]:
     """The files, and their encoding, that Spark's scan of ``paths``
     reads: UTF-16/32 files become UTF-8 staged copies (see
-    :func:`_spark_native_encoding`), any other list is read as given."""
+    :func:`_spark_native_encoding`; ``scratch_dir`` as there), any
+    other list is read as given."""
     if _spark_native_encoding(encoding):
         return paths, encoding
-    return _transcode_to_utf8(paths, encoding), "utf-8"
+    return _transcode_to_utf8(paths, encoding, scratch_dir), "utf-8"
 
 
 def scan_uri(spark: SparkSession, path: str) -> str:

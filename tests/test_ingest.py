@@ -416,6 +416,48 @@ def test_batched_run_equals_sequential_process_file(spark, tmp_path):
     assert _landing_statuses(bat) == _landing_statuses(seq)
 
 
+def test_run_removes_transcoded_copies(spark, tmp_path, monkeypatch):
+    """The UTF-8 copy that the scan of a UTF-16 export reads lives in the
+    cycle's staging dir and is gone when ``run`` returns; a long-lived
+    process must not keep a copy of every UTF-16 file it ingested. The
+    results, table and ledger equal a run over the same day with that
+    export re-encoded as UTF-8 beforehand."""
+    import shutil
+    from pathlib import Path
+
+    from fixtures import generate_dirty_day
+
+    from datawarehouse_backup_system_spark.sources import csv_source
+
+    copies: list[str] = []
+    real = csv_source._transcode_to_utf8
+
+    def spy(paths, encoding, *rest):
+        copies.extend(real(paths, encoding, *rest))
+        return copies[-len(paths):]
+
+    monkeypatch.setattr(csv_source, "_transcode_to_utf8", spy)
+    day = generate_dirty_day(tmp_path / "day")
+    job = make_job(spark, tmp_path / "utf16", day)
+    job.process_file(day["history"])
+    res = job.run(day["dir"])
+    assert [Path(c).name for c in copies] == ["last24h__20240301_05.csv"]
+    assert not any(Path(c).exists() for c in copies)
+
+    utf8 = tmp_path / "utf8"
+    shutil.copytree(day["dir"], utf8)
+    f5 = utf8 / "last24h__20240301_05.csv"
+    with open(f5, encoding="utf-16", newline="") as f:
+        text = f.read()
+    with open(f5, "w", encoding="utf-8", newline="") as f:
+        f.write(text)
+    ref = make_job(spark, tmp_path / "ref", day)
+    ref.process_file(day["history"])
+    assert _outcome(res) == _outcome(ref.run(utf8))
+    assert _table_rows(job) == _table_rows(ref)
+    assert _landing_statuses(job) == _landing_statuses(ref)
+
+
 def _outcome(results):
     return [(r.file_name, r.status, r.rows_in, r.rows_loaded) for r in results]
 
@@ -426,9 +468,9 @@ def _count_plans(job) -> list[list[str]]:
     planned: list[list[str]] = []
     real = job._ingest_table
 
-    def counted(files, table_key):
+    def counted(files, table_key, staging):
         planned.append([f.path.name for f in files])
-        return real(files, table_key)
+        return real(files, table_key, staging)
 
     job._ingest_table = counted
     return planned

@@ -228,119 +228,120 @@ def test_langid_ngram_is_shuffle_free_on_parallel_input(spark):
 
 
 # ---------------------------------------------------------------------------
-# g05 — chunked staging for core_numbers (operators/graph.py)
+# g05 — per-round staging for core_numbers (operators/graph.py)
+
+
+_KC_EDGES = (
+    [(i, i + 1) for i in range(20)]
+    + [(100 + i, 100 + j) for i in range(5) for j in range(i + 1, 5)]
+    + [(200, 201)]
+)
 
 
 def _kc_edges(spark):
     """Path + clique + isolated-ish mix: the path's peel depth forces
     several refinement rounds, the clique pins a high core, the tail
     exercises the cap."""
-    path = [(i, i + 1) for i in range(20)]
-    clique = [
-        (100 + i, 100 + j) for i in range(5) for j in range(i + 1, 5)
-    ]
-    return spark.createDataFrame(
-        path + clique + [(200, 201)], "src bigint, dst bigint"
+    return spark.createDataFrame(_KC_EDGES, "src bigint, dst bigint")
+
+
+def _hindex_rounds(edge_list, rounds):
+    """Pure-Python H-index refinement: the labels after ``rounds``
+    rounds, starting from the degrees (c₀ = deg)."""
+    adj: dict = {}
+    for a, b in edge_list:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    c = {v: len(ns) for v, ns in adj.items()}
+    for _ in range(rounds):
+        nxt = {}
+        for v, ns in adj.items():
+            vals = sorted((c[u] for u in ns), reverse=True)
+            nxt[v] = max(
+                (r for r, x in enumerate(vals, 1) if x >= r), default=0
+            )
+        c = nxt
+    return c
+
+
+def _kc_rows(df, **kw):
+    from datawarehouse_backup_system_spark.operators.graph import (
+        core_numbers,
     )
+
+    return sorted(map(tuple, core_numbers(df, **kw).collect()))
 
 
 def test_core_numbers_chunked_matches_per_round(spark, tmp_path):
-    """Value parity across staging cadences — the r11 chunked tier's
-    contract: identical (node, core) rows for stage_every 1, 4 and a
-    chunk larger than convergence."""
-    from datawarehouse_backup_system_spark.operators.graph import (
-        core_numbers,
+    """Value parity of the one staging path against a pure-Python
+    H-index refinement run to the same 32-round cap."""
+    exp = sorted(_hindex_rounds(_KC_EDGES, 32).items())
+    got = _kc_rows(
+        _kc_edges(spark), iterations=32, stage_path=str(tmp_path / "s")
     )
-
-    df = _kc_edges(spark)
-    base = sorted(
-        map(
-            tuple,
-            core_numbers(
-                df, stage_path=str(tmp_path / "s1"), stage_every=1
-            ).collect(),
-        )
-    )
-    for k, tag in ((4, "s4"), (32, "s32")):
-        got = sorted(
-            map(
-                tuple,
-                core_numbers(
-                    df, stage_path=str(tmp_path / tag), stage_every=k
-                ).collect(),
-            )
-        )
-        assert got == base, k
+    assert got == exp
 
 
 def test_core_numbers_chunked_respects_iteration_cap(spark, tmp_path):
-    """Cap-exhaustion parity: with iterations below convergence the
-    result is the EXACT iterations-round refinement in both modes —
-    the chunk must count real rounds, never overshoot the cap."""
-    from datawarehouse_backup_system_spark.operators.graph import (
-        core_numbers,
-    )
-
+    """Cap exhaustion: with iterations below convergence the result is
+    the EXACT iterations-round refinement — the loop counts real
+    rounds, never overshoots the cap."""
     df = _kc_edges(spark)
-    a = sorted(
-        map(
-            tuple,
-            core_numbers(
-                df,
-                iterations=3,
-                stage_path=str(tmp_path / "a"),
-                stage_every=1,
-            ).collect(),
-        )
-    )
-    b = sorted(
-        map(
-            tuple,
-            core_numbers(
-                df,
-                iterations=3,
-                stage_path=str(tmp_path / "b"),
-                stage_every=4,
-            ).collect(),
-        )
-    )
-    assert a == b
+    a = _kc_rows(df, iterations=3, stage_path=str(tmp_path / "a"))
+    assert a == sorted(_hindex_rounds(_KC_EDGES, 3).items())
     # and the capped refinement genuinely differs from the fixpoint
     # (otherwise this pin tests nothing)
-    full = sorted(
-        map(
-            tuple,
-            core_numbers(
-                df, stage_path=str(tmp_path / "c"), stage_every=1
-            ).collect(),
-        )
-    )
-    assert a != full
+    assert a != _kc_rows(df, stage_path=str(tmp_path / "c"))
 
 
-def test_core_numbers_byte_gate_forces_per_round(
-    spark, tmp_path, monkeypatch
-):
-    """With the chunk byte threshold at 0 the auto tier must stage
-    every round (observable: the surviving round dir is r<N> with N =
-    real rounds, not a chunk boundary multiple)."""
-    from datawarehouse_backup_system_spark.operators.graph import (
-        core_numbers,
+def test_core_numbers_byte_gate_forces_per_round(spark, tmp_path):
+    """Every round is staged and checked, so a graph whose fixpoint is
+    round k stops after staging round k+1: the surviving round dir is
+    r<k+1>, the only one left."""
+    k = next(
+        t for t in range(1, 32)
+        if _hindex_rounds(_KC_EDGES, t) == _hindex_rounds(_KC_EDGES, t + 1)
     )
-
-    monkeypatch.setattr(
-        "datawarehouse_backup_system_spark.operators.graph."
-        "_LAZY_MAX_BYTES", 0,
-    )
-    out = core_numbers(
-        _kc_edges(spark), stage_path=str(tmp_path / "g")
-    )
-    assert out.count() > 0
-    rounds = sorted(
-        int(p.name[1:])
+    # a parquet source has size stats, so no size probe could route
+    # this call to another staging path
+    _kc_edges(spark).write.parquet(str(tmp_path / "edges"))
+    edges = spark.read.parquet(str(tmp_path / "edges"))
+    out = _kc_rows(edges, stage_path=str(tmp_path / "g"))
+    assert out == sorted(_hindex_rounds(_KC_EDGES, k).items())
+    rounds = [
+        p.name
         for p in (tmp_path / "g").iterdir()
         if p.name.startswith("r") and p.name[1:].isdigit()
+    ]
+    assert rounds == [f"r{k + 1}"]
+
+
+def test_staged_read_back_launches_no_job(spark, tmp_path):
+    """graph._stage writes once and reads the directory back with the
+    frame's own schema: the read-back runs no schema-inference job, so
+    staging costs exactly the write's jobs. A plain ``read.parquet`` of
+    the same directory runs one."""
+    from test_ledger import _jobs_in
+
+    from datawarehouse_backup_system_spark.operators.graph import _stage
+
+    df = spark.createDataFrame(
+        [(i, i * 2) for i in range(10)], "a bigint, val bigint"
+    ).coalesce(1)
+    write = _jobs_in(
+        spark, "stage-write",
+        lambda: df.write.mode("overwrite").parquet(str(tmp_path / "w")),
     )
-    # per-round mode keeps only the final round dir; a chunked run of
-    # the same graph would land on a multiple of 6 instead
-    assert len(rounds) == 1 and rounds[0] not in (6, 12)
+    staged = {}
+    stage = _jobs_in(
+        spark, "stage-helper",
+        lambda: staged.setdefault("df", _stage(df, str(tmp_path / "s"))),
+    )
+    assert write >= 1 and stage == write
+    assert sorted(map(tuple, staged["df"].collect())) == [
+        (i, i * 2) for i in range(10)
+    ]
+    assert _jobs_in(
+        spark, "stage-infer", lambda: spark.read.parquet(str(tmp_path / "s"))
+    ) == 1

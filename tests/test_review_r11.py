@@ -76,9 +76,9 @@ def test_ingest_files_divergent_profiles_take_one_plan(spark, tmp_path,
     real_table = job._ingest_table
     planned: list[list[str]] = []
 
-    def counted(files, table_key):
+    def counted(files, table_key, staging):
         planned.append([f.path.name for f in files])
-        return real_table(files, table_key)
+        return real_table(files, table_key, staging)
 
     job._ingest_table = counted
     with caplog.at_level(logging.WARNING):
