@@ -1,8 +1,8 @@
 """Scalar/text/vector function library — the engine's public expression
 surface, re-exported from the operator modules that define them. All are
-built-in-expression compositions (JVM-side, codegen'd); the only
+built-in-expression compositions (JVM-side, codegen'd); the
 Arrow/pandas entry points are in ``operators.multimodal`` and
-``operators.similarity.topk_pandas_udf``.
+``operators.quantize.pq_encode_pandas``.
 """
 
 from datawarehouse_backup_system_spark.operators.cast import (

@@ -1,87 +1,33 @@
-"""Python UDTFs (table functions) — the one-row-to-many-rows user hook.
+"""Sentence splitting as a built-in expression (t31's segmentation step).
 
-Spark 4 user-defined table functions run Python per input row and emit
-zero or more output rows — the right tool when the expansion logic is
-genuinely imperative. They are the SLOW path (serialized row traffic,
-no codegen): everything here has an expression-level twin that the hot
-path uses, and pytest pins the two bit-equal. The UDTF exists so the
-engine's surface covers the escape hatch users reach for first.
-
-Sentence splitting semantics (canonical, engine-portable): a sentence
-boundary is ``[.!?]`` followed by whitespace — the explicit
+Semantics (canonical, engine-portable): a sentence boundary is
+``[.!?]`` followed by whitespace — the explicit
 :data:`~..operators.text.WS_CLASS`, not the ``\\s`` shorthand, because
 ``\\s`` reads differently in every dialect this family spans (Python
 ``re`` on str: full Unicode whitespace incl. NBSP; Java: ASCII with
 vertical tab; DuckDB/RE2: ASCII without vertical tab — the same
 three-way fork the r11 tokens() migration closed for tokenization).
-Implemented everywhere as mark-then-split — replace the boundary with
-the terminator plus a ``\\x01`` marker, split on the marker, drop
-empties — because RE2 (DuckDB) has no lookbehind, so the naive
+Implemented as mark-then-split — replace the boundary with the
+terminator plus a ``\\x01`` marker, split on the marker, drop empties —
+because RE2 (DuckDB) has no lookbehind, so the naive
 ``(?<=[.!?])\\s+`` split can't be replayed by the oracle.
 """
 
 from __future__ import annotations
 
-import re
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from datawarehouse_backup_system_spark.operators.text import WS_CLASS
 
 SENT_MARK = "\x01"
-#: WS_CLASS is pure ASCII-class syntax, so Python re and Java read it
-#: identically (and T31's oracle carries the same literal for RE2)
-_BOUNDARY = re.compile(f"([.!?]){WS_CLASS}+")
-
-
-def split_sentences_py(text: str | None) -> list[str]:
-    """Reference implementation (shared by the UDTF and tests).
-
-    Trims ASCII SPACES only — ``strip(" ")``, not ``strip()`` — because
-    the expression twin uses ``F.trim``, which removes only 0x20; a
-    bare strip() also eats tabs/newlines and the pinned bit-equality
-    would break on edge whitespace (review r8)."""
-    if text is None:
-        return []
-    marked = _BOUNDARY.sub("\\1" + SENT_MARK, text.strip(" "))
-    return [s for s in marked.split(SENT_MARK) if s != ""]
 
 
 def sentences_expr(text: Column) -> Column:
-    """Expression twin: array<string> of sentences, codegen-friendly."""
+    """array<string> of sentences, codegen-friendly. Trims ASCII spaces
+    only (``F.trim``), so edge tabs and newlines stay in the first and
+    last sentence."""
     marked = F.regexp_replace(
         F.trim(text), f"([.!?]){WS_CLASS}+", "$1" + SENT_MARK
     )
     return F.filter(F.split(marked, SENT_MARK), lambda s: s != "")
-
-
-def register_split_sentences(spark) -> None:
-    """Register the ``split_sentences`` UDTF for LATERAL use in SQL."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="sent_idx: bigint, sentence: string")
-    class SplitSentences:
-        def eval(self, text: str):  # noqa: D401 - UDTF contract
-            for i, s in enumerate(split_sentences_py(text)):
-                yield i, s
-
-    spark.udtf.register("split_sentences", SplitSentences)
-
-
-def sentences_udtf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document sentences via the registered UDTF (LATERAL join).
-
-    Returns (id_col, sent_idx, sentence). Prefer :func:`sentences_expr`
-    + posexplode in hot paths; this demonstrates (and tests) the UDTF
-    escape hatch end-to-end.
-    """
-    spark = df.sparkSession
-    register_split_sentences(spark)
-    df.select(F.col(id_col), F.col(text_col).alias("_txt")).createOrReplaceTempView(
-        "_udtf_src"
-    )
-    return spark.sql(
-        f"SELECT {id_col}, s.sent_idx, s.sentence "
-        "FROM _udtf_src, LATERAL split_sentences(_txt) s"
-    )

@@ -271,19 +271,6 @@ class Ledger:
         ]
         return sorted(out, key=lambda t: (t[1], t[0]))
 
-    def ever_committed_writes(self, table_name: str) -> set[str]:
-        """write_ids that carry a COMMIT marker, INCLUDING those later
-        tombstoned by restore/rewrite — the replay-idempotency set for
-        exactly-once sinks: a batch whose id ever committed is durably in
-        the table's lineage (a rewrite carried its rows forward), so a
-        replay must stay a no-op even though committed_writes() no
-        longer lists the id."""
-        return {
-            name.rsplit(":", 1)[-1]
-            for name, states in self.write_states(table_name).items()
-            if STATUS_WRITE_COMMIT in states
-        }
-
     def tombstoned_writes(self, table_name: str) -> list[str]:
         """write_ids of ``table_name`` carrying a restore tombstone, or
         an abort marker with NO commit — the set whose lingering data
@@ -291,14 +278,11 @@ class Ledger:
         write-id is NOT in this list, so vacuum can never race a
         concurrent publish).
 
-        ABORTED alone is not enough (review r11): the exactly-once
-        streaming sink's documented abort-then-replay flow re-appends
-        the SAME deterministic write-id after a failed epoch, so its
-        state set is {begin, aborted, begin, commit} — a LIVE committed
-        write that the old any-abort rule let vacuum() delete (silent
-        data loss, then PATH_NOT_FOUND on time travel). A later COMMIT
-        supersedes an earlier abort; RESTORED always tombstones (it
-        retires a commit by design)."""
+        ABORTED alone is not enough (review r11): a write-id whose
+        state set holds an abort followed by a COMMIT is live, and
+        vacuum() must not delete its files. A later COMMIT supersedes
+        an earlier abort; RESTORED always tombstones (it retires a
+        commit by design)."""
         return [
             name.rsplit(":", 1)[-1]
             for name, states in self.write_states(table_name).items()

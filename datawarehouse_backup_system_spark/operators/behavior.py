@@ -374,8 +374,7 @@ def pair_support(
     LOWEST-md5-hash items (deterministic, order- and partition-
     independent), bounding per-basket work at C(cap, 2). Capped-out
     items still count toward ``n_a``/``n_b``/``n_baskets`` — the lift
-    denominators stay exact; only pair GENERATION is capped. Use
-    :func:`pair_support_audit` for the dropped-basket/item counts.
+    denominators stay exact; only pair GENERATION is capped.
 
     Lift is reported exactly as integer milli-units:
     ``lift_milli = floor(1000 · support · n_baskets / (n_a · n_b))``.
@@ -454,34 +453,3 @@ def _cap_hot_baskets(
         .drop("_rk")
     )
 
-
-def pair_support_audit(
-    df: DataFrame,
-    basket_cols: Sequence[str],
-    item_col: str,
-    max_basket_size: int,
-) -> DataFrame:
-    """One-row audit of what :func:`pair_support`'s hot-basket cap
-    dropped at this ``max_basket_size``: how many baskets were capped
-    and how many basket-item memberships fell out of pair generation —
-    the honesty artifact next to every capped operator (d02's
-    hot-bucket audit lineage). Bounded output (1 row)."""
-    bc = list(basket_cols)
-    sizes = (
-        df.select(*bc, item_col)
-        .distinct()
-        .groupBy(*bc)
-        .agg(F.count("*").alias("_k"))
-    )
-    return sizes.agg(
-        F.count("*").alias("n_baskets"),
-        F.sum(
-            F.when(F.col("_k") > max_basket_size, 1).otherwise(0)
-        ).alias("n_baskets_capped"),
-        F.sum(
-            F.when(
-                F.col("_k") > max_basket_size,
-                F.col("_k") - max_basket_size,
-            ).otherwise(0)
-        ).alias("n_items_dropped"),
-    )

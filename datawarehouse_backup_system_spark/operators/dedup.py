@@ -1,12 +1,10 @@
-"""Exact deduplication: the reference's three hand-rolled hash-set joins
+"""Exact deduplication: the reference's hand-rolled hash-set joins
 (SURVEY §2.3) as real Spark joins.
 
 - J1 in-file self-dedup, FIRST occurrence kept
   (``util/data_processing.py:396-524``)
 - J2 incremental anti-join vs processing history
   (``util/data_processing.py:209-393`` + driver loop ``main.py:221-248``)
-- J3 replay guard: anti-join on id vs the target table, range-pruned
-  (``util/data_pushing.py:115-166``)
 
 Scale notes (the whole point of the rewrite):
 
@@ -17,9 +15,10 @@ Scale notes (the whole point of the rewrite):
   rows whatever duplicates its build side holds: broadcast while history
   is small, else both sides hash-partitioned on ``row_hash``, spilling
   as needed.
-- J3 reproduces the reference's manual min/max range pruning, but in Spark
-  the ``BETWEEN`` predicate is pushed to parquet row-group stats
-  automatically — the "probe" reads only overlapping row groups.
+- The reference's J3 replay guard (an anti-join on id against the
+  target) is a plain ``left_anti`` join, spelled inline by the q04
+  contract query; the daily cycle needs none, because ids continue from
+  the stored watermark and the ledger skips a processed file.
 """
 
 from __future__ import annotations
@@ -86,24 +85,3 @@ def anti_join_history(
     """
     return new_rows.join(history.select(hash_col), on=hash_col, how="left_anti")
 
-
-def replay_guard(
-    batch: DataFrame,
-    target: DataFrame,
-    id_col: str = "id",
-) -> DataFrame:
-    """J3: drop batch rows whose id already exists in the target.
-
-    Range-pruned like the reference (P5): probe only target ids within the
-    batch's [min,max]. The bounds are computed with one tiny agg; the
-    filtered probe side is then anti-joined. Empty-target fast path comes
-    free: the anti-join against 0 rows is a no-op under AQE's
-    empty-relation propagation.
-    """
-    bounds = batch.agg(
-        F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
-    ).collect()[0]
-    if bounds["lo"] is None:
-        return batch
-    probe = target.where(F.col(id_col).between(bounds["lo"], bounds["hi"])).select(id_col)
-    return batch.join(probe, on=id_col, how="left_anti")

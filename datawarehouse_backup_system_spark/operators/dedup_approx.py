@@ -318,44 +318,6 @@ def lsh_candidate_pairs(
     )
 
 
-def jaccard_pairs(
-    pairs: DataFrame, shingles: DataFrame, id_col: str,
-    broadcast_pairs: bool = False,
-) -> DataFrame:
-    """Exact Jaccard for candidate pairs: |A∩B| via shingle equi-join,
-    |A∪B| = |A|+|B|-|A∩B|. Only candidate pairs are scored — the
-    verification cost is proportional to the LSH recall set, not N².
-
-    ``broadcast_pairs`` must be True ONLY when something bounds the
-    candidate set (a hot-bucket cap): forcing a broadcast of an
-    uncapped O(B²) pair set through the driver is the OOM path. The
-    DEFAULT is therefore False — AQE chooses the strategy — because a
-    default must be safe for the caller who read nothing (review r10:
-    the uncapped llm_ops pair build rode the old True default straight
-    into the documented OOM path). minhash_lsh_dedup passes True
-    exactly when its hot-bucket cap bounds the set."""
-    sizes = shingles.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    sh_a = shingles.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = shingles.select(F.col(id_col).alias("id_b"), "shingle")
-    # bounded candidate pairs broadcast so the big shingle relation is
-    # never shuffled here; unbounded ones go through AQE's choice
-    pairs_side = F.broadcast(pairs) if broadcast_pairs else pairs
-    inter = (
-        pairs_side.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])  # shingle present in BOTH docs
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-    )
-
-
 def minhash_lsh_dedup(
     df: DataFrame,
     id_col: str,
@@ -740,7 +702,7 @@ def incremental_neardup_pairs(
         .distinct()
     )
     # candidates are batch-bounded (tiny new side × capped history
-    # buckets) ONLY when the cap is set — same rule as jaccard_pairs
+    # buckets) ONLY when the cap is set; uncapped, AQE picks the join
     cand_side = F.broadcast(cand) if max_bucket_size is not None else cand
     return (
         cand_side.join(

@@ -31,11 +31,8 @@ def _pagerank_round(
     base_col,
     damping: float,
 ) -> DataFrame:
-    """One PageRank round: contribution join on _src (zero Exchange on
-    the edge side when norm_e is bucket-staged — `_stage_static_side`),
-    map-side-combined groupBy(_dst) message sum, teleport re-base.
-    Module-level so the bucketed-staging plan contract is directly
-    plan-assertable in tests."""
+    """One PageRank round: contribution join on _src, map-side-combined
+    groupBy(_dst) message sum, teleport re-base."""
     contrib = (
         norm_e.join(
             ranks.select(F.col("node").alias("_src"), "rank"), "_src"
@@ -64,7 +61,6 @@ def pagerank(
     stage_path: str | None = None,
     tol_digits: int | None = None,
     seeds: DataFrame | None = None,
-    stage_bucketed: bool | None = None,
 ) -> DataFrame:
     """Weighted PageRank with a fixed iteration count.
 
@@ -106,17 +102,11 @@ def pagerank(
       whole history every round; measured in SCALE.md r9). Scratch
       lifecycle = `_staged_round_root` (per-call-site root, cleared
       on re-entry; a new call invalidates the previous call's lazy
-      result). ``norm_e`` is round-invariant, so above the
-      `_stage_static_side` auto size threshold (``stage_bucketed=None``
-      default; ``True`` forces — VERDICT r9 item 2) it is staged as a
-      bucketed+sorted table on ``_src``: every round's contribution
-      join reads co-located buckets with ZERO Exchange on the edge
-      side — only the node-sized rank vector shuffles, and the
-      groupBy(_dst) message shuffle is map-side combined down to
-      ~node-sized. Below the threshold the rank vector broadcasts and
-      the edge side never shuffles anyway (measured r10 — see
-      `_BUCKET_MIN_BYTES`). Plan contract pinned in
-      tests/test_graph_cc.py.
+      result). ``norm_e`` is round-invariant and staged once as plain
+      parquet. While the rank vector is broadcast-sized, no round
+      shuffles the edge side; past that, each round's join shuffles
+      both sides. The groupBy(_dst) message shuffle is map-side
+      combined down to ~node-sized.
 
     ``tol_digits`` (forces the staged tier, even below the unroll
     threshold — the stop only exists there): stop early when the
@@ -155,18 +145,11 @@ def pagerank(
     # while the caller asked for a tolerance stop is a quiet wrong-tier
     # trap. A tol_digits call below the unroll threshold therefore
     # stages too — the caller asked for early-stopping semantics.
-    # stage_bucketed=True likewise forces staging: the bucketed
-    # zero-Exchange plan contract only exists in the staged tier, and
-    # _stage_static_side's own rule is raise-on-forced-failure, never
-    # silent degradation — dropping the demand in the unrolled tier
-    # contradicted that (ADVICE r10→r11).
     staged = (
         stage_path is not None
         or iterations > stage_rounds_above
         or tol_digits is not None
-        or stage_bucketed is True
     )
-    drop_stage = lambda: None  # noqa: E731
     if staged:
         from pyspark.sql import Observation
 
@@ -177,8 +160,7 @@ def pagerank(
         # stage spends its write (review r10)
         nodes = _stage(nodes, f"{root}/nodes")
     # validate + count BEFORE staging the edge list (review r10: a
-    # seed-set ValueError after the bucketed stage leaked the catalog
-    # entry and wasted the full edge-list write)
+    # seed-set ValueError after the edge-list stage wasted its write)
     if seeds is not None:
         n = nodes.where(F.col("_seed")).count()
         if n == 0:
@@ -201,60 +183,49 @@ def pagerank(
         base_col = F.lit((1.0 - damping) / n)
         init_col = F.lit(1.0 / n)
     ranks = nodes.select("node", init_col.alias("rank"))
+    if staged:
+        # norm_e is round-invariant: staged once, read by every round
+        norm_e = _stage(norm_e, f"{root}/norm_e")
     cur = None
     prev_sig = None
-    try:
+    for i in range(iterations):
+        ranks = _pagerank_round(norm_e, nodes, ranks, base_col, damping)
         if staged:
-            # norm_e is round-invariant: bucketed on the per-round join
-            # key so no round ever re-shuffles it (helper docstring);
-            # inside the try so a failure never leaks the catalog entry
-            norm_e, drop_stage = _stage_static_side(
-                norm_e, root, "norm_e", "_src", bucketed=stage_bucketed
-            )
-        for i in range(iterations):
-            ranks = _pagerank_round(norm_e, nodes, ranks, base_col, damping)
-            if staged:
-                nxt = f"{root}/r{i + 1}"
-                if tol_digits is None:
-                    # no convergence stop requested: plain stage write,
-                    # no per-row signature hashing (review r9 — the hash
-                    # was computed every round and never consulted)
-                    ranks = _stage(ranks, nxt)
-                else:
-                    # double xor-hash signature — see connected_components
-                    obs = Observation()
-                    ranks = _stage(ranks.observe(
-                        obs,
-                        F.count(F.lit(1)).alias("n"),
-                        F.coalesce(
-                            F.expr(
-                                "bit_xor(xxhash64(node, "
-                                f"round(rank, {int(tol_digits)})))"
-                            ),
-                            F.lit(0),
-                        ).alias("h1"),
-                        F.coalesce(
-                            F.expr(
-                                f"bit_xor(xxhash64(round(rank, "
-                                f"{int(tol_digits)}), node))"
-                            ),
-                            F.lit(0),
-                        ).alias("h2"),
-                    ), nxt)
-                    sig = (obs.get["n"], obs.get["h1"], obs.get["h2"])
-                if cur is not None:
-                    _stage_rm(cur, spark)  # superseded round
-                cur = nxt
-                if tol_digits is not None:
-                    if sig == prev_sig:
-                        break
-                    prev_sig = sig
-    finally:
-        # staged tier: the final rank vector is backed by round parquet
-        # (or the nodes parquet at iterations=0), never by the staged
-        # edge table — its catalog entry can go now. Unrolled tier:
-        # no-op (the lazy result owns the norm_e lineage).
-        drop_stage()
+            nxt = f"{root}/r{i + 1}"
+            if tol_digits is None:
+                # no convergence stop requested: plain stage write,
+                # no per-row signature hashing (review r9 — the hash
+                # was computed every round and never consulted)
+                ranks = _stage(ranks, nxt)
+            else:
+                # double xor-hash signature — see connected_components
+                obs = Observation()
+                ranks = _stage(ranks.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n"),
+                    F.coalesce(
+                        F.expr(
+                            "bit_xor(xxhash64(node, "
+                            f"round(rank, {int(tol_digits)})))"
+                        ),
+                        F.lit(0),
+                    ).alias("h1"),
+                    F.coalesce(
+                        F.expr(
+                            f"bit_xor(xxhash64(round(rank, "
+                            f"{int(tol_digits)}), node))"
+                        ),
+                        F.lit(0),
+                    ).alias("h2"),
+                ), nxt)
+                sig = (obs.get["n"], obs.get["h1"], obs.get["h2"])
+            if cur is not None:
+                _stage_rm(cur, spark)  # superseded round
+            cur = nxt
+            if tol_digits is not None:
+                if sig == prev_sig:
+                    break
+                prev_sig = sig
     return ranks.select(
         "node", F.round(F.col("rank"), round_digits).alias("rank")
     )
@@ -412,8 +383,7 @@ def _staged_round_root(
         except Exception as exc:  # noqa: BLE001 — best-effort, like the glob
             # ...but DIAGNOSABLE (ADVICE r10→r11): a failed FS
             # list/delete on re-entry silently resurrects the exact
-            # stale-round mixing this clear exists to prevent, so warn
-            # like the bucketed-staging fallback does.
+            # stale-round mixing this clear exists to prevent, so warn.
             import warnings
 
             warnings.warn(
@@ -450,10 +420,10 @@ def _stage_rm(path: str, spark=None) -> None:
 
 
 def _stage_du(path: str, spark=None) -> int:
-    """Recursive byte size of a staged path, cluster-storage-aware
-    (review r10: Path.rglob returned nothing on hdfs://… so auto mode
-    computed size 0 and never bucketed — exactly the regime the
-    threshold exists for). Unreadable → 0 (the conservative tier)."""
+    """Recursive byte size of a path, cluster-storage-aware (review
+    r10: Path.rglob returns nothing on hdfs://…, so a size-switched
+    tier would read 0 at any scale). Unreadable → 0 (the conservative
+    tier)."""
     try:
         if "://" not in path:
             p = _GPath(path)
@@ -480,18 +450,6 @@ def _stage(df: DataFrame, path: str) -> DataFrame:
     return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
-#: auto-mode cutover: bucket the staged big side only when its parquet
-#: footprint reaches this size. Below it the per-round label/rank frame
-#: is broadcastable, so the equi-join NEVER shuffles the edge side in
-#: the first place and bucketing only costs the one-time write-side
-#: sort (measured r10, g05 at sf0.1: bucketed 9.0–13.0 s vs parquet
-#: 6.8–7.5 s; still true at sf1 and with SMB forced — the fixed
-#: overhead dominates at local scale). Above it the label frame stops
-#: being broadcastable, every round would re-shuffle the edge list
-#: across the network, and the one bucketed write amortizes over the
-#: ~10–30 rounds real graphs take.
-_BUCKET_MIN_BYTES = 4 << 30
-
 #: lazy-rounds cutover for neighborhood_function's unrolled tier: it
 #: composes every round into one job, which re-scans the edge source
 #: per composed round, so it runs only while the edge frame's
@@ -508,102 +466,6 @@ def _plan_fits(df: DataFrame, max_bytes: int) -> bool:
         return int(size) <= max_bytes
     except Exception:  # noqa: BLE001
         return False
-
-
-def _stage_static_side(
-    df: DataFrame,
-    root: str,
-    name: str,
-    key: str,
-    bucketed: bool | None = None,
-    n_buckets: int | None = None,
-):
-    """Stage a ROUND-INVARIANT big frame for an iterative operator;
-    returns ``(frame, cleanup)``.
-
-    ``bucketed=True`` (the cluster shape, VERDICT r9 item 2): write it
-    once as a bucketed+sorted table on the per-round join ``key``
-    (`operators/bucketed.py` — the z03-proven SMB property), so every
-    round's equi-join reads co-located buckets with ZERO Exchange (and
-    zero Sort) on this side and only the small per-round label/rank
-    frame shuffles. The one-time bucketed write performs the
-    shuffle+sort the first round's join would have — every later round
-    rides it for free. A forced True RAISES on write failure (review
-    r10: the old blanket fallback silently dropped the exact plan
-    contract the caller demanded); auto mode falls back to the plain
-    staged copy with a warning.
-
-    ``bucketed=None`` (default — auto, the e02/h04 exact-vs-scale
-    switch pattern): stage plain parquet first (shuffle-free write),
-    stat the staged footprint, and REBUCKET from the staged file only
-    when it reaches `_BUCKET_MIN_BYTES` — the regime where the
-    per-round label frame stops being broadcastable and the join would
-    otherwise re-shuffle the edge list every round. Below the threshold broadcast already
-    elides the edge-side Exchange, so bucketing is pure overhead
-    (measured numbers at `_BUCKET_MIN_BYTES`).
-
-    Data files live under ``root`` (external table) so the scratch
-    sweep owns them; the catalog entry is dropped by the returned
-    cleanup callable. ONLY for frames that are NOT referenced by the
-    operator's final result (the result must be backed by round
-    parquet alone, so dropping the table after the loop is safe).
-
-    Deliberately NOT used by connected_components: its star rounds
-    REWRITE the edge set every round, so there is no round-invariant
-    big side — a per-round bucketed write would pay the exact shuffle
-    it elides (plus the in-bucket sort) and win nothing.
-    """
-    import warnings as _warnings
-
-    spark = df.sparkSession
-    path = f"{root}/{name}"
-    fallback = None  # already-staged parquet frame, if any
-    plain_path = None
-    if bucketed is None:
-        fallback = _stage(df, path)
-        if _stage_du(path, spark) < _BUCKET_MIN_BYTES:
-            return fallback, (lambda: None)
-        # rebucket from the staged file; the plain copy is deleted once
-        # the bucketed write lands (review r10: it doubled the staged
-        # edge-list footprint for the life of the scratch root)
-        df, plain_path, path = fallback, path, f"{path}_bucketed"
-    elif not bucketed:
-        return _stage(df, path), (lambda: None)
-    import uuid as _uuid
-
-    from .bucketed import write_bucketed
-
-    tbl = f"dwbss_stage_{name}_{_uuid.uuid4().hex[:12]}"
-    nb = n_buckets or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    try:
-        write_bucketed(df, tbl, [key], nb, sort_cols=[key], path=path)
-    except Exception:  # noqa: BLE001 — classified below, never swallowed
-        # never leave a half-registered table or partial bucket files
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        except Exception:  # noqa: BLE001
-            pass
-        _stage_rm(path, spark)
-        if fallback is not None:
-            # auto mode: the plain staged copy is intact — degrade
-            # LOUDLY (review r10: a silent fallback would hide that the
-            # zero-Exchange plan contract disappeared)
-            _warnings.warn(
-                f"bucketed staging of {name!r} failed; falling back to "
-                "the plain-parquet stage (per-round edge shuffle "
-                "returns)",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-            return fallback, (lambda: None)
-        raise  # forced True: the caller demanded the plan contract
-    if plain_path is not None:
-        _stage_rm(plain_path, spark)  # rebucket source no longer needed
-    return spark.table(tbl), (
-        lambda: spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    )
 
 
 def connected_components(
@@ -666,14 +528,9 @@ def connected_components(
     singleton components. Node ids must be orderable and non-null
     (component_id = the min id, the dedup_groups convention).
 
-    WHY NO BUCKETED STAGING here (unlike core_numbers / staged
-    pagerank, `_stage_static_side`): the star rounds REWRITE the edge
-    set every round — there is no round-invariant big side. Writing
-    each round's output bucketed would pay exactly the shuffle+sort it
-    elides from the next round's single use (and the round's two
-    group keys, ``a`` after the explode and ``h``, don't even share a
-    bucketable key with the staged (lo, hi) layout). Bucketing only
-    wins when one write amortizes over many reads."""
+    Unlike core_numbers and staged pagerank, the star rounds REWRITE
+    the edge set every round, so there is no round-invariant edge list
+    to stage once."""
     from pyspark.sql import Observation
 
     spark = edges.sparkSession
@@ -836,9 +693,7 @@ def _kcore_round(d: DataFrame, labels: DataFrame) -> DataFrame:
     """One H-index refinement round: deliver each neighbor's current
     value over the directed edge list, then per-node H-index via a
     descending row_number window (max rank with value ≥ rank — hub-safe
-    partial top-k, never collect_list). Module-level so the bucketed-
-    staging plan contract (zero Exchange on the edge side) is directly
-    plan-assertable in tests."""
+    partial top-k, never collect_list)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("a").orderBy(F.desc("val"))
@@ -859,7 +714,6 @@ def core_numbers(
     dst: str = "dst",
     iterations: int = 32,
     stage_path: str | None = None,
-    stage_bucketed: bool | None = None,
 ) -> DataFrame:
     """k-core decomposition → ``(node, core)`` over the undirected
     simple graph: core = the largest k such that the node survives in
@@ -891,23 +745,11 @@ def core_numbers(
     jobs — and ran every chunk past the fixpoint to its boundary
     (measured on g05: 28 → 15 jobs per call once chunking went).
 
-    BUCKETED STAGING (VERDICT r9 item 2): the directed edge list is
-    round-invariant, so above the `_stage_static_side` auto size
-    threshold (``stage_bucketed=None`` default; ``True`` forces,
-    ``False`` disables) it is staged ONCE as a bucketed+sorted table
-    on the join key ``b`` (operators/bucketed.py; the z03-proven SMB
-    zero-Exchange property). Every round's neighbor join then reads
-    co-located buckets with ZERO Exchange (and zero Sort) on the edge
-    side — only the small (node, val) label frame shuffles into the
-    bucketing, plus the unavoidable Pregel "message" shuffle of the
-    joined (a, val) rows into the per-node window. The one-time
-    bucketed write pays the shuffle+sort a single round's join would
-    have; with ~10–30 rounds on real graphs that is a ~10–30×
-    reduction in edge-list shuffle volume. Below the threshold the
-    label frame broadcasts, the edge side never shuffles anyway, and
-    bucketing is pure write-side overhead (measured r10 — see
-    `_BUCKET_MIN_BYTES`). Sessions that cannot ``saveAsTable`` fall
-    back automatically. Plan contract pinned in tests/test_graph_cc.py.
+    The directed edge list is round-invariant, so it is staged ONCE
+    as plain parquet. While the (node, val) label frame is
+    broadcast-sized, no round's neighbor join shuffles the edge side;
+    past that, each round's join shuffles both sides. The Pregel
+    "message" rows (a, val) always shuffle into the per-node window.
 
     CONVERGENCE BUDGET: real (web/link/co-occurrence) graphs converge
     in ~10–30 rounds (the paper's measurement; the repo's sf0.1
@@ -934,40 +776,32 @@ def core_numbers(
     root = _staged_round_root(stage_path, "dwbss-kc-", spark)
     e = _canon(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     # directed (both orientations) edge list, staged ONCE — every
-    # round joins against it; bucketed on the join key by default so
-    # the per-round join never re-shuffles it (module helper docstring)
-    d, drop_stage = _stage_static_side(
-        _directed(e), root, "edges", "b", bucketed=stage_bucketed
-    )
-    try:
-        labels = d.groupBy("a").agg(F.count(F.lit(1)).alias("val"))
-        cur = None
-        prev_sig = None
-        for i in range(iterations):
-            nxt = f"{root}/r{i + 1}"
-            obs = Observation()
-            # double xor-hash signature — see connected_components
-            labels = _stage(_kcore_round(d, labels).observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.expr("bit_xor(xxhash64(a, val))"), F.lit(0)
-                ).alias("h1"),
-                F.coalesce(
-                    F.expr("bit_xor(xxhash64(val, a))"), F.lit(0)
-                ).alias("h2"),
-            ), nxt)
-            sig = (obs.get["n"], obs.get["h1"], obs.get["h2"])
-            if cur is not None:
-                _stage_rm(cur, spark)  # superseded round
-            cur = nxt
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-    finally:
-        # the returned frame is backed by round parquet alone, so the
-        # staged edge table's catalog entry can go now
-        drop_stage()
+    # round joins against it
+    d = _stage(_directed(e), f"{root}/edges")
+    labels = d.groupBy("a").agg(F.count(F.lit(1)).alias("val"))
+    cur = None
+    prev_sig = None
+    for i in range(iterations):
+        nxt = f"{root}/r{i + 1}"
+        obs = Observation()
+        # double xor-hash signature — see connected_components
+        labels = _stage(_kcore_round(d, labels).observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(
+                F.expr("bit_xor(xxhash64(a, val))"), F.lit(0)
+            ).alias("h1"),
+            F.coalesce(
+                F.expr("bit_xor(xxhash64(val, a))"), F.lit(0)
+            ).alias("h2"),
+        ), nxt)
+        sig = (obs.get["n"], obs.get["h1"], obs.get["h2"])
+        if cur is not None:
+            _stage_rm(cur, spark)  # superseded round
+        cur = nxt
+        if sig == prev_sig:
+            break
+        prev_sig = sig
     return labels.select(
         F.col("a").alias("node"), F.col("val").alias("core")
     )
@@ -980,7 +814,6 @@ def neighborhood_function(
     max_radius: int = 8,
     lg_config_k: int = 12,
     stage_path: str | None = None,
-    stage_bucketed: bool | None = None,
     stage_rounds_above: int = 4,
 ) -> DataFrame:
     """HyperBall (Boldi–Vigna, "In-Core Computation of Geometric
@@ -1010,10 +843,8 @@ def neighborhood_function(
 
     Scale shape per round: join of the staged directed edge list with
     the (node, sketch) frame — the edge list is round-invariant, so it
-    stages through `_stage_static_side` exactly like core_numbers
-    (review r10: the old inline plain-parquet stage meant the bucketed
-    auto switch never applied here despite the docstring's
-    cross-reference) — then one groupBy(node) hll_union_agg — partial
+    is staged once, like core_numbers' — then one groupBy(node)
+    hll_union_agg — partial
     aggregation applies map-side because sketch union is
     commutative-associative. No driver-side data; no per-node frontier
     sets.
@@ -1042,13 +873,12 @@ def neighborhood_function(
     # cost is sequential-job latency, not bytes. The SIZE GATE is what
     # keeps it honest at 100 TB: duplicated lineages re-scan the edge
     # source ~r²/2 times, so above the byte threshold (optimizer-stats
-    # probe of the canonical edge frame; the e02/_stage_static_side
-    # threshold pattern) the staged tier with early stop runs
+    # probe of the canonical edge frame; the e02 threshold pattern)
+    # the staged tier with early stop runs
     # unchanged — as it does for real HyperBall radii (8+) and for any
     # forced staging demand.
     if (
         stage_path is None
-        and stage_bucketed is not True
         and max_radius <= stage_rounds_above
         and _plan_fits(e, _LAZY_MAX_BYTES)
     ):
@@ -1080,9 +910,7 @@ def neighborhood_function(
         return out
 
     root = _staged_round_root(stage_path, "dwbss-nf-", spark)
-    d, drop_stage = _stage_static_side(
-        _directed(e), root, "edges", "b", bucketed=stage_bucketed
-    )
+    d = _stage(_directed(e), f"{root}/edges")
     # radius 0: each node's ball is {itself}
     sk = d.groupBy(F.col("a").alias("node")).agg(
         F.hll_sketch_agg(F.col("a"), k).alias("sketch")
@@ -1128,28 +956,23 @@ def neighborhood_function(
         return staged, (obs.get["n"], obs.get["h1"], obs.get["h2"])
 
     cur = f"{root}/r0"
-    try:
-        sk, prev_sig = _write_round(sk, 0, cur)
-        for t in range(1, max_radius + 1):
-            contrib = d.join(
-                sk.select(F.col("node").alias("b"), "sketch"), "b"
-            ).select(F.col("a").alias("node"), "sketch")
-            nxt_sk = (
-                contrib.unionByName(sk)
-                .groupBy("node")
-                .agg(F.hll_union_agg("sketch").alias("sketch"))
-            )
-            nxt = f"{root}/r{t}"
-            sk, sig = _write_round(nxt_sk, t, nxt)
-            _stage_rm(cur, spark)  # superseded sketches
-            cur = nxt
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-    finally:
-        # the output is backed by the est_r* parquet alone — the staged
-        # edge table's catalog entry can go now
-        drop_stage()
+    sk, prev_sig = _write_round(sk, 0, cur)
+    for t in range(1, max_radius + 1):
+        contrib = d.join(
+            sk.select(F.col("node").alias("b"), "sketch"), "b"
+        ).select(F.col("a").alias("node"), "sketch")
+        nxt_sk = (
+            contrib.unionByName(sk)
+            .groupBy("node")
+            .agg(F.hll_union_agg("sketch").alias("sketch"))
+        )
+        nxt = f"{root}/r{t}"
+        sk, sig = _write_round(nxt_sk, t, nxt)
+        _stage_rm(cur, spark)  # superseded sketches
+        cur = nxt
+        if sig == prev_sig:
+            break
+        prev_sig = sig
     out = ests[0]
     for est in ests[1:]:
         out = out.unionByName(est)

@@ -87,8 +87,7 @@ def dequantize(q: Column, q_min: Column, q_scale: Column) -> Column:
 # rows with the smallest (md5-bucket, id) — not Lloyd-iterated k-means.
 # That keeps the whole pipeline expressible in plain relational algebra
 # (so the DuckDB oracle can replay it bit-for-bit) and deterministic on
-# any engine; swap in `similarity.train_centroids` per subspace when
-# recall matters more than auditability. Scale shape:
+# any engine. Scale shape:
 #   * codebook: ORDER BY hash LIMIT k on the corpus — the driver holds
 #     k·d doubles (k=16, d=64 → 8 KiB), broadcast everywhere;
 #   * encode: explode ×m, broadcast-join ×k candidates, argmin — a
@@ -144,7 +143,7 @@ def pq_seed_codebook(
     seeds = (
         # NULL vectors filtered BEFORE seeding (review r9: a NULL
         # landing in the k hash-ordered seeds killed the driver with a
-        # bare TypeError; train_centroids has the same filter)
+        # bare TypeError)
         df.where(F.col(vec_col).isNotNull())
         .select(F.col(id_col).alias("_sid"), _unit(vec_col).alias("_sv"))
         .orderBy(_bucket(F.col("_sid"), salt), F.col("_sid"))

@@ -1,12 +1,7 @@
 """Ops-plane retention (reference C1-C3, SURVEY §2.8).
 
-Two flavors:
-
-- **Local staging dirs** (parity with ``util/cleanup.py``): age-based
-  cleanup and size-capped oldest-first eviction of the landing zone.
-- **Snapshot tables**: retention as partition drop over an ingest-date
-  partition column — the reason snapshots are partitioned by
-  ``ingest_date`` in the first place (SURVEY §4 physical design).
+Local staging dirs (parity with ``util/cleanup.py``): age-based cleanup
+and size-capped oldest-first eviction of the landing zone.
 
 The eviction policy mirrors the reference exactly: delete oldest files
 until total size ≤ ``target_ratio`` × cap (``util/cleanup.py:81-128``,
@@ -15,11 +10,8 @@ until total size ≤ ``target_ratio`` × cap (``util/cleanup.py:81-128``,
 
 from __future__ import annotations
 
-import shutil
 import time
 from pathlib import Path
-
-from pyspark.sql import SparkSession
 
 DEFAULT_MAX_AGE_DAYS = 7          # util/cleanup.py:13
 DEFAULT_MAX_BYTES = 20 * 1024**3  # util/cleanup.py:12
@@ -78,40 +70,3 @@ def check_storage_and_cleanup(
         removed += 1
     return removed
 
-
-def drop_old_partitions(
-    spark: SparkSession,
-    table_path: str | Path,
-    partition_col: str,
-    keep_days: int,
-    today: str | None = None,
-) -> int:
-    """Snapshot-table retention: drop ingest-date partitions older than the
-    window. Partition pruning makes this a metadata operation — no data
-    scan (directories named ``{partition_col}=YYYY-MM-DD``)."""
-    import datetime as dt
-
-    base = Path(table_path)
-    if not base.exists():
-        return 0
-    anchor = dt.date.fromisoformat(today) if today else dt.date.today()
-    cutoff = anchor - dt.timedelta(days=keep_days)
-    removed = 0
-    for d in base.glob(f"{partition_col}=*"):
-        val = d.name.split("=", 1)[1]
-        try:
-            if dt.date.fromisoformat(val) < cutoff:
-                shutil.rmtree(d)
-                removed += 1
-        except ValueError:
-            continue
-    if removed:
-        # invalidate any cached reader over the table path — without
-        # this a cached DataFrame keeps serving the dropped partitions
-        # (review r8: the spark parameter previously went unused,
-        # implying an invalidation that never happened)
-        try:
-            spark.catalog.refreshByPath(str(base))
-        except Exception:  # noqa: BLE001 — best-effort metadata refresh
-            pass
-    return removed

@@ -1,17 +1,17 @@
-"""Deterministic sampling / splitting / shuffling for dataset curation.
+"""Deterministic sampling and splitting for dataset curation.
 
 Seeded-RNG sampling (``df.sample``) is neither reproducible across
 engines nor stable under retries at scale. These operators derive all
 randomness from content hashes instead: the same row always lands in the
-same sample/split/shuffle position, on any engine, any partitioning, any
+same sample or split, on any engine, any partitioning, any
 rerun — which is what a training-data pipeline needs for auditable
 dataset versions.
 
-- **hash_sample** — keep ~pct% of rows by md5-bucket of a key.
 - **hash_split** — assign train/val/test (any weighted splits) by hash
   bucket; splits are disjoint and exhaustive.
-- **deterministic_shuffle** — a content-derived global order (for
-  serving examples in a fixed pseudo-random order).
+- **stratified_sample**, **domain_mixture**, **quantile_filter**,
+  **negative_samples** and the weighted samplers — per-stratum,
+  per-budget and per-anchor selections on the same content hashes.
 """
 
 from __future__ import annotations
@@ -27,8 +27,7 @@ def _bucket(key: Column, salt: str = "") -> Column:
     """Uniform bucket 0..999999 from md5 (conv handles the hex).
 
     NULL keys hash the '<NULL>' sentinel (review r11): the old
-    F.concat propagated NULL, so hash_sample silently DROPPED NULL-key
-    rows even at fraction=1.0, hash_split routed them all to the
+    F.concat propagated NULL, so hash_split routed NULL-key rows to the
     alphabetically-last split, and stratified_sample ranked them first
     in every stratum. For non-NULL keys the bytes are unchanged — the
     FROZEN 8-hex recipe (hashing.md5_prefix_long's exception list) and
@@ -42,17 +41,6 @@ def _bucket(key: Column, salt: str = "") -> Column:
         )
     )
     return (F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % _BUCKETS)
-
-
-def hash_sample(
-    df: DataFrame, key_col: str, fraction: float, salt: str = ""
-) -> DataFrame:
-    """Deterministic ~fraction sample: row kept iff its hash bucket falls
-    below fraction·buckets. Different ``salt`` values give independent
-    samples over the same keys."""
-    if not 0 <= fraction <= 1:
-        raise ValueError("fraction must be in [0, 1]")
-    return df.where(_bucket(F.col(key_col), salt) < int(fraction * _BUCKETS))
 
 
 def hash_split(
@@ -111,15 +99,6 @@ def stratified_sample(
     )
 
 
-def deterministic_shuffle(df: DataFrame, key_col: str, salt: str = "") -> DataFrame:
-    """Global pseudo-random but reproducible order: sort by
-    (md5(salt||key), key). One range shuffle — use for bounded outputs or
-    final export ordering, not as a mid-pipeline step."""
-    return df.orderBy(
-        F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string"))), F.col(key_col)
-    )
-
-
 def domain_mixture(
     df: DataFrame,
     key_col: str,
@@ -135,7 +114,7 @@ def domain_mixture(
     ``targets`` is a tiny (domain, target_tokens) table. Per domain the
     keep fraction is min(1, target_tokens / total_tokens); a document is
     kept iff its md5 hash bucket falls below floor(fraction * buckets) —
-    the same content-derived randomness as :func:`hash_sample`, so the
+    the same content-derived randomness as :func:`hash_split`, so the
     selection is reproducible across engines, retries, and partitionings,
     and a domain's sample only grows when its budget does (buckets are
     nested: threshold_1 < threshold_2 selects a superset).
@@ -214,12 +193,10 @@ def quantile_filter(
     partial-aggregates map-side) and filter on score >= threshold —
     same semantics up to sketch error, no windowed sort.
 
-    Rows with a NULL score are DROPPED (they cannot be ranked), the
-    same rule as :func:`quantile_filter_approx` — review r9: the exact
-    variant previously let NULLs rank FIRST and count toward n, so the
-    two variants diverged by whole rows (not sketch error) on any
-    stratum with NULL scores, and unrankable rows could survive the
-    cut while scored rows were dropped.
+    Rows with a NULL score are DROPPED (they cannot be ranked) — review
+    r9: they previously ranked FIRST and counted toward n, so
+    unrankable rows could survive the cut while scored rows were
+    dropped.
     """
     from pyspark.sql import Window
 
@@ -240,47 +217,6 @@ def quantile_filter(
         .withColumn("_n", F.count(F.lit(1)).over(wn))
         .where(F.col("_rk") > F.floor(F.col("_n") * drop_frac))
         .drop("_rk", "_n")
-    )
-
-
-def quantile_filter_approx(
-    df: DataFrame,
-    stratum_col: str,
-    score_col: str,
-    drop_frac: float = 0.25,
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """The hot-stratum form of :func:`quantile_filter`: a first pass
-    computes each stratum's ``drop_frac`` quantile with
-    ``percentile_approx`` (a sketch that PARTIAL-AGGREGATES map-side —
-    no per-stratum windowed sort, so a stratum with billions of rows
-    costs its partitions only), then a broadcast join + stateless
-    filter keeps rows at or above the threshold.
-
-    Semantics match :func:`quantile_filter` up to sketch error at the
-    cut point (ties at the threshold are KEPT here, while the exact
-    form cuts a precise count — at 100 TB that boundary sliver is the
-    accepted trade for removing the window). A NULL stratum is its own
-    stratum (null-safe join, matching the exact form's NULL window
-    partition); rows with a NULL score are dropped in BOTH variants'
-    spirit (they cannot be ranked) but here that is explicit, not an
-    accident of NULL comparison.
-    """
-    if not 0 <= drop_frac < 1:
-        raise ValueError("drop_frac must be in [0, 1)")
-    cuts = df.groupBy(stratum_col).agg(
-        F.percentile_approx(score_col, drop_frac, accuracy).alias("_cut")
-    )
-    return (
-        # no broadcast hint (review r11): cuts is one row PER STRATUM —
-        # per-host strata reach millions of rows and the forced hint
-        # bypasses the size threshold; AQE broadcasts when small
-        df.join(
-            cuts.withColumnRenamed(stratum_col, "_stratum"),
-            F.col(stratum_col).eqNullSafe(F.col("_stratum")),
-        )
-        .where(F.col(score_col) >= F.col("_cut"))
-        .drop("_cut", "_stratum")
     )
 
 

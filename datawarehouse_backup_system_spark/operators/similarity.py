@@ -256,150 +256,11 @@ def bucketed_ann(
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def topk_pandas_udf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Brute-force top-k via an Arrow-batched Pandas UDF (numpy matmul).
-
-    The sanctioned slow path (SURVEY §2.6 gap list): when the per-row
-    math outgrows what expressions express cleanly, batch it through
-    Arrow — numpy sees a (batch × dim) matrix per partition and BLAS does
-    the dot products. Same output contract as :func:`brute_force_topk`
-    (NULL embeddings are skipped on both sides — np.array over a ragged
-    row list would otherwise abort the job; id columns keep the input's
-    type); scores round HALF-UP like F.round so the two paths pick the
-    same ranks except where BLAS-vs-fold accumulation (~1e-14) straddles
-    a rounding boundary. Kept alongside the expression path so bench can
-    compare the two honestly.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
-    # query_id types from the QUERIES frame, neighbor_id from the
-    # CORPUS (review r9: both were typed from queries, so a corpus id
-    # of a different/wider type failed or truncated at Arrow
-    # conversion even though brute_force_topk handles the same inputs)
-    q_id_t = dict(queries.dtypes)[id_col]
-    c_id_t = dict(corpus.dtypes)[id_col]
-    q_rows = (
-        queries.where(F.col(vec_col).isNotNull())
-        .select(id_col, vec_col)
-        .collect()
-    )
-    out_schema = (
-        f"query_id {q_id_t}, neighbor_id {c_id_t}, score double, rank int"
-    )
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame([], out_schema)
-    q_ids = np.array([r[id_col] for r in q_rows])
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    spark = corpus.sparkSession
-    b_ids = spark.sparkContext.broadcast(q_ids)
-    b_mat = spark.sparkContext.broadcast(q_mat)
-    b_norm = spark.sparkContext.broadcast(q_norm)
-
-    def score(batches):
-        for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]
-            if not len(pdf):
-                continue
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = (c_mat @ b_mat.value.T) / np.outer(c_norm, b_norm.value)
-            n_c, n_q = sims.shape
-            # HALF-UP like F.round (np.round is half-even): sign-aware
-            # floor(|x|*10^d + 0.5)
-            scale = 10.0 ** round_digits
-            flat = sims.ravel()
-            scores = np.sign(flat) * np.floor(np.abs(flat) * scale + 0.5) / scale
-            out = pd.DataFrame(
-                {
-                    "query_id": np.tile(b_ids.value, n_c),
-                    "neighbor_id": np.repeat(pdf[id_col].to_numpy(), n_q),
-                    "score": scores,
-                }
-            )
-            # zero-norm vectors → NaN; emit NULL to match the expression
-            # path's try_divide (Spark sorts NaN ABOVE all reals in desc,
-            # which would rank a zero vector first)
-            out.loc[~np.isfinite(scores), "score"] = None
-            yield out[out.query_id != out.neighbor_id]
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score,
-        schema=f"query_id {q_id_t}, neighbor_id {c_id_t}, score double",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def train_centroids(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 8,
-    n_iter: int = 5,
-    sample_rows: int = 10_000,
-    salt: str = "ivf",
-) -> list[list[float]]:
-    """Lloyd k-means on a bounded, deterministic sample — the IVF coarse
-    quantizer trainer. The sample is the ``sample_rows`` smallest
-    ``md5(salt||id)`` rows (hash-ordered, so partition-layout independent)
-    collected to the driver; numpy runs the iterations there. Training on
-    a sample is the standard IVF recipe (FAISS trains on ~256·k points);
-    the full corpus never leaves the cluster — only the sample does.
-    Returns plain centroid vectors for :func:`ivf_topk`.
-    """
-    import numpy as np
-
-    rows = (
-        emb.where(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v"))
-        .orderBy(F.md5(F.concat(F.lit(salt), F.col("_id").cast("string"))), F.col("_id"))
-        .limit(sample_rows)
-        .collect()
-    )
-    x = np.array([r["_v"] for r in rows], dtype=np.float64)
-    if len(x) < n_centroids:
-        raise ValueError(f"sample ({len(x)}) smaller than n_centroids ({n_centroids})")
-    # normalize → spherical k-means (cosine geometry, matching ivf_topk)
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    xn = np.divide(x, norms, out=np.zeros_like(x), where=norms > 0)
-    cents = xn[:n_centroids].copy()
-    for _ in range(n_iter):
-        assign = np.argmax(xn @ cents.T, axis=1)
-        for j in range(n_centroids):
-            members = xn[assign == j]
-            if len(members):
-                m = members.mean(axis=0)
-                n = np.linalg.norm(m)
-                if n > 0:
-                    cents[j] = m / n
-    return cents.tolist()
-
-
 def _centroid_frame(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_centroids: int,
-    centroids: list[list[float]] | None,
+    corpus: DataFrame, id_col: str, vec_col: str, n_centroids: int
 ) -> DataFrame:
-    """(cid, ce) frame: explicit trained centroids, or the n smallest-id
-    corpus vectors (deterministic seed quantizer)."""
-    if centroids is not None:
-        return corpus.sparkSession.createDataFrame(
-            [(i, [float(v) for v in c]) for i, c in enumerate(centroids)],
-            "cid long, ce array<double>",
-        )
+    """(cid, ce) frame: the n smallest-id corpus vectors (deterministic
+    seed quantizer)."""
     return (
         corpus.orderBy(F.col(id_col)).limit(n_centroids)
         .select(F.col(id_col).alias("cid"), _as_double(vec_col).alias("ce"))
@@ -521,7 +382,6 @@ def ivf_topk(
     n_centroids: int = 8,
     n_probe: int = 2,
     round_digits: int = 6,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: coarse-quantize the corpus
     into ``n_centroids`` lists, probe only the query's ``n_probe``
@@ -542,71 +402,12 @@ def ivf_topk(
        per query instead of all of it; exact rounded-cosine top-k window
        ranks them.
 
-    At 100 TB the assignment is computed once and persisted with the
-    corpus (``build_ivf_index`` → ``search_ivf_index``: the inverted
-    file), making probes partition-pruned scans. Centroids default to
-    the ``n_centroids`` smallest-id corpus vectors — deterministic and
-    oracle-expressible; pass ``centroids=train_centroids(...)`` for
-    k-means quality (recall floor asserted in tests).
+    Centroids are the ``n_centroids`` smallest-id corpus vectors —
+    deterministic and oracle-expressible.
     """
-    cent = _centroid_frame(corpus, id_col, vec_col, n_centroids, centroids)
+    cent = _centroid_frame(corpus, id_col, vec_col, n_centroids)
     assigned = _assign_lists(corpus, cent, id_col, vec_col, round_digits)
     probes = _probe_lists(queries, cent, id_col, vec_col, n_probe, round_digits)
-    return _score_candidates(assigned, probes, k, round_digits)
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 8,
-    round_digits: int = 6,
-    centroids: list[list[float]] | None = None,
-) -> None:
-    """Materialize the inverted file: corpus rows with their list
-    assignment, written ``partitionBy(list_id)`` so every list is its own
-    partition directory, plus the centroids as a ``_centroids`` sidecar
-    (underscore prefix: Spark's file index ignores it when scanning the
-    data). Build once per corpus version; searches then never recompute
-    the N·K assignment."""
-    cent = _centroid_frame(corpus, id_col, vec_col, n_centroids, centroids)
-    assigned = _assign_lists(corpus, cent, id_col, vec_col, round_digits)
-    (
-        assigned.repartition(F.col("list_id"))
-        .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    )
-    cent.coalesce(1).write.mode("overwrite").parquet(f"{path}/_centroids")
-
-
-def search_ivf_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    n_probe: int = 2,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Search a :func:`build_ivf_index` index with static partition
-    pruning: the probed list ids are computed driver-side (n_queries ×
-    n_probe rows — bounded) and pushed into the scan as a
-    ``list_id IN (...)`` PartitionFilter, so Spark READS only the probed
-    ~n_probe/K fraction of the index files. This is the on-disk analogue
-    of ivf_topk's candidate restriction — the part that matters at
-    100 TB, where the unprobed lists never leave object storage."""
-    cent = spark.read.parquet(f"{path}/_centroids")
-    probes = _probe_lists(queries, cent, id_col, vec_col, n_probe, round_digits)
-    # ONE evaluation of the probe pipeline: collect the bounded
-    # (n_queries × n_probe) probe rows and rebuild the small frame from
-    # them (the _centroid_frame pattern) — the previous shape ran the
-    # queries scan + centroid crossJoin + window TWICE, once for the
-    # list-id collect and again inside the scoring join
-    probe_rows = probes.collect()
-    probe_lists = sorted({r["list_id"] for r in probe_rows})
-    probes = spark.createDataFrame(probe_rows, probes.schema)
-    assigned = spark.read.parquet(path).where(F.col("list_id").isin(probe_lists))
     return _score_candidates(assigned, probes, k, round_digits)
 
 
@@ -824,7 +625,6 @@ def semantic_dedup(
     tau: float = 0.9,
     n_clusters: int = 8,
     round_digits: int = 6,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al., 2023, public):
     cluster the embedding corpus with a coarse quantizer, then WITHIN each
@@ -844,11 +644,10 @@ def semantic_dedup(
     is deterministic and independent of join order, so replays and
     engine ports agree row-for-row.
 
-    Centroids default to the ``n_clusters`` smallest-id corpus vectors
-    (deterministic seed quantizer, DuckDB-replayable); pass
-    ``centroids=train_centroids(...)`` for k-means cluster quality.
+    Centroids are the ``n_clusters`` smallest-id corpus vectors
+    (deterministic seed quantizer, DuckDB-replayable).
     """
-    cent = _centroid_frame(corpus, id_col, vec_col, n_clusters, centroids)
+    cent = _centroid_frame(corpus, id_col, vec_col, n_clusters)
     assigned = _assign_lists(corpus, cent, id_col, vec_col, round_digits)
     a = assigned.select(
         F.col("neighbor_id").alias("id_a"), F.col("cv").alias("va"),

@@ -1,9 +1,9 @@
-"""Upsert / MERGE emulation and snapshot maintenance on plain parquet.
+"""Upsert / MERGE emulation on plain parquet.
 
-Delta/Iceberg (not in this image) provide transactional MERGE INTO and
-OPTIMIZE; these operators emulate the two workhorses on snapshot
-directories (SURVEY §2 S9's parity sink), with the same DataFrame shapes
-a lakehouse MERGE would plan:
+Delta/Iceberg (not in this image) provide transactional MERGE INTO;
+these operators emulate it on snapshot directories (SURVEY §2 S9's
+parity sink), with the same DataFrame shapes a lakehouse MERGE would
+plan:
 
 - **merge_upsert** — keyed upsert: updates win over target rows with the
   same key (anti-join + union — one shuffle on the key, broadcast when
@@ -11,18 +11,11 @@ a lakehouse MERGE would plan:
 - **scd2_apply** — slowly-changing-dimension type 2: close the current
   version of changed keys (valid_to stamped) and append the new version
   (valid_from stamped, open-ended).
-- **compact_partition** — small-file compaction: rewrite one partition
-  directory into ``target_files`` files (daily appends leave one file
-  per batch; thousands of small files slow every scan at 100 TB).
 """
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-from pathlib import Path
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -130,155 +123,3 @@ def scd2_apply(
         .unionByName(new_versions.select(*history.columns))
     )
 
-
-def compact_partition(
-    spark: SparkSession,
-    table_path: str | Path,
-    partition: str,
-    target_files: int = 1,
-) -> int:
-    """Rewrite one partition dir (e.g. ``ingest_date=2024-01-05``) into
-    ``target_files`` parquet files. Returns files before compaction.
-
-    Staging and backup dirs are ``_``-prefixed, which Spark's file index
-    ignores — concurrent table-root readers never discover half-written
-    or duplicate data. The swap itself is two renames, so a reader racing
-    exactly between them can miss the partition for that instant; a table
-    format (Delta/Iceberg) is the transactional answer, noted in SCALE.md.
-    Crash recovery: a leftover backup with no live partition dir is
-    restored; a stale backup next to a live dir is removed.
-
-    Raises FileNotFoundError for a nonexistent partition (a silent 0
-    would mask operator typos).
-    """
-    table_path = Path(table_path)
-    part_dir = table_path / partition
-    backup = table_path / f"_compact_backup_{partition}"
-    if backup.exists():
-        if part_dir.exists():
-            shutil.rmtree(backup)       # stale: crash after a completed swap
-        else:
-            backup.rename(part_dir)     # crash between the two renames
-    # orphaned staging from a crash between the staging write and the
-    # first rename (review r9: unlike delete_where, these whole-
-    # partition-sized copies were never reclaimed and accumulated
-    # across crash/retry cycles)
-    for stray in table_path.glob("_compact_tmp_*"):
-        shutil.rmtree(stray, ignore_errors=True)
-    if not part_dir.exists():
-        raise FileNotFoundError(f"no such partition: {part_dir}")
-    files_before = len(list(part_dir.glob("*.parquet")))
-    if files_before <= target_files:
-        return files_before
-    df = spark.read.parquet(str(part_dir))
-    staging = Path(tempfile.mkdtemp(prefix="_compact_tmp_", dir=table_path))
-    df.coalesce(target_files).write.mode("overwrite").parquet(str(staging))
-    part_dir.rename(backup)
-    staging.rename(part_dir)
-    shutil.rmtree(backup)
-    return files_before
-
-
-def delete_where(
-    spark: SparkSession,
-    table_path: str | Path,
-    condition,
-    partition_col: str = "ingest_date",
-) -> int:
-    """Targeted row delete (the right-to-be-forgotten / bad-batch purge
-    a warehouse needs): copy-on-write rewrite of ONLY the partitions
-    containing matching rows, with :func:`compact_partition`'s
-    backup/swap protocol per partition. Untouched partitions keep their
-    files byte-identical — at 100 TB a delete of one user's rows
-    rewrites a handful of date partitions, never the table. Returns the
-    number of rows deleted.
-
-    A first pass finds affected partitions by pushing the predicate
-    down to the scan (min/max + dictionary stats prune most files
-    before any row is read). Like any physical delete, history is
-    GONE: earlier ``read_as_of`` versions of rewritten partitions no
-    longer reproduce (same as Delta VACUUM after DELETE); run
-    retention/compliance deletes AFTER any audit export.
-    """
-    table_path = Path(table_path)
-    # Recovery FIRST, by scanning for leftover backups — not inside the
-    # per-affected-partition loop: a crash between the two swap renames
-    # hides that partition's rows, so it can never re-enter `affected`
-    # and a loop-scoped recovery would never restore it (review r7).
-    for backup in sorted(table_path.glob("_delete_backup_*")):
-        part_dir = table_path / backup.name[len("_delete_backup_"):]
-        if part_dir.exists():
-            shutil.rmtree(backup)       # stale: crash after the swap
-        else:
-            backup.rename(part_dir)     # crash between the renames
-    for stray in table_path.glob("_delete_tmp_*"):
-        shutil.rmtree(stray, ignore_errors=True)
-
-    df = spark.read.parquet(str(table_path))
-    # affected partition DIRECTORIES from the matched files themselves
-    # (input_file_name), never reconstructed from values (review r9:
-    # f"{col}={str(v)}" broke on NULL partitions — Spark writes
-    # __HIVE_DEFAULT_PARTITION__, str(None) gives 'None' — and on any
-    # value Spark's Hive escaping percent-encodes, aborting the purge
-    # half-done with FileNotFoundError on every retry)
-    from urllib.parse import unquote, urlparse
-
-    matched = [
-        r["f"]
-        for r in df.where(condition)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    ]
-    part_dirs = sorted({
-        Path(unquote(urlparse(f).path)).parent for f in matched
-    })
-    root = table_path.resolve()
-    deleted = 0
-    for part_dir in part_dirs:
-        if part_dir.resolve() == root:
-            raise ValueError(
-                f"{table_path} is not partitioned — delete_where's "
-                "copy-on-write swap needs partition directories"
-            )
-        partition = part_dir.name
-        backup = table_path / f"_delete_backup_{partition}"
-        # basePath keeps the partition column resolvable in the
-        # predicate; drop it before the rewrite so the new files keep
-        # the partition-in-directory physical layout. Persisted: the
-        # two counts and the rewrite otherwise scan the partition
-        # three times (review r9).
-        pdf = spark.read.option("basePath", str(table_path)).parquet(
-            str(part_dir)
-        ).persist()
-        try:
-            # coalesce(cond, False): rows where the predicate is NULL
-            # are KEPT — bare ~condition is NULL for them, silently
-            # deleting every NULL-keyed row in a touched partition
-            # (3VL; review r7)
-            keep = pdf.where(~F.coalesce(condition, F.lit(False))).drop(
-                partition_col
-            )
-            n_keep = keep.count()
-            n_del = pdf.count() - n_keep
-            if n_del == 0:
-                continue
-            if n_keep == 0:
-                # whole partition deleted: REMOVE the dir — an empty
-                # rewrite would leave a parquet dir with no data files,
-                # which direct per-partition reads reject ('Unable to
-                # infer schema'; review r9)
-                part_dir.rename(backup)
-                shutil.rmtree(backup)
-            else:
-                staging = Path(
-                    tempfile.mkdtemp(prefix="_delete_tmp_", dir=table_path)
-                )
-                keep.write.mode("overwrite").parquet(str(staging))
-                part_dir.rename(backup)
-                staging.rename(part_dir)
-                shutil.rmtree(backup)
-            deleted += n_del
-        finally:
-            pdf.unpersist()
-    return deleted

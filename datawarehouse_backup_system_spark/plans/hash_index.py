@@ -65,11 +65,10 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: auto-mode cutover, same rationale as operators/graph._BUCKET_MIN_BYTES:
-#: below this on-disk table footprint the hash projection is small enough
-#: that the plain path's per-file shuffle (often a broadcast under AQE) is
-#: cheaper than maintaining the index; above it the per-file history
-#: re-shuffle dominates every cycle.
+#: auto-mode cutover: below this on-disk table footprint the hash
+#: projection is small enough that the plain path's per-file shuffle
+#: (often a broadcast under AQE) is cheaper than maintaining the index;
+#: above it the per-file history re-shuffle dominates every cycle.
 _INDEX_MIN_BYTES = 4 << 30
 
 #: bucket count of a newly created index (an existing index keeps the

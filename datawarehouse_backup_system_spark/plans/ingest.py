@@ -429,8 +429,8 @@ class IngestJob:
         schema: TableSchema,
         history: DataFrame | None = None,
     ) -> DataFrame:
-        """J2 with the scale auto-switch (VERDICT r10 item 6, the same
-        footprint-threshold pattern as graph._stage_static_side): below
+        """J2 with the scale auto-switch (VERDICT r10 item 6, a
+        footprint threshold): below
         ``hash_index._INDEX_MIN_BYTES`` (4 GiB) of on-disk table
         footprint, the plain column-pruned history anti-join runs —
         at local scale its shuffle is a broadcast under AQE and

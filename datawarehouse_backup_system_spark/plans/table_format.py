@@ -25,15 +25,13 @@ plain parquet: DESCRIBE HISTORY (``versions``), time travel + snapshot
 isolation (``read_as_of``), change feed (``diff_versions``), RESTORE
 (``restore_to_version``), VACUUM, transactional rewrites
 (``rewrite_table`` → OPTIMIZE ZORDER / MERGE / DELETE WHERE), opt-in
-additive schema evolution (``merge_schema``), per-file stats manifests
-with pruned range reads, and — via
-``streaming.exactly_once_table_sink`` — exactly-once streaming appends.
-Atomicity throughout comes from two primitives: prefix-named data files
-whose commit is a marker row, and ``Ledger.append_many`` writing a
-composite transition as one parquet file, which a rename (or, for a
-put-if-absent commit, a hard link) makes visible whole. Both ledger
-reads and writes run on the driver, so a commit marker costs no Spark
-job.
+additive schema evolution (``merge_schema``), and per-file stats and
+bloom manifests with pruned reads. Atomicity throughout comes from two
+primitives: prefix-named data files whose commit is a marker row, and
+``Ledger.append_many`` writing a composite transition as one parquet
+file, which a rename (or, for a put-if-absent commit, a hard link)
+makes visible whole. Both ledger reads and writes run on the driver, so
+a commit marker costs no Spark job.
 
 **Single-writer limit.** The write-id protocol gives snapshot isolation
 to any number of concurrent READERS (a mid-publish write-id has no
@@ -425,7 +423,6 @@ class WriteIdParquetFormat(SnapshotFormat):
         path: Path,
         table_name: str,
         extra_commit_rows: list[tuple[str, str]] | None = None,
-        write_id: str | None = None,
         commit_cas_token: str | None = None,
     ) -> int:
         """``extra_commit_rows``: ledger rows written in the SAME
@@ -433,11 +430,6 @@ class WriteIdParquetFormat(SnapshotFormat):
         see Ledger.append_many). OPTIMIZE uses it to retire the
         write-ids it replaces in the very transition that commits their
         replacement; a crash can never expose both or neither.
-
-        ``write_id``: caller-chosen DETERMINISTIC id (16 hex chars) —
-        the idempotency key for exactly-once streaming sinks (a replayed
-        micro-batch re-derives the same id; see
-        streaming.exactly_once_table_sink). Default: a fresh uuid.
 
         ``commit_cas_token``: put-if-absent commit (r8) — the commit
         batch lands under a token-derived ledger file name via an
@@ -450,7 +442,7 @@ class WriteIdParquetFormat(SnapshotFormat):
         both commit — the 3-writer lease-steal window's backstop)."""
         from pyspark.sql import Observation
 
-        write_id = write_id or uuid.uuid4().hex[:16]
+        write_id = uuid.uuid4().hex[:16]
         inflight = self.warehouse_dir / "_inflight" / write_id
         obs = Observation()
         # rows counted via Observation on the written plan — no O(table)
@@ -657,22 +649,6 @@ def diff_versions(
     return inserts.unionByName(deletes, allowMissingColumns=True)
 
 
-def _stats_aggs(columns: list[str]) -> list:
-    """The per-file statistics every manifest row carries — ONE
-    definition shared by write_stats_manifest and update_stats_manifest
-    (review r9: the copy-pasted blocks could silently fork, making
-    incremental rows schema-incompatible with full-rebuild rows at the
-    unionByName)."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in columns:
-        aggs += [
-            F.min(c).alias(f"min_{c}"),
-            F.max(c).alias(f"max_{c}"),
-            F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}"),
-        ]
-    return aggs
-
-
 def drop_tombstoned_files(
     files: list[str], tombstoned: set[str] | None
 ) -> list[str]:
@@ -717,20 +693,6 @@ def _live_decoded_files(uris: list[str]) -> list[str]:
         else:
             out.append(uri)
     return out
-
-
-def _uri_to_resolved_path(uri: str) -> str:
-    """Normalize a file URI (``input_file_name()`` / ``Path.as_uri()``)
-    to a resolved local path string, so manifest membership checks never
-    depend on URI escaping/format drift between the two producers.
-    Non-local schemes pass through unchanged (both sides then compare as
-    the same opaque string)."""
-    from urllib.parse import unquote, urlparse
-
-    p = urlparse(uri)
-    if p.scheme in ("file", ""):
-        return str(Path(unquote(p.path)).resolve())
-    return uri
 
 
 def write_stats_manifest(
@@ -797,7 +759,13 @@ def write_stats_manifest(
         df = spark.read.parquet(str(path)).withColumn(
             "_file", F.input_file_name()
         )
-    aggs = _stats_aggs(columns)
+    aggs = [F.count(F.lit(1)).alias("n_rows")]
+    for c in columns:
+        aggs += [
+            F.min(c).alias(f"min_{c}"),
+            F.max(c).alias(f"max_{c}"),
+            F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}"),
+        ]
     stats = df.groupBy("_file").agg(*aggs)
     # a manifest is small (one row per file): single output file
     stats.coalesce(1).write.mode("overwrite").parquet(str(manifest_dir))
@@ -912,71 +880,6 @@ def vacuum(fmt: WriteIdParquetFormat, path: Path, table_name: str) -> int:
     return n
 
 
-def update_stats_manifest(
-    spark: SparkSession,
-    path: Path,
-    columns: list[str],
-    manifest_dir: Path | None = None,
-    fmt: "WriteIdParquetFormat | None" = None,
-    table_name: str | None = None,
-) -> tuple[int, int]:
-    """Incremental manifest maintenance: stat ONLY data files absent
-    from the manifest and union them in — O(appended bytes), not
-    O(table). The per-append complement of :func:`write_stats_manifest`:
-    at 100 TB the full rebuild is a compaction-time job; every appended
-    batch maintains the manifest at the cost of scanning itself.
-
-    Returns (files_added, files_total). The manifest rewrite is a
-    tmp-dir swap (the manifest is one row per file — tiny); membership
-    is matched on RESOLVED local paths (via :func:`_uri_to_resolved_path`)
-    rather than raw URI strings, so escaping/format drift between
-    ``input_file_name()`` and ``Path.as_uri()`` can never silently
-    re-add (and double-count) every file.
-
-    Like :func:`write_stats_manifest`, pass ``fmt``/``table_name`` on a
-    write-id table to restrict the disk listing to committed files.
-    """
-    manifest_dir = manifest_dir or (Path(path) / "_stats")
-    if not manifest_dir.exists():
-        n = write_stats_manifest(
-            spark, path, columns, manifest_dir, fmt=fmt,
-            table_name=table_name,
-        )
-        return n, n
-    old = spark.read.parquet(str(manifest_dir))
-    known = {
-        _uri_to_resolved_path(r["_file"])
-        for r in old.select("_file").collect()
-    }
-    if fmt is not None and table_name is not None:
-        disk = [
-            Path(f) for f in fmt._committed_file_list(Path(path), table_name)
-        ]
-    else:
-        disk = [
-            f for f in Path(path).rglob("*.parquet")
-            if manifest_dir not in f.parents
-            and not any(part.startswith("_")
-                        for part in f.relative_to(path).parts[:-1])
-        ]
-    new_files = [f for f in disk if str(f.resolve()) not in known]
-    if not new_files:
-        return 0, len(known)
-    df = (
-        spark.read.option("basePath", str(path))
-        .parquet(*[str(f) for f in new_files])
-        .withColumn("_file", F.input_file_name())
-    )
-    aggs = _stats_aggs(columns)
-    add = df.groupBy("_file").agg(*aggs)
-    merged = old.unionByName(add)
-    tmp = manifest_dir.parent / f"{manifest_dir.name}_tmp"
-    merged.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-    shutil.rmtree(manifest_dir)
-    tmp.rename(manifest_dir)
-    return len(new_files), len(known) + len(new_files)
-
-
 def rewrite_table(
     spark: SparkSession,
     fmt: WriteIdParquetFormat,
@@ -1057,8 +960,8 @@ def rewrite_table(
     if expected_version is not None:
         # re-check at the commit point: the transform's execution is the
         # check-then-commit window a concurrent append can land in when
-        # no WriterLease serializes writers (rewrite_with_retry re-plans
-        # on this); ids are compared, not just the count, so a
+        # no WriterLease serializes writers (the caller re-plans on
+        # this); ids are compared, not just the count, so a
         # tombstone+append pair of the same arity is still caught
         now_ids = [w for w, _ in fmt.ledger.committed_writes(table_name)]
         if now_ids != old_ids:
@@ -1305,40 +1208,3 @@ def bloom_candidate_files(
         _live_decoded_files(files), tombstoned
     )
 
-
-def rewrite_with_retry(
-    spark: SparkSession,
-    fmt: WriteIdParquetFormat,
-    path: Path,
-    fallback: T.StructType,
-    table_name: str,
-    transform: Callable[[DataFrame], DataFrame],
-    max_retries: int = 3,
-    run_vacuum: bool = True,
-) -> dict:
-    """Full Delta-style optimistic concurrency over :func:`rewrite_table`:
-    plan against the current version, commit with the version check, and
-    on :class:`VersionConflictError` RE-PLAN against the advanced table
-    and retry — the transform re-executes over the rows the conflicting
-    writer committed, so no write is ever based on stale state (the
-    conflict class the plain check surfaces but leaves to the caller).
-
-    ``transform`` must be a pure function of its input DataFrame
-    (re-planning re-applies it wholesale; a closure over previously-read
-    rows would defeat the re-read). Returns rewrite_table's result dict
-    plus ``"retries"``. Raises the final VersionConflictError after
-    ``max_retries`` exhausted — livelock surfaces loudly rather than
-    spinning."""
-    last: VersionConflictError | None = None
-    for attempt in range(max_retries + 1):
-        planned_at = len(fmt.ledger.committed_writes(table_name))
-        try:
-            out = rewrite_table(
-                spark, fmt, path, fallback, table_name, transform,
-                run_vacuum=run_vacuum, expected_version=planned_at,
-            )
-            out["retries"] = attempt
-            return out
-        except VersionConflictError as exc:
-            last = exc
-    raise last

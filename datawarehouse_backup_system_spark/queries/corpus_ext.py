@@ -320,7 +320,7 @@ def r07_recall_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the same pair set as neardup_pairs at ~1/10 the cost.
     emb = load(spark, sf_dir, "embeddings").where(F.col("vec_id") < 2000)
     pairs = neardup_pairs_broadcast(emb, threshold=_D12_TAU)
-    cent = _centroid_frame(emb, "vec_id", "embedding", _D12_CLUSTERS, None)
+    cent = _centroid_frame(emb, "vec_id", "embedding", _D12_CLUSTERS)
     asg = _assign_lists(emb, cent, "vec_id", "embedding", 6).select(
         F.col("neighbor_id").alias("_v"), "list_id"
     )

@@ -778,12 +778,12 @@ def _e02_trim_exact(staged: DataFrame) -> DataFrame:
 
 
 def _e02_trim_approx(staged: DataFrame, accuracy: int = 10_000) -> DataFrame:
-    """The 100 TB form (`quantile_filter_approx`'s two-sided sibling):
-    ONE map-side-combined percentile_approx pass yields both tail cut
-    values, then a broadcast join + stateless band filter — no global
-    sort anywhere. Semantics match the exact form up to sketch error
-    at the cut values, and ties AT a cut are kept (the exact form cuts
-    a precise count); that boundary sliver is the accepted trade."""
+    """The 100 TB form: ONE map-side-combined percentile_approx pass
+    yields both tail cut values, then a broadcast join + stateless band
+    filter — no global sort anywhere. Semantics match the exact form up
+    to sketch error at the cut values, and ties AT a cut are kept (the
+    exact form cuts a precise count); that boundary sliver is the
+    accepted trade."""
     cuts = staged.agg(
         F.percentile_approx(
             "l2_norm", F.array(F.lit(_E02_TAIL), F.lit(1.0 - _E02_TAIL)),

@@ -397,9 +397,7 @@ SELECT query_id, neighbor_id, score, rank FROM (
 # --------------------------------------------------------------------------
 def d10_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with the deterministic seed quantizer (centroids = 8 smallest
-    vec_ids) so the DuckDB oracle can replay it; the k-means-trained
-    quantizer path (similarity.train_centroids) is recall-tested in
-    tests/test_similarity_ops.py instead."""
+    vec_ids), so the DuckDB oracle can replay it."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.where(_probe_slice())
     return similarity.ivf_topk(emb, queries, k=3, n_centroids=8, n_probe=2)

@@ -632,13 +632,12 @@ SPECS.append(
 
 
 # --------------------------------------------------------------------------
-# t31 — sentence segmentation (expression path; UDTF twin pytest-pinned)
+# t31 — sentence segmentation (built-in expression path)
 # --------------------------------------------------------------------------
 def t31_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document sentence rows: mark-then-split boundaries (portable —
     RE2 has no lookbehind) via functions.udtfs.sentences_expr, exploded
-    with position. The Python UDTF twin (LATERAL split_sentences) is
-    pinned bit-equal in pytest; the hot path stays expression-level."""
+    with position."""
     from ..functions.udtfs import sentences_expr
 
     docs = load(spark, sf_dir, "documents").where(F.col("doc_id") < 300)

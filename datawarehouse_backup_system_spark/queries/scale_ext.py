@@ -466,8 +466,7 @@ def q46_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     size threshold — at the docstring's own 100 TB regime that means
     shipping a hundreds-of-millions-row build side whole (the 8 GB
     broadcast hard limit / driver OOM). AQE broadcasts each side at
-    runtime exactly when it is actually small — the r10 jaccard_pairs
-    rule applied uniformly."""
+    runtime exactly when it is actually small."""
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("pk_c"))
     ordk = load(spark, sf_dir, "orders").select(

@@ -76,4 +76,14 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # A single-path batch read first asks FileStreamSink whether the path
+    # is a streaming sink's output. That probe stats the path string
+    # as-is, so a glob-escaped landing name (``a\[1\].csv``) is "not
+    # found" and a WARN with a full stack trace is logged, although the
+    # read itself is correct. A batch read never needs that answer.
+    jvm = spark._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark

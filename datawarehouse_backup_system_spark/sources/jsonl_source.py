@@ -9,8 +9,8 @@ JSON reader for pipeline use on three counts:
   with their original bytes (Spark's raw-JSON scan refuses
   corrupt-column-only queries: UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_
   RECORD_COLUMN — a real operational trap this layout sidesteps);
-- **schema is explicit** — at 100 TB inference is a full extra pass;
-  pass the schema, or bound the inference with ``sample_schema``;
+- **schema is explicit** — at 100 TB inference is a full extra pass,
+  so the caller passes the schema;
 - **parsing stays in the scan projection** (from_json is an expression)
   — no second source, no shuffle, and the same column prunes as any
   projection.
@@ -114,30 +114,3 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     return good, bad
 
-
-def sample_schema(
-    spark: SparkSession, paths: str | list[str], n_lines: int = 10_000
-) -> T.StructType:
-    """One BOUNDED inference pass — how to get a schema for a new
-    100 TB drop without scanning all of it: take the first ``n_lines``
-    non-empty lines and infer from that sample only. Pass the result to
-    :func:`read_jsonl` for the real (single-pass) read."""
-    lines = [
-        r["value"]
-        for r in spark.read.text(paths)
-        .where(_nonblank(F.col("value")))
-        .limit(n_lines)
-        .collect()
-    ]
-    inferred = spark.read.json(spark.sparkContext.parallelize(lines or ["{}"]))
-    # drop the corrupt-record field under the SESSION'S configured name
-    # too, not just the stock default — a custom
-    # spark.sql.columnNameOfCorruptRecord otherwise leaks a phantom
-    # always-NULL string column into the returned schema (review r11)
-    try:
-        conf_name = spark.conf.get("spark.sql.columnNameOfCorruptRecord")
-    except Exception:  # noqa: BLE001 — unset conf on some builds
-        conf_name = "_corrupt_record"
-    drop = {"_corrupt_record", conf_name}
-    fields = [f for f in inferred.schema.fields if f.name not in drop]
-    return T.StructType(fields)

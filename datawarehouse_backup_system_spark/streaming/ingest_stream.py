@@ -10,8 +10,6 @@ daily daemon loop, main.py:417-424, is the degenerate batch case).
 - **watermark_dedup_batch** — the deterministic batch replay of
   streaming_dedup's state semantics (the ``s01`` contract query), pinned
   against the live stream in tests.
-- **exactly_once_table_sink** — a ``foreachBatch`` sink whose appends go
-  through the write-id protocol, so a replayed micro-batch is a no-op.
 """
 
 from __future__ import annotations
@@ -146,56 +144,3 @@ def watermark_dedup_batch(
         .drop("_ts_us", "_bucket")
     )
 
-
-def exactly_once_table_sink(
-    fmt,
-    table_path,
-    table_name: str,
-    stream_id: str,
-):
-    """foreachBatch sink with EXACTLY-ONCE table appends over the
-    write-id format: the write-id derives deterministically from
-    (stream_id, epoch), so an at-least-once replay of a micro-batch
-    re-derives the same id — if its commit marker already exists the
-    sink skips (the batch IS in the table); if the previous attempt
-    crashed mid-publish, ``recover()`` has rolled its files back by
-    prefix and the replay re-appends under the same id cleanly.
-
-    This closes the duplication window a bare ``mode("append")`` sink
-    has between 'files written' and 'checkpoint offset committed' —
-    the same contract Delta's ``txnAppId``/``txnVersion`` provides.
-    Use with ``writeStream.foreachBatch``.
-    """
-    import hashlib
-
-    # EVER-committed snapshot loaded ONCE at sink construction, then
-    # maintained in memory (review r9: scanning + collecting the full
-    # marker history EVERY micro-batch is O(batches²) over the
-    # stream's life — seconds of per-trigger driver time after enough
-    # commits). Correctness is unchanged: this process is the only
-    # writer of this stream_id's write-ids (the format is
-    # single-writer under the lease), so the only ids that can appear
-    # after construction are the ones this sink appends — which it
-    # records below. A RESTART constructs a fresh sink and re-derives
-    # the set, so replays across restarts still skip.
-    committed: set | None = None
-
-    def sink(batch: DataFrame, epoch_id: int) -> None:
-        nonlocal committed
-        wid = hashlib.md5(f"{stream_id}:{epoch_id}".encode()).hexdigest()[:16]
-        if committed is None:
-            # EVER-committed, not currently-committed: a rewrite
-            # (OPTIMIZE/MERGE/DELETE) tombstones the id while carrying
-            # its rows into the new version — a replay racing the
-            # maintenance job must still be a no-op, or the batch
-            # would re-append
-            committed = set(fmt.ledger.ever_committed_writes(table_name))
-        if wid in committed:
-            return  # replayed batch — already durably in the lineage
-        out = batch
-        if "ingest_date" not in out.columns:  # the format partitions on it
-            out = out.withColumn("ingest_date", F.current_date())
-        fmt.append(out, table_path, table_name, write_id=wid)
-        committed.add(wid)
-
-    return sink

@@ -685,7 +685,9 @@ def test_stats_manifest_committed_files_only(spark, tmp_path):
     """ADVICE r4: on a write-id table the manifest must index only
     COMMITTED files — an uncommitted (crashed mid-publish) write-id's
     file must not be statted, or read_pruned would surface rows the
-    committed view excludes."""
+    committed view excludes. The warehouse path holds a space, which
+    input_file_name() percent-escapes: the pruned read must decode it,
+    not read '%20' literally (ADVICE r4)."""
     from pyspark.sql import functions as F
 
     from datawarehouse_backup_system_spark.ledger import Ledger
@@ -696,7 +698,7 @@ def test_stats_manifest_committed_files_only(spark, tmp_path):
         write_stats_manifest,
     )
 
-    root = tmp_path / "w"
+    root = tmp_path / "my wh"
     fmt = WriteIdParquetFormat(
         Ledger(spark, root / "_ledger"), root, move=lambda s, d: s.rename(d)
     )
@@ -725,28 +727,6 @@ def test_stats_manifest_committed_files_only(spark, tmp_path):
     assert pruned_files(spark, table, "id", 10_000, 10_049) == []
     assert read_pruned(spark, table, "id", 10_000, 10_049).count() == 0
     # the committed range is fully served
-    assert read_pruned(spark, table, "id", 0, 99).count() == 100
-
-
-def test_update_stats_manifest_uri_drift_no_readd(spark, tmp_path):
-    """ADVICE r4: membership is matched on resolved paths, not raw URI
-    strings — a path that URI-escapes differently between
-    input_file_name() and Path.as_uri() (here: a space in the dir name)
-    must not be silently re-added and double-counted."""
-    from pyspark.sql import functions as F
-
-    from datawarehouse_backup_system_spark.plans.table_format import (
-        read_pruned,
-        update_stats_manifest,
-    )
-
-    table = tmp_path / "my table"          # space forces %20 in as_uri()
-    spark.range(0, 100).withColumn("v", F.col("id")) \
-        .coalesce(2).write.parquet(str(table))
-    assert update_stats_manifest(spark, table, ["id"]) == (2, 2)
-    # second pass: nothing new — URI drift would re-add both files here
-    assert update_stats_manifest(spark, table, ["id"]) == (0, 2)
-    # and the pruned read does not double-count
     assert read_pruned(spark, table, "id", 0, 99).count() == 100
 
 
@@ -990,19 +970,19 @@ def test_two_threaded_ingest_cycles_single_winner(spark, tmp_path):
 
 
 def test_rewrite_with_retry_replans_on_mid_transaction_conflict(spark, tmp_path):
-    """Full optimistic-concurrency loop: a concurrent append landing
-    INSIDE the rewrite transaction (after the plan check, before the
-    commit) trips the new commit-point re-check; rewrite_with_retry
-    re-plans against the advanced table and the final state includes
-    the concurrent writer's rows — no write is ever based on stale
-    state."""
+    """Optimistic concurrency: a concurrent append landing INSIDE the
+    rewrite transaction (after the plan check, before the commit) trips
+    the commit-point re-check; re-planning against the advanced table
+    commits a version that includes the concurrent writer's rows — no
+    write is ever based on stale state."""
+    import pytest as _pytest
     from pyspark.sql import functions as F
 
     from datawarehouse_backup_system_spark.ledger import Ledger
     from datawarehouse_backup_system_spark.plans.table_format import (
         VersionConflictError,
         WriteIdParquetFormat,
-        rewrite_with_retry,
+        rewrite_table,
     )
 
     root = tmp_path / "w"
@@ -1030,33 +1010,19 @@ def test_rewrite_with_retry_replans_on_mid_transaction_conflict(spark, tmp_path)
             )
         return cur.where(F.col("id") % 2 == 0)
 
-    out = rewrite_with_retry(
-        spark, fmt, table, rows.schema, "t", transform, max_retries=2
-    )
-    assert out["retries"] == 1
-    got = fmt.read(spark, table, rows.schema)
-    # the retry re-planned over BOTH batches: evens of 0..149
-    assert got.count() == 75
-    assert got.agg(F.max("id")).collect()[0][0] == 148
-
-    # exhausted retries surface the conflict loudly
-    def always_conflict(cur):
-        fmt.append(
-            spark.range(1000, 1001).select(
-                F.col("id"),
-                F.lit("2024-01-07").cast("date").alias("ingest_date"),
-            ),
-            table, "t",
+    def rewrite():
+        return rewrite_table(
+            spark, fmt, table, rows.schema, "t", transform,
+            expected_version=len(fmt.ledger.committed_writes("t")),
         )
-        return cur
-
-    import pytest as _pytest
 
     with _pytest.raises(VersionConflictError):
-        rewrite_with_retry(
-            spark, fmt, table, rows.schema, "t", always_conflict,
-            max_retries=1,
-        )
+        rewrite()
+    rewrite()  # re-planned against the advanced table
+    got = fmt.read(spark, table, rows.schema)
+    # the re-plan covered BOTH batches: evens of 0..149
+    assert got.count() == 75
+    assert got.agg(F.max("id")).collect()[0][0] == 148
 
 
 def test_steal_verifies_tombstone_token(tmp_path, monkeypatch):
@@ -1219,7 +1185,8 @@ def test_three_writer_steal_race_no_lost_commit(spark, tmp_path):
     3-writer steal window backstopped by the commit-point OCC re-check.
     Prove the backstop: three writers race to steal one STALE lease,
     then each commits a whole-table rewrite (add-my-marker transform)
-    through rewrite_with_retry. Invariants: every writer's committed
+    through rewrite_table, re-planning on VersionConflictError.
+    Invariants: every writer's committed
     marker survives to the end (no lost committed write — a rewrite
     based on stale state would erase an earlier winner's marker),
     markers are committed exactly once, and the final ledger holds a
@@ -1231,9 +1198,10 @@ def test_three_writer_steal_race_no_lost_commit(spark, tmp_path):
     from datawarehouse_backup_system_spark.ledger import Ledger
     from datawarehouse_backup_system_spark.plans.table_format import (
         ConcurrentWriterError,
+        VersionConflictError,
         WriteIdParquetFormat,
         WriterLease,
-        rewrite_with_retry,
+        rewrite_table,
     )
 
     root = tmp_path / "w"
@@ -1276,11 +1244,19 @@ def test_three_writer_steal_race_no_lost_commit(spark, tmp_path):
             if lease is None:
                 out: object = "never-acquired"
             else:
-                out = rewrite_with_retry(
-                    spark, fmt, table, rows.schema, "t",
-                    lambda cur: cur.unionByName(marker),
-                    max_retries=5, run_vacuum=False,
-                )
+                for _ in range(6):
+                    try:
+                        out = rewrite_table(
+                            spark, fmt, table, rows.schema, "t",
+                            lambda cur: cur.unionByName(marker),
+                            run_vacuum=False,
+                            expected_version=len(
+                                fmt.ledger.committed_writes("t")
+                            ),
+                        )
+                        break
+                    except VersionConflictError as exc:
+                        out = exc  # re-plan against the advanced table
         except Exception as exc:  # noqa: BLE001 — record, assert below
             out = exc
         finally:

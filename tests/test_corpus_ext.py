@@ -73,19 +73,17 @@ def _vecs(spark, rows):
 
 def test_semantic_dedup_drops_tight_neighbors_keeps_canonical(spark):
     rows = [
-        (1, [1.0, 0.0]), (2, [0.999, 0.01]),   # near-identical pair
-        (3, [0.0, 1.0]),                        # distinct direction
+        (1, [1.0, 0.0]),                        # seed of cluster 1
+        (2, [0.0, 1.0]),                        # seed of cluster 2
+        (3, [0.999, 0.01]),                     # near-identical to 1
         (4, [-1.0, 0.0]),                       # opposite
     ]
-    # explicit centroids: the default smallest-id seeds would make vecs 1
-    # and 2 their own centroids and the tight pair would never co-cluster
-    out = semantic_dedup(
-        _vecs(spark, rows), tau=0.99, centroids=[[1.0, 0.0], [0.0, 1.0]]
-    ).collect()
+    # the two smallest ids seed the clusters, so 1 and 3 co-cluster
+    out = semantic_dedup(_vecs(spark, rows), tau=0.99, n_clusters=2).collect()
     verdict = {r["vec_id"]: r["keep"] for r in out}
     assert verdict[1] is True      # canonical (smallest id) survives
-    assert verdict[2] is False     # its tight neighbor is dropped
-    assert verdict[3] is True and verdict[4] is True
+    assert verdict[3] is False     # its tight neighbor is dropped
+    assert verdict[2] is True and verdict[4] is True
 
 
 def test_semantic_dedup_dropped_rows_have_kept_dominator(spark, sf_dir):

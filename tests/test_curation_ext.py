@@ -308,29 +308,6 @@ def test_zorder_partitions_cover_small_rectangles(spark):
     assert spread(wide_clustered) < spread(wide.repartition(16)) * 0.5
 
 
-def test_quantile_filter_approx_tracks_exact(spark):
-    from datawarehouse_backup_system_spark.operators.sampling import (
-        quantile_filter,
-        quantile_filter_approx,
-    )
-
-    rows = [(i, "s" + str(i % 3), (i * 7919) % 1000) for i in range(600)]
-    df = spark.createDataFrame(rows, ["k", "s", "score"])
-    exact = quantile_filter(df, "k", "s", "score", 0.25)
-    approx = quantile_filter_approx(df, "s", "score", 0.25)
-    ne, na = exact.count(), approx.count()
-    # high-accuracy sketch on unique-ish scores: within a small sliver
-    assert abs(na - ne) <= 0.02 * df.count()
-    # the approx keep-set is sane: nothing below the exact minimum kept
-    min_exact = exact.groupBy("s").agg(F.min("score").alias("m"))
-    bad = (
-        approx.join(min_exact, "s")
-        .where(F.col("score") < F.col("m") - 50)
-        .count()
-    )
-    assert bad == 0
-
-
 # --------------------------------------------------------------------------
 # heavy_hitters sketch: retention guarantee in the lossy regime
 # --------------------------------------------------------------------------
@@ -493,13 +470,11 @@ def test_domain_mixture_preserves_input_schema(spark):
     assert 0 < out.count() < 50
 
 
-def test_quantile_filter_null_scores_match_approx(spark):
-    """Review r9: NULL scores are unrankable and must be DROPPED by
-    BOTH variants — the exact form previously ranked them first and
-    counted them in n, so the variants diverged by whole rows."""
+def test_quantile_filter_drops_null_scores(spark):
+    """Review r9: NULL scores are unrankable and must be DROPPED — the
+    filter previously ranked them first and counted them in n."""
     from datawarehouse_backup_system_spark.operators.sampling import (
         quantile_filter,
-        quantile_filter_approx,
     )
 
     rows = [(i, "a", float(i)) for i in range(1, 9)] + [
@@ -509,11 +484,6 @@ def test_quantile_filter_null_scores_match_approx(spark):
     exact = quantile_filter(df, "doc_id", "dom", "score", drop_frac=0.25)
     # 8 scored rows, drop floor(8*0.25)=2 lowest; NULLs gone
     assert sorted(r["doc_id"] for r in exact.collect()) == list(range(3, 9))
-    approx = quantile_filter_approx(df, "dom", "score", drop_frac=0.25)
-    # approx keeps score >= the 25th-percentile cut — ties kept, and
-    # crucially the same NULL-drop rule
-    assert {r["doc_id"] for r in approx.collect()} <= set(range(1, 9))
-    assert set(range(3, 9)) <= {r["doc_id"] for r in approx.collect()}
 
 
 def test_domain_mixture_zero_token_domain_keeps_nothing(spark):

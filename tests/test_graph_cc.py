@@ -423,155 +423,3 @@ def test_neighborhood_function_early_stop_and_harmonic(spark):
     assert h[0] == pytest.approx(n - 1, rel=0.02)
     for v in range(1, n):
         assert h[v] == pytest.approx(1 + (n - 2) / 2, rel=0.02)
-
-
-def test_kcore_round_bucketed_staging_never_shuffles_edges(
-    spark, tmp_path
-):
-    """VERDICT r9 item 2: the staged directed edge list is
-    round-invariant, so bucketing it on the join key must remove the
-    per-round edge Exchange — the round plan carries exactly the label
-    alignment + window shuffles (2), one fewer than plain-parquet
-    staging (3), and the edge side reads buckets directly."""
-    from datawarehouse_backup_system_spark.operators.graph import (
-        _directed,
-        _kcore_round,
-        _stage_static_side,
-    )
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        rng = random.Random(7)
-        raw = [(rng.randrange(60), rng.randrange(60)) for _ in range(150)]
-        e = _canon(
-            spark.createDataFrame(raw, "src bigint, dst bigint")
-            .selectExpr("src as u", "dst as v")
-        )
-
-        def round_plan(bucketed, sub):
-            d, drop = _stage_static_side(
-                _directed(e), str(tmp_path / sub), "edges", "b",
-                bucketed=bucketed,
-            )
-            labels = d.groupBy("a").agg(F.count(F.lit(1)).alias("val"))
-            labels.write.mode("overwrite").parquet(
-                str(tmp_path / sub / "r0")
-            )
-            labels = spark.read.parquet(str(tmp_path / sub / "r0"))
-            nxt = _kcore_round(d, labels)
-            plan = nxt._jdf.queryExecution().executedPlan().toString()
-            rows = {(r["a"], r["val"]) for r in nxt.collect()}
-            drop()
-            return plan, rows
-
-        bplan, brows = round_plan(True, "b")
-        pplan, prows = round_plan(False, "p")
-        assert brows == prows  # identical round result either way
-        assert "Bucketed: true" in bplan, bplan
-        assert bplan.count("Exchange hashpartitioning") == 2, bplan
-        assert pplan.count("Exchange hashpartitioning") == 3, pplan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_pagerank_round_bucketed_staging_never_shuffles_norm_e(
-    spark, tmp_path
-):
-    """Same contract for staged pagerank: norm_e bucketed on _src means
-    the contribution join reads co-located buckets — one fewer Exchange
-    than plain-parquet staging, identical round output."""
-    from datawarehouse_backup_system_spark.operators.graph import (
-        _pagerank_round,
-        _stage_static_side,
-    )
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        rng = random.Random(11)
-        raw = [(rng.randrange(40), rng.randrange(40)) for _ in range(120)]
-        e = spark.createDataFrame(raw, "src bigint, dst bigint").where(
-            "src != dst"
-        )
-        out_w = e.groupBy("src").agg(F.count(F.lit(1)).alias("_ow"))
-        norm = e.join(out_w, "src").select(
-            F.col("src").alias("_src"),
-            F.col("dst").alias("_dst"),
-            (F.lit(1.0) / F.col("_ow")).alias("_p"),
-        )
-        nodes = (
-            e.selectExpr("src as node")
-            .union(e.selectExpr("dst as node"))
-            .distinct()
-        )
-        nodes.write.mode("overwrite").parquet(str(tmp_path / "nodes"))
-        nodes = spark.read.parquet(str(tmp_path / "nodes"))
-        n = nodes.count()
-        ranks0 = nodes.select(
-            "node", F.lit(1.0 / n).alias("rank")
-        )
-        ranks0.write.mode("overwrite").parquet(str(tmp_path / "r0"))
-        ranks0 = spark.read.parquet(str(tmp_path / "r0"))
-        base = F.lit((1.0 - 0.85) / n)
-
-        def round_plan(bucketed, sub):
-            ne, drop = _stage_static_side(
-                norm, str(tmp_path / sub), "norm_e", "_src",
-                bucketed=bucketed,
-            )
-            nxt = _pagerank_round(ne, nodes, ranks0, base, 0.85)
-            plan = nxt._jdf.queryExecution().executedPlan().toString()
-            rows = {
-                (r["node"], round(r["rank"], 9)) for r in nxt.collect()
-            }
-            drop()
-            return plan, rows
-
-        bplan, brows = round_plan(True, "b")
-        pplan, prows = round_plan(False, "p")
-        assert brows == prows
-        assert "Bucketed: true" in bplan, bplan
-        assert bplan.count("Exchange hashpartitioning") == (
-            pplan.count("Exchange hashpartitioning") - 1
-        ), (bplan, pplan)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_stage_static_side_auto_threshold(spark, tmp_path, monkeypatch):
-    """Auto mode (the e02/h04 exact-vs-scale switch pattern): below the
-    size threshold the stage stays plain parquet (broadcast already
-    elides the edge-side Exchange there — measured r10); forcing the
-    threshold to 0 rebuckets from the staged file."""
-    from datawarehouse_backup_system_spark.operators.graph import (
-        _stage_static_side,
-    )
-
-    df = spark.range(0, 500).selectExpr("id as b", "id % 7 as a")
-    small, drop1 = _stage_static_side(
-        df, str(tmp_path / "s"), "edges", "b", bucketed=None
-    )
-    assert small.count() == 500
-    assert not [
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("dwbss_stage_")
-    ]
-    drop1()
-    monkeypatch.setattr(
-        "datawarehouse_backup_system_spark.operators.graph."
-        "_BUCKET_MIN_BYTES", 0,
-    )
-    big, drop2 = _stage_static_side(
-        df, str(tmp_path / "f"), "edges", "b", bucketed=None
-    )
-    assert big.count() == 500
-    assert [
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("dwbss_stage_")
-    ], "threshold 0 must rebucket"
-    drop2()
-    assert not [
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("dwbss_stage_")
-    ]

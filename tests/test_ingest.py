@@ -198,10 +198,10 @@ def test_ingest_files_divergent_mid_batch_preserves_sequential_order(
 
 
 def test_ingest_date_partitioning_and_retention(spark, tmp_path):
-    """Snapshots are partitioned by ingest_date; retention = partition drop."""
-    from datawarehouse_backup_system_spark.operators.retention import (
-        drop_old_partitions,
-    )
+    """Snapshots are partitioned by ingest_date, so retention is a
+    partition-directory drop: the remaining rows read back whole."""
+    import shutil
+
     from datawarehouse_backup_system_spark.registry import SchemaRegistry
 
     fx = generate_f1(tmp_path, n=60)
@@ -227,10 +227,7 @@ def test_ingest_date_partitioning_and_retention(spark, tmp_path):
     )
     assert "2024-01-05" not in pruned._jdf.queryExecution().executedPlan().toString()
 
-    removed = drop_old_partitions(
-        spark, table_dir, "ingest_date", keep_days=30, today="2024-03-02"
-    )
-    assert removed == 1
+    shutil.rmtree(table_dir / "ingest_date=2024-01-05")
     left = spark.read.parquet(str(table_dir))
     assert {r["ingest_date"].isoformat() for r in left.select("ingest_date").distinct().collect()} \
         == {"2024-03-01"}
@@ -554,6 +551,42 @@ def test_run_names_spark_spells_or_globs_take_one_plan(spark, tmp_path, caplog):
     # the last file repeats the first: it counts its rows, loads none
     copy = res[-1]
     assert copy.rows_in > 0 and copy.rows_loaded == 0
+
+
+def test_read_raw_csv_of_glob_name_logs_no_stream_sink_warning(
+    spark, tmp_path
+):
+    """A single-path read of a landing name with a glob metacharacter
+    reads its rows and logs no ``FileStreamSink`` warning. Spark's
+    streaming-sink probe stats the escaped path literally and used to
+    log a WARN with a FileNotFoundException stack trace on every such
+    read. The JVM writes its log to its own stderr, which pytest's
+    ``capfd`` cannot see, so a log4j appender captures it here."""
+    from datawarehouse_backup_system_spark.sources.csv_source import (
+        read_raw_csv,
+    )
+
+    path = tmp_path / "last24h__a[1].csv"
+    path.write_text("a,b\n1,2\n3,4\n")
+    jvm = spark._jvm
+    core = jvm.org.apache.logging.log4j.core
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    log = jvm.java.io.StringWriter()
+    appender = core.appender.WriterAppender.createAppender(
+        core.layout.PatternLayout.newBuilder().withPattern("%c %m%n").build(),
+        None, log, "dwbss-capture", False, True,
+    )
+    appender.start()
+    root.addAppender(appender, None, None)
+    ctx.updateLoggers()
+    try:
+        rows = read_raw_csv(spark, str(path)).collect()
+    finally:
+        root.removeAppender("dwbss-capture")
+        ctx.updateLoggers()
+    assert sorted(map(tuple, rows)) == [("1", "2"), ("3", "4")]
+    assert "FileStreamSink" not in log.toString()
 
 
 def test_run_dirty_day_appends_in_three_jobs(spark, tmp_path):

@@ -9,7 +9,6 @@ from pyspark.sql import types as T
 from datawarehouse_backup_system_spark.sources.jsonl_source import (
     RAW_COL,
     read_jsonl,
-    sample_schema,
     split_corrupt,
 )
 
@@ -59,14 +58,6 @@ def test_read_jsonl_gz_transparent(spark, tmp_path):
     path = _write(tmp_path, "batch.jsonl.gz", LINES[:2], gz=True)
     good, bad = split_corrupt(read_jsonl(spark, path, schema=SCHEMA))
     assert good.count() == 2 and bad.count() == 0
-
-
-def test_sample_schema_roundtrip(spark, tmp_path):
-    path = _write(tmp_path, "clean.jsonl", [LINES[0], LINES[1], LINES[3]])
-    schema = sample_schema(spark, path, n_lines=100)
-    assert {"doc_id", "text", "meta"} <= set(schema.fieldNames())
-    good, bad = split_corrupt(read_jsonl(spark, path, schema=schema))
-    assert good.count() == 3 and bad.count() == 0
 
 
 def test_user_corrupt_column_survives(spark, tmp_path):

@@ -127,7 +127,6 @@ def test_driver_ledger_reads_spark_written_batches(spark, tmp_path):
     assert [w for w, _ in want["committed"]] == ["w2", "w4", "w5"]
     assert _driver_fold(led, "t") == want
     assert all(ts.tzinfo is None for _, ts in led.committed_writes("t"))
-    assert led.ever_committed_writes("t") == {"w1", "w2", "w4", "w5"}
     assert led.read().count() == len(parent_rows) + 4 + 1 + 2 + 2 + 2
 
     # a batch stranded between write and rename: invisible to both

@@ -122,20 +122,6 @@ def test_lease_release_eexist_still_displaces(tmp_path, monkeypatch):
 # ---- round-10 review pass 1: text.py / dedup_approx.py ---------------------
 
 
-def test_jaccard_pairs_default_is_aqe_safe():
-    """Review r10: the True default broadcast a potentially uncapped
-    O(B²) candidate set through the driver — the documented OOM path —
-    and the uncapped llm_ops caller relied on the default."""
-    import inspect
-
-    from datawarehouse_backup_system_spark.operators.dedup_approx import (
-        jaccard_pairs,
-    )
-
-    sig = inspect.signature(jaccard_pairs)
-    assert sig.parameters["broadcast_pairs"].default is False
-
-
 def test_word_shingles_no_corpus_shuffle_when_partitioned(spark):
     """Review r10: word_shingles unconditionally repartitioned the full
     input (a corpus shuffle of all columns that also collapsed partition
@@ -218,8 +204,8 @@ def test_langid_tokenizes_once_in_plan(spark):
 
 def test_stage_helpers_work_on_scheme_paths(spark, tmp_path):
     """Review r10: shutil/Path silently no-op on scheme'd (cluster
-    storage) stage paths — sizes read 0 (auto never buckets) and
-    superseded rounds accumulate forever. file:// exercises the Hadoop
+    storage) stage paths — sizes read 0 and superseded rounds
+    accumulate forever. file:// exercises the Hadoop
     FileSystem route on this host."""
     from datawarehouse_backup_system_spark.operators.graph import (
         _stage_du,
@@ -255,9 +241,8 @@ def test_pagerank_empty_graph_returns_empty(spark):
 
 def test_pagerank_seed_failure_leaks_no_catalog_entry(spark, tmp_path):
     """Review r10: the no-seeds-in-graph ValueError fired AFTER the
-    bucketed edge stage, leaking the dwbss_stage_* catalog entry and
-    wasting the full edge-list write. Validation now precedes the
-    norm_e stage."""
+    edge stage, wasting the full edge-list write. Validation now
+    precedes the norm_e stage."""
     import pytest as _pytest
 
     from datawarehouse_backup_system_spark.operators.graph import pagerank
@@ -265,119 +250,9 @@ def test_pagerank_seed_failure_leaks_no_catalog_entry(spark, tmp_path):
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src int, dst int")
     seeds = spark.createDataFrame([(99,)], "node int")
     with _pytest.raises(ValueError, match="no seed id"):
-        pagerank(
-            edges, seeds=seeds, stage_path=str(tmp_path),
-            stage_bucketed=True,
-        )
-    assert not [
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("dwbss_stage_")
-    ]
-    # the expensive norm_e stage never ran either
+        pagerank(edges, seeds=seeds, stage_path=str(tmp_path))
+    # the expensive norm_e stage never ran
     assert not (tmp_path / "norm_e").exists()
-    assert not (tmp_path / "norm_e_bucketed").exists()
-
-
-def test_neighborhood_function_uses_bucketed_auto_switch(
-    spark, monkeypatch
-):
-    """Review r10: neighborhood_function staged its round-invariant
-    edge list inline as plain parquet, so the bucketed auto switch its
-    docstring advertised never applied. Forcing the threshold to 0 must
-    route through the bucketed table and still match the default run,
-    with the catalog clean afterwards."""
-    from datawarehouse_backup_system_spark.operators.graph import (
-        neighborhood_function,
-    )
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "src bigint, dst bigint"
-    )
-    # stage_rounds_above=0 forces the STAGED tier (r11 added an
-    # unrolled lazy tier for small radii that never stages — this pin
-    # is about the staged tier's bucketed switch, so opt out of it)
-    base = {
-        (r["node"], r["radius"]): r["n_reachable_est"]
-        for r in neighborhood_function(
-            edges, max_radius=2, stage_rounds_above=0
-        ).collect()
-    }
-    monkeypatch.setattr(
-        "datawarehouse_backup_system_spark.operators.graph."
-        "_BUCKET_MIN_BYTES", 0,
-    )
-    bucketed = {
-        (r["node"], r["radius"]): r["n_reachable_est"]
-        for r in neighborhood_function(
-            edges, max_radius=2, stage_rounds_above=0
-        ).collect()
-    }
-    assert base == bucketed
-    assert not [
-        t.name for t in spark.catalog.listTables()
-        if t.name.startswith("dwbss_stage_")
-    ]
-
-
-def test_stage_static_side_auto_rebucket_drops_plain_copy(
-    spark, tmp_path, monkeypatch
-):
-    """Review r10: after a successful rebucket the plain staged copy
-    stayed on disk, doubling the staged footprint for the life of the
-    scratch root."""
-    from datawarehouse_backup_system_spark.operators.graph import (
-        _stage_static_side,
-    )
-
-    monkeypatch.setattr(
-        "datawarehouse_backup_system_spark.operators.graph."
-        "_BUCKET_MIN_BYTES", 0,
-    )
-    df = spark.range(0, 300).selectExpr("id as b", "id % 5 as a")
-    frame, drop = _stage_static_side(
-        df, str(tmp_path), "edges", "b", bucketed=None
-    )
-    assert frame.count() == 300
-    assert not (tmp_path / "edges").exists()  # rebucket source deleted
-    assert (tmp_path / "edges_bucketed").exists()
-    drop()
-
-
-def test_stage_static_side_forced_bucketed_raises_on_failure(
-    spark, tmp_path, monkeypatch
-):
-    """Review r10: the blanket except silently degraded a FORCED
-    bucketed stage to plain parquet, dropping the plan contract the
-    caller demanded; auto mode degrades loudly instead."""
-    import warnings as _warnings
-
-    import pytest as _pytest
-
-    from datawarehouse_backup_system_spark.operators import graph as g
-
-    def boom(*a, **kw):
-        raise RuntimeError("metastore hiccup")
-
-    monkeypatch.setattr(
-        "datawarehouse_backup_system_spark.operators.bucketed."
-        "write_bucketed", boom,
-    )
-    df = spark.range(0, 10).selectExpr("id as b", "id % 3 as a")
-    with _pytest.raises(RuntimeError, match="metastore"):
-        g._stage_static_side(
-            df, str(tmp_path / "f"), "edges", "b", bucketed=True
-        )
-    monkeypatch.setattr(
-        "datawarehouse_backup_system_spark.operators.graph."
-        "_BUCKET_MIN_BYTES", 0,
-    )
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        frame, _ = g._stage_static_side(
-            df, str(tmp_path / "a"), "edges", "b", bucketed=None
-        )
-        assert frame.count() == 10  # plain staged copy still serves
-    assert any("falling back" in str(w.message) for w in caught)
 
 
 def test_small_star_emits_center_edge_once():

@@ -96,44 +96,6 @@ def test_ingest_files_divergent_profiles_take_one_plan(spark, tmp_path,
 
 
 # --------------------------------------------------------------------------
-# ADVICE r10 item 3 — pagerank(stage_bucketed=True) must stage
-# --------------------------------------------------------------------------
-def test_pagerank_stage_bucketed_forces_staged_tier(spark, monkeypatch):
-    """ADVICE r10 (graph.py:161): stage_bucketed=True in the unrolled
-    tier (iterations <= stage_rounds_above, no stage_path/tol_digits)
-    silently dropped the demanded bucketed zero-Exchange contract.
-    It now forces the staged tier, so _stage_static_side runs with
-    bucketed=True (whose forced mode raises rather than degrades)."""
-    from datawarehouse_backup_system_spark.operators import graph
-
-    staged_calls: list[bool | None] = []
-    real_stage = graph._stage_static_side
-
-    def spy(df, root, name, key, bucketed=None, n_buckets=None):
-        staged_calls.append(bucketed)
-        return real_stage(df, root, name, key, bucketed=bucketed,
-                          n_buckets=n_buckets)
-
-    monkeypatch.setattr(graph, "_stage_static_side", spy)
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1)], "src int, dst int"
-    )
-    plain = {
-        r["node"]: round(r["rank"], 9)
-        for r in graph.pagerank(edges, iterations=2).collect()
-    }
-    assert staged_calls == []  # default small run stays unrolled
-    forced = {
-        r["node"]: round(r["rank"], 9)
-        for r in graph.pagerank(
-            edges, iterations=2, stage_bucketed=True
-        ).collect()
-    }
-    assert staged_calls == [True]  # the contract actually reached staging
-    assert forced == plain  # tier switch changes the plan, not the result
-
-
-# --------------------------------------------------------------------------
 # ADVICE r10 item 4 — stale-round clear failure must be diagnosable
 # --------------------------------------------------------------------------
 def test_staged_round_root_warns_on_scheme_clear_failure(spark):
@@ -317,26 +279,6 @@ def test_jsonl_tab_only_lines_dropped_as_blank(spark, tmp_path):
     good, bad = split_corrupt(read_jsonl(spark, str(p), schema))
     assert sorted(r["a"] for r in good.collect()) == [1, 2]
     assert bad.count() == 1  # ONLY the genuinely-malformed line
-
-
-def test_jsonl_sample_schema_respects_custom_corrupt_column(
-    spark, tmp_path
-):
-    """Review r11: sample_schema filtered only the literal
-    '_corrupt_record' name; a session-configured custom name leaked a
-    phantom always-NULL column into the inferred schema."""
-    from datawarehouse_backup_system_spark.sources.jsonl_source import (
-        sample_schema,
-    )
-
-    p = tmp_path / "x.jsonl"
-    p.write_text('{"a": 1}\n{broken\n{"a": 2}\n')
-    spark.conf.set("spark.sql.columnNameOfCorruptRecord", "_bad")
-    try:
-        schema = sample_schema(spark, str(p))
-    finally:
-        spark.conf.unset("spark.sql.columnNameOfCorruptRecord")
-    assert [f.name for f in schema.fields] == ["a"]
 
 
 def test_setjoin_unigrams_use_canonical_tokens():
@@ -1031,12 +973,11 @@ def test_pass_h_q36_oracle_counts_null_priority(spark):
 # --------------------------------------------------------------------------
 # Review pass I (r11): sampling/curation/retention library operators
 # --------------------------------------------------------------------------
-def test_hash_sample_keeps_null_keys_at_full_fraction(spark):
-    """Review r11: _bucket propagated NULL (F.concat), so a '100%
-    sample' silently dropped NULL-key rows, hash_split routed them all
-    to the last split, and stratified_sample always ranked them first."""
+def test_hash_split_and_stratified_sample_keep_null_keys(spark):
+    """Review r11: _bucket propagated NULL (F.concat), so hash_split
+    routed NULL-key rows to the last split and stratified_sample always
+    ranked them first."""
     from datawarehouse_backup_system_spark.operators.sampling import (
-        hash_sample,
         hash_split,
         stratified_sample,
     )
@@ -1044,7 +985,6 @@ def test_hash_sample_keeps_null_keys_at_full_fraction(spark):
     df = spark.createDataFrame(
         [(1, "a"), (None, "a"), (3, "b")], "k int, s string"
     )
-    assert hash_sample(df, "k", 1.0).count() == 3
     split = hash_split(df, "k", {"train": 0.5, "test": 0.5})
     assert split.count() == 3  # the NULL-key row gets a split too
     assert split.where("split is null").count() == 0

@@ -347,33 +347,6 @@ def test_manifest_keeps_all_null_files(spark, tmp_path):
     assert len(kept) >= 1
 
 
-def test_update_stats_manifest_incremental(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from datawarehouse_backup_system_spark.plans.table_format import (
-        pruned_files,
-        update_stats_manifest,
-    )
-
-    table = tmp_path / "t3"
-    spark.range(0, 1000).withColumn("v", F.col("id")) \
-        .repartitionByRange(4, "id").write.parquet(str(table))
-    # first call bootstraps the full manifest
-    assert update_stats_manifest(spark, table, ["id"]) == (4, 4)
-    # no new files -> no-op
-    assert update_stats_manifest(spark, table, ["id"]) == (0, 4)
-    # append a disjoint id range; only the delta is statted
-    spark.range(5000, 6000).withColumn("v", F.col("id")) \
-        .coalesce(2).write.mode("append").parquet(str(table))
-    added, total = update_stats_manifest(spark, table, ["id"])
-    assert added == 2 and total == 6
-    # pruning sees the appended range through the updated manifest
-    kept_new = pruned_files(spark, table, "id", 5100, 5200)
-    assert 0 < len(kept_new) <= 2
-    kept_old = pruned_files(spark, table, "id", 100, 200)
-    assert 0 < len(kept_old) < 4
-
-
 def test_e06_gram_matches_numpy(spark):
     import numpy as np
 

@@ -202,91 +202,6 @@ def test_streaming_signature_dedup_with_simhash_expr(spark, tmp_path):
         q.stop()
 
 
-def test_exactly_once_sink_dedupes_replayed_batches(spark, tmp_path):
-    """An at-least-once replay of the SAME micro-batch (same stream_id,
-    same epoch) must not duplicate rows: the deterministic write-id's
-    commit marker makes the second delivery a no-op, while a genuinely
-    new epoch appends. The bare append sink this replaces would have
-    doubled the table."""
-    from pyspark.sql import functions as F
-
-    from datawarehouse_backup_system_spark.ledger import Ledger
-    from datawarehouse_backup_system_spark.plans.table_format import (
-        WriteIdParquetFormat,
-    )
-    from datawarehouse_backup_system_spark.streaming.ingest_stream import (
-        exactly_once_table_sink,
-    )
-
-    root = tmp_path / "w"
-    fmt = WriteIdParquetFormat(
-        Ledger(spark, root / "_ledger"), root, move=lambda s, d: s.rename(d)
-    )
-    table = root / "t"
-    sink = exactly_once_table_sink(fmt, table, "t", stream_id="s1")
-
-    batch = spark.range(0, 50).select(F.col("id"))
-    sink(batch, 0)
-    n1 = spark.read.parquet(str(table)).count()
-    assert n1 == 50
-    sink(batch, 0)                     # replay: same epoch → no-op
-    assert spark.read.parquet(str(table)).count() == 50
-    sink(spark.range(50, 80).select(F.col("id")), 1)   # new epoch appends
-    assert spark.read.parquet(str(table)).count() == 80
-    # crash-mid-publish then replay: roll back the uncommitted id by
-    # prefix (recover's contract), replay commits the SAME id cleanly
-    import hashlib
-
-    wid2 = hashlib.md5(b"s1:2").hexdigest()[:16]
-    part = next(table.glob("ingest_date=*"))
-    leak = part / f"w{wid2}-crashed.parquet"
-    leak.write_bytes(next(part.glob("w*-*.parquet")).read_bytes())
-    fmt.ledger.append(f"_write:t:{wid2}", "write begin")
-    for f in table.rglob(f"w{wid2}-*.parquet"):
-        f.unlink()                      # what recover() does, by prefix
-    sink(spark.range(80, 90).select(F.col("id")), 2)
-    assert spark.read.parquet(str(table)).count() == 90
-
-
-def test_exactly_once_sink_survives_rewrite_between_delivery_and_replay(
-    spark, tmp_path
-):
-    """A replayed micro-batch must stay a no-op even if a maintenance
-    rewrite (OPTIMIZE/MERGE/DELETE) tombstoned its write-id in between —
-    the rewrite carried the rows forward, so re-appending would
-    duplicate them. The sink dedups against EVER-committed ids."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from datawarehouse_backup_system_spark.ledger import Ledger
-    from datawarehouse_backup_system_spark.plans.table_format import (
-        WriteIdParquetFormat,
-        optimize_zorder,
-    )
-    from datawarehouse_backup_system_spark.streaming.ingest_stream import (
-        exactly_once_table_sink,
-    )
-
-    root = tmp_path / "w"
-    fmt = WriteIdParquetFormat(
-        Ledger(spark, root / "_ledger"), root, move=lambda s, d: s.rename(d)
-    )
-    table = root / "t"
-    struct = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.LongType())]
-    )
-    sink = exactly_once_table_sink(fmt, table, "t", stream_id="s1")
-    batch = spark.range(0, 40).select(F.col("id"), (F.col("id") * 2).alias("v"))
-    sink(batch, 0)
-    assert fmt.read_as_of(spark, table, struct, "t").count() == 40
-
-    # maintenance rewrite between delivery and replay
-    optimize_zorder(spark, fmt, table, struct, "t", ["id", "v"],
-                    n_partitions=2)
-    sink(batch, 0)   # replay AFTER the rewrite: must be a no-op
-    assert fmt.read_as_of(spark, table, struct, "t").count() == 40
-
-
 def test_watermark_dedup_batch_matches_live_stream_on_chain(
     spark, tmp_path, t0
 ):

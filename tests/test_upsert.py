@@ -1,13 +1,10 @@
-"""Tests for MERGE-emulation / SCD2 / compaction operators."""
+"""Tests for MERGE-emulation / SCD2 operators."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from datawarehouse_backup_system_spark.operators.upsert import (
-    compact_partition,
     merge_upsert,
     scd2_apply,
 )
@@ -74,66 +71,3 @@ def test_scd2_apply(spark):
             open_counts[r["k"]] = open_counts.get(r["k"], 0) + 1
     assert open_counts == {1: 1, 2: 1}
 
-
-def test_compact_partition(spark, tmp_path):
-    table = tmp_path / "t"
-    df = spark.range(100).withColumn("ingest_date", F.lit("2024-01-05"))
-    # many small appends -> many files
-    for _ in range(4):
-        df.coalesce(2).write.mode("append").partitionBy("ingest_date").parquet(str(table))
-    part = "ingest_date=2024-01-05"
-    before = len(list((table / part).glob("*.parquet")))
-    assert before >= 8
-    reported = compact_partition(spark, table, part, target_files=1)
-    assert reported == before
-    after = list((table / part).glob("*.parquet"))
-    assert len(after) == 1
-    assert spark.read.parquet(str(table)).count() == 400
-    # idempotent: already compact -> no-op
-    assert compact_partition(spark, table, part, target_files=1) == 1
-    # staging/backup dirs never leak into table-root reads
-    assert not list(table.glob("_compact*"))
-
-    # nonexistent partition raises instead of silently no-opping
-    import pytest
-
-    with pytest.raises(FileNotFoundError):
-        compact_partition(spark, table, "ingest_date=2024-1-5")
-
-    # crash recovery: a leftover backup with no live dir is restored
-    (table / part).rename(table / f"_compact_backup_{part}")
-    assert compact_partition(spark, table, part, target_files=1) == 1
-    assert spark.read.parquet(str(table)).count() == 400
-
-
-def test_delete_where_rewrites_only_affected_partitions(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from datawarehouse_backup_system_spark.operators.upsert import (
-        delete_where,
-    )
-
-    table = tmp_path / "snap"
-    rows = [(i, i % 3, f"d{i % 2}") for i in range(60)]
-    spark.createDataFrame(rows, "id long, user long, ingest_date string") \
-        .repartition(4).write.partitionBy("ingest_date").parquet(str(table))
-    untouched_files = {
-        p.name for p in (table / "ingest_date=d1").glob("*.parquet")
-    }
-
-    # delete user 1 only from partition d0
-    n = delete_where(
-        spark, table, (F.col("user") == 1) & (F.col("ingest_date") == "d0")
-    )
-    left = spark.read.parquet(str(table))
-    assert n == len([r for r in rows if r[1] == 1 and r[2] == "d0"])
-    assert left.where((F.col("user") == 1) & (F.col("ingest_date") == "d0")).count() == 0
-    # everything else intact, untouched partition byte-identical files
-    assert left.count() == 60 - n
-    assert {
-        p.name for p in (table / "ingest_date=d1").glob("*.parquet")
-    } == untouched_files
-    # idempotent: re-running deletes nothing
-    assert delete_where(
-        spark, table, (F.col("user") == 1) & (F.col("ingest_date") == "d0")
-    ) == 0
