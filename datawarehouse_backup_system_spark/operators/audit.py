@@ -100,7 +100,8 @@ def table_diff(
     "fingerprints disagree; show me the few thousand rows that moved",
     not a full dump). Column comparisons are null-safe ``<=>``
     expressions, codegen'd, no UDFs; with both replicas bucketed on the
-    key the join plans with zero Exchange (`operators/bucketed.py`).
+    key (``DataFrameWriter.bucketBy``) the join plans with zero
+    Exchange.
 
     Contract: ``key_cols`` must identify rows uniquely on each side
     (duplicate keys join many-to-many, the standard keyed-diff caveat);

@@ -50,7 +50,6 @@ def contamination(
     id_col: str,
     text_col: str,
     n: int = 5,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: training docs sharing ≥1 word ``n``-gram
     with any eval/benchmark document, with the count of distinct shared
@@ -61,16 +60,11 @@ def contamination(
     docs, the corpus is billions), so its distinct shingle set BROADCASTs
     into an equi-join against the train shingles: the corpus is touched
     in one linear pass, no corpus-side shuffle before the per-doc count.
-    Set ``broadcast_eval=False`` when the eval set outgrows the broadcast
-    threshold — the same equi-join then hash-partitions on shingle
-    (shuffles both sides once; still never quadratic).
     """
     t_sh = word_shingles(train, id_col, text_col, n)
     e_sh = word_shingles(eval_df, id_col, text_col, n).select("shingle").distinct()
-    if broadcast_eval:
-        e_sh = F.broadcast(e_sh)
     return (
-        t_sh.join(e_sh, "shingle")
+        t_sh.join(F.broadcast(e_sh), "shingle")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_overlap"))
     )
@@ -326,7 +320,6 @@ def minhash_lsh_dedup(
     k: int = 9,
     band_size: int = 3,
     threshold: float = 0.5,
-    persist_shingles: bool = False,
     max_bucket_size: int | None = None,
     stage_path: str | None = None,
 ) -> DataFrame:
@@ -354,19 +347,12 @@ def minhash_lsh_dedup(
     instead of 6.
 
     The array frame is referenced by THREE subtrees (signatures, verify
-    ×2). Materialization tiers:
-
-    - default (recompute): re-running the tokenize+gram projection per
-      consumer beats building an InMemoryRelation (measured r7, re-
-      measured r11 on the array form).
-    - ``persist_shingles=True``: caches the (id, shset) frame — far
-      cheaper to build than the old exploded cache, but it still pins
-      a corpus-sized frame in executor storage; only right when the
-      upstream corpus scan itself is expensive.
-    - ``stage_path``: parquet-stages the array frame (the 100 TB
-      switch: consumers scan columnar storage, executor loss never
-      recomputes the gram expansion, and the stage is reusable across
-      runs over the same corpus snapshot).
+    ×2). By default each consumer re-runs the tokenize+gram projection,
+    which beats building an InMemoryRelation (measured r7, re-measured
+    r11 on the array form). ``stage_path`` parquet-stages the array
+    frame instead: consumers scan columnar storage, executor loss never
+    recomputes the gram expansion, and the stage is reusable across runs
+    over the same corpus snapshot.
     """
     docsh = shingle_sets(df, id_col, text_col, shingle_n)
     if stage_path is not None:
@@ -375,8 +361,6 @@ def minhash_lsh_dedup(
         # only _SUCCESS and inference would raise (review r11, the
         # shards.py review-r8 trap)
         docsh = df.sparkSession.read.schema(docsh.schema).parquet(stage_path)
-    elif persist_shingles:
-        docsh = docsh.persist()
     sigs = minhash_signature_sets(docsh, id_col, k)
     cands = lsh_candidate_pairs(
         lsh_bands(sigs, id_col, k, band_size), id_col, max_bucket_size

@@ -419,27 +419,6 @@ def _stage_rm(path: str, spark=None) -> None:
         pass
 
 
-def _stage_du(path: str, spark=None) -> int:
-    """Recursive byte size of a path, cluster-storage-aware (review
-    r10: Path.rglob returns nothing on hdfs://…, so a size-switched
-    tier would read 0 at any scale). Unreadable → 0 (the conservative
-    tier)."""
-    try:
-        if "://" not in path:
-            p = _GPath(path)
-            if p.is_file():
-                return p.stat().st_size
-            return sum(
-                f.stat().st_size for f in p.rglob("*") if f.is_file()
-            )
-        spark = spark or _active_spark()
-        jp = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-        return int(fs.getContentSummary(jp).getLength())
-    except Exception:  # noqa: BLE001
-        return 0
-
-
 def _stage(df: DataFrame, path: str) -> DataFrame:
     """Write ``df`` to parquet at ``path`` and return the staged frame,
     read back with ``df``'s own schema: a plain ``read.parquet`` runs a

@@ -26,23 +26,21 @@ def salted_join(
     on: str,
     salt: int = 8,
     how: str = "inner",
-    salt_source: str | None = None,
 ) -> DataFrame:
     """Equi-join ``probe ⋈ build`` on ``on`` with an ``salt``-way salted
     key, eliminating stragglers when some join keys are hot.
 
     ``build`` is replicated ``salt`` times (explode) — use the SMALLER
     side there. The probe's salt comes from a deterministic hash of
-    ``salt_source`` (default: every probe column) MIXED with the scan
-    partition id, spreading a hot key's rows uniformly over the
-    replicas. The partition-id term matters when the hot key's rows
-    are content-IDENTICAL (dedup/log workloads, or a probe projected
-    down to just the join key): a pure content hash is then one
-    constant and the whole hot key still lands on a single task
-    (review r8). spark_partition_id is stable under task retry and
-    speculative execution (unlike rand()), which is the determinism
-    the docstring promises; the salt only ROUTES rows, so join output
-    is identical either way. Residual: identical rows inside ONE scan
+    every probe column MIXED with the scan partition id, spreading a hot
+    key's rows uniformly over the replicas. The partition-id term
+    matters when the hot key's rows are content-IDENTICAL (dedup/log
+    workloads, or a probe projected down to just the join key): a pure
+    content hash is then one constant and the whole hot key still lands
+    on a single task. spark_partition_id is stable under task retry and
+    speculative execution (unlike rand()), which is the determinism the
+    docstring promises; the salt only ROUTES rows, so join output is
+    identical either way. Residual: identical rows inside ONE scan
     partition still co-route — at that point they are already in the
     same task's input and salting cannot separate what one task reads.
 
@@ -63,17 +61,11 @@ def salted_join(
             "salted_join reserves the column name '_salt'; rename it "
             "on the input frames"
         )
-    # default salt source: hash the columns DIRECTLY — F.hash accepts
-    # any data type, where the old concat_ws('\\x01', *cols) failed at
-    # analysis time on map/struct columns and built a full row-wide
-    # string per row first; it also skipped NULL columns, collapsing
-    # rows that differ only in NULL pattern onto one replica
-    # (review r11; routing-only either way, join output identical)
-    srcs = (
-        [F.col(salt_source)]
-        if salt_source
-        else [F.col(c) for c in probe.columns]
-    )
+    # hash the columns DIRECTLY: F.hash accepts any data type and keeps
+    # rows that differ only in NULL pattern apart, where concat_ws
+    # fails at analysis on map/struct columns, builds a row-wide string
+    # per row and skips NULLs (routing-only; join output is identical)
+    srcs = [F.col(c) for c in probe.columns]
     probe_s = probe.withColumn(
         "_salt", F.pmod(F.hash(*srcs, F.spark_partition_id()), F.lit(salt))
     )

@@ -684,7 +684,6 @@ def repetition_features(
     text_col: str,
     max_tok_ratio: float = 0.2,
     max_dup_trigram_ratio: float = 0.3,
-    repartition_to: int | None = None,
 ) -> DataFrame:
     """Gopher/C4-style repetition quality signals: the fraction of tokens
     taken by the single most frequent token, and the fraction of word
@@ -697,14 +696,10 @@ def repetition_features(
     is per-row). The token ARRAY is staged in its own projection first —
     higher-order lambdas are interpreted with no common-subexpression
     elimination, so referencing the raw split() inside them would
-    re-split the text once per element. No shuffle is inserted by
-    default — the projection is per-row correct under any input
-    partitioning; pass ``repartition_to`` only when the source arrives
-    in a few fat partitions (e.g. one giant file) and the CPU-bound
-    trigram work needs spreading.
+    re-split the text once per element. No shuffle is inserted: the
+    projection is per-row correct under any input partitioning.
     """
-    src = df if repartition_to is None else df.repartition(repartition_to)
-    arr = src.select(
+    arr = df.select(
         F.col(id_col), tokens(F.col(text_col)).alias("_toks")
     )
     toks = F.col("_toks")
@@ -733,7 +728,7 @@ def repetition_features(
     # word_shingles r12 fix; same rows either way — split() is never
     # empty and explode drops NULL-text rows like the filter did)
     top = (
-        src.select(
+        df.select(
             F.col(id_col),
             F.explode(tokens(F.col(text_col))).alias("_tok"),
         )

@@ -270,7 +270,7 @@ class IngestJob:
         # need no other
         hashed = with_row_hash(normalized, list(schema.data_columns))
         deduped = self_dedup_first(hashed.repartition(1), order_col=list(SEQ_COLS))
-        novel = self._dedup_against_history(deduped, schema, history)
+        novel = anti_join_history(deduped, history)
         casted = apply_typed_casts(
             novel, schema, passthrough=("row_hash", *SEQ_COLS)
         )
@@ -423,46 +423,6 @@ class IngestJob:
         return export_registry_watermarks(schema_path, out_path, last_ids)
 
     # -- atomic snapshot append -------------------------------------------
-    def _dedup_against_history(
-        self,
-        deduped: DataFrame,
-        schema: TableSchema,
-        history: DataFrame | None = None,
-    ) -> DataFrame:
-        """J2 with the scale auto-switch (VERDICT r10 item 6, a
-        footprint threshold): below
-        ``hash_index._INDEX_MIN_BYTES`` (4 GiB) of on-disk table
-        footprint, the plain column-pruned history anti-join runs —
-        at local scale its shuffle is a broadcast under AQE and
-        the index would only add write overhead. Above it, the batch
-        anti-joins the persisted row_hash index bucketed on the join key
-        (:mod:`~.hash_index`), so a 100 TB history is never re-shuffled
-        per file: ONE Exchange, batch side only (plan contract pinned in
-        tests/test_hash_index.py). The index validates itself against
-        the live file listing and falls back to the plain path whenever
-        it cannot account for the table — fallback is always correct.
-        ``history``: the snapshot as already read (default: read it)."""
-        from datawarehouse_backup_system_spark.plans import hash_index
-
-        tp = self.table_path(schema)
-        # ONE directory walk serves both the footprint threshold and
-        # the live-pair listing (review r11: a separate _stage_du pass
-        # re-walked every data file per ingested file)
-        listed = hash_index.live_write_pairs(tp)
-        if (
-            listed is not None
-            and listed[2] >= hash_index._INDEX_MIN_BYTES
-        ):
-            idx = hash_index.history_hash_frame(
-                self.spark, Path(self.warehouse_dir), tp,
-                schema.table_name, listed=listed,
-            )
-            if idx is not None:
-                return deduped.join(idx, "row_hash", "left_anti")
-        if history is None:
-            history = self.read_table(schema)
-        return anti_join_history(deduped, history)
-
     def _atomic_append(self, plan: DataFrame, schema: TableSchema) -> int:
         """Append ``plan`` to the snapshot through the table format
         (:mod:`~.table_format`): the shipped

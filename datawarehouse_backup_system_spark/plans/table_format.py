@@ -24,14 +24,13 @@ Beyond the seam, the module now ships the full Delta-analog surface on
 plain parquet: DESCRIBE HISTORY (``versions``), time travel + snapshot
 isolation (``read_as_of``), change feed (``diff_versions``), RESTORE
 (``restore_to_version``), VACUUM, transactional rewrites
-(``rewrite_table`` → OPTIMIZE ZORDER / MERGE / DELETE WHERE), opt-in
-additive schema evolution (``merge_schema``), and per-file stats and
-bloom manifests with pruned reads. Atomicity throughout comes from two
-primitives: prefix-named data files whose commit is a marker row, and
-``Ledger.append_many`` writing a composite transition as one parquet
-file, which a rename (or, for a put-if-absent commit, a hard link)
-makes visible whole. Both ledger reads and writes run on the driver, so
-a commit marker costs no Spark job.
+(``rewrite_table`` → OPTIMIZE ZORDER / MERGE / DELETE WHERE), and
+per-file stats and bloom manifests with pruned reads. Atomicity
+throughout comes from two primitives: prefix-named data files whose
+commit is a marker row, and ``Ledger.append_many`` writing a composite
+transition as one parquet file, which a rename (or, for a put-if-absent
+commit, a hard link) makes visible whole. Both ledger reads and writes
+run on the driver, so a commit marker costs no Spark job.
 
 **Single-writer limit.** The write-id protocol gives snapshot isolation
 to any number of concurrent READERS (a mid-publish write-id has no
@@ -363,24 +362,10 @@ class WriteIdParquetFormat(SnapshotFormat):
         ledger: Ledger,
         warehouse_dir: Path,
         move: Callable[[Path, Path], None],
-        merge_schema: bool = False,
     ) -> None:
-        """``merge_schema``: reads reconcile the column superset across
-        every committed file (appended batches may ADD columns — Delta's
-        additive schema evolution; older rows read NULL for new
-        columns). Off by default: superset reconciliation reads every
-        file footer, which at object-store scale is a planning cost you
-        opt into per table, not a free default."""
         self.ledger = ledger
         self.warehouse_dir = Path(warehouse_dir)
         self._move = move
-        self.merge_schema = merge_schema
-
-    def _reader(self, spark: SparkSession):
-        r = spark.read
-        if self.merge_schema:
-            r = r.option("mergeSchema", "true")
-        return r
 
     def read(
         self, spark: SparkSession, path: Path, fallback: T.StructType
@@ -406,9 +391,6 @@ class WriteIdParquetFormat(SnapshotFormat):
             return spark.createDataFrame(
                 to_arrow_schema(fallback).empty_table(), fallback
             )
-        if self.merge_schema:
-            # reconciling a column superset needs every file footer
-            return self._reader(spark).parquet(str(path))
         # the declared schema plus the ingest_date partition: planning
         # runs no job to infer the schema from file footers
         if "ingest_date" not in fallback.fieldNames():
@@ -540,8 +522,7 @@ class WriteIdParquetFormat(SnapshotFormat):
             return spark.createDataFrame([], fallback)
         # basePath keeps the ingest_date partition column when reading an
         # explicit file list
-        return (self._reader(spark).option("basePath", str(path))
-                .parquet(*files))
+        return spark.read.option("basePath", str(path)).parquet(*files)
 
     def _committed_file_list(
         self, path: Path, table_name: str,

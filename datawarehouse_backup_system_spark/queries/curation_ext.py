@@ -741,13 +741,6 @@ HAVING count(*) >= {_T17_MIN_COUNT}
 # e02 — embedding outlier filter: trim the norm-band tails
 # --------------------------------------------------------------------------
 _E02_TAIL = 0.05
-#: above this on-disk footprint of the embeddings table, e02 swaps its
-#: global exact-rank window (single-partition sort — the one
-#: scale-killer the r9 verdict flagged) for the two-sided
-#: percentile_approx band filter below. The sf0.01/sf0.1/sf1 fixtures
-#: are far under it, so the driver spec stays EXACT vs the oracle; the
-#: approx-vs-exact tracking is pinned in tests/test_curation_ext.py.
-_E02_APPROX_MIN_BYTES = 2 << 30
 
 
 def _e02_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -761,8 +754,8 @@ def _e02_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _e02_trim_exact(staged: DataFrame) -> DataFrame:
     """Drop exactly floor(n*tail) rows off each end by global rank
-    (ties broken on vec_id) — deterministic, oracle-replayable, and a
-    single-partition sort: the sf<=1 reference path."""
+    (ties broken on vec_id) — deterministic and oracle-replayable, at
+    the cost of a single-partition sort."""
     from pyspark.sql import Window
 
     w = Window.orderBy(F.asc("l2_norm"), F.asc("vec_id"))
@@ -777,55 +770,15 @@ def _e02_trim_exact(staged: DataFrame) -> DataFrame:
     )
 
 
-def _e02_trim_approx(staged: DataFrame, accuracy: int = 10_000) -> DataFrame:
-    """The 100 TB form: ONE map-side-combined percentile_approx pass
-    yields both tail cut values, then a broadcast join + stateless band
-    filter — no global sort anywhere. Semantics match the exact form up
-    to sketch error at the cut values, and ties AT a cut are kept (the
-    exact form cuts a precise count); that boundary sliver is the
-    accepted trade."""
-    cuts = staged.agg(
-        F.percentile_approx(
-            "l2_norm", F.array(F.lit(_E02_TAIL), F.lit(1.0 - _E02_TAIL)),
-            F.lit(accuracy),
-        ).alias("_c")
-    ).select(F.col("_c")[0].alias("_lo"), F.col("_c")[1].alias("_hi"))
-    return (
-        staged.join(F.broadcast(cuts))
-        .where(
-            (F.col("l2_norm") >= F.col("_lo"))
-            & (F.col("l2_norm") <= F.col("_hi"))
-        )
-        .select("vec_id", "l2_norm")
-    )
-
-
 def e02_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curation signal for embedding corpora: near-zero norms are dead
     encodes, extreme norms are exploded ones — drop both 5% tails of
     the (rounded) L2 norm. Rounding BEFORE ranking makes the order —
     and therefore the cut — identical cross-engine.
 
-    TWO TIERS, switched on the table's on-disk footprint (a metadata
-    stat, no extra job — VERDICT r9 item 4, the h04 sketch-vs-exact
-    pattern): under `_E02_APPROX_MIN_BYTES` (every driver fixture) the
-    exact global-rank window runs and the spec is EXACT vs the oracle;
-    at or above it (tests lower the constant to force this tier) the
-    two-sided percentile_approx band filter runs instead, because a
-    global row_number window single-partitions the corpus. The
-    approx-vs-exact divergence is pinned tie-only in pytest."""
-    from ..operators.graph import _stage_du
-
-    staged = _e02_staged(spark, sf_dir)
-    # _stage_du is cluster-storage-aware (Hadoop getContentSummary on
-    # scheme'd paths) — a plain pathlib stat here silently read 0 on
-    # hdfs://… and pinned the exact single-partition tier at any scale
-    # (ADVICE r10→r11, the same defect class _stage_du fixed in graph).
-    sep = "" if sf_dir.endswith("/") else "/"
-    size = _stage_du(f"{sf_dir}{sep}embeddings.parquet", spark)
-    if size >= _E02_APPROX_MIN_BYTES:
-        return _e02_trim_approx(staged)
-    return _e02_trim_exact(staged)
+    The trim is an exact global-rank window, so the spec is EXACT vs
+    the oracle."""
+    return _e02_trim_exact(_e02_staged(spark, sf_dir))
 
 
 E02_SQL = f"""

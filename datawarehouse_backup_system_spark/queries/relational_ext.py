@@ -292,9 +292,7 @@ def q33_rank_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntile is inherently global (its bucket boundaries need the total
     ordered count) and this spec exists to pin the three rank
     functions' tie semantics. Production global ranking without ntile
-    uses the two-phase presplit shape (sampling.weighted_reservoir) or
-    e02's percentile-band tier; at e02's 2 GiB threshold this plan is
-    the wrong tool and the docstrings there say what to use."""
+    uses the two-phase presplit shape (sampling.weighted_reservoir)."""
     ev = load(spark, sf_dir, "events")
     counts = ev.groupBy("user_id").agg(F.count("*").alias("n_events"))
     w = Window.orderBy(F.desc("n_events"), F.asc("user_id"))

@@ -521,45 +521,6 @@ def test_optimize_zorder_refuses_preprotocol_files(spark, tmp_path):
         )
 
 
-def test_additive_schema_evolution_on_append(spark, tmp_path):
-    """With merge_schema on, a later append may ADD a column: reads
-    reconcile the superset and older rows surface NULL for it —
-    including time-travel reads, which only see the columns that
-    existed at that version's files."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from datawarehouse_backup_system_spark.ledger import Ledger
-    from datawarehouse_backup_system_spark.plans.table_format import (
-        WriteIdParquetFormat,
-    )
-
-    root = tmp_path / "w"
-    fmt = WriteIdParquetFormat(
-        Ledger(spark, root / "_ledger"), root,
-        move=lambda s, d: s.rename(d), merge_schema=True,
-    )
-    table = root / "t"
-    base = spark.range(0, 10).select(
-        F.col("id"), F.lit("2024-01-05").cast("date").alias("ingest_date")
-    )
-    widened = spark.range(10, 15).select(
-        F.col("id"), F.lit("fresh").alias("note"),
-        F.lit("2024-01-06").cast("date").alias("ingest_date"),
-    )
-    fmt.append(base, table, "t")
-    fmt.append(widened, table, "t")
-
-    schema = T.StructType([T.StructField("id", T.LongType())])
-    full = fmt.read_as_of(spark, table, schema, "t")
-    assert "note" in full.columns
-    assert full.where(F.col("note").isNull()).count() == 10
-    assert full.where(F.col("note") == "fresh").count() == 5
-    # time travel to v1: the column does not exist there
-    v1 = fmt.read_as_of(spark, table, schema, "t", version=1)
-    assert "note" not in v1.columns and v1.count() == 10
-
-
 def test_transactional_merge_and_delete(spark, tmp_path):
     """MERGE and DELETE commit as atomic rewritten versions: same-key
     rows replaced / matching rows removed, history collapses to the new

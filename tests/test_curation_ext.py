@@ -551,63 +551,3 @@ def test_curation_report_null_id_not_dropped(spark):
     rep = curation_report(df, "doc_id", "text")
     ids = [r["doc_id"] for r in rep.collect()]
     assert len(ids) == 2 and None in ids
-
-
-def test_e02_approx_swap_tracks_exact_tie_only(
-    spark, sf_dir, monkeypatch
-):
-    """VERDICT r9 item 4: forcing the approx tier (threshold 0) must
-    reproduce the exact global-rank trim up to TIES AT THE CUT VALUES —
-    every row the two tiers disagree on carries exactly a cut norm, and
-    the approx tier routes through the band filter (no global window)."""
-    from datawarehouse_backup_system_spark.queries.curation_ext import (
-        _e02_staged,
-        _e02_trim_exact,
-        e02_embedding_outliers,
-    )
-
-    from datawarehouse_backup_system_spark.queries.curation_ext import (
-        _e02_trim_approx,
-    )
-
-    # (a) varied distinct norms: the two tiers agree up to the
-    # documented boundary semantics — the approx band KEEPS the row
-    # equal to each cut value (the exact form cuts a precise count),
-    # so the divergence is at most one row per side, at the cut
-    staged = spark.range(0, 400).selectExpr(
-        "id as vec_id",
-        "cast(round(0.5 + id * 0.01, 6) as double) as l2_norm",
-    )
-    exact_syn = {
-        (r["vec_id"], r["l2_norm"])
-        for r in _e02_trim_exact(staged).collect()
-    }
-    approx_syn = {
-        (r["vec_id"], r["l2_norm"])
-        for r in _e02_trim_approx(staged).collect()
-    }
-    assert len(exact_syn) == 360
-    assert exact_syn <= approx_syn  # approx only ADDS boundary rows
-    extra = approx_syn - exact_syn
-    band = {min(n for _, n in approx_syn), max(n for _, n in approx_syn)}
-    assert len(extra) <= 2 and all(n in band for _, n in extra), extra
-
-    # (b) the fixture (all unit norms — EVERY row ties at the cut):
-    # divergence must be tie-only, and the forced-approx spec path must
-    # really route through the band filter, not the global window
-    exact = {
-        (r["vec_id"], r["l2_norm"])
-        for r in e02_embedding_outliers(spark, sf_dir).collect()
-    }
-    monkeypatch.setattr(
-        "datawarehouse_backup_system_spark.queries.curation_ext."
-        "_E02_APPROX_MIN_BYTES", 0,
-    )
-    approx_df = e02_embedding_outliers(spark, sf_dir)
-    plan = approx_df._jdf.queryExecution().analyzed().toString()
-    assert "row_number" not in plan
-    approx = {(r["vec_id"], r["l2_norm"]) for r in approx_df.collect()}
-    norms = sorted(n for _, n in exact)
-    cut_values = {norms[0], norms[-1]}
-    diff = exact.symmetric_difference(approx)
-    assert all(n in cut_values for _, n in diff), sorted(diff)[:5]

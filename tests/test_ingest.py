@@ -233,6 +233,58 @@ def test_ingest_date_partitioning_and_retention(spark, tmp_path):
         == {"2024-03-01"}
 
 
+def test_rolled_back_write_rows_reenter_history(spark, tmp_path):
+    """J2 anti-joins the live table: once a write's files are gone
+    (rolled back or vacuumed), its rows are novel again, while the
+    surviving write's rows still dedup to zero."""
+    fx = generate_f1(tmp_path)
+    job = make_job(spark, tmp_path, fx)
+    tp = job.table_path(job.registry.get("mini_campaign_events"))
+
+    r0 = job.process_file(fx["files"][0])
+    prefixes0 = {f.name.split("-")[0] for f in tp.rglob("w*-*.parquet")}
+    r1 = job.process_file(fx["files"][1])
+    assert r0.rows_loaded > 0 and r1.rows_loaded > 0
+
+    # roll file-0's write away: every file named w<write_id>- of it
+    gone = [f for f in tp.rglob("w*-*.parquet")
+            if f.name.split("-")[0] in prefixes0]
+    assert gone
+    for f in gone:
+        f.unlink()
+
+    dup0 = tmp_path / "last24h__re0.csv"
+    dup0.write_bytes(fx["files"][0].read_bytes())
+    assert job.process_file(dup0).rows_loaded == r0.rows_loaded
+    dup1 = tmp_path / "last24h__re1.csv"
+    dup1.write_bytes(fx["files"][1].read_bytes())
+    assert job.process_file(dup1).rows_loaded == 0
+
+
+def test_retention_partition_drop_rows_reenter_history(spark, tmp_path):
+    """Retention drops an ingest_date partition dir; a re-sent row of
+    that partition is novel again on the next J2."""
+    import shutil
+
+    fx = generate_f1(tmp_path)
+    job = make_job(spark, tmp_path, fx)
+    schema = job.registry.get("mini_campaign_events")
+
+    job.ingest_date = "2020-01-01"
+    r0 = job.process_file(fx["files"][0])
+    job.ingest_date = "2026-01-01"
+    r1 = job.process_file(fx["files"][1])
+    assert r0.rows_loaded > 0 and r1.rows_loaded > 0
+
+    shutil.rmtree(job.table_path(schema) / "ingest_date=2020-01-01")
+
+    # file-0's rows (disjoint from the surviving write by J1/J2
+    # construction) are all novel again
+    dup0 = tmp_path / "last24h__re0.csv"
+    dup0.write_bytes(fx["files"][0].read_bytes())
+    assert job.process_file(dup0).rows_loaded == r0.rows_loaded
+
+
 def test_zip_ledgered_under_original_name(spark, tmp_path):
     """Idempotency must key on the LANDING name (the .zip), not the
     extracted member — otherwise every cycle reprocesses the zip."""

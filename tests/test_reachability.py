@@ -32,7 +32,6 @@ REFERENCE_ONLY = {
     "text.py::tokens_sql",
     "ingest_stream.py::stream_source",
     "ingest_stream.py::streaming_dedup",
-    "bucketed.py::assert_no_exchange",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)

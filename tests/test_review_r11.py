@@ -10,41 +10,6 @@ import pytest
 
 
 # --------------------------------------------------------------------------
-# ADVICE r10 item 1 — e02's tier probe must be cluster-storage-aware
-# --------------------------------------------------------------------------
-def test_e02_tier_probe_uses_stage_du(spark, monkeypatch):
-    """ADVICE r10 (curation_ext.py:818): the probe stat'd the embeddings
-    footprint with local pathlib only, so a scheme'd sf_dir (hdfs://…)
-    read size 0 and pinned the exact single-partition global-rank sort
-    at any scale. The probe now routes through graph._stage_du (Hadoop
-    getContentSummary on scheme paths); pin that the probe path reaches
-    _stage_du and that its return value switches the tier."""
-    from datawarehouse_backup_system_spark.operators import graph
-    from datawarehouse_backup_system_spark.queries import curation_ext
-
-    seen: list[str] = []
-
-    def fake_du(path, spark=None):
-        seen.append(path)
-        return fake_du.size
-
-    monkeypatch.setattr(graph, "_stage_du", fake_du)
-    monkeypatch.setattr(
-        curation_ext, "_e02_trim_exact", lambda staged: "EXACT-TIER"
-    )
-    monkeypatch.setattr(
-        curation_ext, "_e02_trim_approx", lambda staged: "APPROX-TIER"
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    fake_du.size = 10**13  # huge footprint → approx tier
-    assert curation_ext.e02_embedding_outliers(spark, sf_dir) == "APPROX-TIER"
-    fake_du.size = 0  # unreadable/small → the conservative exact tier
-    assert curation_ext.e02_embedding_outliers(spark, sf_dir) == "EXACT-TIER"
-    assert seen == [f"{sf_dir}/embeddings.parquet"] * 2
-
-
-# --------------------------------------------------------------------------
 # ADVICE r10 item 2 — batched ingest accounting
 # --------------------------------------------------------------------------
 def test_ingest_files_divergent_profiles_take_one_plan(spark, tmp_path,
@@ -562,62 +527,6 @@ def test_z02_is_one_scan(spark):
 # --------------------------------------------------------------------------
 # Review pass D (r11): this round's own additions
 # --------------------------------------------------------------------------
-def test_hash_index_catalog_name_disambiguates_raw_names(tmp_path):
-    """Review r11: sanitizing the table name alone collapsed 'a.b' and
-    'a_b' onto ONE catalog identifier while their roots stayed separate
-    — cross-wiring two tables' indexes. The digest now covers the raw
-    name."""
-    from datawarehouse_backup_system_spark.plans.hash_index import (
-        _catalog_name,
-    )
-
-    assert _catalog_name(tmp_path, "a.b") != _catalog_name(tmp_path, "a_b")
-    assert _catalog_name(tmp_path, "t") != _catalog_name(
-        tmp_path / "other", "t"
-    )
-
-
-def test_hash_index_refuses_manifest_overclaim(spark, tmp_path, monkeypatch):
-    """Review r11: a manifest claiming coverage over a lost/partially-
-    restored index data dir served an EMPTY hash frame and silently
-    re-admitted every previously-seen row. Now it warns and falls back."""
-    import warnings as _warnings
-
-    from fixtures import generate_f1
-
-    import test_ingest as ti
-    from datawarehouse_backup_system_spark.plans import hash_index
-
-    monkeypatch.setattr(hash_index, "_INDEX_MIN_BYTES", 1)
-    monkeypatch.setattr(hash_index, "_INDEX_BUCKETS", 4)
-    fx = generate_f1(tmp_path)
-    job = ti.make_job(spark, tmp_path, fx)
-    r0 = job.process_file(fx["files"][0])
-    schema = job.registry.get("mini_campaign_events")
-    probe = job.read_table(schema).select("row_hash").limit(1)
-    job._dedup_against_history(probe, schema).count()  # build index
-
-    data_dir = (
-        tmp_path / "warehouse" / "_hashidx" / schema.table_name / "data"
-    )
-    for f in data_dir.glob("*.parquet"):
-        f.unlink()  # simulate the lost-index restore
-
-    with _warnings.catch_warnings(record=True) as w:
-        _warnings.simplefilter("always")
-        out = hash_index.history_hash_frame(
-            spark, tmp_path / "warehouse",
-            job.table_path(schema), schema.table_name,
-        )
-    assert out is None
-    assert any("unavailable" in str(x.message) for x in w)
-    # and the ingest path still dedups correctly via the fallback
-    dup = tmp_path / "last24h__re0.csv"
-    dup.write_bytes(fx["files"][0].read_bytes())
-    assert job.process_file(dup).rows_loaded == 0
-    assert r0.rows_loaded > 0
-
-
 def test_langid_ngram_empty_model_means_und(spark):
     """Review r11: `model_rows or ...` silently swapped an explicit
     empty model for the default trained one."""
@@ -629,20 +538,6 @@ def test_langid_ngram_empty_model_means_und(spark):
     rows = text.langid_ngram(df, "doc_id", "text", model_rows=[]).collect()
     assert rows[0]["predicted_lang"] == "und"
     assert rows[0]["oop_distance"] is None
-
-
-def test_dedup_against_history_single_walk():
-    """Review r11: the footprint probe re-walked the whole table tree
-    after live_write_pairs already had; one walk now serves both."""
-    from pathlib import Path as _P
-
-    src = (
-        _P(__file__).resolve().parents[1]
-        / "datawarehouse_backup_system_spark/plans/ingest.py"
-    ).read_text()
-    body = src.split("def _dedup_against_history")[1].split("\n    def ")[0]
-    assert "_stage_du(" not in body  # no second walk
-    assert "listed=listed" in src
 
 
 # --------------------------------------------------------------------------
