@@ -12,7 +12,11 @@ entry point (tests, bench, driver contract) runs with the same semantics:
   default (on a real cluster this is instead set ~2-3× total cores, or
   left to AQE coalescing);
 - a driver heap sized to the host (:func:`default_driver_memory`), so a
-  long session cannot grow the JVM past what the machine has.
+  long session cannot grow the JVM past what the machine has;
+- no per-call DataFrame debugging capture: each ``Column`` method and
+  ``functions.*`` call would otherwise walk the Python stack, try to
+  import IPython and make three py4j calls, only to put the Python call
+  site in an analysis error, which keeps its error class, message and plan.
 """
 
 from __future__ import annotations
@@ -56,6 +60,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # PySpark reads this once per process, at the first wrapped call
+        # under an active session, so it must be set here, not later
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
